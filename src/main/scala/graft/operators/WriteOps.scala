@@ -557,14 +557,38 @@ object WriteOps {
       readAllLines(fs, m).filter(_.nonEmpty)
     }
 
+    /** Version v's top manifest, parsed from ONE read: the recorded
+      * schema, the pending deletion vector and the partition pointers.
+      * A scan resolves this once and passes it down instead of
+      * re-opening the manifest per field. */
+    private[graft] case class Top(version: Int,
+        schema: Option[org.apache.spark.sql.types.StructType],
+        dv: Option[(String, String, Seq[Int])],
+        pointers: Map[Int, String])
+
+    private[graft] def top(root: String, v: Int): Top = {
+      val ls = topLines(root, v)
+      Top(v,
+        ls.find(_.startsWith("#schema="))
+          .map(l => org.apache.spark.sql.types.DataType
+            .fromJson(l.stripPrefix("#schema="))
+            .asInstanceOf[org.apache.spark.sql.types.StructType]),
+        ls.find(_.startsWith("#dv=")).map { l =>
+          val t = l.stripPrefix("#dv=").split('\t')
+          (t(0), t(1),
+            t(2).split(',').filter(_.nonEmpty).map(_.toInt).toSeq)
+        },
+        ls.filterNot(_.startsWith("#")).map { l =>
+          val i = l.indexOf('\t')
+          l.take(i).drop(1).toInt -> l.drop(i + 1)
+        }.toMap)
+    }
+
     /** The version's partition-manifest POINTER map (year → m-file):
       * the entire top-level metadata of a version, |partitions| lines
       * however many files the table holds. */
     def pointers(root: String, v: Int): Map[Int, String] =
-      topLines(root, v).filterNot(_.startsWith("#")).map { l =>
-        val i = l.indexOf('\t')
-        l.take(i).drop(1).toInt -> l.drop(i + 1)
-      }.toMap
+      top(root, v).pointers
 
     /** The version's TABLE SCHEMA, recorded in its top manifest at
       * commit — schema-as-metadata, the Delta/Iceberg design: SCHEMA
@@ -573,10 +597,7 @@ object WriteOps {
       * readers never sample data-file footers to discover columns. */
     def tableSchema(root: String,
         v: Int): Option[org.apache.spark.sql.types.StructType] =
-      topLines(root, v).find(_.startsWith("#schema="))
-        .map(l => org.apache.spark.sql.types.DataType
-          .fromJson(l.stripPrefix("#schema="))
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
+      top(root, v).schema
 
     /** Parent schema ∪ slice schema: new columns append (nullable —
       * carried files lack them and must null-fill); a column present
@@ -690,8 +711,12 @@ object WriteOps {
     /** SELECTED partitions' full manifest records, grouped by year —
       * the file-granular DELETE's pruning input (stats blobs intact). */
     private[graft] def partitionStatEntries(root: String, v: Int,
+        years: Seq[Int]): Seq[(Int, Seq[FileEntry])] =
+      partitionStatEntries(pointers(root, v), years)
+
+    /** The same, over an already-parsed pointer map ([[Top]]). */
+    private[graft] def partitionStatEntries(ps: Map[Int, String],
         years: Seq[Int]): Seq[(Int, Seq[FileEntry])] = {
-      val ps = pointers(root, v)
       val sel = years.sorted.flatMap(y => ps.get(y).map(y -> _))
       sel.map(_._1).zip(readPartManifests(sel.map(_._2)))
     }
@@ -1120,11 +1145,7 @@ object WriteOps {
     /** The version's pending-delete sidecar:
       * (sidecar dir, key column, years with pending tombstones). */
     def dvOf(root: String, v: Int): Option[(String, String, Seq[Int])] =
-      topLines(root, v).find(_.startsWith("#dv=")).map { l =>
-        val t = l.stripPrefix("#dv=").split('\t')
-        (t(0), t(1),
-          t(2).split(',').filter(_.nonEmpty).map(_.toInt).toSeq)
-      }
+      top(root, v).dv
 
     private def dvLineOf(path: String, keyCol: String,
         years: Seq[Int]): String =
@@ -1310,10 +1331,10 @@ object WriteOps {
       * TABLE ... TBLPROPERTIES ('bloomFilterColumns' = 'a,b')`. Every
       * write path enables parquet-mr's NATIVE per-row-group bloom
       * filters on them (adaptive sizing), and the read side's
-      * equality predicates ([[graft.sources.ParquetPredicates]])
-      * consult those blooms to skip row groups a point probe cannot
-      * match — the file-skipping shape Delta's bloom index and
-      * Iceberg's parquet blooms provide for `=`/`IN` lookups on
+      * equality predicates (Spark's ParquetFilters, through the
+      * connector's parquet reader) consult those blooms to skip row
+      * groups a point probe cannot match — the file-skipping shape
+      * Delta's bloom index and Iceberg's parquet blooms provide for `=`/`IN` lookups on
       * high-cardinality, non-clustered keys that min/max stats can't
       * discriminate. Executor-parallel (each reader consults its own
       * file's footer), O(1) manifest cost, false-negative-free by
@@ -1390,60 +1411,33 @@ object WriteOps {
     private def manifestScan(s: SparkSession,
         schema: org.apache.spark.sql.types.StructType,
         entries: Seq[(String, Long)]): DataFrame = {
-      import org.apache.spark.sql.execution.datasources.{
-        FileIndex, HadoopFsRelation, PartitionDirectory}
-      import org.apache.spark.sql.types.StructType
-      // qualify once (URI resolution only — no I/O): unqualified
-      // FileStatus paths would re-resolve per split against defaultFS
-      val fs = fsFor(new HPath(entries.head._1))
-      val statuses = entries.map { case (p, len) =>
-        new org.apache.hadoop.fs.FileStatus(len, false, 1, 0L, 0L,
-          fs.makeQualified(new HPath(p)))
-      }.toArray
-      val bytes = entries.map(_._2).sum
-      val index = new FileIndex {
-        override def rootPaths: Seq[HPath] =
-          statuses.map(_.getPath).toSeq
-        override def listFiles(
-            partitionFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
-            dataFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-            : Seq[PartitionDirectory] =
-          Seq(PartitionDirectory(
-            org.apache.spark.sql.catalyst.InternalRow.empty, statuses))
-        override def inputFiles: Array[String] =
-          statuses.map(_.getPath.toString)
-        override def refresh(): Unit = ()
-        override def sizeInBytes: Long = bytes
-        override def partitionSchema: StructType = new StructType()
-      }
-      val rel = HadoopFsRelation(index, new StructType(), schema, None,
+      val index = new graft.sources.ManifestFileIndex(s, entries)
+      val rel = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
+        index, index.partitionSchema, schema, None,
         new org.apache.spark.sql.execution.datasources.parquet
           .ParquetFileFormat, Map.empty)(s)
       s.baseRelationToDataFrame(rel)
     }
 
     /** Open manifest entries (path, bytes) under the version's
-      * recorded schema. The fast path plans a manifest-backed scan
-      * (see [[manifestScan]] — no listing, no stat calls) through
-      * Spark's native parquet source (vectorized, by-name resolution,
-      * pre-evolution files null-fill). A schema carrying RENAME
-      * aliases takes the name-mapping path instead: footers merge by
-      * name, then each column resolves as the first present name of
-      * its alias chain — old files serve renamed columns' DATA, not
-      * nulls (the native by-name read would silently null them, which
+      * recorded schema through a manifest-backed scan (see
+      * [[manifestScan]] — no listing, no stat calls) of Spark's native
+      * parquet source (vectorized, by-name resolution, pre-evolution
+      * files null-fill, narrower pre-widening files upcast). A schema
+      * carrying RENAME aliases reads every name of each alias chain and
+      * coalesces them — old files serve renamed columns' DATA, not
+      * nulls (the plain by-name read would silently null them, which
       * for maintenance rewrites like OPTIMIZE would destroy the
-      * column). The alias path costs a footer-merge pass; tables that
-      * never renamed pay nothing. */
+      * column). The connector scan applies the same rule
+      * ([[graft.sources.SnapshotReaderFactory]]). */
     private def readThrough(s: SparkSession,
         schemaOpt: Option[org.apache.spark.sql.types.StructType],
-        entries: Seq[(String, Long)]): DataFrame = {
-      val paths = entries.map(_._1)
+        entries: Seq[(String, Long)]): DataFrame =
       schemaOpt match {
-      case None => s.read.parquet(paths: _*)
+      case None => s.read.parquet(entries.map(_._1): _*)
       // zero live entries under a recorded schema (e.g. a staged
       // branch whose parent and slice are both empty): an empty
-      // schema-typed frame — manifestScan would dereference
-      // entries.head, and the pre-r17 listed read returned exactly
+      // schema-typed frame — the pre-r17 listed read returned exactly
       // this shape
       case Some(schema) if entries.isEmpty =>
         s.createDataFrame(
@@ -1452,24 +1446,20 @@ object WriteOps {
         val aliases = colAliases(schema)
         if (aliases.isEmpty) manifestScan(s, schema, entries)
         else {
-          val merged =
-            s.read.option("mergeSchema", "true").parquet(paths: _*)
-          val present = merged.columns.toSet
-          val resolved = schema.fields.foldLeft(merged) { (df, f) =>
-            val cands = (f.name +: aliases.getOrElse(f.name, Nil))
-              .filter(present.contains)
-            val e =
-              if (cands.isEmpty) lit(null).cast(f.dataType)
-              // a row carries a value under exactly ONE generation's
-              // name (files are single-generation), so coalesce
-              // reconstructs the column; genuine NULLs stay NULL
-              else coalesce(cands.map(c => col(c).cast(f.dataType)): _*)
-            df.withColumn(f.name, e)
-          }
-          resolved.select(schema.fieldNames.map(col).toIndexedSeq: _*)
+          val chains = schema.fields.map(f =>
+            f -> (f.name +: aliases.getOrElse(f.name, Nil)))
+          val raw = org.apache.spark.sql.types.StructType(
+            chains.flatMap { case (f, ns) =>
+              ns.map(n => f.copy(name = n, nullable = true))
+            })
+          // a row carries a value under exactly ONE generation's name
+          // (files are single-generation), so coalesce reconstructs
+          // the column; genuine NULLs stay NULL
+          manifestScan(s, raw, entries).select(chains.map { case (f, ns) =>
+            coalesce(ns.map(col): _*).as(f.name)
+          }.toIndexedSeq: _*)
         }
       }
-    }
 
     /** Reads resolve the version's RECORDED schema (no footer
       * sampling): a data file missing a later-added column null-fills
@@ -1849,9 +1839,12 @@ object WriteOps {
       * into partitions holding PENDING deletion-vector tombstones are
       * REFUSED loudly: the key-granular DV anti-join would silently
       * kill a re-inserted tombstoned key — purge first (OPTIMIZE), the
-      * same refusal WAP staging makes. */
+      * same refusal WAP staging makes. `overTombstones` lifts the
+      * refusal when the sidecar is birth-aware (see [[appendPreflight]])
+      * — the merge-on-read tables' SQL append path. */
     def commitAppend(s: SparkSession, root: String, v: Int,
-        batch: DataFrame, txn: Option[(String, Long)] = None): Unit = {
+        batch: DataFrame, txn: Option[(String, Long)] = None,
+        overTombstones: Boolean = false): Unit = {
       val touched = batch.select("pt_year").distinct()
         .collect().map { r =>
           // same loud guard as the overwrite paths: a NULL key would
@@ -1864,7 +1857,7 @@ object WriteOps {
           r.getInt(0)
         }.toSeq.sorted
       require(touched.nonEmpty, "an empty append commits nothing")
-      val dvLine = appendPreflight(root, v, touched)
+      val dvLine = appendPreflight(root, v, touched, overTombstones)
       // token-uniquified names: two appenders RACING to the same v
       // stage without file-level collisions — the manifest rename alone
       // arbitrates, the loser rebases, its orphans await vacuumOrphans
@@ -2033,9 +2026,10 @@ object WriteOps {
     /** Pre-flight checks + the carried dv line for an APPEND of
       * `touched` partitions as version v (shared by commitAppend and
       * the native streaming sink): parent exists, v free, and no
-      * touched partition holds pending tombstones. */
+      * touched partition holds pending tombstones — unless
+      * `overTombstones` and the sidecar is birth-aware. */
     private[graft] def appendPreflight(root: String, v: Int,
-        touched: Seq[Int]): Seq[String] = {
+        touched: Seq[Int], overTombstones: Boolean = false): Seq[String] = {
       val fs = fsFor(manifest(root, v))
       require(v > 0, "append needs an initialized table (v0)")
       require(fs.exists(manifest(root, v - 1)),
@@ -2045,8 +2039,12 @@ object WriteOps {
         "current head and retry")
       dvOf(root, v - 1) match {
         case Some((p, k, years)) =>
+          // a birth-aware sidecar kills only rows of files born before
+          // its tombstones, and the appended files are born after every
+          // one of them — so the append is sound; a legacy sidecar
+          // (no `__below`) would kill the re-inserted keys
           val hit = years.intersect(touched)
-          require(hit.isEmpty,
+          require(hit.isEmpty || (overTombstones && dvBirthAware(p)),
             s"partitions ${hit.mkString(",")} hold pending deletion-" +
             "vector tombstones; an append there could silently lose " +
             "re-inserted keys to the tombstone anti-join — run " +
@@ -2054,6 +2052,20 @@ object WriteOps {
           Seq(dvLineOf(p, k, years))
         case None => Nil
       }
+    }
+
+    /** Whether the sidecar's tombstones carry `__below` (every sidecar
+      * written since births were recorded) — one footer read. */
+    private def dvBirthAware(dvPath: String): Boolean = {
+      val dir = new HPath(dvPath)
+      fsFor(dir).listStatus(dir).map(_.getPath)
+        .find(_.getName.endsWith(".parquet")).exists { f =>
+          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f,
+              hconf()))
+          try r.getFooter.getFileMetaData.getSchema.containsField("__below")
+          finally r.close()
+        }
     }
 
     /** Stats for externally-written fresh files (the streaming sink's

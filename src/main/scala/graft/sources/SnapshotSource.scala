@@ -15,7 +15,6 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
 import graft.operators.WriteOps.SnapshotTable
@@ -43,10 +42,10 @@ import graft.operators.WriteOps.SnapshotTable
   *    footer sampling); files predating a column null-fill it by NAME
   *    lookup, so evolution composes.
   *  - Each fresh file is one [[InputPartition]] read on an executor
-  *    through parquet-mr's Group API — rows never pass through the
-  *    driver, and a 1000-file commit fans out 1000-wide. At 100 TB the
-  *    per-trigger planning cost is O(|versions in range| × touched
-  *    partitions) manifest lines.
+  *    through Spark's own parquet reader ([[SnapshotReaderFactory]]) —
+  *    rows never pass through the driver, and a 1000-file commit fans
+  *    out 1000-wide. At 100 TB the per-trigger planning cost is
+  *    O(|versions in range| × touched partitions) manifest lines.
   *  - Offsets are committed by Structured Streaming's checkpoint; a
   *    restart resumes from the last committed version. Vacuuming past
   *    a stream's resume point fails LOUDLY (the manifest is gone), the
@@ -234,10 +233,10 @@ class SnapshotCatalog
     // columns every write should carry a parquet bloom filter for —
     // point (`=`/`IN`) probes on high-cardinality, non-clustered
     // keys then skip row groups that cannot hold the value (see
-    // SnapshotTable.BloomColsKey). Restricted to the types the read
-    // side's equality predicates push (integral + string); floats
-    // never push (NaN ordering), so a float bloom would be dead
-    // weight.
+    // SnapshotTable.BloomColsKey). Restricted to integral and string
+    // columns: a bloom hashes a value's bits, while Spark's float
+    // equality matches 0.0 to -0.0, so a float bloom could skip a
+    // row group holding a match.
     val bloomCols = Option(properties.get("bloomFilterColumns"))
       .orElse(Option(properties.get("bloomfiltercolumns")))
       .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
@@ -253,8 +252,8 @@ class SnapshotCatalog
           require(Seq(LongType, IntegerType, ShortType, ByteType,
               StringType).contains(f.dataType),
             s"bloomFilterColumns '$c' must be an integral or string " +
-            s"column (got ${f.dataType.sql}) — equality predicates " +
-            "push only those")
+            s"column (got ${f.dataType.sql}) — a float bloom could " +
+            "skip a -0.0 row on a 0.0 probe")
         }
         StructType(schemaK.fields.map { sf =>
           if (sf.name != "pt_year") sf
@@ -558,7 +557,11 @@ private[sources] class SnapshotSourceTable(tableSchema: StructType,
   override def capabilities(): util.Set[TableCapability] =
     Set(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ,
       TableCapability.V1_BATCH_WRITE,
+      // dynamic overwrite is a v2 batch write (SnapshotDynamicOverwrite);
+      // appends and filter overwrites keep the V1 bridge
+      TableCapability.BATCH_WRITE,
       TableCapability.OVERWRITE_BY_FILTER,
+      TableCapability.OVERWRITE_DYNAMIC,
       TableCapability.TRUNCATE,
       TableCapability.STREAMING_WRITE,
       // `MERGE WITH SCHEMA EVOLUTION`: the analyzer lowers source-only
@@ -666,15 +669,6 @@ private[sources] class SnapshotSourceTable(tableSchema: StructType,
     } // zero matches: delete is a no-op, no version burned
   }
 
-  /** A retriable commit-race loss (vs a real precondition failure like
-    * a tombstoned-partition append, which must surface). */
-  private def isCommitConflict(e: Throwable): Boolean = e match {
-    case _: java.nio.file.FileAlreadyExistsException => true
-    case e: IllegalArgumentException =>
-      Option(e.getMessage).exists(_.contains("conflict: version"))
-    case _ => false
-  }
-
   /** `INSERT INTO` = true append; `INSERT OVERWRITE` (SupportsOverwrite)
     * in two shapes:
     *  - the trivial AlwaysTrue filter (no partition spec) = ONE commit
@@ -686,7 +680,10 @@ private[sources] class SnapshotSourceTable(tableSchema: StructType,
     *    touching exactly those partitions — other partitions carry by
     *    pointer (mtimes spec-pinned), and a batch row landing OUTSIDE
     *    the overwrite scope refuses loudly (a silent scope widening
-    *    would clobber partitions the statement never named).
+    *    would clobber partitions the statement never named);
+    *  - under dynamic partition-overwrite mode (SupportsDynamicOverwrite)
+    *    = ONE commit replacing the partitions the batch holds
+    *    ([[SnapshotDynamicOverwrite]]).
     * Overwrite filters on anything other than pt_year refuse (row-
     * granular overwrites are DELETE + INSERT, each its own auditable
     * commit). */
@@ -697,10 +694,15 @@ private[sources] class SnapshotSourceTable(tableSchema: StructType,
     require(tableSchema.fieldNames.contains("pt_year"),
       s"$root records no pt_year partition column; SQL appends need it")
     new WriteBuilder
-        with org.apache.spark.sql.connector.write.SupportsOverwrite {
+        with org.apache.spark.sql.connector.write.SupportsOverwrite
+        with org.apache.spark.sql.connector.write.SupportsDynamicOverwrite {
       private var overwriteAll = false
       private var overwriteYears: Option[Set[Int]] = None
+      private var dynamic = false
       override def truncate(): WriteBuilder = { overwriteAll = true; this }
+      override def overwriteDynamicPartitions(): WriteBuilder = {
+        dynamic = true; this
+      }
       override def overwrite(filters: Array[
           org.apache.spark.sql.sources.Filter]): WriteBuilder = {
         if (filters.isEmpty || filters.forall(_.isInstanceOf[
@@ -721,7 +723,15 @@ private[sources] class SnapshotSourceTable(tableSchema: StructType,
         }
         this
       }
-      override def build(): Write = new V1Write {
+      override def build(): Write =
+        if (dynamic) new Write {
+          override def toBatch: org.apache.spark.sql.connector.write
+              .BatchWrite =
+            new SnapshotDynamicOverwrite(root, info.schema().json,
+              new SerializableConfiguration(
+                SnapshotTable.bloomWriteConf(root, SparkSession.active
+                  .sparkContext.hadoopConfiguration)))
+        } else new V1Write {
         /** The NATIVE STREAMING SINK (see [[SnapshotStreamingWrite]]):
           * every epoch lands as one txn-recorded append version,
           * exactly-once across restarts and replays. */
@@ -765,48 +775,36 @@ private[sources] class SnapshotSourceTable(tableSchema: StructType,
                   "place NULL-keyed rows")
                 r.getInt(0)
               }.toSet
-            // OPTIMISTIC CONCURRENCY with bounded rebase-retries
-            // (Delta's txn retry): two INSERTs racing both target
-            // head+1; the manifest rename arbitrates, the loser sees
-            // the conflict (either the pre-flight require or the
-            // rename itself), REBASES on the new head and retries.
             // A loser's already-staged files are unreferenced orphans
             // — vacuumOrphans reclaims them on the maintenance pass.
-            var attempt = 0
-            var done = false
-            while (!done) {
-              val head = SnapshotTable.versions(root).max
-              try {
-                if (overwriteYears.isDefined) {
-                  // partition-scoped overwrite: exactly the named
-                  // partitions are touched; a batch row outside the
-                  // scope is a statement error, not a widened commit
-                  val years = overwriteYears.get
-                  val stray = batchYears() -- years
-                  require(stray.isEmpty,
-                    s"INSERT OVERWRITE PARTITION (pt_year in " +
-                    s"${years.toSeq.sorted.mkString("{", ",", "}")}) " +
-                    s"received rows for partitions " +
-                    s"${stray.toSeq.sorted.mkString(",")} outside the " +
-                    "overwrite scope")
-                  SnapshotTable.commit(s, root, head + 1, batch,
-                    years.toSeq.sorted)
-                } else if (overwriteAll || ovw) {
-                  // full overwrite: every live partition is touched
-                  // (those absent from the batch become empty),
-                  // pending deletion vectors purge (rewrite supersedes)
-                  val live = SnapshotTable.pointers(root, head).keySet
-                  SnapshotTable.commit(s, root, head + 1, batch,
-                    (live ++ batchYears()).toSeq.sorted)
-                } else {
-                  SnapshotTable.commitAppend(s, root, head + 1, batch)
-                }
-                done = true
-              } catch {
-                case e @ (_: java.nio.file.FileAlreadyExistsException |
-                          _: IllegalArgumentException)
-                    if attempt < 4 && isCommitConflict(e) =>
-                  attempt += 1 // lost the race — rebase and retry
+            SnapshotSourceTable.commitRetrying(root) { v =>
+              if (overwriteYears.isDefined) {
+                // partition-scoped overwrite: exactly the named
+                // partitions are touched; a batch row outside the
+                // scope is a statement error, not a widened commit
+                val years = overwriteYears.get
+                val stray = batchYears() -- years
+                require(stray.isEmpty,
+                  s"INSERT OVERWRITE PARTITION (pt_year in " +
+                  s"${years.toSeq.sorted.mkString("{", ",", "}")}) " +
+                  s"received rows for partitions " +
+                  s"${stray.toSeq.sorted.mkString(",")} outside the " +
+                  "overwrite scope")
+                SnapshotTable.commit(s, root, v, batch, years.toSeq.sorted)
+              } else if (overwriteAll || ovw) {
+                // full overwrite: every live partition is touched
+                // (those absent from the batch become empty),
+                // pending deletion vectors purge (rewrite supersedes)
+                val live = SnapshotTable.pointers(root, v - 1).keySet
+                SnapshotTable.commit(s, root, v, batch,
+                  (live ++ batchYears()).toSeq.sorted)
+              } else {
+                // merge-on-read tables append over pending
+                // tombstones: their births keep re-inserted keys
+                // alive (an insert-only MERGE lands here)
+                SnapshotTable.commitAppend(s, root, v, batch,
+                  overTombstones =
+                    SnapshotTable.rowKeyOf(tableSchema).isDefined)
               }
             }
           }
@@ -851,6 +849,36 @@ private[sources] class SnapshotSourceTable(tableSchema: StructType,
         throw new IllegalArgumentException(
           s"startingTimestamp '$raw' is not epoch millis, " +
           "yyyy-MM-dd, or yyyy-MM-dd HH:mm:ss (UTC)", e)
+    }
+  }
+}
+
+private[sources] object SnapshotSourceTable {
+  /** A retriable commit-race loss (vs a real precondition failure like
+    * a tombstoned-partition append, which must surface). */
+  private def isCommitConflict(e: Throwable): Boolean = e match {
+    case _: java.nio.file.FileAlreadyExistsException => true
+    case e: IllegalArgumentException =>
+      Option(e.getMessage).exists(_.contains("conflict: version"))
+    case _ => false
+  }
+
+  /** OPTIMISTIC CONCURRENCY with bounded rebase-retries (Delta's txn
+    * retry): `commit(v)` targets head+1; when two writers race, the
+    * manifest rename arbitrates, the loser sees the conflict (either
+    * a pre-flight require or the rename itself), REBASES on the new
+    * head and retries — up to four times. */
+  def commitRetrying(root: String)(commit: Int => Unit): Unit = {
+    var attempt = 0
+    var done = false
+    while (!done) {
+      try {
+        commit(SnapshotTable.versions(root).max + 1)
+        done = true
+      } catch {
+        case e: Exception if attempt < 4 && isCommitConflict(e) =>
+          attempt += 1 // lost the race — rebase and retry
+      }
     }
   }
 }
@@ -911,7 +939,8 @@ private[sources] class SnapshotRowLevelOperation(root: String,
       }
       override def pushedFilters(): Array[Filter] = pushed
       override def build(): Scan = {
-        val live = SnapshotTable.pointers(root, readVersion).keySet
+        val top = SnapshotTable.top(root, readVersion)
+        val live = top.pointers.keySet
         val years = pushed.foldLeft(live) { (acc, f) =>
           acc.intersect(SnapshotFilters.yearBound(f).getOrElse(live))
         }
@@ -927,10 +956,9 @@ private[sources] class SnapshotRowLevelOperation(root: String,
         // scan whole (a partial rewrite could not soundly purge their
         // tombstones — same opt-out as deleteWhere).
         val preds = SnapshotFilters.statRanges(pushed)
-        val dvYears = SnapshotTable.dvOf(root, readVersion)
-          .map(_._3.toSet).getOrElse(Set.empty[Int])
+        val dvYears = top.dv.map(_._3.toSet).getOrElse(Set.empty[Int])
         val fileSets = SnapshotTable
-          .partitionStatEntries(root, readVersion, years.toSeq.sorted)
+          .partitionStatEntries(top.pointers, years.toSeq.sorted)
           .map { case (y, es) =>
             if (preds.isEmpty || dvYears.contains(y)) y -> (es, Seq.empty)
             else {
@@ -939,8 +967,8 @@ private[sources] class SnapshotRowLevelOperation(root: String,
               y -> (maybe, excluded)
             }
           }.toMap
-        val s = new SnapshotGroupScan(root, tableSchema, readVersion,
-          years, fileSets)
+        val s = new SnapshotGroupScan(root, tableSchema, top, years,
+          fileSets)
         configuredScan = s
         s
       }
@@ -1002,7 +1030,7 @@ private[sources] object SnapshotRuntime {
   * set; the final set is what the write's commit REPLACES.
   * `fileSets`: per candidate year, (files to scan, files to carry). */
 private[sources] class SnapshotGroupScan(root: String,
-    schema: StructType, version: Int, initialYears: Set[Int],
+    schema: StructType, top: SnapshotTable.Top, initialYears: Set[Int],
     fileSets: Map[Int, (Seq[SnapshotTable.FileEntry],
       Seq[SnapshotTable.FileEntry])])
     extends Scan with Batch
@@ -1015,7 +1043,7 @@ private[sources] class SnapshotGroupScan(root: String,
   override def readSchema(): StructType = schema
   override def toBatch: Batch = this
   override def description(): String =
-    s"graft-snapshot $root@v$version groups=" +
+    s"graft-snapshot $root@v${top.version} groups=" +
       years.toSeq.sorted.mkString(",")
 
   override def filterAttributes(): Array[NamedReference] =
@@ -1043,20 +1071,11 @@ private[sources] class SnapshotGroupScan(root: String,
         y -> carry
     }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val dv = SnapshotTable.dvOf(root, version).map { case (p, k, _) =>
-      val tag = schema.find(_.name == k).map(_.dataType) match {
-        case Some(StringType) => 'S'
-        case Some(DoubleType) | Some(FloatType) => 'D'
-        case _ => 'L'
-      }
-      (p, k, tag)
-    }
-    new GroupRowReaderFactory(schema.json, new SerializableConfiguration(
-      SparkSession.active.sparkContext.hadoopConfiguration), dv,
-      aliases = SnapshotTable.tableSchema(root, version)
-        .map(SnapshotTable.colAliases).getOrElse(Map.empty))
-  }
+  // no pushed filters: the rewrite copies every row of a matched group
+  override def createReaderFactory(): PartitionReaderFactory =
+    SnapshotReaderFactory(SparkSession.active, schema,
+      top.schema.getOrElse(schema), top.dv.map(d => (d._1, d._2)),
+      Array.empty)
 }
 
 /** The replacement write: executor-side parquet-mr writers (one per
@@ -1091,14 +1110,9 @@ private[sources] class SnapshotReplaceDataWrite(
     val replaced = scan.years.toSeq.sorted
     if (files.isEmpty && replaced.isEmpty) return // matched nothing
     val s = SparkSession.active
-    val stats = SnapshotTable.statsFor(s, files.map(_._2), schema)
-    val born = SnapshotTable.nextCommitTs(root, op.readVersion + 1)
-    val staged = files.groupBy(_._1).toSeq.map { case (y, fs) =>
-      y -> fs.map { case (_, p, b) =>
-        val (blob, rows) = stats.getOrElse(p, ("", -1L))
-        SnapshotTable.FileEntry(p, b, blob, rows, born)
-      }.sortBy(_.path)
-    }
+    val staged = SnapshotReplaceDataWrite.entries(files,
+      SnapshotTable.statsFor(s, files.map(_._2), schema),
+      SnapshotTable.nextCommitTs(root, op.readVersion + 1))
     // the pinned-snapshot commit: a concurrent writer landing after
     // readVersion surfaces as a loud conflict — a row-level rewrite
     // computed against a stale snapshot must never silently clobber
@@ -1107,6 +1121,61 @@ private[sources] class SnapshotReplaceDataWrite(
     // file-granular half of the group rewrite.
     SnapshotTable.commitReplaceEntries(s, root, op.readVersion + 1,
       staged, replaced, scan.carriedFor(replaced.toSet))
+  }
+
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    filesOf(messages).foreach { case (_, p, _) =>
+      SnapshotTable.deleteTree(p)
+    }
+}
+
+private[sources] object SnapshotReplaceDataWrite {
+  /** Executor-written (pt_year, path, bytes) files → per-year manifest
+    * entries carrying their footer stats and the commit's `born`. */
+  def entries(files: Seq[(Int, String, Long)],
+      stats: Map[String, (String, Long)],
+      born: Long): Seq[(Int, Seq[SnapshotTable.FileEntry])] =
+    files.groupBy(_._1).toSeq.map { case (y, fs) =>
+      y -> fs.map { case (_, p, b) =>
+        val (blob, rows) = stats.getOrElse(p, ("", -1L))
+        SnapshotTable.FileEntry(p, b, blob, rows, born)
+      }.sortBy(_.path)
+    }
+}
+
+/** `INSERT OVERWRITE` under `spark.sql.sources.partitionOverwriteMode
+  * = dynamic` (the mode `DataProcess` sessions run in): the batch lands
+  * through the executor-side writers, then ONE commit replaces exactly
+  * the pt_year partitions the batch holds — every other partition
+  * carries by pointer, as in the static `PARTITION (pt_year = k)`
+  * path. An empty batch replaces nothing and commits nothing (Spark's
+  * dynamic-overwrite contract). A commit race rebases on the new head
+  * and retries, reusing the staged files. */
+private[sources] class SnapshotDynamicOverwrite(root: String,
+    schemaJson: String, conf: SerializableConfiguration)
+    extends org.apache.spark.sql.connector.write.BatchWrite {
+  import org.apache.spark.sql.connector.write.{DataWriterFactory, PhysicalWriteInfo, WriterCommitMessage}
+
+  override def createBatchWriterFactory(
+      info: PhysicalWriteInfo): DataWriterFactory =
+    new SnapshotBatchWriterFactory(root, schemaJson, conf)
+
+  private def filesOf(messages: Array[WriterCommitMessage]) =
+    messages.collect { case m: SnapshotFilesMsg => m.files }
+      .flatten.toSeq
+
+  override def commit(messages: Array[WriterCommitMessage]): Unit = {
+    val files = filesOf(messages)
+    if (files.isEmpty) return
+    val s = SparkSession.active
+    val stats = SnapshotTable.statsFor(s, files.map(_._2),
+      DataType.fromJson(schemaJson).asInstanceOf[StructType])
+    val years = files.map(_._1).distinct.sorted
+    SnapshotSourceTable.commitRetrying(root) { v =>
+      SnapshotTable.commitReplaceEntries(s, root, v,
+        SnapshotReplaceDataWrite.entries(files, stats,
+          SnapshotTable.nextCommitTs(root, v)), years)
+    }
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
@@ -1420,9 +1489,12 @@ private[sources] object SnapshotFilters {
   *    change results, only the files opened. `pushedFilters` reports
   *    what pruning consumed (visible in explain).
   *  - COLUMNS: the required schema reaches the parquet reader as a
-  *    real projection (`parquet.read.schema`), so unprojected columns
-  *    are never materialized — `SELECT k FROM …` reads one column's
-  *    pages, the scan-efficiency contract a wide 100 TB table needs. */
+  *    real projection, so unprojected columns are never decoded —
+  *    `SELECT k FROM …` reads one column's pages, the scan-efficiency
+  *    contract a wide 100 TB table needs.
+  *
+  * The read version and its top manifest resolve ONCE per scan
+  * ([[snap]]) and pass down to planning and the reader factory. */
 private[sources] class SnapshotScanBuilder(root: String,
     full: StructType, startingVersion: Int,
     pinnedVersion: Option[Int] = None,
@@ -1438,6 +1510,13 @@ private[sources] class SnapshotScanBuilder(root: String,
 
   private var required: StructType = full
   private var pushed: Array[Filter] = Array.empty
+  // every residual conjunct: ParquetFilters' row-group skipping input
+  private var residual: Array[Filter] = Array.empty
+
+  /** The read version's top manifest: one listing (unpinned reads)
+    * plus one manifest read for the whole scan. */
+  private lazy val snap: SnapshotTable.Top = SnapshotTable.top(root,
+    pinnedVersion.getOrElse(SnapshotTable.versions(root).max))
   // stat-shape conjuncts that stay RESIDUAL (file-level pruning only)
   private var statPushed: Array[Filter] = Array.empty
   private var ranges: Map[String, (Any, Any)] = Map.empty
@@ -1519,8 +1598,7 @@ private[sources] class SnapshotScanBuilder(root: String,
     import org.apache.spark.sql.connector.expressions.NamedReference
     import org.apache.spark.sql.connector.expressions.aggregate.{Count, CountStar, Max, Min}
     if (statPushed.nonEmpty || ranges.nonEmpty) return None
-    val v = pinnedVersion.getOrElse(SnapshotTable.versions(root).max)
-    if (SnapshotTable.dvOf(root, v).nonEmpty) return None
+    if (snap.dv.nonEmpty) return None
 
     def refName(e: org.apache.spark.sql.connector.expressions
         .Expression): Option[String] = e match {
@@ -1535,10 +1613,10 @@ private[sources] class SnapshotScanBuilder(root: String,
     }
     if (agg.aggregateExpressions.isEmpty) return None
 
-    val liveYears = SnapshotTable.pointers(root, v).keys.toSeq.sorted
+    val liveYears = snap.pointers.keys.toSeq.sorted
     val years =
       consumedYears.fold(liveYears)(ys => liveYears.filter(ys.contains))
-    val perYear = SnapshotTable.partitionStatEntries(root, v, years)
+    val perYear = SnapshotTable.partitionStatEntries(snap.pointers, years)
       .filter(_._2.nonEmpty) // an empty group yields NO result row
 
     /** One aggregate over one entry scope; None = not answerable. */
@@ -1756,6 +1834,7 @@ private[sources] class SnapshotScanBuilder(root: String,
       case _ => false
     }
     pushed = yearFs ++ statPushed
+    residual = rest
     // consumed pt_year conjuncts are exact (no post-scan re-filter),
     // so they don't block LIMIT bounding; residuals do
     sawFilters = rest.nonEmpty
@@ -1773,12 +1852,12 @@ private[sources] class SnapshotScanBuilder(root: String,
   override def build(): Scan = pushedAgg match {
     case Some((schema, rows, desc)) =>
       new SnapshotMetaAggScan(root, schema, rows, desc)
-    case None => new SnapshotScan(root, required,
+    case None => new SnapshotScan(root, required, snap,
       startingVersion,
       ranges.toSeq.map { case (c, (lo, hi)) => (c, lo, hi) },
       pinnedVersion, ignoreDeletes, maxVersionsPerTrigger,
       maxBytesPerTrigger, consumedYears, nullScan, notNullScan,
-      limitHint, topNAsc)
+      limitHint, topNAsc, residual)
   }
 }
 
@@ -1832,6 +1911,7 @@ private[graft] object SnapshotScan {
 }
 
 private[sources] class SnapshotScan(root: String, schema: StructType,
+    snap: SnapshotTable.Top,
     startingVersion: Int,
     ranges: Seq[(String, Any, Any)] = Nil,
     pinnedVersion: Option[Int] = None,
@@ -1842,7 +1922,9 @@ private[sources] class SnapshotScan(root: String, schema: StructType,
     nullCols: Seq[String] = Nil,
     notNullCols: Seq[String] = Nil,
     limitHint: Option[Int] = None,
-    topNAsc: Option[Boolean] = None) extends Scan
+    topNAsc: Option[Boolean] = None,
+    filters: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
+    extends Scan
     with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering {
   import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
   import org.apache.spark.sql.connector.expressions.filter.{Predicate => VPredicate}
@@ -1861,8 +1943,14 @@ private[sources] class SnapshotScan(root: String, schema: StructType,
     * Spark never runtime-filters a MicroBatchStream. */
   @volatile private var runtimeYears: Option[Set[Int]] = None
 
+  // only a scan that OUTPUTS pt_year can be runtime-filtered on it:
+  // Spark resolves these names against the scan's output, so a
+  // pruned-away pt_year (an insert-only MERGE's anti-join side reads
+  // just the key) must not be offered
   override def filterAttributes(): Array[NamedReference] =
-    Array(Expressions.column("pt_year"))
+    if (schema.fieldNames.contains("pt_year"))
+      Array(Expressions.column("pt_year"))
+    else Array.empty
 
   override def filter(predicates: Array[VPredicate]): Unit =
     predicates.foreach { p =>
@@ -1893,59 +1981,27 @@ private[sources] class SnapshotScan(root: String, schema: StructType,
       limitHint.fold("")(n => s" limit=$n" + topNAsc.fold("")(a =>
         if (a) " by pt_year" else " by pt_year desc"))
 
-  /** keyCol → type tag for tombstone normalization. */
-  private def dvInfo(v: Int): Option[(String, String, Char)] =
-    SnapshotTable.dvOf(root, v).map { case (path, keyCol, _) =>
-      import org.apache.spark.sql.types._
-      val tag = schemaOfKey(keyCol) match {
-        case StringType => 'S'
-        case DoubleType | FloatType => 'D'
-        case _ => 'L'
-      }
-      (path, keyCol, tag)
-    }
-
-  private def schemaOfKey(keyCol: String) =
-    SnapshotTable.tableSchema(root,
-        pinnedVersion.getOrElse(SnapshotTable.versions(root).max))
-      .flatMap(_.find(_.name == keyCol))
-      .map(_.dataType)
-      .getOrElse(org.apache.spark.sql.types.LongType)
-
-  // the pushed ranges ride to the reader too: manifest stats prune
-  // FILES here at plan time, parquet-mr prunes ROW GROUPS/pages inside
-  // the survivors executor-side (ParquetPredicates). The row-level
+  // the pushed residual filters ride to the reader too: manifest
+  // stats prune FILES here at plan time, Spark's ParquetFilters prune
+  // ROW GROUPS inside the survivors executor-side. The row-level
   // rewrite scan (SnapshotGroupScan) deliberately does NOT do this —
   // it must materialize every row of a matched group, non-matching
   // rows included, because the replacement write copies them.
-  private def readerFactory(dv: Option[(String, String, Char)] = None)
-      : PartitionReaderFactory = {
-    // rename name-mapping comes from the READ version's recorded
-    // schema (the pruned `schema` param may drop field metadata)
-    val v = pinnedVersion.getOrElse(SnapshotTable.versions(root).max)
-    val aliases = SnapshotTable.tableSchema(root, v)
-      .map(SnapshotTable.colAliases).getOrElse(Map.empty)
-    new GroupRowReaderFactory(schema.json, new SerializableConfiguration(
-      SparkSession.active.sparkContext.hadoopConfiguration), dv, ranges,
-      aliases)
-  }
+  private def readerFactory(withDv: Boolean): PartitionReaderFactory =
+    SnapshotReaderFactory(SparkSession.active, schema,
+      snap.schema.getOrElse(schema),
+      if (withDv) snap.dv.map(d => (d._1, d._2)) else None, filters)
 
-  /** Batch read = the pinned version's (VERSION AS OF / versionAsOf)
-    * or the HEAD's file list, manifest-stat-pruned by the pushed
-    * ranges. A version with pending deletion vectors ships the
-    * tombstone sidecar to every reader (executor-side hash filter,
-    * JVM-cached) so merge-on-read deletes hold through SQL too. */
   /** A version's in-scope entries: every partition's, or exactly the
     * partitions a consumed pt_year conjunct selected (EXACT pruning —
     * a partition's files hold only rows with its key, so no residual
     * re-filter is needed or kept). */
-  private def scopedByYear(
-      v: Int): Seq[(Int, Seq[SnapshotTable.FileEntry])] = {
+  private def scopedByYear: Seq[(Int, Seq[SnapshotTable.FileEntry])] = {
     val ys = effectiveYears match {
-      case None => SnapshotTable.pointers(root, v).keys.toSeq.sorted
+      case None => snap.pointers.keys.toSeq.sorted
       case Some(s) => s.toSeq.sorted
     }
-    SnapshotTable.partitionStatEntries(root, v, ys)
+    SnapshotTable.partitionStatEntries(snap.pointers, ys)
   }
 
   /** Pushed-LIMIT/TopN file bounding: with no residual filters (the
@@ -1976,29 +2032,31 @@ private[sources] class SnapshotScan(root: String, schema: StructType,
     }
   }
 
-  override def toBatch: Batch = {
-    val v = pinnedVersion.getOrElse(SnapshotTable.versions(root).max)
-    val dv = dvInfo(v)
-    new Batch {
-      override def planInputPartitions(): Array[InputPartition] = {
-        SnapshotScan.lastPlannedYears(root) =
-          effectiveYears.map(_.toSeq.sorted)
-        val survivors = scopedByYear(v).map { case (y, es) =>
-          y -> es.filter(entrySurvives)
-        }
-        val planned = boundByLimit(survivors, dv.nonEmpty)
-        SnapshotScan.lastPlannedFiles(root) = planned.size
-        SnapshotSplits.plan(planned)
+  /** Batch read = the pinned version's (VERSION AS OF / versionAsOf)
+    * or the HEAD's file list, manifest-stat-pruned by the pushed
+    * ranges. A version with pending deletion vectors ships the
+    * tombstone sidecar to every reader (executor-side hash filter,
+    * JVM-cached) so merge-on-read deletes hold through SQL too. */
+  override def toBatch: Batch = new Batch {
+    override def planInputPartitions(): Array[InputPartition] = {
+      SnapshotScan.lastPlannedYears(root) =
+        effectiveYears.map(_.toSeq.sorted)
+      val survivors = scopedByYear.map { case (y, es) =>
+        y -> es.filter(entrySurvives)
       }
-      override def createReaderFactory(): PartitionReaderFactory =
-        readerFactory(dv)
+      val planned = boundByLimit(survivors, snap.dv.nonEmpty)
+      SnapshotScan.lastPlannedFiles(root) = planned.size
+      SnapshotSplits.plan(planned)
     }
+    override def createReaderFactory(): PartitionReaderFactory =
+      readerFactory(withDv = true)
   }
 
   override def toMicroBatchStream(ckpt: String): MicroBatchStream = {
     require(pinnedVersion.isEmpty,
       "a VERSION AS OF read is a batch snapshot — streams follow head")
-    new SnapshotMicroBatchStream(root, startingVersion, readerFactory(),
+    new SnapshotMicroBatchStream(root, startingVersion,
+      readerFactory(withDv = false),
       ranges, ignoreDeletes, maxVersionsPerTrigger, maxBytesPerTrigger,
       years, nullCols, notNullCols)
   }
@@ -2188,16 +2246,17 @@ private[sources] class SnapshotMicroBatchStream(root: String,
   override def stop(): Unit = ()
 }
 
-/** One scan task: a byte range of one data file. Whole-file reads are
-  * `[0, Long.MaxValue)`; a SPLIT file carries `[start, end)` and the
-  * reader serves exactly the parquet ROW GROUPS whose byte midpoint
-  * falls inside the range (parquet-mr's own range contract, the same
-  * midpoint rule Spark's FilePartition relies on) — disjoint ranges
-  * covering the file therefore partition its row groups exactly, with
-  * no row read twice and none lost. */
+/** One scan task: a byte range of one data file of `bytes` bytes (the
+  * manifest's recorded size — the reader locates the footer with it,
+  * no stat call). Whole-file reads are `[0, Long.MaxValue)`; a SPLIT
+  * file carries `[start, end)` and the reader serves exactly the
+  * parquet ROW GROUPS whose byte midpoint falls inside the range (the
+  * midpoint rule of Spark's FilePartition) — disjoint ranges covering
+  * the file therefore partition its row groups exactly, with no row
+  * read twice and none lost. */
 private[sources] case class SnapshotFilePartition(path: String,
-    start: Long = 0L, end: Long = Long.MaxValue, born: Long = -1L)
-    extends InputPartition
+    bytes: Long, start: Long = 0L, end: Long = Long.MaxValue,
+    born: Long = -1L) extends InputPartition
 
 /** Byte-range SPLIT PLANNING for connector scans — Spark's own
   * `FilePartition.maxSplitBytes` policy re-derived over the MANIFEST's
@@ -2245,14 +2304,20 @@ private[sources] object SnapshotSplits {
     val floor = graft.operators.WriteOps.SnapshotTable.rowGroupBytes(
       session.sparkContext.hadoopConfiguration)
     val target = math.max(targetSplitBytes(session, entries), floor)
-    entries.iterator.flatMap { e =>
+    entries.iterator.flatMap { e0 =>
+      // an entry from before sizes were recorded stats its file once
+      val e = if (e0.bytes >= 0) e0 else {
+        val p = new HPath(e0.path)
+        e0.copy(bytes = p.getFileSystem(session.sparkContext
+          .hadoopConfiguration).getFileStatus(p).getLen)
+      }
       if (e.bytes <= target)
-        Iterator(SnapshotFilePartition(e.path, born = e.born))
+        Iterator(SnapshotFilePartition(e.path, e.bytes, born = e.born))
       else {
         val n = ((e.bytes + target - 1) / target).toInt
         (0 until n).iterator.map { i =>
           val st = i.toLong * target
-          SnapshotFilePartition(e.path, st,
+          SnapshotFilePartition(e.path, e.bytes, st,
             if (i == n - 1) Long.MaxValue else st + target, e.born)
         }
       }
@@ -2324,972 +2389,4 @@ private[sources] object DvCache {
       }
       out.toMap
     })
-}
-
-/** Per-FILE parquet `FilterPredicate` construction from the scan's
-  * pushed conjunctive [lo, hi] bounds — the ROW-GROUP / PAGE /
-  * DICTIONARY skipping layer Spark's native parquet source gets from
-  * its own ParquetFilters (reference: easy_sql relies on each
-  * backend's storage-side predicate pushdown; this is the snapshot
-  * connector's). Soundness contract, same as the file-level manifest
-  * pruning: every pushed filter STAYS RESIDUAL in Spark, and a
-  * parquet predicate only ever DROPS rows/groups that CANNOT match a
-  * handled conjunct, so pushdown changes bytes decoded, never
-  * results. Hazards handled per file:
-  *
-  *  - TYPE DRIFT: the predicate must carry the FILE's physical type
-  *    (parquet validates it against the footer schema), so a column
-  *    widened by `ALTER COLUMN ... TYPE BIGINT` builds `intColumn`
-  *    bounds over pre-widen INT32 files (values clamped to the int
-  *    range — sound: int32 data lives inside that range, so the
-  *    clamped predicate is never stronger than the original);
-  *  - FLOAT/DOUBLE are NEVER pushed: Spark orders NaN greatest and
-  *    equal to itself, parquet evaluates IEEE comparisons, so a
-  *    record-level `gtEq(col, v)` would DROP a NaN row that Spark's
-  *    `col > v` KEEPS — manifest file-level stats (NaN-guarded at
-  *    collection) remain the only pruning for floating columns;
-  *  - columns ABSENT from the file (pre-evolution) or from the
-  *    projected read schema contribute nothing (their rows null-fill
-  *    and fail the residual anyway, but parquet would reject an
-  *    unknown predicate column loudly);
-  *  - NULL rows drop at record level exactly as the residual would
-  *    (every handled conjunct is null-rejecting in Spark too);
-  *  - strings compare as unsigned UTF-8 bytes on BOTH sides
-  *    (parquet's Binary comparator = UTF8String order). */
-private[sources] object ParquetPredicates {
-  import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
-  import org.apache.parquet.io.api.Binary
-  import org.apache.parquet.schema.MessageType
-  import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-
-  private def clampInt(v: Long): Int =
-    if (v > Int.MaxValue) Int.MaxValue
-    else if (v < Int.MinValue) Int.MinValue else v.toInt
-
-  private def integral(a: Any): Option[Long] = a match {
-    case n: java.lang.Long => Some(n.longValue)
-    case n: java.lang.Integer => Some(n.longValue)
-    case n: java.lang.Short => Some(n.longValue)
-    case n: java.lang.Byte => Some(n.longValue)
-    case _ => None
-  }
-
-  /** Conjunction over the handled (column, lo, hi) bounds, built
-    * against `schema` — the file's PROJECTED read schema, so types
-    * match the footer verbatim and every predicate column is one the
-    * record assembly actually reads. None = nothing pushable. */
-  def build(schema: MessageType,
-      ranges: Seq[(String, Any, Any)]): Option[FilterPredicate] = {
-    val conjuncts: Seq[FilterPredicate] = ranges.flatMap {
-      case (c, lo, hi) =>
-        val t =
-          if (schema.containsField(c))
-            Some(schema.getType(schema.getFieldIndex(c)))
-          else None
-        if (!t.exists(_.isPrimitive)) Nil
-        else t.get.asPrimitiveType().getPrimitiveTypeName match {
-          // a DEGENERATE range (lo == hi: an equality / one-point IN
-          // conjunct) builds FilterApi.eq instead of the gtEq∧ltEq
-          // pair — semantically identical at record level, but eq is
-          // what parquet-mr's BLOOM-FILTER and dictionary row-group
-          // evaluators understand, so a point probe on a bloom-
-          // declared column skips every row group that cannot hold
-          // the value (the range pair only consults min/max stats,
-          // useless on a non-clustered key)
-          case PrimitiveTypeName.INT64 =>
-            val col = FilterApi.longColumn(c)
-            (Option(lo).flatMap(integral), Option(hi).flatMap(integral))
-                match {
-              case (Some(l), Some(h)) if l == h =>
-                Seq(FilterApi.eq(col,
-                  java.lang.Long.valueOf(l)): FilterPredicate)
-              case (l, h) =>
-                l.map(v => FilterApi.gtEq(col,
-                    java.lang.Long.valueOf(v)): FilterPredicate).toSeq ++
-                  h.map(v => FilterApi.ltEq(col,
-                    java.lang.Long.valueOf(v)): FilterPredicate)
-            }
-          case PrimitiveTypeName.INT32 =>
-            val col = FilterApi.intColumn(c)
-            (Option(lo).flatMap(integral), Option(hi).flatMap(integral))
-                match {
-              // eq only when the point survives the int32 clamp
-              // verbatim — an out-of-range point keeps the (sound)
-              // clamped range pair
-              case (Some(l), Some(h)) if l == h && clampInt(l) == l =>
-                Seq(FilterApi.eq(col,
-                  Integer.valueOf(l.toInt)): FilterPredicate)
-              case (l, h) =>
-                l.map(v => FilterApi.gtEq(col,
-                    Integer.valueOf(clampInt(v))): FilterPredicate).toSeq ++
-                  h.map(v => FilterApi.ltEq(col,
-                    Integer.valueOf(clampInt(v))): FilterPredicate)
-            }
-          case PrimitiveTypeName.BINARY =>
-            val col = FilterApi.binaryColumn(c)
-            (lo, hi) match {
-              case (l: String, h: String) if l == h =>
-                Seq(FilterApi.eq(col,
-                  Binary.fromString(l)): FilterPredicate)
-              case _ =>
-                (lo match {
-                  case s: String => Seq(FilterApi.gtEq(col,
-                    Binary.fromString(s)): FilterPredicate)
-                  case _ => Nil
-                }) ++ (hi match {
-                  case s: String => Seq(FilterApi.ltEq(col,
-                    Binary.fromString(s)): FilterPredicate)
-                  case _ => Nil
-                })
-            }
-          case _ => Nil // FLOAT/DOUBLE (NaN hazard), INT96, fixed: no
-        }
-    }
-    conjuncts.reduceOption(FilterApi.and)
-  }
-}
-
-/** DIRECT-to-InternalRow parquet ReadSupport — the r16 fast read path.
-  * parquet-mr's example Group materializer allocates a SimpleGroup
-  * (one ArrayList per field) per ROW and the reader then re-walks it
-  * field-by-field; this materializer writes each decoded value
-  * straight into the output slot array through per-column monomorphic
-  * converters, so a row costs one small array clone instead of a
-  * Group graph. Composes with everything the reader stack already
-  * does: the projected read schema (init honors
-  * `parquet.read.schema`), byte-range splits, FilterCompat record
-  * filtering (FilteringRecordMaterializer wraps any materializer),
-  * rename aliases, pre-evolution null-fill (converter absent → slot
-  * stays null), and type widening (the converter is keyed off the
-  * FILE's physical type). String columns get dictionary support: a
-  * dictionary-encoded chunk converts each dictionary entry to
-  * UTF8String ONCE and rows share the immutable instances. Used when
-  * no deletion vector applies (the DV path keeps the Group reader —
-  * its tombstone probe wants named field access; DV-pending versions
-  * are a bounded transient state between delete and rewrite). */
-private[sources] class InternalRowReadSupport(schema: StructType,
-    aliases: Map[String, Seq[String]])
-    extends org.apache.parquet.hadoop.api.ReadSupport[InternalRow] {
-  import org.apache.parquet.hadoop.api.{InitContext, ReadSupport => RS}
-  import org.apache.parquet.io.api.RecordMaterializer
-  import org.apache.parquet.schema.MessageType
-
-  override def init(ctx: InitContext): RS.ReadContext = {
-    val partial = ctx.getConfiguration.get(RS.PARQUET_READ_SCHEMA)
-    val requested =
-      if (partial == null) ctx.getFileSchema
-      else RS.getSchemaForRead(ctx.getFileSchema, partial)
-    new RS.ReadContext(requested)
-  }
-
-  override def prepareForRead(
-      conf: org.apache.hadoop.conf.Configuration,
-      kv: java.util.Map[String, String], fileSchema: MessageType,
-      readContext: RS.ReadContext): RecordMaterializer[InternalRow] =
-    new RowMaterializer(schema, aliases, readContext.getRequestedSchema)
-}
-
-private[sources] class RowMaterializer(schema: StructType,
-    aliases: Map[String, Seq[String]],
-    projected: org.apache.parquet.schema.MessageType)
-    extends org.apache.parquet.io.api.RecordMaterializer[InternalRow] {
-  import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter}
-  import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{FLOAT => PFLOAT, INT32 => PINT32}
-
-  private val nCols = schema.fields.length
-  private val vals = new Array[Any](nCols)
-
-  // one converter per PROJECTED field: the column plan of the Group
-  // reader, pushed down into the assembly layer (monomorphic per
-  // column — no per-row tag dispatch)
-  private val converters: Array[Converter] = {
-    val slotOf = scala.collection.mutable.HashMap[String, Int]()
-    var j = 0
-    while (j < nCols) {
-      val f = schema.fields(j)
-      val pn = (f.name +: aliases.getOrElse(f.name, Nil))
-        .find(projected.containsField).getOrElse(f.name)
-      if (projected.containsField(pn)) slotOf(pn) = j
-      j += 1
-    }
-    (0 until projected.getFieldCount).map { i =>
-      val t = projected.getType(i)
-      slotOf.get(t.getName) match {
-        // projected for another purpose (the count(*) cheapest
-        // column, or a whole-schema read where the required columns
-        // all post-date the file): decode and DROP — the defaults
-        // THROW, so every add is an explicit no-op
-        case None => new PrimitiveConverter {
-          override def addBoolean(v: Boolean): Unit = ()
-          override def addInt(v: Int): Unit = ()
-          override def addLong(v: Long): Unit = ()
-          override def addFloat(v: Float): Unit = ()
-          override def addDouble(v: Double): Unit = ()
-          override def addBinary(b: Binary): Unit = ()
-        }
-        case Some(slot) =>
-          val phys = t.asPrimitiveType().getPrimitiveTypeName
-          schema.fields(slot).dataType match {
-            case LongType | TimestampType | TimestampNTZType =>
-              if (phys == PINT32) new PrimitiveConverter {
-                // pre-widen int32 file under a bigint column
-                override def addInt(v: Int): Unit = vals(slot) = v.toLong
-              } else new PrimitiveConverter {
-                override def addLong(v: Long): Unit = vals(slot) = v
-              }
-            case IntegerType | DateType => new PrimitiveConverter {
-              override def addInt(v: Int): Unit = vals(slot) = v
-            }
-            case ShortType => new PrimitiveConverter {
-              override def addInt(v: Int): Unit = vals(slot) = v.toShort
-            }
-            case ByteType => new PrimitiveConverter {
-              override def addInt(v: Int): Unit = vals(slot) = v.toByte
-            }
-            case DoubleType =>
-              if (phys == PFLOAT) new PrimitiveConverter {
-                // pre-widen float file under a double column
-                override def addFloat(v: Float): Unit =
-                  vals(slot) = v.toDouble
-              } else new PrimitiveConverter {
-                override def addDouble(v: Double): Unit = vals(slot) = v
-              }
-            case FloatType => new PrimitiveConverter {
-              override def addFloat(v: Float): Unit = vals(slot) = v
-            }
-            case BooleanType => new PrimitiveConverter {
-              override def addBoolean(v: Boolean): Unit = vals(slot) = v
-            }
-            case StringType => new PrimitiveConverter {
-              private var dict: Array[UTF8String] = _
-              override def hasDictionarySupport: Boolean = true
-              override def setDictionary(
-                  d: org.apache.parquet.column.Dictionary): Unit = {
-                dict = new Array[UTF8String](d.getMaxId + 1)
-                var k = 0
-                while (k <= d.getMaxId) {
-                  dict(k) =
-                    UTF8String.fromBytes(d.decodeToBinary(k).getBytes)
-                  k += 1
-                }
-              }
-              override def addValueFromDictionary(id: Int): Unit =
-                vals(slot) = dict(id)
-              override def addBinary(b: Binary): Unit =
-                vals(slot) = UTF8String.fromBytes(b.getBytes)
-            }
-            case dt => throw new UnsupportedOperationException(
-              s"graft-snapshot source does not read ${dt.simpleString} " +
-              s"(column '${schema.fields(slot).name}')")
-          }
-      }
-    }.toArray
-  }
-
-  private val root = new GroupConverter {
-    override def getConverter(i: Int): Converter = converters(i)
-    override def start(): Unit = {
-      var j = 0
-      while (j < nCols) { vals(j) = null; j += 1 }
-    }
-    override def end(): Unit = ()
-  }
-
-  override def getCurrentRecord: InternalRow =
-    new GenericInternalRow(vals.clone())
-  override def getRootConverter: GroupConverter = root
-}
-
-/** Diagnostic tap on the connector's partition readers: total rows
-  * EMITTED (post parquet-filter, post tombstone) across the JVM —
-  * local-mode specs read it to prove a pushed predicate actually
-  * reduced what the reader materialized. One add per reader CLOSE
-  * (a local counter on the hot path), so production cost is nil. */
-private[graft] object ReaderDiag {
-  private val rows = new java.util.concurrent.atomic.AtomicLong()
-  def reset(): Unit = rows.set(0L)
-  def emitted: Long = rows.get()
-  private[sources] def add(n: Long): Unit = rows.addAndGet(n)
-}
-
-/** Minimal read-only [[org.apache.spark.sql.vectorized.ColumnVector]]
-  * family backing the connector's COLUMNAR read path: one primitive
-  * array + null mask per column, filled once per batch by
-  * [[SnapshotColumnarReader]] and handed to Spark's ColumnarToRow
-  * (whole-stage codegen'd). Deliberately PUBLIC-API-only — these are
-  * the connector-facing `vectorized` classes, not Spark's internal
-  * writable vectors. */
-private[sources] object GraftVectors {
-  import org.apache.spark.sql.vectorized.{ColumnarArray, ColumnarMap, ColumnVector}
-
-  private[sources] abstract class Base(dt: DataType,
-      nulls: Array[Boolean]) extends ColumnVector(dt) {
-    private var cachedNulls = -1
-    final override def close(): Unit = ()
-    final override def hasNull: Boolean = numNulls > 0
-    final override def numNulls: Int = {
-      if (cachedNulls < 0) {
-        var c = 0; var i = 0
-        while (i < nulls.length) { if (nulls(i)) c += 1; i += 1 }
-        cachedNulls = c
-      }
-      cachedNulls
-    }
-    final override def isNullAt(i: Int): Boolean = nulls(i)
-    private def nope = throw new UnsupportedOperationException(
-      s"${getClass.getSimpleName} does not serve this accessor")
-    override def getBoolean(i: Int): Boolean = nope
-    override def getByte(i: Int): Byte = nope
-    override def getShort(i: Int): Short = nope
-    override def getInt(i: Int): Int = nope
-    override def getLong(i: Int): Long = nope
-    override def getFloat(i: Int): Float = nope
-    override def getDouble(i: Int): Double = nope
-    override def getArray(i: Int): ColumnarArray = nope
-    override def getMap(i: Int): ColumnarMap = nope
-    override def getDecimal(i: Int, p: Int, s: Int)
-        : org.apache.spark.sql.types.Decimal = nope
-    override def getUTF8String(i: Int): UTF8String = nope
-    override def getBinary(i: Int): Array[Byte] = nope
-    override def getChild(i: Int): ColumnVector = nope
-  }
-
-  private[sources] final class Longs(dt: DataType, vals: Array[Long],
-      nulls: Array[Boolean]) extends Base(dt, nulls) {
-    override def getLong(i: Int): Long = vals(i)
-  }
-  private[sources] final class Ints(dt: DataType, vals: Array[Int],
-      nulls: Array[Boolean]) extends Base(dt, nulls) {
-    override def getInt(i: Int): Int = vals(i)
-  }
-  private[sources] final class Shorts(vals: Array[Short],
-      nulls: Array[Boolean]) extends Base(ShortType, nulls) {
-    override def getShort(i: Int): Short = vals(i)
-  }
-  private[sources] final class Bytes(vals: Array[Byte],
-      nulls: Array[Boolean]) extends Base(ByteType, nulls) {
-    override def getByte(i: Int): Byte = vals(i)
-  }
-  private[sources] final class Doubles(vals: Array[Double],
-      nulls: Array[Boolean]) extends Base(DoubleType, nulls) {
-    override def getDouble(i: Int): Double = vals(i)
-  }
-  private[sources] final class Floats(vals: Array[Float],
-      nulls: Array[Boolean]) extends Base(FloatType, nulls) {
-    override def getFloat(i: Int): Float = vals(i)
-  }
-  private[sources] final class Bools(vals: Array[Boolean],
-      nulls: Array[Boolean]) extends Base(BooleanType, nulls) {
-    override def getBoolean(i: Int): Boolean = vals(i)
-  }
-  private[sources] final class Strings(vals: Array[UTF8String],
-      nulls: Array[Boolean]) extends Base(StringType, nulls) {
-    override def getUTF8String(i: Int): UTF8String = vals(i)
-  }
-  /** A column the FILE predates (pre-evolution null-fill). */
-  private[sources] final class Nulls(dt: DataType, n: Int)
-      extends ColumnVector(dt) {
-    override def close(): Unit = ()
-    override def hasNull: Boolean = true
-    override def numNulls: Int = n
-    override def isNullAt(i: Int): Boolean = true
-    private def nope = throw new UnsupportedOperationException(
-      "null vector serves no values")
-    override def getBoolean(i: Int): Boolean = nope
-    override def getByte(i: Int): Byte = nope
-    override def getShort(i: Int): Short = nope
-    override def getInt(i: Int): Int = nope
-    override def getLong(i: Int): Long = nope
-    override def getFloat(i: Int): Float = nope
-    override def getDouble(i: Int): Double = nope
-    override def getArray(i: Int)
-        : org.apache.spark.sql.vectorized.ColumnarArray = nope
-    override def getMap(i: Int)
-        : org.apache.spark.sql.vectorized.ColumnarMap = nope
-    override def getDecimal(i: Int, p: Int, s: Int)
-        : org.apache.spark.sql.types.Decimal = nope
-    override def getUTF8String(i: Int): UTF8String = nope
-    override def getBinary(i: Int): Array[Byte] = nope
-    override def getChild(i: Int)
-        : org.apache.spark.sql.vectorized.ColumnVector = nope
-  }
-}
-
-/** COLUMNAR partition reader (r16 verdict ask #3): per row group,
-  * parquet-mr's PUBLIC column readers
-  * (`ColumnReadStoreImpl`/`ColumnReader` — typed getters over pages,
-  * no Spark-private internals) fill primitive-array vectors in tight
-  * monomorphic loops, and each ≤`batchRows` slice ships as ONE
-  * [[org.apache.spark.sql.vectorized.ColumnarBatch]] — Spark's
-  * ColumnarToRow then consumes it inside whole-stage codegen. This
-  * removes the per-row record-assembly constant the row path pays
-  * (one materializer call + one `GenericInternalRow` allocation per
-  * row), the measured 1.6-2× gap vs Spark's vectorized parquet
-  * source on scan-bound shapes (SCALE.md r16 §5).
-  *
-  * Engaged by [[GroupRowReaderFactory.supportColumnarReads]] ONLY
-  * when no deletion vector applies and no predicate was pushed: a
-  * pushed predicate means parquet's RECORD-level skipping is live on
-  * the row path (the 502× decode-reduction machinery, which columnar
-  * page decoding cannot express) — selective scans keep it, while
-  * the scan-bound full-partition shapes this path exists for have
-  * nothing to skip. Everything else composes unchanged: the
-  * projected read schema (`setRequestedSchema`), byte-range splits
-  * (row groups whose midpoint falls in [start, end)), rename
-  * aliases, pre-evolution null-fill, and type widening (per-FILE
-  * physical types, same tag scheme as the row path). */
-private[sources] class SnapshotColumnarReader(fp: SnapshotFilePartition,
-    schema: StructType, aliases: Map[String, Seq[String]],
-    conf: org.apache.hadoop.conf.Configuration, batchRows: Int = 4096)
-    extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-  import org.apache.parquet.HadoopReadOptions
-  import org.apache.parquet.column.ColumnReader
-  import org.apache.parquet.column.impl.ColumnReadStoreImpl
-  import org.apache.parquet.hadoop.ParquetFileReader
-  import org.apache.parquet.hadoop.util.HadoopInputFile
-  import org.apache.parquet.io.api.{Converter, GroupConverter, PrimitiveConverter}
-  import org.apache.parquet.schema.MessageType
-  import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
-
-  private val reader: ParquetFileReader = ParquetFileReader.open(
-    HadoopInputFile.fromPath(new HPath(fp.path), conf),
-    HadoopReadOptions.builder(conf)
-      .withRange(fp.start, fp.end).build())
-  private val createdBy =
-    reader.getFooter.getFileMetaData.getCreatedBy
-  private val fileSchema = reader.getFooter.getFileMetaData.getSchema
-
-  // per-slot plan: the FILE's physical name (alias chain) and fill
-  // tag — same tag scheme as the row path (8/9 = widened int32/float)
-  private val nCols = schema.fields.length
-  private val physNames: Array[String] = schema.fields.map { f =>
-    (f.name +: aliases.getOrElse(f.name, Nil))
-      .find(fileSchema.containsField).getOrElse(f.name)
-  }
-  private val present: Array[Boolean] =
-    physNames.map(fileSchema.containsField)
-  private val projected: MessageType = new MessageType(
-    fileSchema.getName,
-    physNames.zipWithIndex.collect { case (pn, j) if present(j) =>
-      fileSchema.getType(fileSchema.getFieldIndex(pn))
-    }.toList.asJava)
-  locally { reader.setRequestedSchema(projected) }
-  // projected column k → output slot (dense; projection preserves
-  // slot order, so this is the k-th present slot)
-  private val slotOfProj: Array[Int] =
-    (0 until nCols).filter(present).toArray
-  private val tagOfProj: Array[Byte] = slotOfProj.map { j =>
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{FLOAT => PFLOAT, INT32 => PINT32}
-    val t0: Byte = schema.fields(j).dataType match {
-      case LongType | TimestampType | TimestampNTZType => 0
-      case IntegerType | DateType => 1
-      case ShortType => 2
-      case ByteType => 3
-      case DoubleType => 4
-      case FloatType => 5
-      case BooleanType => 6
-      case StringType => 7
-      case dt => throw new UnsupportedOperationException(
-        s"graft-snapshot columnar read does not serve ${dt.simpleString}")
-    }
-    val phys = fileSchema
-      .getType(fileSchema.getFieldIndex(physNames(j)))
-      .asPrimitiveType().getPrimitiveTypeName
-    if (t0 == 0 && phys == PINT32) 8: Byte
-    else if (t0 == 4 && phys == PFLOAT) 9: Byte
-    else t0
-  }
-
-  // the column readers only ever feed typed getters; the converter
-  // tree exists to satisfy ColumnReadStoreImpl's contract
-  private val dummyRoot: GroupConverter = new GroupConverter {
-    private val prim = new PrimitiveConverter {}
-    override def getConverter(i: Int): Converter = prim
-    override def start(): Unit = ()
-    override def end(): Unit = ()
-  }
-
-  private var rowsLeft: Long = 0L
-  private var readers: Array[ColumnReader] = _
-  private var batch: ColumnarBatch = _
-  private var emitted = 0L
-  // per-(column, row group) Binary→UTF8String identity memos — the
-  // dictionary's cached instances live exactly that long
-  private var stringMemos
-      : Array[java.util.IdentityHashMap[AnyRef, UTF8String]] = _
-
-  private def nextRowGroup(): Boolean = {
-    val pages = reader.readNextRowGroup()
-    if (pages == null) false
-    else {
-      rowsLeft = pages.getRowCount
-      readers =
-        if (projected.getFieldCount == 0) Array.empty
-        else {
-          val store = new ColumnReadStoreImpl(pages, dummyRoot,
-            projected, createdBy)
-          projected.getColumns.asScala
-            .map(store.getColumnReader).toArray
-        }
-      stringMemos = tagOfProj.map(t =>
-        if (t == 7) new java.util.IdentityHashMap[AnyRef, UTF8String]()
-        else null)
-      true
-    }
-  }
-
-  override def next(): Boolean = {
-    while (rowsLeft == 0L) if (!nextRowGroup()) return false
-    val n = math.min(batchRows.toLong, rowsLeft).toInt
-    val vecs = new Array[ColumnVector](nCols)
-    var j = 0
-    while (j < nCols) {
-      if (!present(j))
-        vecs(j) = new GraftVectors.Nulls(schema.fields(j).dataType, n)
-      j += 1
-    }
-    var k = 0
-    while (k < readers.length) {
-      val cr = readers(k)
-      val slot = slotOfProj(k)
-      val maxDef = cr.getDescriptor.getMaxDefinitionLevel
-      val nulls = new Array[Boolean](n)
-      val dt = schema.fields(slot).dataType
-      vecs(slot) = (tagOfProj(k): @annotation.switch) match {
-        case 0 =>
-          val a = new Array[Long](n); var i = 0
-          while (i < n) {
-            if (cr.getCurrentDefinitionLevel == maxDef) a(i) = cr.getLong
-            else nulls(i) = true
-            cr.consume(); i += 1
-          }
-          new GraftVectors.Longs(dt, a, nulls)
-        case 8 => // int32 file under a widened long column
-          val a = new Array[Long](n); var i = 0
-          while (i < n) {
-            if (cr.getCurrentDefinitionLevel == maxDef)
-              a(i) = cr.getInteger.toLong
-            else nulls(i) = true
-            cr.consume(); i += 1
-          }
-          new GraftVectors.Longs(dt, a, nulls)
-        case 1 =>
-          val a = new Array[Int](n); var i = 0
-          while (i < n) {
-            if (cr.getCurrentDefinitionLevel == maxDef)
-              a(i) = cr.getInteger
-            else nulls(i) = true
-            cr.consume(); i += 1
-          }
-          new GraftVectors.Ints(dt, a, nulls)
-        case 2 =>
-          val a = new Array[Short](n); var i = 0
-          while (i < n) {
-            if (cr.getCurrentDefinitionLevel == maxDef)
-              a(i) = cr.getInteger.toShort
-            else nulls(i) = true
-            cr.consume(); i += 1
-          }
-          new GraftVectors.Shorts(a, nulls)
-        case 3 =>
-          val a = new Array[Byte](n); var i = 0
-          while (i < n) {
-            if (cr.getCurrentDefinitionLevel == maxDef)
-              a(i) = cr.getInteger.toByte
-            else nulls(i) = true
-            cr.consume(); i += 1
-          }
-          new GraftVectors.Bytes(a, nulls)
-        case 4 =>
-          val a = new Array[Double](n); var i = 0
-          while (i < n) {
-            if (cr.getCurrentDefinitionLevel == maxDef)
-              a(i) = cr.getDouble
-            else nulls(i) = true
-            cr.consume(); i += 1
-          }
-          new GraftVectors.Doubles(a, nulls)
-        case 9 => // float file under a widened double column
-          val a = new Array[Double](n); var i = 0
-          while (i < n) {
-            if (cr.getCurrentDefinitionLevel == maxDef)
-              a(i) = cr.getFloat.toDouble
-            else nulls(i) = true
-            cr.consume(); i += 1
-          }
-          new GraftVectors.Doubles(a, nulls)
-        case 5 =>
-          val a = new Array[Float](n); var i = 0
-          while (i < n) {
-            if (cr.getCurrentDefinitionLevel == maxDef)
-              a(i) = cr.getFloat
-            else nulls(i) = true
-            cr.consume(); i += 1
-          }
-          new GraftVectors.Floats(a, nulls)
-        case 6 =>
-          val a = new Array[Boolean](n); var i = 0
-          while (i < n) {
-            if (cr.getCurrentDefinitionLevel == maxDef)
-              a(i) = cr.getBoolean
-            else nulls(i) = true
-            cr.consume(); i += 1
-          }
-          new GraftVectors.Bools(a, nulls)
-        case 7 =>
-          // DICTIONARY-shared decode: parquet's dictionary reader
-          // returns the SAME cached Binary instance per dictionary
-          // entry, so an identity memo converts each distinct value
-          // to UTF8String once per (column, row group) and rows
-          // share the immutable instances — the row path's
-          // dictionary cache, ported to the columnar fill. Plain
-          // (non-dictionary) pages produce fresh Binary objects that
-          // never re-identify; the memo caps and the loop falls back
-          // to direct conversion (one last-value fast path keeps
-          // run-length-shaped data cheap even then).
-          val memo = stringMemos(k)
-          var lastB: AnyRef = null
-          var lastS: UTF8String = null
-          val a = new Array[UTF8String](n); var i = 0
-          while (i < n) {
-            if (cr.getCurrentDefinitionLevel == maxDef) {
-              val b = cr.getBinary
-              if (b eq lastB) a(i) = lastS
-              else {
-                var s = memo.get(b)
-                if (s == null) {
-                  s = UTF8String.fromBytes(b.getBytes)
-                  if (memo.size < 4096) memo.put(b, s)
-                }
-                a(i) = s; lastB = b; lastS = s
-              }
-            } else nulls(i) = true
-            cr.consume(); i += 1
-          }
-          new GraftVectors.Strings(a, nulls)
-      }
-      k += 1
-    }
-    batch = new ColumnarBatch(vecs, n)
-    rowsLeft -= n
-    emitted += n
-    true
-  }
-
-  override def get(): org.apache.spark.sql.vectorized.ColumnarBatch =
-    batch
-
-  override def close(): Unit = {
-    ReaderDiag.add(emitted)
-    reader.close()
-  }
-}
-
-/** Executor-side parquet→InternalRow reader over parquet-mr's Group
-  * API (the public example read path — no Spark-private internals).
-  * Column lookup is BY NAME so pre-evolution files null-fill columns
-  * they predate; types cover the snapshot write path's flat schemas.
-  * With `dv` set, rows matching the version's tombstone set are
-  * filtered DURING the scan (merge-on-read applied at the reader). */
-private[sources] class GroupRowReaderFactory(schemaJson: String,
-    conf: SerializableConfiguration,
-    dv: Option[(String, String, Char)] = None,
-    ranges: Seq[(String, Any, Any)] = Nil,
-    aliases: Map[String, Seq[String]] = Map.empty)
-    extends PartitionReaderFactory {
-
-  /** COLUMNAR engagement rule (see [[SnapshotColumnarReader]]): no
-    * deletion vector (tombstone probes want the row path), no pushed
-    * predicate (record-level skipping lives on the row path and wins
-    * on selective scans), every column a supported primitive, and a
-    * non-empty projection (`count(*)` is answered by aggregate
-    * pushdown / the cheapest-column row read). Valve:
-    * `graft.snapshot.columnar` = on | off (A/B + safety hatch). */
-  private val columnarOk: Boolean = {
-    val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-    dv.isEmpty && ranges.isEmpty && schema.fields.nonEmpty &&
-      schema.fields.forall(_.dataType match {
-        case LongType | TimestampType | TimestampNTZType |
-             IntegerType | DateType | ShortType | ByteType |
-             DoubleType | FloatType | BooleanType | StringType => true
-        case _ => false
-      }) &&
-      conf.value.get("graft.snapshot.columnar", "on") != "off"
-  }
-
-  override def supportColumnarReads(p: InputPartition): Boolean =
-    columnarOk
-
-  override def createColumnarReader(p: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    require(columnarOk, "columnar read requested outside the " +
-      "engagement rule")
-    new SnapshotColumnarReader(p.asInstanceOf[SnapshotFilePartition],
-      DataType.fromJson(schemaJson).asInstanceOf[StructType],
-      aliases, conf.value)
-  }
-
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-    val fp = p.asInstanceOf[SnapshotFilePartition]
-    val path = fp.path
-    import org.apache.parquet.filter2.compat.FilterCompat
-    import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
-    import org.apache.parquet.hadoop.api.ReadSupport
-    import org.apache.parquet.hadoop.example.GroupReadSupport
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.parquet.schema.MessageType
-
-    // ---- shared per-file planning: footer projection + predicate ----
-    /** REAL column pruning: project the file's OWN fields (footer
-      * schema, so types match verbatim) down to the required names —
-      * parquet then skips the unprojected columns' pages entirely.
-      * A `count(*)` scan (EMPTY required schema, no deletion vector)
-      * projects the single cheapest primitive column instead of
-      * falling back to a full-row read — rows still count exactly,
-      * but only one column's pages move (the r15 diag measured a
-      * full-row count(*) at 10×+ the one-column cost). A file
-      * lacking every required column under a NON-empty projection
-      * (pre-evolution) reads unprojected: rows count, fields
-      * null-fill. With a deletion vector, the key and pt_year
-      * columns stay projected even when the query doesn't ask for
-      * them — the reader needs them to apply tombstones. */
-    val (readConf, groupSchema) = {
-        val c = new org.apache.hadoop.conf.Configuration(conf.value)
-        val fr = ParquetFileReader.open(
-          HadoopInputFile.fromPath(new HPath(path), conf.value))
-        val fileSchema =
-          try fr.getFooter.getFileMetaData.getSchema finally fr.close()
-        // RENAME name mapping: a file written before `ALTER COLUMN
-        // RENAME` carries the column under an older physical name —
-        // resolve each logical name to the first alias-chain name the
-        // FILE actually holds (retired names are never re-issued, so
-        // the chain is unambiguous)
-        def physName(n: String): String =
-          (n +: aliases.getOrElse(n, Nil))
-            .find(fileSchema.containsField).getOrElse(n)
-        val names = (schema.fieldNames.toSet ++
-          dv.map(d => Set(d._2, "pt_year")).getOrElse(Set.empty))
-          .map(physName)
-        def project(kept: Seq[org.apache.parquet.schema.Type]) = {
-          val projected = new MessageType(fileSchema.getName, kept.asJava)
-          c.set(ReadSupport.PARQUET_READ_SCHEMA, projected.toString)
-          (c, projected) // records arrive typed with the projection
-        }
-        val kept = fileSchema.getFields.asScala.filter(t =>
-          names.contains(t.getName))
-        if (names.isEmpty && fileSchema.getFieldCount > 1) {
-          // count(*): one narrow column carries the row count
-          val cheapest = fileSchema.getFields.asScala.minBy { t =>
-            if (t.isPrimitive)
-              t.asPrimitiveType().getPrimitiveTypeName match {
-                case org.apache.parquet.schema.PrimitiveType
-                  .PrimitiveTypeName.BOOLEAN => 0
-                case org.apache.parquet.schema.PrimitiveType
-                  .PrimitiveTypeName.INT32 |
-                  org.apache.parquet.schema.PrimitiveType
-                  .PrimitiveTypeName.FLOAT => 1
-                case org.apache.parquet.schema.PrimitiveType
-                  .PrimitiveTypeName.INT64 |
-                  org.apache.parquet.schema.PrimitiveType
-                  .PrimitiveTypeName.DOUBLE => 2
-                case _ => 3 // binary/string: widest
-              }
-            else 4
-          }
-          project(Seq(cheapest))
-        } else if (kept.nonEmpty && kept.size < fileSchema.getFieldCount)
-          project(kept.toSeq)
-        else (c, fileSchema)
-      }
-
-    /** Logical name → the projected schema's physical name (alias
-      * chain), for the column plan, the DV plan, and the parquet
-      * predicate — all keyed off what the FILE calls the column. */
-    def physIn(n: String): String =
-      (n +: aliases.getOrElse(n, Nil))
-        .find(groupSchema.containsField).getOrElse(n)
-
-    // the pushed bounds reach parquet-mr for row-group / page /
-    // dictionary / record skipping (ParquetPredicates has the
-    // soundness contract; filters stay residual in Spark, so this
-    // only shrinks bytes decoded). Disable via the hadoop conf key
-    // for A/B measurement.
-    val pred =
-      if (readConf.getBoolean("graft.snapshot.parquetFilterPushdown",
-          true))
-        ParquetPredicates.build(groupSchema, ranges.map {
-          case (c, lo, hi) => (physIn(c), lo, hi)
-        })
-      else None
-
-    // withFileRange serves exactly the row groups whose midpoint
-    // falls in [start, end) — the whole-file default (0, MaxValue)
-    // admits every group, so unsplit partitions read unchanged
-    def openWith[T](b: ParquetReader.Builder[T]): ParquetReader[T] = {
-      val ranged = b.withConf(readConf).withFileRange(fp.start, fp.end)
-      pred.fold(ranged)(pp =>
-        ranged.withFilter(FilterCompat.get(pp))).build()
-    }
-
-    // `graft.snapshot.rowMaterializer` = fast | group: A/B valve for
-    // the direct-to-InternalRow path (and a safety hatch)
-    if (dv.isEmpty && readConf.get("graft.snapshot.rowMaterializer",
-        "fast") != "group") new PartitionReader[InternalRow] {
-      // FAST PATH (no deletion vector): direct-to-InternalRow
-      // materialization — see InternalRowReadSupport
-      private val reader: ParquetReader[InternalRow] = openWith(
-        ParquetReader.builder(
-          new InternalRowReadSupport(schema, aliases), new HPath(path)))
-      private var cur: InternalRow = _
-      private var emitted = 0L
-      override def next(): Boolean = {
-        cur = reader.read()
-        if (cur != null) emitted += 1
-        cur != null
-      }
-      override def get(): InternalRow = cur
-      override def close(): Unit = {
-        ReaderDiag.add(emitted)
-        reader.close()
-      }
-    } else new PartitionReader[InternalRow] {
-      import org.apache.parquet.example.data.Group
-
-      // ---- per-FILE row-materialization plan (hoisted out of get():
-      // the per-row path must not do name lookups, DataType matching,
-      // or closure maps — at 1.5M rows/file those dominated the scan
-      // and their megamorphic call sites starved the JIT; see
-      // SCALE.md's r14 connector-materialization entry) ----
-      private val nCols = schema.fields.length
-      private val colIdx = new Array[Int](nCols) // -1: file lacks col
-      private val colTag = new Array[Byte](nCols)
-      locally {
-        var j = 0
-        while (j < nCols) {
-          val f = schema.fields(j)
-          val pn = physIn(f.name)
-          if (!groupSchema.containsField(pn)) colIdx(j) = -1
-          else {
-            val i = groupSchema.getFieldIndex(pn)
-            colIdx(j) = i
-            colTag(j) = f.dataType match {
-              case LongType | TimestampType | TimestampNTZType => 0
-              case IntegerType | DateType => 1
-              case ShortType => 2
-              case ByteType => 3
-              case DoubleType => 4
-              case FloatType => 5
-              case BooleanType => 6
-              case StringType => 7
-              case dt => throw new UnsupportedOperationException(
-                s"graft-snapshot source does not read " +
-                s"${dt.simpleString} (column '${f.name}')")
-            }
-            // post-widening upcast: a file written BEFORE `ALTER
-            // COLUMN ... TYPE <wider>` holds the narrower physical
-            // type — key the read off the FILE's primitive, widen in
-            // the materializer (int32→long: 8, float→double: 9)
-            import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{FLOAT => PFLOAT, INT32 => PINT32}
-            val phys = groupSchema.getType(i).asPrimitiveType()
-              .getPrimitiveTypeName
-            if (colTag(j) == 0 && phys == PINT32) colTag(j) = 8
-            else if (colTag(j) == 4 && phys == PFLOAT) colTag(j) = 9
-          }
-          j += 1
-        }
-      }
-
-      /** Tombstone plan, hoisted like the column plan: (keyIdx,
-        * yearIdx, tag, keyIsInt32) — None when no DV applies or the
-        * file predates the key/pt_year columns. */
-      private val dvPlan: Option[(Int, Int, Char, Boolean)] = dv.flatMap {
-        case (_, keyCol0, tag) =>
-          val keyCol = physIn(keyCol0)
-          if (!groupSchema.containsField(keyCol) ||
-              !groupSchema.containsField("pt_year")) None
-          else {
-            val ki = groupSchema.getFieldIndex(keyCol)
-            val isInt32 = tag != 'S' && tag != 'D' &&
-              groupSchema.getType(ki).asPrimitiveType()
-                .getPrimitiveTypeName ==
-              org.apache.parquet.schema.PrimitiveType
-                .PrimitiveTypeName.INT32
-            Some((ki, groupSchema.getFieldIndex("pt_year"), tag, isInt32))
-          }
-      }
-
-      private val doomed: Map[(Any, Int), Long] = dv match {
-        case Some((dvPath, keyCol, tag)) =>
-          DvCache.tombstones(dvPath, keyCol, tag, conf.value)
-        case None => Map.empty
-      }
-      // the file's birth on the ts chain (−1 legacy = before every
-      // tombstone): a tombstone kills only rows born before it
-      private val fileBorn: Long = fp.born
-
-      private val reader: ParquetReader[Group] =
-        openWith(ParquetReader.builder(new GroupReadSupport(),
-          new HPath(path)))
-      private var cur: Group = _
-      private var emitted = 0L
-
-      private def tombstoned(g: Group): Boolean = dvPlan match {
-        case None => false
-        case Some((ki, yi, tag, keyIsInt32)) =>
-          if (g.getFieldRepetitionCount(ki) == 0 ||
-              g.getFieldRepetitionCount(yi) == 0) false
-          else {
-            val key: Any = tag match {
-              case 'S' => new String(g.getBinary(ki, 0).getBytes,
-                java.nio.charset.StandardCharsets.UTF_8)
-              case 'D' => g.getDouble(ki, 0)
-              case _ =>
-                if (keyIsInt32) g.getInteger(ki, 0).toLong
-                else g.getLong(ki, 0)
-            }
-            doomed.getOrElse((key, g.getInteger(yi, 0)),
-              Long.MinValue) > fileBorn
-          }
-      }
-
-      override def next(): Boolean = {
-        cur = reader.read()
-        while (cur != null && tombstoned(cur)) cur = reader.read()
-        if (cur != null) emitted += 1
-        cur != null
-      }
-
-      override def get(): InternalRow = {
-        val g = cur
-        val vals = new Array[Any](nCols) // nulls by default
-        var j = 0
-        while (j < nCols) {
-          val i = colIdx(j)
-          // i < 0: pre-evolution file (null-fill); repetition 0: SQL NULL
-          if (i >= 0 && g.getFieldRepetitionCount(i) > 0) {
-            vals(j) = colTag(j) match {
-              case 0 => g.getLong(i, 0)
-              case 1 => g.getInteger(i, 0)
-              case 2 => g.getInteger(i, 0).toShort
-              case 3 => g.getInteger(i, 0).toByte
-              case 4 => g.getDouble(i, 0)
-              case 5 => g.getFloat(i, 0)
-              case 6 => g.getBoolean(i, 0)
-              case 8 => g.getInteger(i, 0).toLong   // pre-widen int32
-              case 9 => g.getFloat(i, 0).toDouble   // pre-widen float
-              case _ => UTF8String.fromBytes(g.getBinary(i, 0).getBytes)
-            }
-          }
-          j += 1
-        }
-        new GenericInternalRow(vals)
-      }
-
-      override def close(): Unit = {
-        ReaderDiag.add(emitted)
-        reader.close()
-      }
-    }
-  }
 }

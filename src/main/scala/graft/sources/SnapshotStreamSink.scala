@@ -50,8 +50,9 @@ import graft.operators.WriteOps.SnapshotTable
   * complete/update refuse (a snapshot table's history is append-only
   * by construction). */
 private[sources] object SnapshotParquet {
-  /** StructType → parquet-mr MessageType, covering exactly the types
-    * [[GroupRowReaderFactory]] reads back (flat schemas). */
+  /** StructType → parquet-mr MessageType for the flat schemas the
+    * snapshot tables hold; the annotations match what Spark's parquet
+    * reader ([[SnapshotReaderFactory]]) maps back to each type. */
   def messageType(schema: StructType): MessageType = {
     val b = Types.buildMessage()
     schema.fields.foreach { f =>

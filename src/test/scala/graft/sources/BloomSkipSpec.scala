@@ -12,8 +12,8 @@ import graft.operators.WriteOps.{SnapshotTable => T}
   * ask #5): a table declaring `TBLPROPERTIES ('bloomFilterColumns' =
   * '<cols>')` writes parquet-mr's native adaptive bloom filters on
   * those columns through every write path, and the read side's
-  * equality predicates (degenerate [v, v] ranges now build
-  * `FilterApi.eq`) consult them — so a `=`/one-point-`IN` probe on a
+  * equality predicates (Spark's ParquetFilters build `FilterApi.eq`)
+  * consult them — so a `=`/one-point-`IN` probe on a
   * high-cardinality NON-CLUSTERED key skips row groups min/max stats
   * cannot discriminate. False-negative-free by parquet's bloom
   * contract (a bloom only ever proves absence); legacy tables and
@@ -68,6 +68,14 @@ class BloomSkipSpec extends AnyFunSuite {
     }
   }
 
+  /** Runs `f` with parquet-mr's bloom-filter row-group skipping off
+    * (stats and dictionary skipping stay on). */
+  private def withBloomOff[A](f: => A): A = {
+    val hconf = spark.sparkContext.hadoopConfiguration
+    hconf.setBoolean("parquet.filter.bloom.enabled", false)
+    try f finally hconf.unset("parquet.filter.bloom.enabled")
+  }
+
   private def footer(path: String) = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -97,15 +105,11 @@ class BloomSkipSpec extends AnyFunSuite {
     import org.apache.parquet.filter2.predicate.FilterApi
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
-    val (_, _, root) = scatteredBloomTable()
+    val (cat, _, root) = scatteredBloomTable()
     val file = T.files(root, T.versions(root).max).head
     val conf = spark.sparkContext.hadoopConfiguration
     val input = HadoopInputFile.fromPath(
       new org.apache.hadoop.fs.Path(file), conf)
-    val schema = {
-      val fr = footer(file)
-      try fr.getFooter.getFileMetaData.getSchema finally fr.close()
-    }
 
     val all = ParquetFileReader.open(input,
       HadoopReadOptions.builder(conf).build())
@@ -127,20 +131,17 @@ class BloomSkipSpec extends AnyFunSuite {
     assert(keptStats === total,
       "scattered fixture must defeat min/max stats — fixture broken")
 
-    // the shipped path: ParquetPredicates builds eq for the
-    // degenerate range, and the bloom drops non-matching groups
-    val pred = ParquetPredicates.build(schema,
-      Seq(("k", java.lang.Long.valueOf(12345L),
-        java.lang.Long.valueOf(12345L))))
-    assert(pred.isDefined && pred.get.toString.startsWith("eq("),
-      s"degenerate range must build eq, got $pred")
-    val bloomed = ParquetFileReader.open(input,
-      HadoopReadOptions.builder(conf)
-        .withRecordFilter(FilterCompat.get(pred.get)).build())
-    val keptBloom = try bloomed.getRowGroups.size finally bloomed.close()
-    assert(keptBloom < total,
-      s"bloom must skip non-matching groups ($keptBloom of $total kept)")
-    assert(keptBloom >= 1, "the matching group must survive")
+    // the shipped path: the SQL point probe reaches Spark's
+    // ParquetFilters as eq, and the bloom drops non-matching groups —
+    // the scan emits only the surviving groups' rows
+    def probe = spark.sql(s"SELECT k, s FROM $cat.t WHERE k = 12345")
+    val bloomed = ScanMetrics.scanRows(probe)
+    val unbloomed = withBloomOff(ScanMetrics.scanRows(probe))
+    assert(unbloomed === 20000L,
+      "without blooms every group must be read — fixture broken")
+    assert(bloomed < unbloomed,
+      s"bloom must skip non-matching groups ($bloomed of 20000 rows)")
+    assert(bloomed >= 1L, "the matching group must survive")
   }
 
   test("point probe through SQL: exact rows, pushdown on or off") {
@@ -149,10 +150,8 @@ class BloomSkipSpec extends AnyFunSuite {
       spark.sql(s"SELECT k, s FROM $cat.t WHERE k = 12345").collect()
         .map(r => (r.getLong(0), r.getString(1))).toSeq
     val on = probe()
-    val hconf = spark.sparkContext.hadoopConfiguration
-    hconf.setBoolean("graft.snapshot.parquetFilterPushdown", false)
-    val off = try probe()
-    finally hconf.unset("graft.snapshot.parquetFilterPushdown")
+    val off = ScanMetrics.withConf(spark,
+      "spark.sql.parquet.filterPushdown", "false")(probe())
     assert(on === Seq((12345L, "payload_12345")))
     assert(off === on)
   }

@@ -8,15 +8,15 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.etl.TestSpark
 import graft.operators.WriteOps.{SnapshotTable => T}
 
-/** Columnar batch reads in the snapshot connector (r16 verdict ask
-  * #3): unpredicated, DV-free scans serve ColumnarBatches filled by
-  * parquet-mr's public column readers, consumed by Spark's
-  * ColumnarToRow inside whole-stage codegen. Results must be
-  * IDENTICAL to the row path on every shape the connector supports:
-  * nulls, string dictionaries, schema evolution (null-fill + widened
-  * files), byte-range splits, multi-batch row groups. Engagement
-  * refusals (pushed predicates, deletion vectors) keep the row path
-  * with its record-level skipping. */
+/** Columnar batch reads in the snapshot connector: a DV-free scan
+  * hands Spark's vectorized parquet reader's ColumnarBatches straight
+  * to ColumnarToRow inside whole-stage codegen. Results must be
+  * IDENTICAL to Spark's row-based parquet reader
+  * (`spark.sql.parquet.enableVectorizedReader=false`) on every shape
+  * the connector supports: nulls, string dictionaries, schema
+  * evolution (null-fill + widened files), byte-range splits,
+  * multi-batch row groups. Deletion vectors take the row path, where
+  * the tombstone filter runs. */
 class ColumnarReadSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
@@ -24,11 +24,9 @@ class ColumnarReadSpec extends AnyFunSuite {
   private def rowsOf(df: org.apache.spark.sql.DataFrame): Set[String] =
     df.collect().map(_.mkString("|")).toSet
 
-  private def withColumnarOff[A](f: => A): A = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    hconf.set("graft.snapshot.columnar", "off")
-    try f finally hconf.unset("graft.snapshot.columnar")
-  }
+  private def withColumnarOff[A](f: => A): A =
+    ScanMetrics.withConf(spark,
+      "spark.sql.parquet.enableVectorizedReader", "false")(f)
 
   test("full scan: columnar on == off over nulls, strings, and " +
       "multi-batch row groups; plan carries ColumnarToRow") {
@@ -96,8 +94,8 @@ class ColumnarReadSpec extends AnyFunSuite {
     assert(T.files(s"$base/t", 1).nonEmpty)
   }
 
-  test("engagement refusals: pushed predicates and deletion vectors " +
-      "keep the row path, results exact") {
+  test("predicated scans stay columnar, deletion vectors take the " +
+      "row path; results exact") {
     import spark.implicits._
     val root = Files.createTempDirectory("g_colrefuse").toString + "/t"
     val df0 = (0L until 10000L).map(k => (k, 2024, k * 2.0))
@@ -105,12 +103,14 @@ class ColumnarReadSpec extends AnyFunSuite {
     T.commit(spark, root, 0, df0, Seq(2024))
     def scan = spark.read.format("graft-snapshot").option("root", root)
       .load()
-    // a pushed k-range: row path (record skipping) — no ColumnarToRow
+    // a pushed k-range: Spark's reader skips row groups in columnar
+    // mode too, and the residual filter keeps the result exact
     val pred = scan.filter(col("k") >= 100 && col("k") <= 199)
     assert(pred.count() === 100)
     val plan = pred.queryExecution.executedPlan.toString
-    assert(!plan.contains("ColumnarToRow"),
-      s"predicated scan must keep the row path:\n$plan")
+    assert(plan.contains("ColumnarToRow"),
+      s"predicated scan must stay columnar:\n$plan")
+    assert(withColumnarOff(pred.count()) === 100)
 
     // a deletion vector: row path with tombstone filtering
     T.commitDelete(spark, root, 1, "k",
@@ -120,6 +120,7 @@ class ColumnarReadSpec extends AnyFunSuite {
     assert(afterDv.count() === 9900)
     assert(!afterDv.queryExecution.executedPlan.toString
       .contains("ColumnarToRow"))
+    assert(withColumnarOff(afterDv.count()) === 9900)
   }
 
   test("byte-range splits: a split large file reads each row group " +

@@ -13,7 +13,7 @@ import graft.operators.WriteOps.SnapshotTable
   * writers routed per pt_year, exactly-once on epoch replay (orphan
   * files reclaimed), restart lands nothing new, pending-DV partitions
   * refuse, and the written files round-trip through both read paths
-  * (Spark parquet + the connector's Group reader). */
+  * (`SnapshotTable.read` and the connector scan). */
 class NativeSinkSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark

@@ -54,7 +54,6 @@ class PredicatePushPropertySpec extends AnyFunSuite {
 
   test("random conjunctive predicates: pushdown ON == OFF, always") {
     val root = fixture()
-    val hconf = spark.sparkContext.hadoopConfiguration
     def table = spark.read.format("graft-snapshot")
       .option("root", root).load()
     val rnd = new scala.util.Random(7)
@@ -85,10 +84,8 @@ class PredicatePushPropertySpec extends AnyFunSuite {
     (1 to 40).foreach { trial =>
       val p = randomPredicate()
       val on = run(p)
-      hconf.setBoolean("graft.snapshot.parquetFilterPushdown", false)
-      val off =
-        try run(p)
-        finally hconf.unset("graft.snapshot.parquetFilterPushdown")
+      val off = ScanMetrics.withConf(spark,
+        "spark.sql.parquet.filterPushdown", "false")(run(p))
       assert(on === off,
         s"trial $trial diverged for predicate $p: " +
         s"on=${on.size} rows, off=${off.size} rows")

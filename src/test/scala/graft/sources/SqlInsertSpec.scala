@@ -107,6 +107,45 @@ class SqlInsertSpec extends AnyFunSuite {
     assert(e.getMessage.contains("PARTITION-scoped"))
   }
 
+  test("INSERT OVERWRITE PARTITION under dynamic partitionOverwriteMode " +
+      "gives the static head: one commit, others carried by pointer") {
+    val (cat, base) = freshCatalog()
+    Seq("st", "dy").foreach(t => T.commit(spark, s"$base/$t", 0, frame(
+      (1L, 1, 10.0), (2L, 2, 20.0), (3L, 2, 30.0)), Seq(1, 2)))
+    def overwrite(t: String): Unit =
+      spark.sql(s"INSERT OVERWRITE $cat.$t PARTITION (pt_year = 2) " +
+        s"SELECT o_orderkey + 5, o_totalprice * 2 FROM $cat.$t " +
+        "WHERE pt_year = 2 AND o_orderkey > 2")
+    def head(t: String): Set[(Long, Int, Double)] = spark.sql(
+      s"SELECT o_orderkey, pt_year, o_totalprice FROM $cat.$t")
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2)))
+      .toSet
+    val dyRoot = s"$base/dy"
+    val p1Files = T.files(dyRoot, 0).filter(_.contains("_y1_"))
+    val p1Times = p1Files.map(f =>
+      f -> Files.getLastModifiedTime(Paths.get(f)).toMillis).toMap
+    overwrite("st")
+    ScanMetrics.withConf(spark,
+      "spark.sql.sources.partitionOverwriteMode", "dynamic")(
+      overwrite("dy"))
+    assert(head("dy") === Set((1L, 1, 10.0), (8L, 2, 60.0)))
+    assert(head("dy") === head("st"))
+    assert(T.versions(dyRoot) === Seq(0, 1), "one commit")
+    assert(p1Files.forall(T.files(dyRoot, 1).contains))
+    assert(p1Files.map(f =>
+      f -> Files.getLastModifiedTime(Paths.get(f)).toMillis).toMap ===
+      p1Times, "the dynamic overwrite rewrote partition 1's files")
+    // without a partition spec, dynamic mode replaces exactly the
+    // partitions the batch holds (3 is new, 1 stays)
+    ScanMetrics.withConf(spark,
+      "spark.sql.sources.partitionOverwriteMode", "dynamic")(
+      spark.sql(s"INSERT OVERWRITE $cat.dy VALUES " +
+        "(9, 2, 90.0), (4, 3, 40.0)"))
+    assert(head("dy") === Set((1L, 1, 10.0), (9L, 2, 90.0),
+      (4L, 3, 40.0)))
+    assert(T.versions(dyRoot) === Seq(0, 1, 2))
+  }
+
   test("an overwrite batch with NULL pt_year errors loudly (not NPE)") {
     val (cat, base) = freshCatalog()
     val root = s"$base/tnull"

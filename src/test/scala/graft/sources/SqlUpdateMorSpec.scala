@@ -114,6 +114,32 @@ class SqlUpdateMorSpec extends AnyFunSuite {
       (2L, 2025, 20.0), (9L, 2025, 90.0)))
   }
 
+  test("insert-only MERGE lands on a table with pending tombstones; " +
+      "a re-inserted deleted key lives, the others stay dead") {
+    val (cat, base) = freshCatalog()
+    mkTable(cat, "t6")
+    val root = s"$base/t6"
+    // k % 2 = 1 is not v1-translatable → merge-on-read tombstones in
+    // both partitions
+    spark.sql(s"DELETE FROM $cat.t6 WHERE k % 2 = 1")
+    assert(T.dvOf(root, T.versions(root).max).map(_._3.toSet) ===
+      Some(Set(2023, 2024)))
+    spark.sql(
+      s"""MERGE INTO $cat.t6 t
+          USING (SELECT * FROM VALUES
+              (CAST(1 AS BIGINT), 2023, 10.0),
+              (CAST(2 AS BIGINT), 2023, 20.0),
+              (CAST(7 AS BIGINT), 2024, 70.0) AS s(k, pt_year, v)) s
+          ON t.k = s.k
+          WHEN NOT MATCHED THEN INSERT *""")
+    // k=1 was tombstoned: it re-inserts; k=2 is live: matched, kept;
+    // k=7 is new; k=3 and k=5 stay deleted
+    assert(rows(cat, "t6") === Set(
+      (1L, 2023, 10.0), (2L, 2023, 2.0), (4L, 2024, 4.0),
+      (7L, 2024, 70.0)))
+    assert(T.read(spark, root, T.versions(root).max).count() === 4)
+  }
+
   test("non-metadata DELETE tombstones instead of rewriting; " +
       "metadata-translatable DELETE keeps the CoW path") {
     val (cat, base) = freshCatalog()
