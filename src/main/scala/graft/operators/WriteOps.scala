@@ -548,40 +548,90 @@ object WriteOps {
         .map(_.drop(1).dropRight(4).toInt).sorted
     }
 
-    private def topLines(root: String, v: Int): Seq[String] = {
-      val m = manifest(root, v)
-      val fs = fsFor(m)
-      require(fs.exists(m),
-        s"snapshot version $v is unavailable (vacuumed or never " +
-        "committed)")
-      readAllLines(fs, m).filter(_.nonEmpty)
-    }
-
-    /** Version v's top manifest, parsed from ONE read: the recorded
-      * schema, the pending deletion vector and the partition pointers.
-      * A scan resolves this once and passes it down instead of
-      * re-opening the manifest per field. */
+    /** A version's top manifest, parsed from ONE read. A scan resolves
+      * it once and passes it down; a commit reads its parent's once and
+      * builds the next version's from it ([[publish]]).
+      *
+      * This is the one definition of the top-manifest format: [[parse]]
+      * reads it and [[render]] writes it. The file `_manifests/v<N>.txt`
+      * is UTF-8 text, one record per line:
+      *
+      *  - `#schema=<StructType json>`: the version's table schema;
+      *  - `#ts=<epoch millis>`: the commit's stamp on the table's
+      *    monotonic ts chain, equal to the `born` of the files and the
+      *    `__below` of the tombstones that commit wrote;
+      *  - `#txn=<base64 app>\t<batchId>`: an idempotent writer's batch;
+      *  - `#dv=<sidecar dir>\t<key column>\t<year>,<year>,...`: the
+      *    pending deletion vector;
+      *  - `y<year>\t<m-file>`: one partition pointer per non-empty year.
+      *
+      * Every header is optional (manifests written before a field
+      * existed lack it); headers are found by prefix, so their order is
+      * free and other `#` lines are ignored. A staged branch ref is the
+      * same format plus its own `#parent=`/`#fresh=` headers. */
     private[graft] case class Top(version: Int,
         schema: Option[org.apache.spark.sql.types.StructType],
         dv: Option[(String, String, Seq[Int])],
-        pointers: Map[Int, String])
+        pointers: Map[Int, String],
+        ts: Option[Long] = None,
+        txn: Option[(String, Long)] = None) {
+      /** The next commit's draft on this version: same schema, pointers
+        * and pending deletion vector, stamped `ts`, no txn (a writer's
+        * batch belongs to the one commit that recorded it). */
+      def next(v: Int, ts: Long): Top =
+        copy(version = v, ts = Some(ts), txn = None)
+    }
+
+    private object Top {
+      /** The parent of version 0: no schema, no files, no stamp. */
+      val empty: Top = Top(-1, None, None, Map.empty)
+
+      def header(ls: Seq[String], k: String): Option[String] =
+        ls.find(_.startsWith(k)).map(_.stripPrefix(k))
+
+      def parse(v: Int, ls: Seq[String]): Top =
+        Top(v,
+          header(ls, "#schema=").map(j => org.apache.spark.sql.types.DataType
+            .fromJson(j).asInstanceOf[org.apache.spark.sql.types.StructType]),
+          header(ls, "#dv=").map { l =>
+            val t = l.split('\t')
+            (t(0), t(1),
+              t(2).split(',').filter(_.nonEmpty).map(_.toInt).toSeq)
+          },
+          ls.filterNot(_.startsWith("#")).map { l =>
+            val i = l.indexOf('\t')
+            l.take(i).drop(1).toInt -> l.drop(i + 1)
+          }.toMap,
+          header(ls, "#ts=").map(_.toLong),
+          header(ls, "#txn=").map { l =>
+            val i = l.indexOf('\t')
+            (b64d(l.take(i)), l.drop(i + 1).toLong)
+          })
+
+      def render(t: Top): Seq[String] =
+        t.schema.map(sc => s"#schema=${sc.json}").toSeq ++
+          t.ts.map(ts => s"#ts=$ts") ++
+          t.txn.map { case (app, id) => s"#txn=${b64e(app)}\t$id" } ++
+          t.dv.map { case (p, k, ys) =>
+            s"#dv=$p\t$k\t${ys.sorted.mkString(",")}"
+          } ++
+          t.pointers.toSeq.sortBy(_._1).map { case (y, m) => s"y$y\t$m" }
+    }
+
+    /** Version v's top manifest, or None when v was never committed or
+      * was vacuumed. */
+    private def readTop(root: String, v: Int): Option[Top] = {
+      val m = manifest(root, v)
+      try Some(Top.parse(v, readAllLines(fsFor(m), m).filter(_.nonEmpty)))
+      catch { case _: java.io.FileNotFoundException => None }
+    }
 
     private[graft] def top(root: String, v: Int): Top = {
-      val ls = topLines(root, v)
-      Top(v,
-        ls.find(_.startsWith("#schema="))
-          .map(l => org.apache.spark.sql.types.DataType
-            .fromJson(l.stripPrefix("#schema="))
-            .asInstanceOf[org.apache.spark.sql.types.StructType]),
-        ls.find(_.startsWith("#dv=")).map { l =>
-          val t = l.stripPrefix("#dv=").split('\t')
-          (t(0), t(1),
-            t(2).split(',').filter(_.nonEmpty).map(_.toInt).toSeq)
-        },
-        ls.filterNot(_.startsWith("#")).map { l =>
-          val i = l.indexOf('\t')
-          l.take(i).drop(1).toInt -> l.drop(i + 1)
-        }.toMap)
+      val t = readTop(root, v)
+      require(t.isDefined,
+        s"snapshot version $v is unavailable (vacuumed or never " +
+        "committed)")
+      t.get
     }
 
     /** The version's partition-manifest POINTER map (year → m-file):
@@ -629,13 +679,15 @@ object WriteOps {
       * per-column min/max stats blob (`""` when the file predates stats
       * collection or no column qualified) — the Iceberg/Delta data-
       * skipping metadata, carried with the file through every
-      * carry-over, optimize, branch publish, and vacuum. */
-    /** `rows`: the file's exact row count, recorded at commit from the
+      * carry-over, optimize, branch publish, and vacuum.
+      *
+      * `rows`: the file's exact row count, recorded at commit from the
       * same footer read that collects column stats (−1 on entries
       * written before r15 — consumers must treat unknown as
       * unpushable). Carried verbatim through every carry-over, like
-      * bytes and stats. */
-    /** `born`: the monotonic commit-ts chain value of the commit that
+      * bytes and stats.
+      *
+      * `born`: the monotonic commit-ts chain value of the commit that
       * CREATED the file's content (−1 = legacy/unknown, treated as
       * older-than-everything). Deletion-vector tombstones carry a
       * `__below` from the same chain and kill a row only when
@@ -919,8 +971,9 @@ object WriteOps {
       * costs more); beyond that the footer reads FAN OUT as one Spark
       * job over the file list — at a 100 TB commit touching thousands
       * of files, stats collection distributes like everything else
-      * and only (path → tiny stats blob) pairs return to the driver. */
-    /** Per fresh file: (encoded stats blob, exact row count) — one
+      * and only (path → tiny stats blob) pairs return to the driver.
+      *
+      * Per fresh file: (encoded stats blob, exact row count) — one
       * footer read serves both. An empty `cols` map still reads the
       * footer for the row count (cheap, and what makes COUNT(*)
       * pushdown total over every committed entry). */
@@ -1147,10 +1200,6 @@ object WriteOps {
     def dvOf(root: String, v: Int): Option[(String, String, Seq[Int])] =
       top(root, v).dv
 
-    private def dvLineOf(path: String, keyCol: String,
-        years: Seq[Int]): String =
-      s"#dv=$path\t$keyCol\t${years.sorted.mkString(",")}"
-
     /** Broadcast ceiling for the pending-tombstone anti-join's build
       * side, in sidecar ON-DISK bytes (64 MB default — comfortably
       * inside executor broadcast budgets even after decompression).
@@ -1246,13 +1295,8 @@ object WriteOps {
       * one manifest. */
     def commitDelete(s: SparkSession, root: String, v: Int,
         keyCol: String, doomed: DataFrame): Unit = {
-      val fs = fsFor(manifest(root, v))
       require(v > 0, "a delete needs a parent version")
-      require(fs.exists(manifest(root, v - 1)),
-        s"cannot commit version $v: parent v${v - 1} was never committed")
-      require(!fs.exists(manifest(root, v)),
-        s"conflict: version $v is already committed — rebase on the " +
-        "current head and retry")
+      val parent = preflight(root, v)
       // `__below`: the ts-chain value of THIS delete commit — a
       // tombstone kills only rows of files born strictly before it,
       // so a later (or same-commit, merge-on-read) re-insert of the
@@ -1261,10 +1305,10 @@ object WriteOps {
       // before now (appends into DV-pending partitions are refused),
       // so the semantics are unchanged and the MAX sentinel never
       // leaks forward.
-      val ts = nextCommitTs(root, v)
+      val ts = drawTs(parent)
       val fresh = doomed.select(col(keyCol), col("pt_year"))
         .distinct().withColumn("__below", lit(ts))
-      val pending = (dvOf(root, v - 1) match {
+      val pending = (parent.dv match {
         case Some((p, k, _)) =>
           require(k == keyCol,
             s"pending deletion vector keys on '$k'; a '$keyCol' delete " +
@@ -1281,16 +1325,8 @@ object WriteOps {
       val years = pending.select("pt_year").distinct()
         .collect().map(_.getInt(0)).toSeq.sorted
       require(years.nonEmpty, "an empty delete commits nothing")
-      val schema = tableSchema(root, v - 1)
-      val tmp = new HPath(mdir(root), s".v$v.tmp")
-      lockFor(root).synchronized {
-        writeAtomic(fs, tmp, manifest(root, v),
-          (schema.map(sc => s"#schema=${sc.json}").toSeq ++
-            Seq(s"#ts=${monotonicTs(root, v)}",
-              dvLineOf(dvPath, keyCol, years))) ++
-            pointers(root, v - 1).toSeq.sortBy(_._1)
-              .map { case (y, m) => s"y$y\t$m" })
-      }
+      publish(root,
+        parent.next(v, ts).copy(dv = Some((dvPath, keyCol, years))))
     }
 
     /** Field-metadata key recording a column's PREVIOUS physical
@@ -1510,26 +1546,18 @@ object WriteOps {
       else read(s, root, v).filter(lit(false))
     }
 
-    /** Commit `slice` — ALL rows of the touched partitions — as
-      * version v. ONE partitioned Spark write covers every touched
-      * partition (a per-partition write loop would pay one job-launch
-      * per partition — 7× the scheduler overhead on a full-history
-      * commit for identical bytes); `__pt` duplicates the partition
-      * column so the data files keep `pt_year` while the directory
-      * layout routes them. Then the atomic manifest rename publishes.
-      * A touched partition left with zero rows simply contributes no
-      * files (reading it through any later version yields no rows —
-      * the same observable state the empty file gave). */
     /** Stage `slice`'s touched partitions and move the part files into
       * `data/` under `namer(year, index)` names; returns, PER TOUCHED
-      * YEAR, its (path, bytes) list. Sizes come from the SAME directory
-      * listing that finds the files — zero extra FS metadata calls.
-      * Destination paths are built from the caller's `root` string (not
-      * the listing), so manifests store root-relative forms verbatim. */
+      * YEAR, its fresh entries (their `born` is stamped at publish).
+      * Sizes come from the SAME directory listing that finds the files
+      * — zero extra FS metadata calls. Destination paths are built from
+      * the caller's `root` string (not the listing), so manifests store
+      * root-relative forms verbatim. The files carry the bloom filters
+      * `parent`'s schema declares ([[BloomColsKey]]). */
     private def stageDataFiles(s: SparkSession, root: String,
         stageName: String, slice: DataFrame, touched: Seq[Int],
         namer: (Int, Int) => String,
-        born: Long = -1L,
+        parent: Top,
         distribute: Boolean = true): Seq[(Int, Seq[FileEntry])] = {
       val dataDir = new HPath(root, "data")
       val fs = fsFor(dataDir)
@@ -1565,7 +1593,8 @@ object WriteOps {
       // parquet sink passes them to ParquetOutputFormat verbatim);
       // adaptive sizing keeps the bloom proportional to the row
       // group's observed distinct count instead of the 1 MB default
-      val blooms = bloomColsAt(root).filter(slice.columns.contains)
+      val blooms = parent.schema.map(bloomColsOf).getOrElse(Nil)
+        .filter(slice.columns.contains)
       val w = blooms.foldLeft(
           if (blooms.isEmpty) w0
           else w0.option("parquet.bloom.filter.adaptive.enabled", "true"))(
@@ -1600,113 +1629,196 @@ object WriteOps {
         ioMap(renames) { case (src, dst, _) =>
           substrate.publishNoReplaceUnique(fs, src, dst)
         }
-      val moved = plan.map { case (y, es) =>
-        y -> es.map { case (_, dst, len) => dst.toString -> len }
-      }
       deleteTree(stage.toString)
-      // data-skipping stats: per fresh file, column min/max from the
-      // parquet FOOTER (metadata only — see collectStats for the
-      // driver/distributed cutover), recorded on the manifest line so
-      // every future filtered read prunes without touching storage
-      val stats = collectStats(s, moved.flatMap(_._2.map(_._1)),
-        statColsOf(slice.schema))
-      moved.map { case (y, es) =>
-        y -> es.map { case (p, b) =>
+      freshEntries(s,
+        plan.flatMap { case (y, es) =>
+          es.map { case (_, dst, len) => (y, dst.toString, len) }
+        }, slice.schema)
+    }
+
+    /** Manifest entries for freshly written (pt_year, path, bytes)
+      * files, grouped by year: data-skipping stats and the exact row
+      * count come from each file's parquet FOOTER (metadata only — see
+      * [[collectStats]] for the driver/distributed cutover), so every
+      * future filtered read prunes without touching storage. `born` is
+      * left unknown; [[addsOf]] stamps it with the commit's ts. */
+    private[graft] def freshEntries(s: SparkSession,
+        files: Seq[(Int, String, Long)],
+        schema: org.apache.spark.sql.types.StructType)
+        : Seq[(Int, Seq[FileEntry])] = {
+      val stats = collectStats(s, files.map(_._2), statColsOf(schema))
+      files.groupBy(_._1).toSeq.sortBy(_._1).map { case (y, fs) =>
+        y -> fs.map { case (_, p, b) =>
           val (blob, rows) = stats.getOrElse(p, ("", -1L))
-          FileEntry(p, b, blob, rows, born)
-        }
+          FileEntry(p, b, blob, rows)
+        }.sortBy(_.path)
       }
     }
 
-    /** The ts-chain value for a commit of version `v` — exposed so
-      * staging paths can record it as fresh files' `born` BEFORE the
-      * manifest write draws its own (which is then ≥ this value, and
-      * every LATER commit's strictly greater — the ordering the
-      * birth-aware tombstone check rides on). */
-    private[graft] def nextCommitTs(root: String, v: Int): Long =
-      monotonicTs(root, v)
+    // ------------------------------------------------------------------
+    // THE COMMIT PROTOCOL. Every commit kind (commit, commitDelete,
+    // commitReplaceEntries, commitAppend/commitAppendEntries,
+    // commitDelta, restore, shallowClone, publishBranch) is a policy
+    // that builds the next version's `Top` from its parent's:
+    //  - `preflight` checks the version race and reads the parent's
+    //    top manifest, once;
+    //  - `drawTs` stamps the commit, once per attempt — the fresh
+    //    files' `born`, the tombstones' `__below` and the manifest's
+    //    `#ts` are that one value;
+    //  - `mergePointers` writes the touched partitions' m-files;
+    //  - `publish` writes the top manifest, the only writer of one.
+    // ------------------------------------------------------------------
 
+    /** Optimistic concurrency: history is linear and a version commits
+      * once. Checks that parent v-1 is committed and v is still free,
+      * and returns the parent's top manifest ([[Top.empty]] for v0).
+      * Two writers racing to publish the same v can both pass; the
+      * rename-no-replace in [[publish]] lets exactly one win, and the
+      * loser rebases on the new head — the same protocol a lakehouse
+      * log runs (`SnapshotSourceTable.commitRetrying` retries on the
+      * "conflict: version" message). */
+    private def preflight(root: String, v: Int): Top = {
+      val parent = if (v == 0) Some(Top.empty) else readTop(root, v - 1)
+      require(parent.isDefined,
+        s"cannot commit version $v: parent v${v - 1} was never committed")
+      val m = manifest(root, v)
+      require(!fsFor(m).exists(m),
+        s"conflict: version $v is already committed — rebase on the " +
+        "current head and retry")
+      parent.get
+    }
+
+    /** Wall-clock hook — private[graft] var ONLY so the specs can
+      * freeze or step the clock backwards to pin the same-millisecond
+      * and clock-skew cases deterministically. */
+    private[graft] var clock: () => Long = () => System.currentTimeMillis()
+
+    /** The commit's stamp: wall-clock forced MONOTONIC per table —
+      * `max(parent_ts + 1, now)`. Two commits landing in the same
+      * millisecond (or a clock stepping backwards between commits)
+      * would otherwise make `TIMESTAMP AS OF`'s at-or-before mapping
+      * ambiguous: with monotonic stamps, version order and timestamp
+      * order agree by construction, so the mapping is total and
+      * deterministic (TimestampMonotonicSpec). Same discipline as
+      * Delta's in-commit-timestamp monotonicity clamp. Drawn once per
+      * commit attempt: a second draw could land below the first after
+      * a clock step, leaving the manifest's `#ts` below its own files'
+      * `born`, and a later delete's `__below` at or under it. */
+    private def drawTs(parent: Top): Long = {
+      val now = clock()
+      parent.ts.fold(now)(p => math.max(p + 1, now))
+    }
+
+    /** Fresh entries stamped `born = ts`, appended per year to entries
+      * carried verbatim (which keep their own `born`). */
+    private def addsOf(fresh: Seq[(Int, Seq[FileEntry])], ts: Long,
+        carried: Map[Int, Seq[FileEntry]] = Map.empty)
+        : Map[Int, Seq[FileEntry]] =
+      fresh.foldLeft(carried) { case (acc, (y, es)) =>
+        acc.updated(y, acc.getOrElse(y, Nil) ++ es.map(_.copy(born = ts)))
+      }
+
+    /** The next version's pointer map: every `replaced` year drops its
+      * parent pointer; every year with entries in `adds` gets a fresh
+      * m-file `mfile(year)` listing the parent's entries (unless
+      * replaced — a metadata line copy, no data file opens) plus the
+      * adds; every other year carries its parent pointer verbatim, its
+      * m-file neither re-read nor rewritten. */
+    private def mergePointers(root: String, parent: Map[Int, String],
+        replaced: Set[Int], adds: Map[Int, Seq[FileEntry]],
+        mfile: Int => String): Map[Int, String] = {
+      val fresh = adds.toSeq.sortBy(_._1).collect {
+        case (y, es) if es.nonEmpty =>
+          val base =
+            if (replaced(y)) Nil
+            else parent.get(y).map(readPartManifest).getOrElse(Nil)
+          y -> writePartManifest(root, mfile(y), base ++ es)
+      }
+      (parent -- replaced) ++ fresh
+    }
+
+    /** Parent schema ∪ the written frame's (see [[mergeSchemas]]); a
+      * parent recording no schema takes the frame's as is. */
+    private def evolve(parent: Top,
+        written: org.apache.spark.sql.types.StructType)
+        : org.apache.spark.sql.types.StructType =
+      parent.schema.map(mergeSchemas(_, written)).getOrElse(written)
+
+    private def token(): String =
+      java.util.UUID.randomUUID().toString.take(8)
+
+    /** Publish `next` as version `next.version` — the ONE writer of a
+      * top manifest. The rename-no-replace in [[writeAtomic]]
+      * arbitrates the version race (the loser throws); the per-root
+      * lock serializes the local-FS check-then-rename within this JVM.
+      * A txn-carrying commit also records its durable marker. */
+    private def publish(root: String, next: Top): Unit = {
+      val v = next.version
+      val m = manifest(root, v)
+      lockFor(root).synchronized {
+        writeAtomic(fsFor(m), new HPath(mdir(root), s".v$v.tmp"), m,
+          Top.render(next))
+      }
+      next.txn.foreach { case (app, id) => recordTxnMarker(root, app, id) }
+    }
+
+    /** Commit `slice` — ALL rows of the touched partitions — as
+      * version v. ONE partitioned Spark write covers every touched
+      * partition (a per-partition write loop would pay one job-launch
+      * per partition — 7× the scheduler overhead on a full-history
+      * commit for identical bytes); `__pt` duplicates the partition
+      * column so the data files keep `pt_year` while the directory
+      * layout routes them. Then the atomic manifest rename publishes.
+      * A touched partition left with zero rows simply contributes no
+      * files (reading it through any later version yields no rows —
+      * the same observable state the empty file gave). Untouched
+      * partitions carry by pointer; touched partitions' pending
+      * deletion-vector tombstones purge ([[dvAfterRewrite]]).
+      *
+      * `carriedFiles`: a PARTIAL partition rewrite (file-granular
+      * DELETE) carries the untouched files' entries verbatim into the
+      * touched partition's fresh m-file — a metadata line copy, the
+      * files themselves never open. Refused where pending
+      * deletion-vector tombstones exist: a partial rewrite cannot
+      * soundly purge them (carried files may still hold tombstoned
+      * keys), and this commit purges touched years' tombstones.
+      *
+      * The version's schema is parent schema ∪ the slice's (new columns
+      * append nullable; type changes refuse), recorded as metadata so
+      * readers never sample footers. `schemaOverride` bypasses the
+      * merge for the DDL path ONLY: ALTER COLUMN TYPE records a
+      * deliberately-widened schema that the write-side merge would
+      * (correctly) refuse as implicit. */
     def commit(s: SparkSession, root: String, v: Int, slice: DataFrame,
         touched: Seq[Int], txn: Option[(String, Long)] = None,
         carriedFiles: Map[Int, Seq[FileEntry]] = Map.empty,
         schemaOverride: Option[org.apache.spark.sql.types.StructType] =
           None,
         distribute: Boolean = true): Unit = {
-      val fs = fsFor(manifest(root, v))
-      // optimistic concurrency: history is linear and a version commits
-      // once. Two writers racing to publish the same v both pass this
-      // check at worst, but the rename-no-replace below lets exactly one
-      // publish win — the loser throws and must rebase on the new head,
-      // the same protocol a lakehouse log runs.
-      require(v == 0 || fs.exists(manifest(root, v - 1)),
-        s"cannot commit version $v: parent v${v - 1} was never committed")
-      require(!fs.exists(manifest(root, v)),
-        s"conflict: version $v is already committed — rebase on the " +
-        "current head and retry")
-      // `carriedFiles`: a PARTIAL partition rewrite (file-granular
-      // DELETE) carries the untouched files' entries verbatim into the
-      // touched partition's fresh m-file — a metadata line copy, the
-      // files themselves never open. Refused where pending
-      // deletion-vector tombstones exist: a partial rewrite cannot
-      // soundly purge them (carried files may still hold tombstoned
-      // keys), and this commit purges touched years' tombstones.
+      val parent = preflight(root, v)
       require(carriedFiles.keySet.subsetOf(touched.toSet),
         "carried file entries must belong to touched partitions")
-      if (carriedFiles.nonEmpty && v > 0)
-        dvOf(root, v - 1).foreach { case (_, _, dvYears) =>
+      if (carriedFiles.nonEmpty)
+        parent.dv.foreach { case (_, _, dvYears) =>
           val hit = dvYears.toSet.intersect(carriedFiles.keySet)
           require(hit.isEmpty,
             s"partitions ${hit.mkString(",")} hold pending tombstones " +
             "— a partial (file-granular) rewrite there would purge " +
             "them unsoundly; rewrite the full partition instead")
         }
-      val staged = stageDataFiles(s, root,
-        s"stage_v${v}_${java.util.UUID.randomUUID().toString.take(8)}",
-        slice, touched, (y, i) => f"v${v}_y${y}_p$i%05d.parquet",
-        nextCommitTs(root, v), distribute)
-      // one immutable m-file per touched partition WITH files (carried
-      // entries first, fresh after); a touched partition left with
-      // neither simply has no pointer in v
-      val stagedMap = staged.toMap
-      val freshPtrs: Map[Int, String] =
-        (stagedMap.keySet ++ carriedFiles.keySet).toSeq.sorted.flatMap {
-          y =>
-            val es = carriedFiles.getOrElse(y, Seq.empty) ++
-              stagedMap.getOrElse(y, Seq.empty)
-            if (es.isEmpty) None
-            else Some(y -> writePartManifest(root, s"m_v${v}_y$y.txt", es))
-        }.toMap
-      // carry-over = the parent's POINTERS for untouched partitions —
-      // their m-files are not re-read, let alone rewritten
-      val carriedPtrs =
-        if (v == 0) Map.empty[Int, String]
-        else pointers(root, v - 1) -- touched
-      // schema evolution: the version's schema = parent schema ∪ the
-      // committed slice's (new columns append nullable; type changes
-      // refuse) — recorded as metadata so readers never sample footers.
-      // `schemaOverride` bypasses the merge for the DDL path ONLY:
-      // ALTER COLUMN TYPE records a deliberately-widened schema that
-      // the write-side merge would (correctly) refuse as implicit.
+      val staged = stageDataFiles(s, root, s"stage_v${v}_${token()}",
+        slice, touched, (y, i) => f"v${v}_y${y}_p$i%05d.parquet", parent,
+        distribute)
       val schema = schemaOverride.getOrElse {
         if (v == 0) org.apache.spark.sql.types.StructType(
           slice.schema.fields.map(_.copy(nullable = true)))
-        else tableSchema(root, v - 1)
-          .map(mergeSchemas(_, slice.schema))
-          .getOrElse(slice.schema)
+        else evolve(parent, slice.schema)
       }
-      val tmp = new HPath(mdir(root), s".v$v.tmp")
-      val txnLine = txn.toSeq.map { case (app, id) =>
-        s"#txn=${b64e(app)}\t$id"
-      }
-      val dvLine: Seq[String] = dvCarryAfterRewrite(s, root, v, touched)
-      lockFor(root).synchronized {
-        writeAtomic(fs, tmp, manifest(root, v),
-          (Seq(s"#schema=${schema.json}",
-            s"#ts=${monotonicTs(root, v)}") ++ txnLine ++ dvLine) ++
-            (carriedPtrs ++ freshPtrs).toSeq.sortBy(_._1)
-              .map { case (y, m) => s"y$y\t$m" })
-      }
-      txn.foreach { case (app, id) => recordTxnMarker(root, app, id) }
+      val ts = drawTs(parent)
+      publish(root, parent.next(v, ts).copy(schema = Some(schema),
+        txn = txn, dv = dvAfterRewrite(s, root, v, parent, touched),
+        pointers = mergePointers(root, parent.pointers, touched.toSet,
+          addsOf(staged, ts, carriedFiles), y => s"m_v${v}_y$y.txt")))
     }
 
     /** Deletion-vector carry/purge for a commit REWRITING `touched`
@@ -1715,22 +1827,20 @@ object WriteOps {
       * tombstones drop — rewrites supersede pending deletes; untouched
       * partitions' tombstones carry (shared by [[commit]] and
       * [[commitReplaceEntries]]). */
-    private def dvCarryAfterRewrite(s: SparkSession, root: String,
-        v: Int, touched: Seq[Int]): Seq[String] =
-      (if (v == 0) None else dvOf(root, v - 1)) match {
-        case None => Nil
-        case Some((p, k, years)) =>
-          val remaining = years.filterNot(touched.contains)
-          if (remaining.isEmpty) Nil
-          else if (remaining == years) Seq(dvLineOf(p, k, years))
-          else {
-            val purged = s.read.parquet(p).filter(col("pt_year")
-              .isin(remaining.map(Integer.valueOf): _*))
-              .localCheckpoint(true)
-            val np = freshDvPath(root, v)
-            purged.coalesce(1).write.mode(SaveMode.Overwrite).parquet(np)
-            Seq(dvLineOf(np, k, remaining))
-          }
+    private def dvAfterRewrite(s: SparkSession, root: String, v: Int,
+        parent: Top, touched: Seq[Int]): Option[(String, String, Seq[Int])] =
+      parent.dv.flatMap { case (p, k, years) =>
+        val remaining = years.filterNot(touched.contains)
+        if (remaining.isEmpty) None
+        else if (remaining == years) parent.dv
+        else {
+          val purged = s.read.parquet(p).filter(col("pt_year")
+            .isin(remaining.map(Integer.valueOf): _*))
+            .localCheckpoint(true)
+          val np = freshDvPath(root, v)
+          purged.coalesce(1).write.mode(SaveMode.Overwrite).parquet(np)
+          Some((np, k, remaining))
+        }
       }
 
     /** GROUP-REPLACE commit — the write half of the SQL row-level
@@ -1745,8 +1855,9 @@ object WriteOps {
       * Replaced partitions' pending deletion-vector tombstones purge
       * (the rewrite's fresh files come from DV-applied reads);
       * append-target partitions holding pending tombstones REFUSE,
-      * the same guard as [[commitAppend]]. */
-    /** `carried`: the file-granular half of a group rewrite — stats-
+      * the same guard as [[commitAppend]].
+      *
+      * `carried`: the file-granular half of a group rewrite — stats-
       * excluded files of REPLACED partitions whose manifest entries
       * re-point verbatim (never opened, never rewritten; mtimes are
       * spec-pinned), alongside the freshly staged replacement files.
@@ -1756,20 +1867,14 @@ object WriteOps {
         root: String, v: Int, staged: Seq[(Int, Seq[FileEntry])],
         replaced: Seq[Int],
         carried: Map[Int, Seq[FileEntry]] = Map.empty): Unit = {
-      val fs = fsFor(manifest(root, v))
       require(v > 0, "a group-replace needs a parent version")
-      require(fs.exists(manifest(root, v - 1)),
-        s"cannot commit version $v: parent v${v - 1} was never committed")
-      require(!fs.exists(manifest(root, v)),
-        s"conflict: version $v is already committed — rebase on the " +
-        "current head and retry")
+      val parent = preflight(root, v)
       require(carried.keySet.subsetOf(replaced.toSet),
         "carried files must belong to replaced partitions")
-      val parentPtrs = pointers(root, v - 1)
       val appendYears =
         staged.collect { case (y, es) if es.nonEmpty => y }
           .filterNot(replaced.contains)
-      dvOf(root, v - 1).foreach { case (_, _, dvYears) =>
+      parent.dv.foreach { case (_, _, dvYears) =>
         val hit = dvYears.intersect(appendYears)
         require(hit.isEmpty,
           s"partitions ${hit.mkString(",")} hold pending deletion-" +
@@ -1777,54 +1882,15 @@ object WriteOps {
           "re-inserted keys to the tombstone anti-join — run " +
           "optimize(purgeTombstoned) first")
       }
-      val mtok = java.util.UUID.randomUUID().toString.take(8)
-      val stagedMap = staged.toMap
-      val freshPtrs: Map[Int, String] =
-        (stagedMap.keySet ++ carried.keySet).toSeq.sorted.flatMap { y =>
-          val es = carried.getOrElse(y, Seq.empty) ++
-            stagedMap.getOrElse(y, Seq.empty)
-          val base =
-            if (replaced.contains(y)) Seq.empty
-            else parentPtrs.get(y).map(readPartManifest)
-              .getOrElse(Seq.empty)
-          if (es.isEmpty) None
-          else Some(y -> writePartManifest(root,
-            s"m_v${v}_y${y}_$mtok.txt", base ++ es))
-        }.toMap
-      val carriedPtrs = (parentPtrs -- replaced) -- freshPtrs.keySet
-      val schema = tableSchema(root, v - 1).getOrElse(
+      if (parent.schema.isEmpty)
         throw new IllegalStateException(
-          s"version ${v - 1} of $root records no schema"))
-      val dvLine = dvCarryAfterRewrite(s, root, v, replaced)
-      val tmp = new HPath(mdir(root), s".v$v.tmp")
-      lockFor(root).synchronized {
-        writeAtomic(fs, tmp, manifest(root, v),
-          (Seq(s"#schema=${schema.json}",
-            s"#ts=${monotonicTs(root, v)}") ++ dvLine) ++
-            (carriedPtrs ++ freshPtrs).toSeq.sortBy(_._1)
-              .map { case (y, m) => s"y$y\t$m" })
-      }
-    }
-
-    /** Version v's commit stamp: wall-clock forced MONOTONIC per table
-      * — `max(parent_ts + 1, now)`. Two commits landing in the same
-      * millisecond (or a clock stepping backwards between commits)
-      * would otherwise make `TIMESTAMP AS OF`'s at-or-before mapping
-      * ambiguous: with monotonic stamps, version order and timestamp
-      * order agree by construction, so the mapping is total and
-      * deterministic (SnapshotSourceSpec pins the same-millisecond
-      * case). Same discipline as Delta's in-commit-timestamp
-      * monotonicity clamp. */
-    // wall-clock hook — private[graft] var ONLY so the spec can freeze
-    // or step the clock backwards to pin the same-millisecond and
-    // clock-skew cases deterministically
-    private[graft] var clock: () => Long = () => System.currentTimeMillis()
-
-    private def monotonicTs(root: String, v: Int): Long = {
-      val now = clock()
-      if (v == 0) now
-      else commitTs(root, v - 1).map(p => math.max(p + 1, now))
-        .getOrElse(now)
+          s"version ${v - 1} of $root records no schema")
+      val ts = drawTs(parent)
+      val mtok = token()
+      publish(root, parent.next(v, ts).copy(
+        dv = dvAfterRewrite(s, root, v, parent, replaced),
+        pointers = mergePointers(root, parent.pointers, replaced.toSet,
+          addsOf(staged, ts, carried), y => s"m_v${v}_y${y}_$mtok.txt")))
     }
 
     /** TRUE APPEND commit — `INSERT INTO` semantics at O(batch) cost:
@@ -1857,58 +1923,36 @@ object WriteOps {
           r.getInt(0)
         }.toSeq.sorted
       require(touched.nonEmpty, "an empty append commits nothing")
-      val dvLine = appendPreflight(root, v, touched, overTombstones)
+      val parent = appendPreflight(root, v, touched, overTombstones)
       // token-uniquified names: two appenders RACING to the same v
       // stage without file-level collisions — the manifest rename alone
       // arbitrates, the loser rebases, its orphans await vacuumOrphans
-      val tok = java.util.UUID.randomUUID().toString.take(8)
+      val tok = token()
       val staged = stageDataFiles(s, root, s"stage_v${v}_$tok",
         batch, touched, (y, i) => f"v${v}_y${y}_a$i%05d_$tok.parquet",
-        nextCommitTs(root, v))
-      commitAppendEntries(root, v, staged, batch.schema, txn, dvLine)
+        parent)
+      commitAppendEntries(root, v, parent, staged, batch.schema, txn)
     }
 
     /** The manifest-merge half of [[commitAppend]], shared with the
       * native streaming sink (whose executor-side writers have already
       * produced the fresh files): publish `staged` fresh entries as
-      * version v — each touched partition's new m-file = the PARENT's
-      * entry lines ++ the fresh entries (metadata copy, no data file
-      * opened), untouched partitions carry by pointer. */
+      * version v on `parent` (from [[appendPreflight]]) — each touched
+      * partition's new m-file = the PARENT's entry lines ++ the fresh
+      * entries (metadata copy, no data file opened), untouched
+      * partitions and the pending deletion vector carry. */
     private[graft] def commitAppendEntries(root: String, v: Int,
-        staged: Seq[(Int, Seq[FileEntry])],
+        parent: Top, staged: Seq[(Int, Seq[FileEntry])],
         batchSchema: org.apache.spark.sql.types.StructType,
-        txn: Option[(String, Long)],
-        dvLine: Seq[String]): Unit = {
-      val fs = fsFor(manifest(root, v))
-      val parentPtrs = pointers(root, v - 1)
+        txn: Option[(String, Long)]): Unit = {
+      val ts = drawTs(parent)
       // m-file names carry a token too: append racers must not collide
       // below the manifest rename that arbitrates them
-      val mtok = java.util.UUID.randomUUID().toString.take(8)
-      // fresh m-file per touched partition = parent entries (a metadata
-      // line copy — no data file is opened) ++ the staged fresh entries
-      val freshPtrs: Map[Int, String] = staged.collect {
-        case (y, es) if es.nonEmpty =>
-          val parentEs = parentPtrs.get(y).map(readPartManifest)
-            .getOrElse(Seq.empty)
-          y -> writePartManifest(root, s"m_v${v}_y${y}_$mtok.txt",
-            parentEs ++ es)
-      }.toMap
-      val carriedPtrs = parentPtrs -- freshPtrs.keySet
-      val schema = tableSchema(root, v - 1)
-        .map(mergeSchemas(_, batchSchema))
-        .getOrElse(batchSchema)
-      val txnLine = txn.toSeq.map { case (app, id) =>
-        s"#txn=${b64e(app)}\t$id"
-      }
-      val tmp = new HPath(mdir(root), s".v$v.tmp")
-      lockFor(root).synchronized {
-        writeAtomic(fs, tmp, manifest(root, v),
-          (Seq(s"#schema=${schema.json}",
-            s"#ts=${monotonicTs(root, v)}") ++ txnLine ++ dvLine) ++
-            (carriedPtrs ++ freshPtrs).toSeq.sortBy(_._1)
-              .map { case (y, m) => s"y$y\t$m" })
-      }
-      txn.foreach { case (app, id) => recordTxnMarker(root, app, id) }
+      val mtok = token()
+      publish(root, parent.next(v, ts).copy(
+        schema = Some(evolve(parent, batchSchema)), txn = txn,
+        pointers = mergePointers(root, parent.pointers, Set.empty,
+          addsOf(staged, ts), y => s"m_v${v}_y${y}_$mtok.txt")))
     }
 
     /** MERGE-ON-READ row-level commit (the write half of the DSv2
@@ -1932,14 +1976,9 @@ object WriteOps {
         v: Int, keyCol: String, files: Seq[(Int, String, Long)],
         dvStaged: Seq[String],
         writeSchema: org.apache.spark.sql.types.StructType): Unit = {
-      val fs = fsFor(manifest(root, v))
       require(v > 0, "a row-level delta needs a parent version")
-      require(fs.exists(manifest(root, v - 1)),
-        s"cannot commit version $v: parent v${v - 1} was never committed")
-      require(!fs.exists(manifest(root, v)),
-        s"conflict: version $v is already committed — rebase on the " +
-        "current head and retry")
-      val ts = nextCommitTs(root, v)
+      val parent = preflight(root, v)
+      val ts = drawTs(parent)
 
       // tombstones: staged (key, pt_year) task files → __below = ts,
       // unioned with the parent's pending set (legacy rows upgrade to
@@ -1952,7 +1991,7 @@ object WriteOps {
         else Some(s.read.parquet(dvStaged: _*)
           .select(col(keyCol), col("pt_year"))
           .withColumn("__below", lit(ts)))
-      val prior = dvOf(root, v - 1).map { case (p, k, _) =>
+      val prior = parent.dv.map { case (p, k, _) =>
         require(k == keyCol,
           s"pending deletion vector keys on '$k'; a '$keyCol' " +
           "row-level delta must wait for a rewrite to purge it")
@@ -1960,14 +1999,9 @@ object WriteOps {
         if (p0.columns.contains("__below")) p0
         else p0.withColumn("__below", lit(ts))
       }
-      val dvLine: Seq[String] = (fresh, prior) match {
-        case (None, None) => Nil
-        case (None, Some(_)) =>
-          // no new tombstones: the parent's sidecar line carries
-          dvOf(root, v - 1).map { case (p, k, ys) =>
-            dvLineOf(p, k, ys)
-          }.toSeq
-        case (f, pr) =>
+      val dv = fresh match {
+        case None => parent.dv // no new tombstones: the parent's carries
+        case Some(f) =>
           // ONE job writes the sidecar (r18 fusion; the r17 shape ran
           // distinct→checkpoint, an emptiness probe, a second
           // distinct→checkpoint, the write, and a years-collect — five
@@ -1978,80 +2012,47 @@ object WriteOps {
           // second scan. No localCheckpoint remains on the commit
           // path — nothing here depends on unreplicated executor
           // blocks (r17 verdict's durability concern).
-          val all = (f.toSeq ++ pr.toSeq).reduce(_.unionByName(_))
-            .distinct()
+          val all = prior.fold(f)(f.unionByName(_)).distinct()
           val obs = new org.apache.spark.sql.Observation()
           val dvPath = freshDvPath(root, v)
           all.observe(obs, collect_set(col("pt_year")).as("years"))
             .coalesce(1).write.mode(SaveMode.Overwrite).parquet(dvPath)
           val years = obs.get("years").asInstanceOf[Seq[Int]].sorted
-          Seq(dvLineOf(dvPath, keyCol, years))
+          Some((dvPath, keyCol, years))
       }
 
       // fresh data files append (parent entries ++ fresh, born = ts)
-      val stats = statsFor(s, files.map(_._2), writeSchema)
-      val staged: Seq[(Int, Seq[FileEntry])] =
-        files.groupBy(_._1).toSeq.map { case (y, fsq) =>
-          y -> fsq.map { case (_, p, b) =>
-            val (blob, rows) = stats.getOrElse(p, ("", -1L))
-            FileEntry(p, b, blob, rows, ts)
-          }.sortBy(_.path)
-        }
-      if (dvLine.isEmpty && staged.isEmpty) return // matched nothing
-
-      val parentPtrs = pointers(root, v - 1)
-      val mtok = java.util.UUID.randomUUID().toString.take(8)
-      val freshPtrs: Map[Int, String] = staged.collect {
-        case (y, es) if es.nonEmpty =>
-          val parentEs = parentPtrs.get(y).map(readPartManifest)
-            .getOrElse(Seq.empty)
-          y -> writePartManifest(root, s"m_v${v}_y${y}_$mtok.txt",
-            parentEs ++ es)
-      }.toMap
-      val carriedPtrs = parentPtrs -- freshPtrs.keySet
-      val schema = tableSchema(root, v - 1)
-        .map(mergeSchemas(_, writeSchema))
-        .getOrElse(writeSchema)
-      val tmp = new HPath(mdir(root), s".v$v.tmp")
-      lockFor(root).synchronized {
-        // #ts is the SAME ts the borns/belows carry — equality is the
-        // same-commit exemption contract
-        writeAtomic(fs, tmp, manifest(root, v),
-          (Seq(s"#schema=${schema.json}", s"#ts=$ts") ++ dvLine) ++
-            (carriedPtrs ++ freshPtrs).toSeq.sortBy(_._1)
-              .map { case (y, m) => s"y$y\t$m" })
-      }
+      val adds = addsOf(freshEntries(s, files, writeSchema), ts)
+      if (dv.isEmpty && adds.isEmpty) return // matched nothing
+      val mtok = token()
+      publish(root, parent.next(v, ts).copy(
+        schema = Some(evolve(parent, writeSchema)), dv = dv,
+        pointers = mergePointers(root, parent.pointers, Set.empty, adds,
+          y => s"m_v${v}_y${y}_$mtok.txt")))
     }
 
-    /** Pre-flight checks + the carried dv line for an APPEND of
-      * `touched` partitions as version v (shared by commitAppend and
-      * the native streaming sink): parent exists, v free, and no
-      * touched partition holds pending tombstones — unless
-      * `overTombstones` and the sidecar is birth-aware. */
+    /** Pre-flight for an APPEND of `touched` partitions as version v
+      * (shared by commitAppend and the native streaming sink): the
+      * version race ([[preflight]]), and no touched partition holds
+      * pending tombstones — unless `overTombstones` and the sidecar is
+      * birth-aware. Returns the parent's top manifest. */
     private[graft] def appendPreflight(root: String, v: Int,
-        touched: Seq[Int], overTombstones: Boolean = false): Seq[String] = {
-      val fs = fsFor(manifest(root, v))
+        touched: Seq[Int], overTombstones: Boolean = false): Top = {
       require(v > 0, "append needs an initialized table (v0)")
-      require(fs.exists(manifest(root, v - 1)),
-        s"cannot commit version $v: parent v${v - 1} was never committed")
-      require(!fs.exists(manifest(root, v)),
-        s"conflict: version $v is already committed — rebase on the " +
-        "current head and retry")
-      dvOf(root, v - 1) match {
-        case Some((p, k, years)) =>
-          // a birth-aware sidecar kills only rows of files born before
-          // its tombstones, and the appended files are born after every
-          // one of them — so the append is sound; a legacy sidecar
-          // (no `__below`) would kill the re-inserted keys
-          val hit = years.intersect(touched)
-          require(hit.isEmpty || (overTombstones && dvBirthAware(p)),
-            s"partitions ${hit.mkString(",")} hold pending deletion-" +
-            "vector tombstones; an append there could silently lose " +
-            "re-inserted keys to the tombstone anti-join — run " +
-            "optimize(purgeTombstoned) first")
-          Seq(dvLineOf(p, k, years))
-        case None => Nil
+      val parent = preflight(root, v)
+      parent.dv.foreach { case (p, _, years) =>
+        // a birth-aware sidecar kills only rows of files born before
+        // its tombstones, and the appended files are born after every
+        // one of them — so the append is sound; a legacy sidecar
+        // (no `__below`) would kill the re-inserted keys
+        val hit = years.intersect(touched)
+        require(hit.isEmpty || (overTombstones && dvBirthAware(p)),
+          s"partitions ${hit.mkString(",")} hold pending deletion-" +
+          "vector tombstones; an append there could silently lose " +
+          "re-inserted keys to the tombstone anti-join — run " +
+          "optimize(purgeTombstoned) first")
       }
+      parent
     }
 
     /** Whether the sidecar's tombstones carry `__below` (every sidecar
@@ -2068,19 +2069,10 @@ object WriteOps {
         }
     }
 
-    /** Stats for externally-written fresh files (the streaming sink's
-      * commit path) — same footer-read fan-out as fresh commits. */
-    private[graft] def statsFor(s: SparkSession, paths: Seq[String],
-        schema: org.apache.spark.sql.types.StructType)
-        : Map[String, (String, Long)] =
-      collectStats(s, paths, statColsOf(schema))
-
     /** The version's commit wall-clock (epoch millis, recorded in its
       * top manifest) — what `TIMESTAMP AS OF` resolves against. Absent
       * on manifests written before timestamps were recorded. */
-    def commitTs(root: String, v: Int): Option[Long] =
-      topLines(root, v).find(_.startsWith("#ts="))
-        .map(_.stripPrefix("#ts=").toLong)
+    def commitTs(root: String, v: Int): Option[Long] = top(root, v).ts
 
     /** TIMESTAMP AS OF resolution: the LATEST version committed at or
       * before `tsMillis` (Delta's contract). Fails loudly when every
@@ -2114,11 +2106,7 @@ object WriteOps {
       * any — the Delta `txn` action's analog, written by idempotent
       * streaming writers. */
     def txnOf(root: String, v: Int): Option[(String, Long)] =
-      topLines(root, v).find(_.startsWith("#txn=")).map { l =>
-        val rest = l.stripPrefix("#txn=")
-        val i = rest.indexOf('\t')
-        (b64d(rest.take(i)), rest.drop(i + 1).toLong)
-      }
+      top(root, v).txn
 
     // per-app durable txn MARKERS, the vacuum-proof half of
     // exactly-once: the manifest txn line dies with its version when
@@ -2223,8 +2211,9 @@ object WriteOps {
       *  - fragmentation detection is manifest metadata only (file
       *    counts per partition from the file NAMES), no data scan —
       *    at 100 TB the nightly optimize plans itself from the
-      *    manifest and rewrites only what fragmented. */
-    /** `zorderBy` (the `OPTIMIZE ... ZORDER BY` composition): when
+      *    manifest and rewrites only what fragmented.
+      *
+      * `zorderBy` (the `OPTIMIZE ... ZORDER BY` composition): when
       * set, the rewrite clusters rows by the Morton interleave of two
       * integer columns (or plain range order for one column) instead
       * of a random salt — the exchange is still byte-targeted (same
@@ -2233,8 +2222,9 @@ object WriteOps {
       * optimized partitions skip files (OptimizeSnapshotSpec asserts
       * disjoint per-file ranges). Data-unchanged contract is
       * identical — the cluster key is a projection helper, dropped
-      * before commit. */
-    /** `onlyYears` (Delta's `OPTIMIZE ... WHERE`): restrict the
+      * before commit.
+      *
+      * `onlyYears` (Delta's `OPTIMIZE ... WHERE`): restrict the
       * rewrite to the named partitions — a targeted nightly pass over
       * yesterday's hot partition instead of the whole table. */
     def optimize(s: SparkSession, root: String, newV: Int,
@@ -2246,8 +2236,9 @@ object WriteOps {
       require(targetFileBytes > 0, "targetFileBytes must be positive")
       require(zorderBy.length <= 2,
         "zorderBy supports one (range) or two (Morton) columns")
+      val parent = top(root, newV - 1)
       val byYear: Map[Int, Seq[FileEntry]] = {
-        val ptrs = pointers(root, newV - 1).toSeq.sortBy(_._1)
+        val ptrs = parent.pointers.toSeq.sortBy(_._1)
         ptrs.map(_._1).zip(readPartManifests(ptrs.map(_._2))).toMap
       }
       // rewrite targets = fragmented partitions ∪ (by default) the
@@ -2259,8 +2250,7 @@ object WriteOps {
       // already applied at read), so the change feed across the
       // optimize commit stays empty.
       val tombstoned =
-        if (purgeTombstoned)
-          dvOf(root, newV - 1).map(_._3).getOrElse(Seq.empty)
+        if (purgeTombstoned) parent.dv.map(_._3).getOrElse(Seq.empty)
         else Seq.empty
       val fragmented0 = (byYear.collect {
         case (y, fs) if fs.size > maxFilesPerPartition => y
@@ -2452,14 +2442,13 @@ object WriteOps {
         else mfs.listStatus(md).toSeq.map(_.getPath.getName)
           .filter(n => n.startsWith("branch_") && n.endsWith(".txt"))
           .map(_.stripPrefix("branch_").stripSuffix(".txt"))
-      val branchPtrs: Seq[(String, Boolean)] =
-        branches.flatMap(b => branchState(root, b)._2.values)
+      val branchPtrs: Seq[String] =
+        branches.flatMap(b => branchState(root, b)._3.pointers.values)
       val refM: Set[String] =
-        (vs.flatMap(pointers(root, _).values) ++ branchPtrs.map(_._1)).toSet
+        (vs.flatMap(pointers(root, _).values) ++ branchPtrs).toSet
       val refFiles: Set[String] =
         (vs.flatMap(files(root, _)) ++
-          branchPtrs.map(_._1).flatMap(readPartManifest(_).map(_.path)))
-          .toSet
+          branchPtrs.flatMap(readPartManifest(_).map(_.path))).toSet
       val reclaimed = scala.collection.mutable.ArrayBuffer[String]()
       def sweep(dir: HPath, referenced: Set[String],
           eligible: String => Boolean): Unit = {
@@ -2507,16 +2496,12 @@ object WriteOps {
       */
     def shallowClone(srcRoot: String, dstRoot: String): Unit = {
       val head = versions(srcRoot).max
-      val dst = manifest(dstRoot, 0)
-      val fs = fsFor(dst)
       require(versions(dstRoot).isEmpty,
         s"clone target $dstRoot already holds a committed table")
-      fs.mkdirs(mdir(dstRoot))
-      val lines = topLines(srcRoot, head)
-        .filterNot(_.startsWith("#txn="))
-      lockFor(dstRoot).synchronized {
-        writeAtomic(fs, new HPath(mdir(dstRoot), ".v0.tmp"), dst, lines)
-      }
+      fsFor(mdir(dstRoot)).mkdirs(mdir(dstRoot))
+      // the source head's #ts carries: the clone's first own commit
+      // stamps past it, so the ts chain stays ordered across the clone
+      publish(dstRoot, top(srcRoot, head).copy(version = 0, txn = None))
     }
 
     /** RESTORE (Delta's `RESTORE TABLE ... TO VERSION AS OF v`): the
@@ -2536,23 +2521,11 @@ object WriteOps {
       * O(|partitions|) metadata, never a data rewrite. Txn lines do
       * not copy (the restored content is not the writer app's batch). */
     def restore(root: String, newV: Int, toVersion: Int): Unit = {
-      val fs = fsFor(manifest(root, newV))
       require(toVersion < newV,
         s"restore target v$toVersion must precede the new version $newV")
-      require(fs.exists(manifest(root, newV - 1)),
-        s"cannot commit version $newV: parent v${newV - 1} was never " +
-        "committed")
-      require(!fs.exists(manifest(root, newV)),
-        s"conflict: version $newV is already committed — rebase on the " +
-        "current head and retry")
-      // topLines fails loudly when toVersion was vacuumed
-      val restored = topLines(root, toVersion)
-        .filterNot(l => l.startsWith("#ts=") || l.startsWith("#txn="))
-      val tmp = new HPath(mdir(root), s".v$newV.tmp")
-      lockFor(root).synchronized {
-        writeAtomic(fs, tmp, manifest(root, newV),
-          s"#ts=${monotonicTs(root, newV)}" +: restored)
-      }
+      val parent = preflight(root, newV)
+      // top fails loudly when toVersion was vacuumed
+      publish(root, top(root, toVersion).next(newV, drawTs(parent)))
     }
 
     /** Partitions that changed between two versions, recovered from the
@@ -2609,10 +2582,12 @@ object WriteOps {
       * publish, the published files stay referenced by version manifests
       * under that token's names, so re-staging the SAME branch name
       * writes fresh token names and can never rename over committed
-      * bytes. The branch manifest records fresh vs carried entries
-      * explicitly, and [[abandonBranch]] deletes exactly the recorded
-      * fresh list — never a name-pattern guess that could catch a
-      * previous staging's published files. */
+      * bytes. The branch ref is the next version's top manifest (its
+      * `#ts` is the `born` of the staged files) plus `#parent=<head>`
+      * and `#fresh=<years>`, the years whose m-files this staging
+      * wrote: [[abandonBranch]] deletes exactly those — never a
+      * name-pattern guess that could catch a previous staging's
+      * published files. */
     def stageCommit(s: SparkSession, root: String, name: String,
         slice: DataFrame, touched: Seq[Int]): Unit = {
       require(name.matches("[a-z0-9-]+"),
@@ -2624,101 +2599,78 @@ object WriteOps {
         s"branch $name is already staged — publish or abandon it first")
       val vs = versions(root)
       require(vs.nonEmpty, "stageCommit needs a committed base version")
-      val parent = vs.max
+      val parent = top(root, vs.max)
       // a staged rewrite of a tombstoned partition would either purge
       // (needs the sidecar rewrite commit() runs) or resurrect deleted
       // rows on publish — refuse loudly; rewrite through commit() or
-      // stage elsewhere
-      dvOf(root, parent).foreach { case (_, _, years) =>
+      // stage elsewhere. The parent's pending deletion vector rides the
+      // branch verbatim (disjoint from the staged partitions), so a
+      // publish cannot resurrect deleted rows either.
+      parent.dv.foreach { case (_, _, years) =>
         val hit = years.intersect(touched)
         require(hit.isEmpty,
           s"partitions ${hit.mkString(",")} hold pending deletion-vector " +
           "tombstones; purge them with a rewrite commit before staging " +
           "a branch there")
       }
-      val token = java.util.UUID.randomUUID().toString.take(8)
-      val staged = stageDataFiles(s, root, s"stage_b${name}_$token",
-        slice, touched, (y, i) => f"b$name-${token}_y${y}_p$i%05d.parquet",
-        nextCommitTs(root, parent + 1))
+      val tok = token()
+      val staged = stageDataFiles(s, root, s"stage_b${name}_$tok",
+        slice, touched, (y, i) => f"b$name-${tok}_y${y}_p$i%05d.parquet",
+        parent)
+      val ts = drawTs(parent)
       // fresh m-files are TOKEN-namespaced like the data files, so a
       // later staging of the same branch name can never collide with
       // m-files a previous staging already published into history
-      val freshPtrs: Map[Int, String] = staged.collect {
-        case (y, es) if es.nonEmpty =>
-          y -> writePartManifest(root, s"m_b$name-${token}_y$y.txt", es)
-      }.toMap
-      val carriedPtrs = pointers(root, parent) -- touched
-      val schema = tableSchema(root, parent)
-        .map(mergeSchemas(_, slice.schema))
-        .getOrElse(slice.schema)
-      val tmp = new HPath(mdir(root), s".branch_$name.tmp")
-      // parent's pending-delete line rides the branch verbatim (the
-      // require above guarantees it is disjoint from the staged
-      // partitions) so a publish cannot resurrect deleted rows
-      val dvLine = topLines(root, parent).find(_.startsWith("#dv="))
-      writeAtomic(bfs, tmp, bm,
-        (Seq(s"#parent=$parent", s"#schema=${schema.json}") ++
-          dvLine.toSeq) ++
-          (carriedPtrs.toSeq.map { case (y, m) => s"y$y\t$m\tC" } ++
-           freshPtrs.toSeq.map { case (y, m) => s"y$y\t$m\tF" }).sorted)
+      val branch = parent.next(parent.version + 1, ts).copy(
+        schema = Some(evolve(parent, slice.schema)),
+        pointers = mergePointers(root, parent.pointers, touched.toSet,
+          addsOf(staged, ts), y => s"m_b$name-${tok}_y$y.txt"))
+      val fresh = touched.filter(branch.pointers.contains).sorted
+      writeAtomic(bfs, new HPath(mdir(root), s".branch_$name.tmp"), bm,
+        Seq(s"#parent=${parent.version}", s"#fresh=${fresh.mkString(",")}") ++
+          Top.render(branch))
     }
 
-    /** (parent version, pointer map year → (m-file, isFresh),
-      * schema json header line, carried deletion-vector line). */
-    private def branchState(root: String, name: String)
-        : (Int, Map[Int, (String, Boolean)], Option[String],
-           Option[String]) = {
+    /** (parent version, years with fresh m-files, the staged next
+      * version's top manifest). */
+    private def branchState(root: String,
+        name: String): (Int, Set[Int], Top) = {
       val bm = branchManifest(root, name)
       val fs = fsFor(bm)
       require(fs.exists(bm), s"branch $name is not staged")
       val lines = readAllLines(fs, bm).filter(_.nonEmpty)
-      val parsed = lines.filterNot(_.startsWith("#")).map { l =>
-        val parts = l.split('\t')
-        parts(0).drop(1).toInt -> (parts(1), parts(2) == "F")
-      }.toMap
-      (lines.find(_.startsWith("#parent="))
-         .get.stripPrefix("#parent=").toInt,
-       parsed,
-       lines.find(_.startsWith("#schema=")),
-       lines.find(_.startsWith("#dv=")))
+      val parent = Top.header(lines, "#parent=").get.toInt
+      (parent,
+        Top.header(lines, "#fresh=").get.split(',').filter(_.nonEmpty)
+          .map(_.toInt).toSet,
+        Top.parse(parent + 1, lines))
     }
 
     /** The branch's table state — what the audit step reads
       * (readThrough: rename aliases in the carried schema resolve). */
     def readBranch(s: SparkSession, root: String,
         name: String): DataFrame = {
-      val (_, ptrs, schemaLine, _) = branchState(root, name)
-      val schema = schemaLine.map(l => org.apache.spark.sql.types
-        .DataType.fromJson(l.stripPrefix("#schema="))
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-      readThrough(s, schema,
-        readPartManifests(ptrs.values.map(_._1).toSeq)
+      val branch = branchState(root, name)._3
+      readThrough(s, branch.schema,
+        readPartManifests(branch.pointers.values.toSeq)
           .flatten.map(e => (e.path, e.bytes)).sortBy(_._1))
     }
 
     /** Publish the audited branch as the next version: ONE atomic
       * top-manifest rename, zero data movement (the branch's m-files
-      * are already in place and simply become referenced). Returns the
+      * are already in place and simply become referenced). The version
+      * records the ts its files were born with at staging. Returns the
       * new version. */
     def publishBranch(root: String, name: String): Int = {
-      val (parent, ptrs, schemaLine, dvLine) = branchState(root, name)
+      val (parent, _, branch) = branchState(root, name)
       val head = versions(root).max
       require(head == parent,
         s"main advanced to v$head since branch $name staged on " +
         s"v$parent — its carried file list is stale; restage to rebase")
-      val v = parent + 1
-      val m = manifest(root, v)
-      val fs = fsFor(m)
-      val tmp = new HPath(mdir(root), s".v$v.tmp")
-      lockFor(root).synchronized {
-        writeAtomic(fs, tmp, m,
-          (schemaLine.toSeq ++
-            Seq(s"#ts=${monotonicTs(root, v)}") ++ dvLine.toSeq) ++
-            ptrs.toSeq.sortBy(_._1)
-            .map { case (y, (mf, _)) => s"y$y\t$mf" })
-      }
-      fs.delete(branchManifest(root, name), false)
-      v
+      publish(root, branch)
+      val bm = branchManifest(root, name)
+      fsFor(bm).delete(bm, false)
+      branch.version
     }
 
     /** Drop a failed-audit branch: delete exactly what the branch
@@ -2727,8 +2679,8 @@ object WriteOps {
       * so does anything a previous staging of this name already
       * published) — then the ref. Main never saw anything. */
     def abandonBranch(root: String, name: String): Unit = {
-      val (_, ptrs, _, _) = branchState(root, name)
-      ptrs.values.collect { case (m, true) => m }.foreach { m =>
+      val (_, fresh, branch) = branchState(root, name)
+      fresh.flatMap(branch.pointers.get).foreach { m =>
         readPartManifest(m).foreach { e =>
           val p = new HPath(e.path)
           fsFor(p).delete(p, false)

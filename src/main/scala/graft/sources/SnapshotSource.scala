@@ -1110,9 +1110,6 @@ private[sources] class SnapshotReplaceDataWrite(
     val replaced = scan.years.toSeq.sorted
     if (files.isEmpty && replaced.isEmpty) return // matched nothing
     val s = SparkSession.active
-    val staged = SnapshotReplaceDataWrite.entries(files,
-      SnapshotTable.statsFor(s, files.map(_._2), schema),
-      SnapshotTable.nextCommitTs(root, op.readVersion + 1))
     // the pinned-snapshot commit: a concurrent writer landing after
     // readVersion surfaces as a loud conflict — a row-level rewrite
     // computed against a stale snapshot must never silently clobber
@@ -1120,26 +1117,13 @@ private[sources] class SnapshotReplaceDataWrite(
     // excluded files of the replaced partitions carry verbatim — the
     // file-granular half of the group rewrite.
     SnapshotTable.commitReplaceEntries(s, root, op.readVersion + 1,
-      staged, replaced, scan.carriedFor(replaced.toSet))
+      SnapshotTable.freshEntries(s, files, schema), replaced,
+      scan.carriedFor(replaced.toSet))
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     filesOf(messages).foreach { case (_, p, _) =>
       SnapshotTable.deleteTree(p)
-    }
-}
-
-private[sources] object SnapshotReplaceDataWrite {
-  /** Executor-written (pt_year, path, bytes) files → per-year manifest
-    * entries carrying their footer stats and the commit's `born`. */
-  def entries(files: Seq[(Int, String, Long)],
-      stats: Map[String, (String, Long)],
-      born: Long): Seq[(Int, Seq[SnapshotTable.FileEntry])] =
-    files.groupBy(_._1).toSeq.map { case (y, fs) =>
-      y -> fs.map { case (_, p, b) =>
-        val (blob, rows) = stats.getOrElse(p, ("", -1L))
-        SnapshotTable.FileEntry(p, b, blob, rows, born)
-      }.sortBy(_.path)
     }
 }
 
@@ -1168,13 +1152,11 @@ private[sources] class SnapshotDynamicOverwrite(root: String,
     val files = filesOf(messages)
     if (files.isEmpty) return
     val s = SparkSession.active
-    val stats = SnapshotTable.statsFor(s, files.map(_._2),
+    val staged = SnapshotTable.freshEntries(s, files,
       DataType.fromJson(schemaJson).asInstanceOf[StructType])
     val years = files.map(_._1).distinct.sorted
     SnapshotSourceTable.commitRetrying(root) { v =>
-      SnapshotTable.commitReplaceEntries(s, root, v,
-        SnapshotReplaceDataWrite.entries(files, stats,
-          SnapshotTable.nextCommitTs(root, v)), years)
+      SnapshotTable.commitReplaceEntries(s, root, v, staged, years)
     }
   }
 

@@ -118,60 +118,34 @@ private[sources] class SnapshotStreamingWrite(root: String,
     } else if (files.nonEmpty) {
       val s = SparkSession.active
       val touched = files.map(_._1).distinct.sorted
-      val stats = SnapshotTable.statsFor(s, files.map(_._2), schema)
-      val born = SnapshotTable.nextCommitTs(root,
-        SnapshotTable.versions(root).max + 1)
-      val staged = files.groupBy(_._1).toSeq.map { case (y, fs) =>
-        y -> fs.map { case (_, p, b) =>
-          val (blob, rows) = stats.getOrElse(p, ("", -1L))
-          SnapshotTable.FileEntry(p, b, blob, rows, born)
-        }.sortBy(_.path)
-      }
-      // OPTIMISTIC CONCURRENCY, same bounded rebase-retry as the SQL
-      // insert path: a concurrent batch writer landing between our
+      val staged = SnapshotTable.freshEntries(s, files, schema)
+      // OPTIMISTIC CONCURRENCY, the SQL insert path's bounded
+      // rebase-retry: a concurrent batch writer landing between our
       // head read and the manifest publish makes US the race loser —
       // the staged files are already on disk and partition-disjoint
       // from the winner's (token-uniquified names), so the retry is a
       // pure METADATA re-merge on the new head, never a re-write.
-      var attempt = 0
-      var done = false
-      while (!done) {
-        val v = SnapshotTable.versions(root).max + 1
-        try {
-          val dvLine = SnapshotTable.appendPreflight(root, v, touched)
-          SnapshotTable.commitAppendEntries(root, v, staged, schema,
-            Some((app, epochId)), dvLine)
-          done = true
-          // SMALL-FILE PRESSURE: each epoch writes one file per
-          // (task, pt_year) — at 1000-task × hourly-epoch cadence the
-          // classic grind. `compactEvery = N` composes OPTIMIZE into
-          // the sink: every Nth version triggers a compaction commit
-          // (data-unchanged, right-sized files; a no-op when nothing
-          // is fragmented). Downstream snapshot STREAMS see the
-          // compaction as rewritten partitions and need the
-          // ignoreChanges posture the source already documents;
-          // batch readers see identical rows. Compaction failure
-          // never fails the epoch — the data is committed, the
-          // maintenance pass can re-run.
-          compactEvery.filter(n => v % n == 0).foreach { _ =>
-            try SnapshotTable.optimize(SparkSession.active, root, v + 1)
-            catch { case _: Exception => () }
-          }
-        } catch {
-          case e @ (_: java.nio.file.FileAlreadyExistsException |
-                    _: IllegalArgumentException)
-              if attempt < 4 && isConflict(e) =>
-            attempt += 1 // lost the race — rebase on the new head
+      SnapshotSourceTable.commitRetrying(root) { v =>
+        SnapshotTable.commitAppendEntries(root, v,
+          SnapshotTable.appendPreflight(root, v, touched), staged,
+          schema, Some((app, epochId)))
+        // SMALL-FILE PRESSURE: each epoch writes one file per
+        // (task, pt_year) — at 1000-task × hourly-epoch cadence the
+        // classic grind. `compactEvery = N` composes OPTIMIZE into
+        // the sink: every Nth version triggers a compaction commit
+        // (data-unchanged, right-sized files; a no-op when nothing
+        // is fragmented). Downstream snapshot STREAMS see the
+        // compaction as rewritten partitions and need the
+        // ignoreChanges posture the source already documents;
+        // batch readers see identical rows. Compaction failure
+        // never fails the epoch — the data is committed, the
+        // maintenance pass can re-run.
+        compactEvery.filter(n => v % n == 0).foreach { _ =>
+          try SnapshotTable.optimize(SparkSession.active, root, v + 1)
+          catch { case _: Exception => () }
         }
       }
     } // empty epoch: nothing to publish, no version burned
-  }
-
-  private def isConflict(e: Throwable): Boolean = e match {
-    case _: java.nio.file.FileAlreadyExistsException => true
-    case e: IllegalArgumentException =>
-      Option(e.getMessage).exists(_.contains("conflict: version"))
-    case _ => false
   }
 
   override def abort(epochId: Long,

@@ -213,6 +213,46 @@ class SnapshotTableSpec extends AnyFunSuite {
     T.deleteTree(root)
   }
 
+  test("commit races: every commit kind refuses an already-committed " +
+      "version and a missing parent") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("g_snap_occ_kinds").toString
+    val T = WriteOps.SnapshotTable
+    def frame(rows: (Long, Int, Double)*) =
+      rows.toSeq.toDF("o_orderkey", "pt_year", "o_totalprice")
+
+    T.commit(spark, root, 0, frame((1L, 1, 10.0)), Seq(1))
+    T.commit(spark, root, 1, frame((2L, 1, 20.0)), Seq(1))
+    val head = T.read(spark, root, 1).collect().toSet
+    val kinds: Seq[(String, Int => Unit)] = Seq(
+      "commit" -> (v =>
+        T.commit(spark, root, v, frame((3L, 1, 30.0)), Seq(1))),
+      "commitReplaceEntries" -> (v =>
+        T.commitReplaceEntries(spark, root, v, Seq.empty, Seq(1))),
+      "commitAppend" -> (v =>
+        T.commitAppend(spark, root, v, frame((3L, 1, 30.0)))),
+      "commitDelete" -> (v =>
+        T.commitDelete(spark, root, v, "o_orderkey",
+          Seq((2L, 1)).toDF("o_orderkey", "pt_year"))),
+      "commitDelta" -> (v =>
+        T.commitDelta(spark, root, v, "o_orderkey", Seq.empty, Seq.empty,
+          frame().schema)),
+      "restore" -> (v => T.restore(root, v, 0)))
+    kinds.foreach { case (kind, commitAt) =>
+      // the race loser: the message is what commitRetrying rebases on
+      val lost = intercept[IllegalArgumentException](commitAt(1))
+      assert(lost.getMessage.contains("conflict: version 1 is already " +
+        "committed"), s"$kind: ${lost.getMessage}")
+      val orphan = intercept[IllegalArgumentException](commitAt(5))
+      assert(orphan.getMessage.contains("parent v4 was never committed"),
+        s"$kind: ${orphan.getMessage}")
+    }
+    assert(T.versions(root) === Seq(0, 1))
+    assert(T.read(spark, root, 1).collect().toSet === head,
+      "a refused commit disturbed the head")
+    T.deleteTree(root)
+  }
+
   test("CONCURRENT commit race: of N simultaneous writers publishing " +
       "the same version, exactly one wins and history stays sane") {
     import spark.implicits._

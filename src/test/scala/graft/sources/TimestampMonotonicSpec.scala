@@ -57,4 +57,32 @@ class TimestampMonotonicSpec extends AnyFunSuite {
     assert(T.versionAt(root, 2000L) === 0)
     assert(T.versionAt(root, 2001L) === 1)
   }
+
+  test("a clock stepping back inside a commit cannot hide its rows " +
+      "from a later delete") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("g_ts_instep").toString
+    val saved = T.clock
+    try {
+      T.clock = () => 1000L
+      T.commit(spark, root, 0, frame(1.0), Seq(1))
+      // the clock reads 5000 once, then an NTP step puts it back to
+      // 1000 while the commit is still in flight
+      var reads = 0
+      T.clock = () => { reads += 1; if (reads == 1) 5000L else 1000L }
+      T.commit(spark, root, 1, frame(2.0), Seq(1))
+      // one stamp per commit: the manifest records the born of its files
+      assert(T.statEntries(root, 1).map(_.born).toSet ===
+        T.commitTs(root, 1).toSet)
+      T.clock = () => 1000L
+      T.commitDelete(spark, root, 2, "o_orderkey",
+        Seq((1L, 1)).toDF("o_orderkey", "pt_year"))
+    } finally T.clock = saved
+    // the delete's tombstone postdates the row's file, so the key is gone
+    assert(T.read(spark, root, 2).count() === 0)
+    spark.read.format("graft-snapshot").option("root", root).load()
+      .createOrReplaceTempView("ts_instep")
+    assert(spark.sql("SELECT count(*) FROM ts_instep WHERE o_orderkey = 1")
+      .head().getLong(0) === 0L)
+  }
 }
