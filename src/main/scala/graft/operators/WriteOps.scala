@@ -70,8 +70,8 @@ object WriteOps {
     * like any other job and never collects data to the driver. At
     * cluster scale this runs per partition directory with the same
     * byte-targeting logic.
-    */
-  /** `transform` lets a caller fold a row-drop into the rewrite (e.g.
+    *
+    * `transform` lets a caller fold a row-drop into the rewrite (e.g.
     * the ANN index compaction anti-joins its tombstone set) without a
     * second pass; the file-count target is still sized from the SOURCE
     * bytes — an upper bound when the transform drops rows, which only
@@ -270,8 +270,9 @@ object WriteOps {
     *    by NO retained version plus the expired top manifests — a set
     *    difference over pointers, metadata-only, no data scan. Reads
     *    within retention are byte-identical before/after (the gate
-    *    proves it); reads past retention fail loudly. */
-  /** IO substrate note (the 100 TB deployment story): every table-root
+    *    proves it); reads past retention fail loudly.
+    *
+    * IO substrate note (the 100 TB deployment story): every table-root
     * path below resolves through `org.apache.hadoop.fs.FileSystem`, so a
     * root may be a local dir (tests), `hdfs://`, or an object store.
     * Commit atomicity is an ENFORCED SEAM, not a caveat: every publish
@@ -1117,12 +1118,14 @@ object WriteOps {
       x.length - y.length
     }
 
-    /** Skipping read: resolve version v pruned to [[filesInRange]] and
-      * re-apply the predicate exactly (stats pruning is file-granular;
-      * the residual filter restores row granularity). The scan that
-      * results opens only surviving files — at 100 TB with a clustered
-      * layout (write_zordered / optimize zorderBy) that is the
-      * difference between a full-table scan and a few files. */
+    /** Skipping read: version v filtered to `column` in [lo, hi]. The
+      * connector's pushdown prunes files by manifest stats (the
+      * [[filesInRange]] decision) and Spark re-applies the predicate
+      * exactly (stats pruning is file-granular; the residual filter
+      * restores row granularity). The scan that results opens only
+      * surviving files — at 100 TB with a clustered layout
+      * (write_zordered / optimize zorderBy) that is the difference
+      * between a full-table scan and a few files. */
     def readRange(s: SparkSession, root: String, v: Int, column: String,
         lo: Any, hi: Any): DataFrame =
       readWhere(s, root, v, Seq((column, lo, hi)))
@@ -1130,21 +1133,14 @@ object WriteOps {
     /** Conjunctive skipping read — see [[filesWhere]]; every predicate
       * is re-applied exactly on the surviving files. */
     def readWhere(s: SparkSession, root: String, v: Int,
-        preds: Seq[(String, Any, Any)]): DataFrame = {
-      val pruned = statEntries(root, v).filter(entryMatches(_, preds))
-        .map(e => (e.path, e.bytes))
-      val base =
-        if (pruned.nonEmpty)
-          applyDv(s, root, v, readThrough(s, tableSchema(root, v), pruned))
-        else read(s, root, v).filter(lit(false))
-      preds.foldLeft(base) { case (df, (column, lo, hi)) =>
+        preds: Seq[(String, Any, Any)]): DataFrame =
+      preds.foldLeft(read(s, root, v)) { case (df, (column, lo, hi)) =>
         val lower =
           if (lo == null) lit(true) else col(column) >= lit(boundLit(lo))
         val upper =
           if (hi == null) lit(true) else col(column) <= lit(boundLit(hi))
         df.filter(lower && upper)
       }
-    }
 
     private def boundLit(a: Any): Any = a match {
       case d: java.time.LocalDate => java.sql.Date.valueOf(d)
@@ -1157,10 +1153,11 @@ object WriteOps {
     // key-granular variant): a delete is a METADATA commit — parent
     // pointers carried verbatim, zero data files touched — plus one
     // small (key, pt_year) sidecar of still-pending tombstones. Reads
-    // of that version anti-join the sidecar (broadcast — pending
-    // deletes stay bounded by rewrite cadence), so a GDPR-style delete
-    // of a million keys from a 100 TB table costs O(deleted keys), not
-    // a partition rewrite. Any later commit that REWRITES a partition
+    // of that version drop tombstoned rows as they decode (the
+    // connector's reader loads the sidecar once per executor JVM —
+    // pending deletes stay bounded by rewrite cadence), so a
+    // GDPR-style delete of a million keys from a 100 TB table costs
+    // O(deleted keys), not a partition rewrite. Any later commit that REWRITES a partition
     // physically purges it (its fresh files come from DV-applied
     // reads) and drops that partition's tombstones from the carried
     // sidecar — rewrites SUPERSEDE pending deletes, so a rewritten
@@ -1200,12 +1197,6 @@ object WriteOps {
     def dvOf(root: String, v: Int): Option[(String, String, Seq[Int])] =
       top(root, v).dv
 
-    /** Broadcast ceiling for the pending-tombstone anti-join's build
-      * side, in sidecar ON-DISK bytes (64 MB default — comfortably
-      * inside executor broadcast budgets even after decompression).
-      * private[graft] var so DeleteVectorSpec can force the fallback. */
-    private[graft] var dvBroadcastMaxBytes: Long = 64L << 20
-
     /** The version's pending-tombstone sidecar size in bytes (0 when no
       * deletes are pending) — the OPTIMIZE purge-debt telemetry, read
       * from one FS content summary of the sidecar dir. */
@@ -1220,8 +1211,8 @@ object WriteOps {
       * version, live file count/bytes (from manifest metadata alone),
       * partition count, and the pending deletion-vector debt — sidecar
       * bytes and tombstoned partitions — so deployments SEE when purge
-      * cadence (OPTIMIZE) is falling behind the [[dvBroadcastMaxBytes]]
-      * ceiling rather than discovering it as a plan change. */
+      * cadence (OPTIMIZE) is falling behind: every executor reading a
+      * tombstoned version holds the whole sidecar in memory. */
     def describe(root: String, v: Int): Map[String, String] = {
       val es = entries(root, v)
       val dv = dvOf(root, v)
@@ -1235,57 +1226,6 @@ object WriteOps {
           dv.map(_._3.mkString(",")).getOrElse(""),
         "commit_ts" -> commitTs(root, v).map(_.toString).getOrElse(""))
     }
-
-    /** Anti-join the version's pending tombstones, if any. Join keys
-      * are (keyCol, pt_year): a tombstone kills exactly the key's rows
-      * in the partition the delete saw it in. The build side broadcasts
-      * only while the sidecar stays under [[dvBroadcastMaxBytes]];
-      * past that (a deployment letting purge debt accumulate across
-      * many delete commits) the anti-join falls back to a plain
-      * shuffle join — slower, never wrong, and the debt is visible in
-      * [[describe]] so OPTIMIZE can purge it. */
-    private def applyDv(s: SparkSession, root: String, v: Int,
-        df: DataFrame): DataFrame =
-      dvOf(root, v) match {
-        case None => df
-        case Some((p, k, _)) =>
-          val side0 = s.read.parquet(p)
-          val side = (
-            if (side0.columns.contains("__below")) side0
-            // legacy sidecar: applies to every file (MAX sentinel) —
-            // sound, because appends into DV-pending partitions were
-            // refused, so no file can postdate these tombstones
-            else side0.withColumn("__below", lit(Long.MaxValue)))
-            .select(col(k).as("__dv_key"),
-              col("pt_year").as("__dv_pt"), col("__below"))
-          val build =
-            if (pendingDvBytes(root, v) <= dvBroadcastMaxBytes)
-              broadcast(side)
-            else side
-          // birth-aware anti-join: a tombstone kills a row only when
-          // its commit postdates the row's file (__below > born) —
-          // what lets ONE commit tombstone a key and re-insert it
-          // (merge-on-read UPDATE). born rides the manifest entry; a
-          // small broadcast maps each row's file back to it (legacy
-          // entries without born order before every tombstone, the
-          // pre-birth behavior).
-          val borns = statEntries(root, v).map(e =>
-            (e.path.substring(e.path.lastIndexOf('/') + 1), e.born))
-          import s.implicits._
-          val bornDf = broadcast(
-            borns.toDF("__graft_file", "__graft_born"))
-          df.withColumn("__graft_file",
-              substring_index(col("_metadata.file_path"), "/", -1))
-            .join(bornDf, Seq("__graft_file"), "left")
-            .withColumn("__graft_born",
-              coalesce(col("__graft_born"), lit(-1L)))
-            .join(build,
-              col(k) === col("__dv_key") &&
-                col("pt_year") === col("__dv_pt") &&
-                col("__below") > col("__graft_born"),
-              "left_anti")
-            .drop("__graft_file", "__graft_born")
-      }
 
     /** MERGE-ON-READ DELETE: commit `doomed` (columns: keyCol, pt_year)
       * as version v's deletion vector — parent data pointers carried
@@ -1306,27 +1246,43 @@ object WriteOps {
       // so the semantics are unchanged and the MAX sentinel never
       // leaks forward.
       val ts = drawTs(parent)
+      val dv = writeDv(s, root, v, parent, keyCol, doomed, ts, "delete")
+      require(dv._3.nonEmpty, "an empty delete commits nothing")
+      publish(root, parent.next(v, ts).copy(dv = Some(dv)))
+    }
+
+    /** Version v's pending-tombstone sidecar: `doomed`'s (key, pt_year)
+      * rows stamped `__below = ts`, unioned with the parent's pending
+      * set (legacy rows lacking `__below` upgrade to ts — sound: every
+      * existing file was born before this commit). The one sidecar
+      * writer of [[commitDelete]] and [[commitDelta]], ONE job (r18
+      * fusion; the r17 shape ran distinct→checkpoint, an emptiness
+      * probe, a second distinct→checkpoint, the write, and a
+      * years-collect): a single distinct over the union collapses
+      * duplicates and fresh-vs-prior overlaps alike, and the
+      * tombstoned years ride the same action as an observed
+      * collect_set. No localCheckpoint: nothing depends on
+      * unreplicated executor blocks. Returns (sidecar dir, key column,
+      * years). */
+    private def writeDv(s: SparkSession, root: String, v: Int,
+        parent: Top, keyCol: String, doomed: DataFrame, ts: Long,
+        what: String): (String, String, Seq[Int]) = {
       val fresh = doomed.select(col(keyCol), col("pt_year"))
-        .distinct().withColumn("__below", lit(ts))
-      val pending = (parent.dv match {
-        case Some((p, k, _)) =>
-          require(k == keyCol,
-            s"pending deletion vector keys on '$k'; a '$keyCol' delete " +
-            "must wait for a rewrite to purge it")
-          val prior0 = s.read.parquet(p)
-          val prior =
-            if (prior0.columns.contains("__below")) prior0
-            else prior0.withColumn("__below", lit(ts))
-          prior.unionByName(fresh).distinct()
-        case None => fresh
-      }).localCheckpoint(true) // pin: the sidecar is read back below
+        .withColumn("__below", lit(ts))
+      val all = parent.dv.fold(fresh) { case (p, k, _) =>
+        require(k == keyCol,
+          s"pending deletion vector keys on '$k'; a '$keyCol' $what " +
+          "must wait for a rewrite to purge it")
+        val prior = s.read.parquet(p)
+        fresh.unionByName(
+          if (prior.columns.contains("__below")) prior
+          else prior.withColumn("__below", lit(ts)))
+      }.distinct()
+      val obs = new org.apache.spark.sql.Observation()
       val dvPath = freshDvPath(root, v)
-      pending.coalesce(1).write.mode(SaveMode.Overwrite).parquet(dvPath)
-      val years = pending.select("pt_year").distinct()
-        .collect().map(_.getInt(0)).toSeq.sorted
-      require(years.nonEmpty, "an empty delete commits nothing")
-      publish(root,
-        parent.next(v, ts).copy(dv = Some((dvPath, keyCol, years))))
+      all.observe(obs, collect_set(col("pt_year")).as("years"))
+        .coalesce(1).write.mode(SaveMode.Overwrite).parquet(dvPath)
+      (dvPath, keyCol, obs.get("years").asInstanceOf[Seq[Int]].sorted)
     }
 
     /** Field-metadata key recording a column's PREVIOUS physical
@@ -1431,120 +1387,34 @@ object WriteOps {
       dropped ++ colAliases(schema).values.flatten
     }
 
-    /** DataFrame over an explicit (path, bytes) file list with ZERO
-      * filesystem listing or stat calls: the manifest recorded both at
-      * commit, so the scan is planned from a manifest-backed FileIndex
-      * instead of `spark.read.parquet(paths)` — which re-stats every
-      * path and, past 32 paths, launches a DISTRIBUTED LISTING JOB
-      * (one task per path) before the real scan (r17 profile: 0.6 s +
-      * 224 tasks per read on a 224-file table). This is the
-      * Delta/Iceberg shape — manifest metadata replaces directory
-      * listing (optimization guide §6) — and at 100 TB it removes an
-      * O(files) FS metadata pass from EVERY snapshot read. Split
-      * packing sees the manifest's true sizes, so task counts are
-      * identical to a listed read's; pushdown/pruning are untouched
-      * (same ParquetFileFormat scan node). */
-    private def manifestScan(s: SparkSession,
-        schema: org.apache.spark.sql.types.StructType,
-        entries: Seq[(String, Long)]): DataFrame = {
-      val index = new graft.sources.ManifestFileIndex(s, entries)
-      val rel = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
-        index, index.partitionSchema, schema, None,
-        new org.apache.spark.sql.execution.datasources.parquet
-          .ParquetFileFormat, Map.empty)(s)
-      s.baseRelationToDataFrame(rel)
-    }
+    /** Version v through the connector scan ([[graft.sources
+      * .SnapshotFrame]]): the version's RECORDED schema (no footer
+      * sampling — a data file missing a later-added column null-fills
+      * it, exactly how a lakehouse serves pre-evolution files through
+      * the current schema), manifest-planned files (no listing, no stat
+      * calls), pending tombstones and RENAME alias chains applied as
+      * rows decode. Filters on the result push down: pt_year conjuncts
+      * select partitions from the manifest, comparisons prune files by
+      * their manifest stats. */
+    def read(s: SparkSession, root: String, v: Int): DataFrame =
+      graft.sources.SnapshotFrame(s, root, top(root, v))
 
-    /** Open manifest entries (path, bytes) under the version's
-      * recorded schema through a manifest-backed scan (see
-      * [[manifestScan]] — no listing, no stat calls) of Spark's native
-      * parquet source (vectorized, by-name resolution, pre-evolution
-      * files null-fill, narrower pre-widening files upcast). A schema
-      * carrying RENAME aliases reads every name of each alias chain and
-      * coalesces them — old files serve renamed columns' DATA, not
-      * nulls (the plain by-name read would silently null them, which
-      * for maintenance rewrites like OPTIMIZE would destroy the
-      * column). The connector scan applies the same rule
-      * ([[graft.sources.SnapshotReaderFactory]]). */
-    private def readThrough(s: SparkSession,
-        schemaOpt: Option[org.apache.spark.sql.types.StructType],
-        entries: Seq[(String, Long)]): DataFrame =
-      schemaOpt match {
-      case None => s.read.parquet(entries.map(_._1): _*)
-      // zero live entries under a recorded schema (e.g. a staged
-      // branch whose parent and slice are both empty): an empty
-      // schema-typed frame — the pre-r17 listed read returned exactly
-      // this shape
-      case Some(schema) if entries.isEmpty =>
-        s.createDataFrame(
-          s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      case Some(schema) =>
-        val aliases = colAliases(schema)
-        if (aliases.isEmpty) manifestScan(s, schema, entries)
-        else {
-          val chains = schema.fields.map(f =>
-            f -> (f.name +: aliases.getOrElse(f.name, Nil)))
-          val raw = org.apache.spark.sql.types.StructType(
-            chains.flatMap { case (f, ns) =>
-              ns.map(n => f.copy(name = n, nullable = true))
-            })
-          // a row carries a value under exactly ONE generation's name
-          // (files are single-generation), so coalesce reconstructs
-          // the column; genuine NULLs stay NULL
-          manifestScan(s, raw, entries).select(chains.map { case (f, ns) =>
-            coalesce(ns.map(col): _*).as(f.name)
-          }.toIndexedSeq: _*)
-        }
-      }
+    /** Read exactly the given manifest entries (per year) of the state
+      * `at` — the file-granular DELETE's touch-scan and rewrite read.
+      * No manifest is read: the entries carry paths, sizes and births,
+      * `at` the schema and tombstones. */
+    private[graft] def readFiles(s: SparkSession, root: String, at: Top,
+        files: Seq[(Int, Seq[FileEntry])]): DataFrame =
+      graft.sources.SnapshotFrame(s, root, at, Some(files))
 
-    /** Reads resolve the version's RECORDED schema (no footer
-      * sampling): a data file missing a later-added column null-fills
-      * it — exactly how a lakehouse serves pre-evolution files through
-      * the current schema. */
-    def read(s: SparkSession, root: String, v: Int): DataFrame = {
-      val fs0 = entries(root, v)
-      if (fs0.isEmpty)
-        // a version with zero live files (e.g. an empty v0 seeding a
-        // streaming-built table) still reads: its RECORDED schema, no rows
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          tableSchema(root, v).getOrElse(
-            new org.apache.spark.sql.types.StructType()))
-      else
-        applyDv(s, root, v, readThrough(s, tableSchema(root, v), fs0))
-    }
-
-    /** Read an explicit file subset of version v through the version's
-      * recorded schema, DV-applied — the file-granular DELETE's
-      * touch-scan and rewrite read. Sizes resolve from v's manifest
-      * records (no stat calls). An empty list resolves the schema
-      * with zero row reads. */
-    private[graft] def readFiles(s: SparkSession, root: String, v: Int,
-        paths: Seq[String]): DataFrame =
-      if (paths.nonEmpty) {
-        val sizes = entries(root, v).toMap
-        // a path outside v's manifest (never the case today) resolves
-        // its length with one stat call so the read still plans
-        // through readThrough — the recorded schema's null-fill and
-        // rename-alias resolution must apply to EVERY file (a
-        // schema-less fallback would silently null renamed columns)
-        val es = paths.map { p =>
-          (p, sizes.getOrElse(p,
-            fsFor(new HPath(p)).getFileStatus(new HPath(p)).getLen))
-        }
-        applyDv(s, root, v, readThrough(s, tableSchema(root, v), es))
-      } else read(s, root, v).filter(lit(false))
-
-    /** Partition-scoped read: the file list is pruned in METADATA
-      * (selected pointers only), so unselected partitions' files are
-      * never opened — not even their footers. An empty selection
-      * resolves the version's schema with zero row reads. */
+    /** Partition-scoped read: the pt_year filter selects partitions from
+      * the top manifest, so unselected partitions' m-files are never
+      * read and their files never opened. An empty selection resolves
+      * the version's schema with zero row reads. */
     def readPartitions(s: SparkSession, root: String, v: Int,
-        years: Seq[Int]): DataFrame = {
-      val fs0 = partitionEntries(root, v, years)
-      if (fs0.nonEmpty)
-        applyDv(s, root, v, readThrough(s, tableSchema(root, v), fs0))
-      else read(s, root, v).filter(lit(false))
-    }
+        years: Seq[Int]): DataFrame =
+      read(s, root, v)
+        .filter(col("pt_year").isin(years.map(Integer.valueOf): _*))
 
     /** Stage `slice`'s touched partitions and move the part files into
       * `data/` under `namer(year, index)` names; returns, PER TOUCHED
@@ -1834,11 +1704,10 @@ object WriteOps {
         if (remaining.isEmpty) None
         else if (remaining == years) parent.dv
         else {
-          val purged = s.read.parquet(p).filter(col("pt_year")
-            .isin(remaining.map(Integer.valueOf): _*))
-            .localCheckpoint(true)
           val np = freshDvPath(root, v)
-          purged.coalesce(1).write.mode(SaveMode.Overwrite).parquet(np)
+          s.read.parquet(p)
+            .filter(col("pt_year").isin(remaining.map(Integer.valueOf): _*))
+            .coalesce(1).write.mode(SaveMode.Overwrite).parquet(np)
           Some((np, k, remaining))
         }
       }
@@ -1879,7 +1748,7 @@ object WriteOps {
         require(hit.isEmpty,
           s"partitions ${hit.mkString(",")} hold pending deletion-" +
           "vector tombstones; inserting there could silently lose " +
-          "re-inserted keys to the tombstone anti-join — run " +
+          "re-inserted keys to the tombstone filter — run " +
           "optimize(purgeTombstoned) first")
       }
       if (parent.schema.isEmpty)
@@ -1903,7 +1772,7 @@ object WriteOps {
       * (that's [[commit]]'s job, for merges). Schema evolution rules
       * match commit's (parent ∪ batch, type changes refuse). Appends
       * into partitions holding PENDING deletion-vector tombstones are
-      * REFUSED loudly: the key-granular DV anti-join would silently
+      * REFUSED loudly: the key-granular DV filter would silently
       * kill a re-inserted tombstoned key — purge first (OPTIMIZE), the
       * same refusal WAP staging makes. `overTombstones` lifts the
       * refusal when the sidecar is birth-aware (see [[appendPreflight]])
@@ -1980,46 +1849,15 @@ object WriteOps {
       val parent = preflight(root, v)
       val ts = drawTs(parent)
 
-      // tombstones: staged (key, pt_year) task files → __below = ts,
-      // unioned with the parent's pending set (legacy rows upgrade to
-      // ts — sound: every existing file was born before this commit).
-      // A staged dv file is created LAZILY on its first tombstone
-      // (SnapshotDeltaWriter.dvW), so a non-empty `dvStaged` implies a
-      // non-empty tombstone set — no emptiness-probe job.
-      val fresh =
-        if (dvStaged.isEmpty) None
-        else Some(s.read.parquet(dvStaged: _*)
-          .select(col(keyCol), col("pt_year"))
-          .withColumn("__below", lit(ts)))
-      val prior = parent.dv.map { case (p, k, _) =>
-        require(k == keyCol,
-          s"pending deletion vector keys on '$k'; a '$keyCol' " +
-          "row-level delta must wait for a rewrite to purge it")
-        val p0 = s.read.parquet(p)
-        if (p0.columns.contains("__below")) p0
-        else p0.withColumn("__below", lit(ts))
-      }
-      val dv = fresh match {
-        case None => parent.dv // no new tombstones: the parent's carries
-        case Some(f) =>
-          // ONE job writes the sidecar (r18 fusion; the r17 shape ran
-          // distinct→checkpoint, an emptiness probe, a second
-          // distinct→checkpoint, the write, and a years-collect — five
-          // jobs per row-level commit): a single distinct over the
-          // union collapses staged duplicates and fresh-vs-prior
-          // overlaps alike, and the tombstoned-years set rides the
-          // SAME action as an observed collect_set instead of a
-          // second scan. No localCheckpoint remains on the commit
-          // path — nothing here depends on unreplicated executor
-          // blocks (r17 verdict's durability concern).
-          val all = prior.fold(f)(f.unionByName(_)).distinct()
-          val obs = new org.apache.spark.sql.Observation()
-          val dvPath = freshDvPath(root, v)
-          all.observe(obs, collect_set(col("pt_year")).as("years"))
-            .coalesce(1).write.mode(SaveMode.Overwrite).parquet(dvPath)
-          val years = obs.get("years").asInstanceOf[Seq[Int]].sorted
-          Some((dvPath, keyCol, years))
-      }
+      // tombstones: the staged (key, pt_year) task files join the
+      // parent's pending set. A staged dv file is created LAZILY on its
+      // first tombstone (SnapshotDeltaWriter.dvW), so a non-empty
+      // `dvStaged` implies a non-empty tombstone set — no
+      // emptiness-probe job; none staged, the parent's set carries.
+      val dv =
+        if (dvStaged.isEmpty) parent.dv
+        else Some(writeDv(s, root, v, parent, keyCol,
+          s.read.parquet(dvStaged: _*), ts, "row-level delta"))
 
       // fresh data files append (parent entries ++ fresh, born = ts)
       val adds = addsOf(freshEntries(s, files, writeSchema), ts)
@@ -2049,7 +1887,7 @@ object WriteOps {
         require(hit.isEmpty || (overTombstones && dvBirthAware(p)),
           s"partitions ${hit.mkString(",")} hold pending deletion-" +
           "vector tombstones; an append there could silently lose " +
-          "re-inserted keys to the tombstone anti-join — run " +
+          "re-inserted keys to the tombstone filter — run " +
           "optimize(purgeTombstoned) first")
       }
       parent
@@ -2646,15 +2484,12 @@ object WriteOps {
         Top.parse(parent + 1, lines))
     }
 
-    /** The branch's table state — what the audit step reads
-      * (readThrough: rename aliases in the carried schema resolve). */
+    /** The branch's table state — what the audit step reads, through
+      * the connector scan like any version (rename aliases in the
+      * carried schema resolve, the parent's tombstones apply). */
     def readBranch(s: SparkSession, root: String,
-        name: String): DataFrame = {
-      val branch = branchState(root, name)._3
-      readThrough(s, branch.schema,
-        readPartManifests(branch.pointers.values.toSeq)
-          .flatten.map(e => (e.path, e.bytes)).sortBy(_._1))
-    }
+        name: String): DataFrame =
+      graft.sources.SnapshotFrame(s, root, branchState(root, name)._3)
 
     /** Publish the audited branch as the next version: ONE atomic
       * top-manifest rename, zero data movement (the branch's m-files
@@ -2732,21 +2567,6 @@ object WriteOps {
     ins.unionByName(del).unionByName(updPre).unionByName(updPost)
   }
 
-  /** SCD Type-2 historization — the OTHER merge shape a warehouse needs:
-    * instead of replacing a matched row (write_upsert), the current
-    * version is CLOSED (valid_to stamped) and the new version opened,
-    * so every key keeps its full change history with validity
-    * intervals.
-    *
-    * Storage layout is the scale story: the table partitions on
-    * `is_current`. A merge (a) APPENDS the closed rows to the history
-    * partition — history files are immutable, append cost = changed
-    * rows; (b) rewrites the current partition via a staged commit —
-    * cost = current size, never table-plus-history size. History grows
-    * forever but is never rewritten (Scd2Spec proves merge #2 leaves
-    * merge #1's history files byte-identical). The change batch drives
-    * the key probe and is broadcast (a corpus-scale batch would fall
-    * back to a shuffle join on the key). */
   /** Materialized-aggregate base: per-customer order stats over the
     * years-before-1997 history, bucket-partitioned on the key so a later
     * incremental merge can address only the buckets a batch touches.
@@ -3926,6 +3746,21 @@ object WriteOps {
     else upd
   }
 
+  /** SCD Type-2 historization — the OTHER merge shape a warehouse needs:
+    * instead of replacing a matched row (write_upsert), the current
+    * version is CLOSED (valid_to stamped) and the new version opened,
+    * so every key keeps its full change history with validity
+    * intervals.
+    *
+    * Storage layout is the scale story: the table partitions on
+    * `is_current`. A merge (a) APPENDS the closed rows to the history
+    * partition — history files are immutable, append cost = changed
+    * rows; (b) rewrites the current partition via a staged commit —
+    * cost = current size, never table-plus-history size. History grows
+    * forever but is never rewritten (Scd2Spec proves merge #2 leaves
+    * merge #1's history files byte-identical). The change batch drives
+    * the key probe and is broadcast (a corpus-scale batch would fall
+    * back to a shuffle join on the key). */
   private[graft] def scd2Merge(s: SparkSession, d: String, base: String,
       stage: String, v: Int): Unit = {
     val b = scd2Batch(s, d, v)

@@ -1,14 +1,13 @@
 package graft.sources
 
-import scala.collection.mutable
-
-import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.paths.SparkPath
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Coalesce, UnsafeProjection}
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
-import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionDirectory, PartitionedFile, PartitionSpec, PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.datasources.{FilePartition, InMemoryFileIndex, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetPartitionReaderFactory, ParquetScan}
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
@@ -17,51 +16,28 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
 
 import graft.operators.WriteOps.SnapshotTable
 
-/** A snapshot version's data files as a Spark file index, built from
-  * the (path, bytes) pairs its manifest recorded at commit: planning
-  * makes ZERO filesystem listing or stat calls. `spark.read.parquet
-  * (paths)` would re-stat every path and, past 32 paths, launch a
-  * distributed listing job before the real scan. Shared by the
-  * DataFrame read path ([[SnapshotTable.read]], through
-  * `HadoopFsRelation`) and the connector's reader factory (through
-  * Spark's v2 `ParquetScan`). */
-private[graft] class ManifestFileIndex(s: SparkSession,
-    entries: Seq[(String, Long)])
-    extends PartitioningAwareFileIndex(s, Map.empty, None) {
-
-  // qualify once (URI resolution only — no I/O): unqualified paths
-  // would re-resolve per split against defaultFS
-  private val statuses: Array[FileStatus] =
-    entries.headOption.fold(Array.empty[FileStatus]) { case (p0, _) =>
-      val fs = new HPath(p0).getFileSystem(hadoopConf)
-      entries.map { case (p, len) =>
-        new FileStatus(len, false, 1, 0L, 0L, fs.makeQualified(new HPath(p)))
-      }.toArray
-    }
-
-  override def rootPaths: Seq[HPath] = statuses.map(_.getPath).toSeq
-  override def listFiles(
-      partitionFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
-      dataFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : Seq[PartitionDirectory] =
-    Seq(PartitionDirectory(InternalRow.empty, statuses))
-  override def inputFiles: Array[String] = statuses.map(_.getPath.toString)
-  override def refresh(): Unit = ()
-  override def sizeInBytes: Long = entries.map(_._2).sum
-  override def partitionSchema: StructType = new StructType()
-  override def partitionSpec(): PartitionSpec =
-    PartitionSpec(partitionSchema, Seq.empty)
-  override protected def leafFiles
-      : mutable.LinkedHashMap[HPath, FileStatus] =
-    mutable.LinkedHashMap(statuses.map(f => f.getPath -> f).toSeq: _*)
-  override protected def leafDirToChildrenFiles
-      : Map[HPath, Array[FileStatus]] =
-    statuses.groupBy(_.getPath.getParent)
+/** A DataFrame over one snapshot state — a published version's or a
+  * staged branch's [[SnapshotTable.Top]] — planned through the
+  * connector: a DSv2 relation over [[SnapshotSourceTable]] pinned to
+  * `top`, so every DataFrame read of a snapshot table plans the same
+  * [[SnapshotScan]] SQL does (manifest pruning, pushdown, and the
+  * tombstone and alias rules of [[SnapshotReaderFactory]]). `files`
+  * restricts the read to explicit manifest entries per year. */
+private[graft] object SnapshotFrame {
+  def apply(s: SparkSession, root: String, top: SnapshotTable.Top,
+      files: Option[Seq[(Int, Seq[SnapshotTable.FileEntry])]] = None)
+      : DataFrame = {
+    val schema = top.schema.getOrElse(throw new IllegalStateException(
+      s"version ${top.version} of $root records no schema"))
+    GraftColumnBridge.frame(s, DataSourceV2Relation.create(
+      new SnapshotSourceTable(schema, root, Some(top), files), None, None))
+  }
 }
 
 /** The connector's per-file read: Spark's own v2 parquet reader
   * factory (`ParquetPartitionReaderFactory`, taken from a `ParquetScan`
-  * over a [[ManifestFileIndex]]) does the decoding — vectorized or row,
+  * over an empty file index — the files come from the manifest, one
+  * per input partition) does the decoding — vectorized or row,
   * column pruning, row-group skipping by stats, dictionary and bloom
   * filter through `ParquetFilters`, byte-range splits, null-fill for
   * files that predate a column, int→long and float→double widening.
@@ -72,9 +48,9 @@ private[graft] class ManifestFileIndex(s: SparkSession,
   *    The key and pt_year are read even when the query omits them,
   *    then projected away.
   *  - `ALTER COLUMN RENAME` aliases: every name of a column's alias
-  *    chain is read and the first non-null wins — the rule
-  *    `SnapshotTable.read` applies (a row carries a value under exactly
-  *    one generation's name, since files are single-generation).
+  *    chain is read and the first non-null wins (a row carries a value
+  *    under exactly one generation's name, since files are
+  *    single-generation).
   *
   * A read that needs neither passes through to the delegate unchanged,
   * columnar batches included. */
@@ -187,7 +163,8 @@ private[sources] object SnapshotReaderFactory {
       ns.map(n => f.copy(name = n, nullable = true))
     })
     val parquet = ParquetScan(s, s.sessionState.newHadoopConf(),
-      new ManifestFileIndex(s, Nil), raw, raw, new StructType(), filters,
+      new InMemoryFileIndex(s, Nil, Map.empty, Some(new StructType())),
+      raw, raw, new StructType(), filters,
       CaseInsensitiveStringMap.empty()).createReaderFactory()
       .asInstanceOf[ParquetPartitionReaderFactory]
     new SnapshotReaderFactory(parquet, out, logical, chains, dv)

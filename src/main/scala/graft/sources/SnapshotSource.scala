@@ -63,20 +63,27 @@ class SnapshotSourceProvider extends TableProvider with DataSourceRegister {
     r
   }
 
+  /** The read version's recorded schema: the `versionAsOf` pin's when
+    * set (the columns `VERSION AS OF` serves), else the head's. */
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val root = rootOf(options)
-    val vs = SnapshotTable.versions(root)
-    require(vs.nonEmpty, s"no committed versions under $root")
-    SnapshotTable.tableSchema(root, vs.max).getOrElse(
+    val v = Option(options.get("versionAsOf")).map(_.toInt).getOrElse {
+      val vs = SnapshotTable.versions(root)
+      require(vs.nonEmpty, s"no committed versions under $root")
+      vs.max
+    }
+    SnapshotTable.tableSchema(root, v).getOrElse(
       throw new IllegalStateException(
-        s"version ${vs.max} of $root records no schema"))
+        s"version $v of $root records no schema"))
   }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    new SnapshotSourceTable(schema,
-      properties.getOrDefault("root", properties.get("path")),
-      Option(properties.get("versionAsOf")).map(_.toInt))
+      properties: util.Map[String, String]): Table = {
+    val root = properties.getOrDefault("root", properties.get("path"))
+    new SnapshotSourceTable(schema, root,
+      Option(properties.get("versionAsOf"))
+        .map(v => SnapshotTable.top(root, v.toInt)))
+  }
 }
 
 /** DataSource V2 CATALOG over a directory of snapshot tables — the SQL
@@ -154,7 +161,7 @@ class SnapshotCatalog
         throw new org.apache.spark.sql.catalyst.analysis
           .NoSuchTableException(ident))
     else new SnapshotSourceTable(
-      SnapshotTable.tableSchema(root, vs.max).get, root, None)
+      SnapshotTable.tableSchema(root, vs.max).get, root)
   }
 
   /** `VERSION AS OF <v>` — Spark routes the SQL time-travel clause
@@ -167,8 +174,7 @@ class SnapshotCatalog
     require(SnapshotTable.versions(root).contains(v),
       s"version $v of ${ident.name} is unavailable (vacuumed or never " +
       "committed)")
-    new SnapshotSourceTable(
-      SnapshotTable.tableSchema(root, v).get, root, Some(v))
+    pinnedTable(root, v)
   }
 
   /** `TIMESTAMP AS OF <t>` — Spark hands the clause's timestamp in
@@ -176,9 +182,12 @@ class SnapshotCatalog
     * before it (Delta's contract), then pins like VERSION AS OF. */
   override def loadTable(ident: Identifier, timestampMicros: Long): Table = {
     val root = rootOf(ident)
-    val v = SnapshotTable.versionAt(root, timestampMicros / 1000L)
-    new SnapshotSourceTable(
-      SnapshotTable.tableSchema(root, v).get, root, Some(v))
+    pinnedTable(root, SnapshotTable.versionAt(root, timestampMicros / 1000L))
+  }
+
+  private def pinnedTable(root: String, v: Int): Table = {
+    val top = SnapshotTable.top(root, v)
+    new SnapshotSourceTable(top.schema.get, root, Some(top))
   }
 
   /** `CREATE TABLE <cat>.<t> (...)` — and the create half of CTAS:
@@ -277,8 +286,7 @@ class SnapshotCatalog
       s.createDataFrame(
         s.sparkContext.emptyRDD[org.apache.spark.sql.Row], recorded),
       Seq.empty, schemaOverride = Some(recorded))
-    new SnapshotSourceTable(
-      SnapshotTable.tableSchema(root, 0).get, root, None)
+    new SnapshotSourceTable(SnapshotTable.tableSchema(root, 0).get, root)
   }
 
   /** `ALTER TABLE ... ADD COLUMN(S)` and `ALTER COLUMN ... TYPE
@@ -454,7 +462,7 @@ class SnapshotCatalog
       s.createDataFrame(
         s.sparkContext.emptyRDD[org.apache.spark.sql.Row], evolved),
       Seq.empty, schemaOverride = Some(evolved))
-    new SnapshotSourceTable(evolved, root, None)
+    new SnapshotSourceTable(evolved, root)
   }
 
   /** `DROP TABLE` — removes the whole root (manifests, data, sidecars,
@@ -506,12 +514,22 @@ class SnapshotCatalog
   * (VERSION/TIMESTAMP AS OF) refuse writes; INSERT OVERWRITE refuses
   * (overwrites are merges — use the commit/upsert protocol). */
 private[sources] class SnapshotSourceTable(tableSchema: StructType,
-    root: String, pinnedVersion: Option[Int] = None)
+    root: String, pinned: Option[SnapshotTable.Top] = None,
+    files: Option[Seq[(Int, Seq[SnapshotTable.FileEntry])]] = None)
     extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDelete
     with org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations {
   import org.apache.spark.sql.connector.write.{LogicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, V1Write, Write, WriteBuilder}
+
+  /** Reads of a pinned table (VERSION/TIMESTAMP AS OF, `versionAsOf`,
+    * or a DataFrame read of a version or staged branch) serve `pinned`;
+    * `files` narrows them to those manifest entries. */
+  private val pinnedVersion = pinned.map(_.version)
+
+  /** A table pinned to committed version `version`. */
+  def this(tableSchema: StructType, root: String, version: Option[Int]) =
+    this(tableSchema, root, version.map(SnapshotTable.top(root, _)))
 
   /** SQL `UPDATE` / `MERGE INTO` (and DELETE with predicates the
     * metadata path can't translate) — the GROUP-BASED row-level
@@ -616,11 +634,12 @@ private[sources] class SnapshotSourceTable(tableSchema: StructType,
     val pred = filters.flatMap(SnapshotFilters.toColumn)
       .reduceOption(_ && _).getOrElse(lit(true))
     val head = SnapshotTable.versions(root).max
+    val at = SnapshotTable.top(root, head)
     // PARTITION PRUNING before the touch-scan: a pt_year constraint in
     // the (conjunctive) filter list bounds the candidate partitions in
     // METADATA — `DELETE ... WHERE pt_year = 1996 AND <pred>` scans
     // ONLY 1996, not the table; unconstrained deletes scan the head
-    val live = SnapshotTable.pointers(root, head).keySet
+    val live = at.pointers.keySet
     val candidates = filters.foldLeft(live) { (acc, f) =>
       acc.intersect(SnapshotFilters.yearBound(f).getOrElse(live))
     }.toSeq.sorted
@@ -639,11 +658,10 @@ private[sources] class SnapshotSourceTable(tableSchema: StructType,
     // neither touch-scans nor rewrites. Tombstoned partitions opt out
     // — they must rewrite whole so the purge stays sound.
     val preds = SnapshotFilters.statRanges(filters)
-    val dvYears = SnapshotTable.dvOf(root, head)
-      .map(_._3.toSet).getOrElse(Set.empty[Int])
+    val dvYears = at.dv.map(_._3.toSet).getOrElse(Set.empty[Int])
     val parts: Seq[(Int, Seq[SnapshotTable.FileEntry],
         Seq[SnapshotTable.FileEntry])] =
-      SnapshotTable.partitionStatEntries(root, head, candidates).map {
+      SnapshotTable.partitionStatEntries(at.pointers, candidates).map {
         case (y, es) =>
           if (dvYears.contains(y)) (y, es, Seq.empty)
           else {
@@ -653,13 +671,13 @@ private[sources] class SnapshotSourceTable(tableSchema: StructType,
           }
       }
     val touched = SnapshotTable
-      .readFiles(s, root, head, parts.flatMap(_._2).map(_.path))
+      .readFiles(s, root, at, parts.map(p => p._1 -> p._2))
       .filter(matches)
       .select("pt_year").distinct().collect().map(_.getInt(0)).toSet
     if (touched.nonEmpty) {
       val touchedParts = parts.filter(p => touched.contains(p._1))
       val kept = SnapshotTable
-        .readFiles(s, root, head, touchedParts.flatMap(_._2).map(_.path))
+        .readFiles(s, root, at, touchedParts.map(p => p._1 -> p._2))
         .filter(!matches)
       val carried = touchedParts.collect {
         case (y, _, excluded) if excluded.nonEmpty => y -> excluded
@@ -827,8 +845,9 @@ private[sources] class SnapshotSourceTable(tableSchema: StructType,
       "set startingVersion OR startingTimestamp, not both")
     new SnapshotScanBuilder(root, tableSchema,
       fromVersion.orElse(fromTs).getOrElse(0),
-      pinnedVersion
-        .orElse(Option(options.get("versionAsOf")).map(_.toInt)),
+      pinned.orElse(Option(options.get("versionAsOf"))
+        .map(v => SnapshotTable.top(root, v.toInt))),
+      files,
       options.getBoolean("ignoreDeletes", false),
       Option(options.get("maxVersionsPerTrigger")).map(_.toInt),
       Option(options.get("maxBytesPerTrigger")).map(_.toLong))
@@ -1203,7 +1222,7 @@ private[sources] class SnapshotDeltaOperation(root: String,
   override def newScanBuilder(options: CaseInsensitiveStringMap)
       : ScanBuilder =
     new SnapshotScanBuilder(root, tableSchema, 0,
-      pinnedVersion = Some(readVersion))
+      pinned = Some(SnapshotTable.top(root, readVersion)))
 
   override def newWriteBuilder(
       info: LogicalWriteInfo): DeltaWriteBuilder =
@@ -1407,24 +1426,31 @@ private[sources] object SnapshotFilters {
     case _ => None
   }
 
-  // Same bound-value whitelist as the read-side scan builder: NaN /
-  // non-finite floats must never become pruning bounds (Spark orders
-  // NaN greatest-and-self-equal; IEEE stats comparison would wrongly
-  // exclude every file).
+  /** Values that may become pruning bounds. Dates compare as epoch
+    * days against their 'L' stats. NaN must NOT: Spark orders NaN
+    * greatest and equal to itself, but the stats comparison is IEEE
+    * (`NaN >= min` is false), which would prune EVERY file and lose
+    * rows the residual filter can never recover. Non-finite bounds
+    * fall back to unpruned scans (manifest stats never record
+    * non-finite values, so infinities can't prune usefully either). */
   private def comparable(v: Any): Boolean = v match {
     case _: java.lang.Long | _: java.lang.Integer | _: java.lang.Short |
-         _: java.lang.Byte | _: String => true
+         _: java.lang.Byte | _: String | _: java.sql.Date |
+         _: java.time.LocalDate => true
     case d: java.lang.Double => !d.isNaN && !d.isInfinite
     case f: java.lang.Float => !f.isNaN && !f.isInfinite
     case _ => false
   }
 
   /** Per-column conjunctive [lo, hi] bounds from the TOP-LEVEL filter
-    * conjuncts — the DELETE path's file-granular stats prune. Only the
-    * plain comparison shapes contribute (strict bounds conservatively
-    * widen to inclusive); anything else contributes nothing, which is
-    * SOUND because bounds only ever EXCLUDE files whose stats ranges
-    * cannot satisfy a handled conjunct. */
+    * conjuncts — the one filter→bounds translation behind every
+    * file-granular stats prune (scan pushdown, DELETE, the row-level
+    * rewrite). Only the plain comparison shapes contribute (strict
+    * bounds conservatively widen to inclusive; the newest bound per
+    * side wins — every conjunct re-applies post-scan, so any sound
+    * bound works); anything else contributes nothing, which is SOUND
+    * because bounds only ever EXCLUDE files whose stats ranges cannot
+    * satisfy a handled conjunct. */
   def statRanges(filters: Array[Filter]): Seq[(String, Any, Any)] = {
     val m = scala.collection.mutable.LinkedHashMap[String, (Any, Any)]()
     def tighten(c: String, lo: Any, hi: Any): Unit = {
@@ -1479,7 +1505,8 @@ private[sources] object SnapshotFilters {
   * ([[snap]]) and pass down to planning and the reader factory. */
 private[sources] class SnapshotScanBuilder(root: String,
     full: StructType, startingVersion: Int,
-    pinnedVersion: Option[Int] = None,
+    pinned: Option[SnapshotTable.Top] = None,
+    files: Option[Seq[(Int, Seq[SnapshotTable.FileEntry])]] = None,
     ignoreDeletes: Boolean = false,
     maxVersionsPerTrigger: Option[Int] = None,
     maxBytesPerTrigger: Option[Long] = None) extends ScanBuilder
@@ -1495,13 +1522,13 @@ private[sources] class SnapshotScanBuilder(root: String,
   // every residual conjunct: ParquetFilters' row-group skipping input
   private var residual: Array[Filter] = Array.empty
 
-  /** The read version's top manifest: one listing (unpinned reads)
-    * plus one manifest read for the whole scan. */
-  private lazy val snap: SnapshotTable.Top = SnapshotTable.top(root,
-    pinnedVersion.getOrElse(SnapshotTable.versions(root).max))
+  /** The read state's top manifest: the pinned one, else one listing
+    * plus one manifest read of the head for the whole scan. */
+  private lazy val snap: SnapshotTable.Top = pinned.getOrElse(
+    SnapshotTable.top(root, SnapshotTable.versions(root).max))
   // stat-shape conjuncts that stay RESIDUAL (file-level pruning only)
   private var statPushed: Array[Filter] = Array.empty
-  private var ranges: Map[String, (Any, Any)] = Map.empty
+  private var ranges: Seq[(String, Any, Any)] = Nil
   // pt_year partition conjuncts CONSUMED by exact partition pruning
   private var consumedYears: Option[Set[Int]] = None
   // every filter Spark handed pushFilters — a pushed LIMIT may bound
@@ -1595,10 +1622,7 @@ private[sources] class SnapshotScanBuilder(root: String,
     }
     if (agg.aggregateExpressions.isEmpty) return None
 
-    val liveYears = snap.pointers.keys.toSeq.sorted
-    val years =
-      consumedYears.fold(liveYears)(ys => liveYears.filter(ys.contains))
-    val perYear = SnapshotTable.partitionStatEntries(snap.pointers, years)
+    val perYear = SnapshotScan.scoped(snap, files, consumedYears)
       .filter(_._2.nonEmpty) // an empty group yields NO result row
 
     /** One aggregate over one entry scope; None = not answerable. */
@@ -1757,27 +1781,6 @@ private[sources] class SnapshotScanBuilder(root: String,
     pushedAgg.isDefined
   }
 
-  private def comparable(v: Any): Boolean = v match {
-    case _: java.lang.Long | _: java.lang.Integer | _: java.lang.Short |
-         _: java.lang.Byte | _: String => true
-    // NaN must NOT become a pruning bound: Spark orders NaN greatest
-    // and equal to itself, but the stats comparison is IEEE (`NaN >=
-    // min` is false), which would prune EVERY file and lose rows the
-    // residual filter can never recover. Non-finite bounds fall back
-    // to unpruned scans (manifest stats never record non-finite
-    // values, so infinities can't prune usefully either).
-    case d: java.lang.Double => !d.isNaN && !d.isInfinite
-    case f: java.lang.Float => !f.isNaN && !f.isInfinite
-    case _ => false
-  }
-
-  private def tighten(c: String, lo: Any, hi: Any): Unit = {
-    // keep the NEWEST bound per side: all pushed conjuncts re-apply
-    // post-scan, so any sound bound works — last-write is sound
-    val (l0, h0) = ranges.getOrElse(c, (null, null))
-    ranges += c -> (if (lo != null) lo else l0, if (hi != null) hi else h0)
-  }
-
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     // pt_year partition conjuncts (=, <=>, IN over ints) are CONSUMED
     // — partition manifests are keyed by pt_year and every row in a
@@ -1800,20 +1803,14 @@ private[sources] class SnapshotScanBuilder(root: String,
         consumedYears = Some(consumedYears.fold(ys)(_.intersect(ys)))
       }
     }
+    ranges = SnapshotFilters.statRanges(rest)
     statPushed = rest.filter {
-      case EqualTo(c, v) if comparable(v) => tighten(c, v, v); true
-      case GreaterThan(c, v) if comparable(v) => tighten(c, v, null); true
-      case GreaterThanOrEqual(c, v) if comparable(v) =>
-        tighten(c, v, null); true
-      case LessThan(c, v) if comparable(v) => tighten(c, null, v); true
-      case LessThanOrEqual(c, v) if comparable(v) =>
-        tighten(c, null, v); true
       // IS NULL prunes every file whose stats RECORD zero nulls;
       // IS NOT NULL prunes provably-all-null files (r16 null counts)
       // — both stay residual like every stat shape
       case IsNull(c) => nullScan = nullScan :+ c; true
       case IsNotNull(c) => notNullScan = notNullScan :+ c; true
-      case _ => false
+      case f => SnapshotFilters.statRanges(Array(f)).nonEmpty
     }
     pushed = yearFs ++ statPushed
     residual = rest
@@ -1834,10 +1831,9 @@ private[sources] class SnapshotScanBuilder(root: String,
   override def build(): Scan = pushedAgg match {
     case Some((schema, rows, desc)) =>
       new SnapshotMetaAggScan(root, schema, rows, desc)
-    case None => new SnapshotScan(root, required, snap,
-      startingVersion,
-      ranges.toSeq.map { case (c, (lo, hi)) => (c, lo, hi) },
-      pinnedVersion, ignoreDeletes, maxVersionsPerTrigger,
+    case None => new SnapshotScan(root, required, snap, files,
+      startingVersion, ranges,
+      pinned.map(_.version), ignoreDeletes, maxVersionsPerTrigger,
       maxBytesPerTrigger, consumedYears, nullScan, notNullScan,
       limitHint, topNAsc, residual)
   }
@@ -1890,10 +1886,25 @@ private[graft] object SnapshotScan {
     * planned (post pruning, runtime filtering, and LIMIT bounding). */
   private[graft] val lastPlannedFiles =
     scala.collection.concurrent.TrieMap[String, Int]()
+
+  /** The in-scope entries per year: every partition's, or exactly the
+    * partitions `years` selects (EXACT pruning — a partition's files
+    * hold only rows with its key, so no residual re-filter is needed),
+    * taken from `files` when the read is restricted to explicit
+    * entries, else from the partition manifests. */
+  private[sources] def scoped(snap: SnapshotTable.Top,
+      files: Option[Seq[(Int, Seq[SnapshotTable.FileEntry])]],
+      years: Option[Set[Int]]): Seq[(Int, Seq[SnapshotTable.FileEntry])] =
+    files match {
+      case Some(fs) => fs.filter { case (y, _) => years.forall(_(y)) }
+      case None => SnapshotTable.partitionStatEntries(snap.pointers,
+        years.fold(snap.pointers.keys.toSeq)(_.toSeq).sorted)
+    }
 }
 
 private[sources] class SnapshotScan(root: String, schema: StructType,
     snap: SnapshotTable.Top,
+    files: Option[Seq[(Int, Seq[SnapshotTable.FileEntry])]],
     startingVersion: Int,
     ranges: Seq[(String, Any, Any)] = Nil,
     pinnedVersion: Option[Int] = None,
@@ -1974,16 +1985,15 @@ private[sources] class SnapshotScan(root: String, schema: StructType,
       snap.schema.getOrElse(schema),
       if (withDv) snap.dv.map(d => (d._1, d._2)) else None, filters)
 
-  /** A version's in-scope entries: every partition's, or exactly the
-    * partitions a consumed pt_year conjunct selected (EXACT pruning —
-    * a partition's files hold only rows with its key, so no residual
-    * re-filter is needed or kept). */
-  private def scopedByYear: Seq[(Int, Seq[SnapshotTable.FileEntry])] = {
-    val ys = effectiveYears match {
-      case None => snap.pointers.keys.toSeq.sorted
-      case Some(s) => s.toSeq.sorted
-    }
-    SnapshotTable.partitionStatEntries(snap.pointers, ys)
+  // Spark plans one scan more than once (a SQL read planned its
+  // partitions twice, a write's input too); a pt_year scope's partition
+  // manifests are read once per scan
+  private var scope: Option[(Option[Set[Int]],
+    Seq[(Int, Seq[SnapshotTable.FileEntry])])] = None
+  private def inScope(ys: Option[Set[Int]]) = synchronized {
+    if (!scope.exists(_._1 == ys))
+      scope = Some((ys, SnapshotScan.scoped(snap, files, ys)))
+    scope.get._2
   }
 
   /** Pushed-LIMIT/TopN file bounding: with no residual filters (the
@@ -2023,9 +2033,8 @@ private[sources] class SnapshotScan(root: String, schema: StructType,
     override def planInputPartitions(): Array[InputPartition] = {
       SnapshotScan.lastPlannedYears(root) =
         effectiveYears.map(_.toSeq.sorted)
-      val survivors = scopedByYear.map { case (y, es) =>
-        y -> es.filter(entrySurvives)
-      }
+      val survivors = inScope(effectiveYears)
+        .map { case (y, es) => y -> es.filter(entrySurvives) }
       val planned = boundByLimit(survivors, snap.dv.nonEmpty)
       SnapshotScan.lastPlannedFiles(root) = planned.size
       SnapshotSplits.plan(planned)
@@ -2318,8 +2327,11 @@ private[sources] object SnapshotSplits {
   * entries for vacuumed sidecars are dead weight, not wrong answers
   * (their paths are never served again). */
 private[sources] object DvCache {
+  // computeIfAbsent: the tasks that open a tombstoned version's files
+  // start together; the first loads the sidecar and the rest wait for
+  // it, so each JVM reads a sidecar once
   private val cache =
-    scala.collection.concurrent.TrieMap[String, Map[(Any, Int), Long]]()
+    new java.util.concurrent.ConcurrentHashMap[String, Map[(Any, Int), Long]]()
 
   /** (normalized key, pt_year) → the MAX `__below` of its tombstone
     * generations: a row dies iff that value exceeds its file's born.
@@ -2329,7 +2341,7 @@ private[sources] object DvCache {
     * were refused). */
   def tombstones(dvPath: String, keyCol: String, tag: Char,
       conf: org.apache.hadoop.conf.Configuration): Map[(Any, Int), Long] =
-    cache.getOrElseUpdate(dvPath, {
+    cache.computeIfAbsent(dvPath, _ => {
       import org.apache.parquet.hadoop.ParquetReader
       import org.apache.parquet.hadoop.example.GroupReadSupport
       val dir = new HPath(dvPath)

@@ -7,8 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.etl.TestSpark
 
 /** Deletion-vector hardening: token-uniquified sidecar paths (the
-  * commit-race clobber + stale-cache fix), the broadcast ceiling's
-  * shuffle fallback, and the describe() purge-debt telemetry. */
+  * commit-race clobber + stale-cache fix), exact tombstoned reads, and
+  * the describe() purge-debt telemetry. */
 class DvHardeningSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
@@ -44,7 +44,7 @@ class DvHardeningSpec extends AnyFunSuite {
       Set(1L))
   }
 
-  test("past the broadcast ceiling the anti-join falls back and stays correct") {
+  test("tombstoned reads stay exact through read and readPartitions") {
     val root = Files.createTempDirectory("g_dv_fallback").toString
     T.commit(spark, root, 0,
       frame((1L, 1, 10.0), (2L, 1, 20.0), (3L, 1, 30.0)), Seq(1))
@@ -52,13 +52,7 @@ class DvHardeningSpec extends AnyFunSuite {
     val expected = Set(1L, 3L)
     assert(T.read(spark, root, 1).collect().map(_.getLong(0)).toSet ===
       expected)
-    val saved = T.dvBroadcastMaxBytes
-    try {
-      T.dvBroadcastMaxBytes = 0L // force the shuffle fallback
-      assert(T.read(spark, root, 1).collect().map(_.getLong(0)).toSet ===
-        expected, "fallback path changed results")
-      assert(T.readPartitions(spark, root, 1, Seq(1)).count() === 2)
-    } finally T.dvBroadcastMaxBytes = saved
+    assert(T.readPartitions(spark, root, 1, Seq(1)).count() === 2)
   }
 
   test("describe surfaces pending purge debt; OPTIMIZE clears it") {

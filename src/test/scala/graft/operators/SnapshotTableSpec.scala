@@ -118,8 +118,14 @@ class SnapshotTableSpec extends AnyFunSuite {
     }
     // metadata-pruned read: only year 2's files enter the scan
     val pruned = T.readPartitions(spark, root, 1, Seq(2))
-    assert(pruned.inputFiles.forall(_.contains("_y2_")),
-      s"pruned read opened foreign files: ${pruned.inputFiles.toSeq}")
+    val opened = pruned.select(input_file_name()).distinct().collect()
+      .map(_.getString(0)).toSeq
+    assert(opened.nonEmpty && opened.forall(_.contains("_y2_")),
+      s"pruned read opened foreign files: $opened")
+    assert(graft.sources.SnapshotScan.lastPlannedYears(root) ===
+      Some(Seq(2)))
+    assert(graft.sources.SnapshotScan.lastPlannedFiles(root) ===
+      T.partitionEntries(root, 1, Seq(2)).size)
     assert(pruned.collect().toSet ===
       Set(org.apache.spark.sql.Row(2L, 2, 22.0)))
     // empty selection resolves schema with zero rows

@@ -2,17 +2,23 @@ package graft.sources
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.etl.TestSpark
 import graft.operators.WriteOps.{SnapshotTable => T}
 
-/** The connector scan and the DataFrame read path
-  * ([[graft.operators.WriteOps.SnapshotTable.read]]) are two routes to
-  * the same rows: on one table carrying every reader-visible history
-  * shape at once they must return identical rows. */
-class ScanParitySpec extends AnyFunSuite {
+/** SQL and the DataFrame read API
+  * ([[graft.operators.WriteOps.SnapshotTable.read]] and its siblings)
+  * reach a snapshot version through the one connector scan: on one
+  * table carrying every reader-visible history shape at once they must
+  * return identical rows, and every DataFrame read must plan that
+  * scan. */
+class ScanParitySpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   private lazy val spark = TestSpark.spark
 
@@ -74,5 +80,49 @@ class ScanParitySpec extends AnyFunSuite {
       if (prev == null) hconf.unset("graft.snapshot.rowGroupBytes")
       else hconf.set("graft.snapshot.rowGroupBytes", prev)
     }
+  }
+
+  test("every DataFrame read API plans the connector scan: tombstones " +
+      "and a RENAME apply, no BroadcastExchange") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("g_read_apis").toString
+    val cat = "gapi_" + java.util.UUID.randomUUID().toString.take(8)
+    spark.conf.set(s"spark.sql.catalog.$cat",
+      classOf[SnapshotCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.base", base)
+    val root = s"$base/t"
+    T.commit(spark, root, 0, Seq((1L, 1, 10.0), (2L, 1, 20.0),
+      (3L, 2, 30.0), (4L, 2, 40.0)).toDF("k", "pt_year", "v"), Seq(1, 2))
+    spark.sql(s"ALTER TABLE $cat.t RENAME COLUMN v TO w")
+    T.commitDelete(spark, root, 2, "k", Seq((2L, 1)).toDF("k", "pt_year"))
+    T.stageCommit(spark, root, "audit",
+      Seq((5L, 3, 50.0)).toDF("k", "pt_year", "w"), Seq(3))
+
+    def plansScan(api: String, df: DataFrame): Seq[(Long, Double)] = {
+      val got = df.select("k", "w").as[(Long, Double)].collect()
+        .sortBy(_._1).toSeq
+      val plan = df.queryExecution.executedPlan
+      val scans = collect(plan) { case b: BatchScanExec => b }
+      assert(scans.nonEmpty &&
+        scans.forall(_.scan.description.startsWith("graft-snapshot")),
+        s"$api did not plan the connector scan:\n$plan")
+      assert(collectWithSubqueries(plan) {
+        case e: BroadcastExchangeExec => e
+      }.isEmpty, s"$api planned a broadcast:\n$plan")
+      got
+    }
+    val all = Seq((1L, 10.0), (3L, 30.0), (4L, 40.0))
+    assert(plansScan("read", T.read(spark, root, 2)) === all)
+    assert(plansScan("readPartitions",
+      T.readPartitions(spark, root, 2, Seq(1))) === Seq((1L, 10.0)))
+    assert(plansScan("readFiles", T.readFiles(spark, root, T.top(root, 2),
+      T.partitionStatEntries(root, 2, Seq(1)))) === Seq((1L, 10.0)))
+    assert(plansScan("readRange",
+      T.readRange(spark, root, 2, "k", 2L, 3L)) === Seq((3L, 30.0)))
+    assert(plansScan("readWhere", T.readWhere(spark, root, 2,
+      Seq(("k", 1L, null), ("w", null, 35.0)))) ===
+      Seq((1L, 10.0), (3L, 30.0)))
+    assert(plansScan("readBranch", T.readBranch(spark, root, "audit")) ===
+      all :+ ((5L, 50.0)))
   }
 }

@@ -309,6 +309,55 @@ class SnapshotSourceSpec extends AnyFunSuite {
     assert(e.getMessage != null)
   }
 
+  test("versionAsOf reads the pinned version's columns, as VERSION AS OF " +
+      "does") {
+    val base = Files.createTempDirectory("g_src_vasof_schema").toString
+    val root = s"$base/t"
+    T.commit(spark, root, 0, frame((1L, 1, 1.0)), Seq(1))
+    val cat = "gvas_" + java.util.UUID.randomUUID().toString.take(8)
+    spark.conf.set(s"spark.sql.catalog.$cat",
+      classOf[SnapshotCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.base", base)
+    spark.sql(s"ALTER TABLE $cat.t ADD COLUMN extra DOUBLE")
+    val viaSql = spark.sql(s"SELECT * FROM $cat.t VERSION AS OF 0")
+    val viaProvider = spark.read.format("graft-snapshot")
+      .option("root", root).option("versionAsOf", "0").load()
+    assert(viaSql.columns.toSeq === Seq("k", "pt_year", "v"))
+    assert(viaProvider.columns.toSeq === viaSql.columns.toSeq)
+    assert(viaProvider.collect().toSeq === viaSql.collect().toSeq)
+    // the head still serves the added column
+    assert(spark.read.format("graft-snapshot").option("root", root).load()
+      .columns.toSeq === Seq("k", "pt_year", "v", "extra"))
+  }
+
+  test("date predicates prune files: SQL and readRange on a date column") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("g_src_date").toString
+    val root = s"$base/t"
+    val d = java.sql.Date.valueOf(_: String)
+    T.commit(spark, root, 0, Seq(
+      (1L, 1, d("2020-01-05")), (2L, 1, d("2020-06-30")),
+      (3L, 2, d("2021-02-01")), (4L, 2, d("2021-11-11")))
+      .toDF("k", "pt_year", "d"), Seq(1, 2))
+    assert(T.files(root, 0).size === 2)
+    val cat = "gdate_" + java.util.UUID.randomUUID().toString.take(8)
+    spark.conf.set(s"spark.sql.catalog.$cat",
+      classOf[SnapshotCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.base", base)
+    assert(spark.sql(s"SELECT k FROM $cat.t WHERE d >= DATE'2021-01-01'")
+      .collect().map(_.getLong(0)).toSet === Set(3L, 4L))
+    assert(SnapshotScan.lastPlannedFiles(root) === 1,
+      "the date bound must prune the 2020 file by its manifest stats")
+    def keys(df: org.apache.spark.sql.DataFrame) =
+      df.select("k").collect().map(_.getLong(0)).toSet
+    assert(keys(T.readRange(spark, root, 0, "d", d("2020-02-01"),
+      d("2021-03-01"))) === Set(2L, 3L))
+    assert(SnapshotScan.lastPlannedFiles(root) === 2)
+    assert(keys(T.readRange(spark, root, 0, "d",
+      java.time.LocalDate.parse("2021-06-01"), null)) === Set(4L))
+    assert(SnapshotScan.lastPlannedFiles(root) === 1)
+  }
+
   test("SQL catalog: SELECT ... VERSION AS OF through SnapshotCatalog") {
     val base = Files.createTempDirectory("g_src_cat").toString
     val root = s"$base/orders_t"
