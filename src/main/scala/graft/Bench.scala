@@ -66,12 +66,25 @@ object Bench {
     * refuses to overwrite it (the run parks per-sf instead). A
     * baseline without an `sf` field (pre-guard vintage) is also
     * refused — its scale is unprovable. */
-  private[graft] def baselineFor(content: String,
-      sfDir: String): Map[String, Double] =
+  private[graft] def baselineFor(content: String, sfDir: String,
+      cpus: Option[Int] = None): Map[String, Double] =
     parseSf(content) match {
-      case Some(b) if sfName(b) == sfName(sfDir) => parseQueriesJson(content)
+      case Some(b) if sfName(b) == sfName(sfDir) && !cpusDiffer(content, cpus) =>
+        parseQueriesJson(content)
       case _ => Map.empty
     }
+
+  /** The artifact's recorded `"cpus"` field, if any. */
+  private[graft] def parseCpus(content: String): Option[Int] =
+    "\"cpus\":([0-9]+)".r.findFirstMatchIn(content).map(_.group(1).toInt)
+
+  /** CPU GUARD, the sf guard's twin: per-query times at local[8] and
+    * local[32] are different measurements, so a baseline that records
+    * other cpus than this run's is refused for comparison and never
+    * overwritten. A baseline without a `cpus` field (recorded before
+    * runs were stamped) is judged by its sf alone. */
+  private[graft] def cpusDiffer(content: String, cpus: Option[Int]): Boolean =
+    parseCpus(content).exists(b => cpus.exists(_ != b))
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -194,6 +207,13 @@ object Bench {
       else None
     val committedSfMismatch = committed.exists(c =>
       !parseSf(c).map(sfName).contains(sfName(sfDir)))
+    val committedCpusMismatch =
+      committed.exists(cpusDiffer(_, Some(cpus.toInt)))
+    if (committedCpusMismatch) System.err.println(
+      s"[bench] committed baseline ${fullPath} was recorded at cpus " +
+        s"${committed.flatMap(parseCpus).getOrElse("?")} but this run uses " +
+        s"$cpus — comparison REFUSED and the baseline will not be " +
+        s"overwritten; this run's payload parks in BENCH_FULL_c$cpus.json")
     if (committedSfMismatch) System.err.println(
       s"[bench] committed baseline ${fullPath} was recorded at sf " +
         s"'${committed.flatMap(parseSf).getOrElse("?")}' but this run is " +
@@ -202,7 +222,8 @@ object Bench {
         "this run's payload parks in BENCH_FULL_" + sfName(sfDir) +
         ".json (delete BENCH_FULL.json to rebase the baseline)")
     val prev: Map[String, Double] =
-      committed.map(baselineFor(_, sfDir)).getOrElse(Map.empty)
+      committed.map(baselineFor(_, sfDir, Some(cpus.toInt)))
+        .getOrElse(Map.empty)
 
     // NOISE GUARD: any query whose median regressed >1.5x vs the
     // committed baseline is re-measured once (fresh reps, end of run)
@@ -387,7 +408,7 @@ object Bench {
     val minQs = mins.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
     val line =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"queries_cold":$coldQs,"queries_min":$minQs,"reps":$reps$noteJson$isolatedJson$flagsJson$uniformJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"queries_cold":$coldQs,"queries_min":$minQs,"reps":$reps$noteJson$isolatedJson$flagsJson$uniformJson,"sf":"$sfDir","cpus":$cpus}"""
     println(line)
 
     // a BENCH_ONLY isolation run must not clobber the committed full
@@ -429,6 +450,8 @@ object Bench {
         // committed baseline NEVER overwrites it — it parks per-sf
         if (committedSfMismatch)
           benchDir.resolve(s"BENCH_FULL_${sfName(sfDir)}.json")
+        else if (committedCpusMismatch)
+          benchDir.resolve(s"BENCH_FULL_c$cpus.json")
         else fullPath, line)
     } catch { case e: Exception =>
       System.err.println(s"[bench] artifact write failed: ${e.getMessage}")
@@ -462,7 +485,7 @@ object Bench {
       (if (uniformLoad) s""","discarded_uniform_load":true""" else "") +
       (if (scaleBaseline.nonEmpty)
         s""","n_scale_flags":${confirmedFlags.size}""" else "") +
-      s""","full_artifact":"${benchDir.resolve("BENCH_FULL.json")}","sf":"$sfDir"}"""
+      s""","full_artifact":"${benchDir.resolve("BENCH_FULL.json")}","sf":"$sfDir","cpus":$cpus}"""
     println(summary)
     spark.stop()
   }

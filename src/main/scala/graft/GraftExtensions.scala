@@ -12,11 +12,14 @@ import graft.functions.{ArrayDotLong, CharNgrams, Md5Min, MinHashBands, MinHashM
   * deployment enables them with
   * `--conf spark.sql.extensions=graft.GraftExtensions` (no code changes in
   * user ETLs). The same registration is available programmatically via
-  * `MinHashMd5.register(spark)` for an existing session.
+  * `MinHashMd5.register(spark)` for an existing session. It also
+  * injects [[graft.backend.ConstantSelectToLocalRelation]], which
+  * `SqlProcessor` adds to an existing session itself.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    ext.injectOptimizerRule(_ => graft.backend.ConstantSelectToLocalRelation)
     ext.injectFunction((
       FunctionIdentifier("minhash_md5"),
       new ExpressionInfo(classOf[MinHashMd5].getName, "minhash_md5"),

@@ -39,7 +39,12 @@ trait TableLike {
   def collectRows(): Seq[Seq[Any]]
 
   /** Print up to n rows for interactive logs. */
-  def show(n: Int): Unit
+  def show(n: Int): Unit = show(limit(n + 1).collectRows(), n)
+
+  /** Print `rows`, already collected from this table (up to n + 1 of
+    * them), as [[show]](n) prints the table: a caller that holds the
+    * rows does not run the query again. */
+  def show(rows: Seq[Seq[Any]], n: Int): Unit
 
   def count(): Long
 }

@@ -1,6 +1,6 @@
 package graft.backend
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, Row, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, lit}
 import org.apache.spark.sql.types.StructType
 
@@ -45,7 +45,11 @@ final class SparkTable(val df: DataFrame) extends TableLike {
   def collectRows(): Seq[Seq[Any]] =
     df.collect().toSeq.map(r =>
       r.schema.fieldNames.indices.map(i => if (r.isNullAt(i)) null else r.get(i)))
-  def show(n: Int): Unit = df.show(n)
+  /** Spark's own `show(n)` over a local frame of the rows: same table
+    * text and footer, and no second execution of this table's plan. */
+  def show(rows: Seq[Seq[Any]], n: Int): Unit =
+    df.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rows.map(Row.fromSeq): _*), df.schema).show(n)
   def count(): Long = df.count()
 }
 
@@ -53,6 +57,14 @@ final class SparkTable(val df: DataFrame) extends TableLike {
   * (reference easy_sql/sql_processor/backend/spark.py, ~350 LoC python).
   * All relational execution is `spark.sql`; laziness and optimization come
   * from Catalyst.
+  *
+  * Every view it registers (temp, cache and broadcast steps, and the
+  * output path's staging views) goes through [[createTempTable]], which
+  * runs Spark's temp-view command without a SQL execution of its own
+  * ([[org.apache.spark.sql.GraftColumnBridge.registerView]]). The SQL UI
+  * and query-execution listeners therefore no longer see one
+  * `CreateViewCommand` per temp step; a step's executions are the ones
+  * its SQL needs.
   */
 final class SparkBackend(val spark: SparkSession) extends Backend {
 
@@ -79,16 +91,17 @@ final class SparkBackend(val spark: SparkSession) extends Backend {
   def broadcastTable(table: TableLike, name: String): Unit =
     broadcastTable(dfOf(table), name)
 
+  /** `df.createOrReplaceTempView(name)` without a SQL execution. */
   def createTempTable(df: DataFrame, name: String): Unit =
-    df.createOrReplaceTempView(name)
+    GraftColumnBridge.registerView(df, name)
 
   def createCacheTable(df: DataFrame, name: String): Unit = {
-    df.createOrReplaceTempView(name)
+    createTempTable(df, name)
     spark.catalog.cacheTable(name)
   }
 
   def broadcastTable(df: DataFrame, name: String): Unit =
-    broadcast(df).createOrReplaceTempView(name)
+    createTempTable(broadcast(df), name)
 
   def tempTables(): Seq[String] =
     spark.catalog.listTables("default").collect()
@@ -147,7 +160,7 @@ final class SparkBackend(val spark: SparkSession) extends Backend {
       }
     }
     val tempView = s"${dbName}__${tableName}__table_data"
-    df.createOrReplaceTempView(tempView)
+    createTempTable(df, tempView)
     val partitionExpr =
       if (partitions.nonEmpty)
         s"partitioned by (${partitions.map(_.field).mkString(",")}) "
@@ -238,7 +251,7 @@ final class SparkBackend(val spark: SparkSession) extends Backend {
     def saveData(df: DataFrame): Unit = {
       val tempResName =
         s"${sourceTableMeta.pureTableName}__result__${System.identityHashCode(df)}"
-      df.createOrReplaceTempView(tempResName)
+      createTempTable(df, tempResName)
       val verb =
         if (saveMode == SaveMode.Append) "into" else "overwrite"
       execNativeSql(
@@ -284,5 +297,5 @@ final class SparkBackend(val spark: SparkSession) extends Backend {
   }
 
   def createTempTableWithData(name: String, df: DataFrame): Unit =
-    df.createOrReplaceTempView(name)
+    createTempTable(df, name)
 }

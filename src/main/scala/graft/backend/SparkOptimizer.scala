@@ -1,6 +1,12 @@
 package graft.backend
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Alias, NamedExpression}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, OneRowRelation, Project}
+import org.apache.spark.sql.catalyst.rules.Rule
 
 /** Session tuning — the Scala twin of the reference's
   * easy_sql/spark_optimizer.py (get_spark :30-58, SparkDynamicConfig
@@ -68,5 +74,43 @@ final class SparkDynamicConfig(
   def useAdaptiveShufflePartitions(spark: SparkSession): SparkDynamicConfig = {
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     this
+  }
+}
+
+/** A constant select — `select 2 as m_0, 'X' as seg_0`, a `variables`
+  * step's usual shape — plans as a Project over `OneRowRelation`, and
+  * collecting it runs a Spark job (plus a whole-stage class compiled
+  * for each distinct literal set). When every projected expression is
+  * foldable, this rule evaluates the one row while planning and replaces
+  * the Project with a `LocalRelation` of the same output, which Spark
+  * plans as a `LocalTableScan` and collects without a job. The values
+  * still leave through Spark's deserializer, so their types do not
+  * change. Nondeterministic expressions (`rand()`) are not foldable and
+  * keep their plan; so does a row whose evaluation throws, so the error
+  * surfaces from execution as before.
+  *
+  * Clusters install it with `spark.sql.extensions=graft.GraftExtensions`;
+  * [[graft.etl.SqlProcessor]] adds it to its session through
+  * [[register]]. */
+object ConstantSelectToLocalRelation extends Rule[LogicalPlan] {
+
+  def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
+    case p @ Project(list, OneRowRelation()) if list.forall(foldable) =>
+      try LocalRelation(p.output, Seq(InternalRow.fromSeq(list.map(_.eval()))))
+      catch { case NonFatal(_) => p }
+  }
+
+  // an Alias reports foldable = false whatever its child is
+  private def foldable(e: NamedExpression): Boolean = e match {
+    case a: Alias => a.child.foldable
+    case other => other.foldable
+  }
+
+  /** Add the rule to `spark`'s optimizer once; repeated calls (one per
+    * `SqlProcessor`) leave it there once. */
+  def register(spark: SparkSession): Unit = synchronized {
+    val em = spark.experimental
+    if (!em.extraOptimizations.contains(this))
+      em.extraOptimizations = em.extraOptimizations :+ this
   }
 }

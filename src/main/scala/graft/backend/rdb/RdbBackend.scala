@@ -49,9 +49,9 @@ final class RdbTable(backend: RdbBackend, val sql: String) extends TableLike {
   def collectRows(): Seq[Seq[Any]] =
     if (sql.isEmpty) Nil else backend.queryRows(sql, RdbBackend.MaxCollectRows)
 
-  def show(n: Int): Unit = {
+  def show(rows: Seq[Seq[Any]], n: Int): Unit = {
     println(fieldNames.mkString("\t"))
-    limit(n).collectRows().foreach(r =>
+    rows.take(n).foreach(r =>
       println(r.map(v => if (v == null) "null" else v.toString).mkString("\t")))
   }
 

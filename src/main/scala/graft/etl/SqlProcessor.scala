@@ -138,13 +138,15 @@ final class SqlProcessor(
       funcRunner.registerFuncs(
         graft.functions.SparkFuncs.all(sb, varsContext))
       graft.functions.Udfs.registerAll(sb.spark)
-      // native Catalyst expressions available to every ETL's SQL (the
-      // cluster path registers them via GraftExtensions instead)
+      // native Catalyst expressions and the constant-select rule for
+      // every ETL's SQL (the cluster path registers them via
+      // GraftExtensions instead)
       graft.functions.MinHashMd5.register(sb.spark)
       graft.functions.MinHashBands.register(sb.spark)
       graft.functions.ArrayDotLong.register(sb.spark)
       graft.functions.QuantizeLong.register(sb.spark)
       graft.functions.NgramShingles.register(sb.spark)
+      graft.backend.ConstantSelectToLocalRelation.register(sb.spark)
     case rb: graft.backend.rdb.RdbBackend =>
       funcRunner.registerFuncs(graft.functions.RdbFuncs.all(rb, varsContext))
       rb.initUdfs() // warehouse-side UDF surface (reference rdb.py:508)
@@ -334,7 +336,8 @@ final class SqlProcessor(
 
   private def writeForLogStep(step: Step, df: TableLike): Unit = {
     val name = step.targetConfig.get.name.getOrElse("log")
-    val rows = df.limit(20).collectRows()
+    // one execution: the 21st row only tells show there are more
+    val rows = df.limit(21).collectRows()
     if (rows.isEmpty) {
       reporter.collect(step, message = Some("no data to show"))
     } else if (rows.length == 1) {
@@ -342,9 +345,9 @@ final class SqlProcessor(
       println(s"log for [$name]: ${rowStr(rows(0))}")
     } else {
       println(s"log for [$name]:")
-      df.show(20)
+      df.show(rows, 20)
       reporter.collect(step,
-        message = Some(rows.map(rowStr).mkString("\n")))
+        message = Some(rows.take(20).map(rowStr).mkString("\n")))
     }
   }
 

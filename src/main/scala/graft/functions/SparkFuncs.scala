@@ -140,15 +140,15 @@ object SparkFuncs {
     Map(
       // parallelism (funcs_spark.py:38-61)
       "repartition" -> (ps =>
-        view(s(ps.head)).repartition(s(ps(1)).toInt)
-          .createOrReplaceTempView(s(ps.head))),
+        backend.createTempTable(
+          view(s(ps.head)).repartition(s(ps(1)).toInt), s(ps.head))),
       "repartition_by_column" -> (ps =>
-        view(s(ps.head))
-          .repartition(org.apache.spark.sql.functions.col(s(ps(1))))
-          .createOrReplaceTempView(s(ps.head))),
+        backend.createTempTable(view(s(ps.head))
+          .repartition(org.apache.spark.sql.functions.col(s(ps(1)))),
+          s(ps.head))),
       "coalesce" -> (ps =>
-        view(s(ps.head)).coalesce(s(ps(1)).toInt)
-          .createOrReplaceTempView(s(ps.head))),
+        backend.createTempTable(
+          view(s(ps.head)).coalesce(s(ps(1)).toInt), s(ps.head))),
       "set_shuffle_partitions" -> (ps => {
         spark.conf.set("spark.sql.adaptive.enabled", "false")
         spark.conf.set("spark.sql.shuffle.partitions", s(ps.head))
@@ -318,9 +318,8 @@ object SparkFuncs {
           else acc
         }
         val refCols = refColsStr.split(";").map(_.trim).filter(_.nonEmpty)
-        model.transform(df)
-          .selectExpr(refCols ++ Seq(idCol, "prediction"): _*)
-          .createOrReplaceTempView(table)
+        backend.createTempTable(model.transform(df)
+          .selectExpr(refCols ++ Seq(idCol, "prediction"): _*), table)
       }),
 
       // analytics (funcs_common.py:340-453): sampled per-column report

@@ -2187,11 +2187,15 @@ object WriteOps {
       var reclaimed = 0
       val vs = versions(root)
       val (expired, kept) = vs.splitAt(math.max(vs.length - retain, 0))
+      // every version's top manifest is read once, and every retained
+      // partition manifest once however many versions share it
+      val tops = vs.map(v => v -> top(root, v)).toMap
       // carry-over shares m-file pointers, so "referenced by a retained
       // version" is a POINTER-set membership test; the file-level keep
       // set is belt-and-suspenders for the same reason
-      val keptPtrs = kept.flatMap(pointers(root, _).values).toSet
-      val keepFiles = kept.flatMap(files(root, _)).toSet
+      val keptPtrs = kept.flatMap(tops(_).pointers.values).toSet
+      val keepFiles =
+        readPartManifests(keptPtrs.toSeq).flatten.map(_.path).toSet
       // deletion-vector sidecars reference-count exactly like m-files:
       // carried dv lines share the path, so an expired version's
       // sidecar dies only when no retained version still points at it.
@@ -2205,8 +2209,8 @@ object WriteOps {
       // lines record the caller's root form — qualify both sides
       def qual(p: String): String =
         dvFs.makeQualified(new HPath(p)).toString
-      val keptDvs = kept.flatMap(dvOf(root, _).map(_._1)).map(qual).toSet
-      val refDvs = vs.flatMap(dvOf(root, _).map(_._1)).map(qual).toSet
+      val keptDvs = kept.flatMap(tops(_).dv.map(_._1)).map(qual).toSet
+      val refDvs = vs.flatMap(tops(_).dv.map(_._1)).map(qual).toSet
       if (dvFs.exists(dvDir))
         dvFs.listStatus(dvDir).toSeq.foreach { st =>
           val p = st.getPath.toString
@@ -2228,7 +2232,7 @@ object WriteOps {
       // reference the same m-file — each dies exactly once). Cross-root
       // pointers (clone → source) are NOT ours to reclaim: skip them.
       val deadPtrs =
-        (expired.flatMap(pointers(root, _).values).toSet -- keptPtrs)
+        (expired.flatMap(tops(_).pointers.values).toSet -- keptPtrs)
           .filter(underRoot(root, _))
       deadPtrs.foreach { m =>
         readPartManifest(m).map(_.path).filterNot(keepFiles.contains)

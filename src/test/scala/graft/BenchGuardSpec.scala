@@ -44,4 +44,26 @@ class BenchGuardSpec extends AnyFunSuite {
     val m = Bench.baselineFor(sf01Line, "/root/testdata/sf0.1")
     assert(m("q1_agg") === 0.5) // not the 9.9 cold time
   }
+
+  test("a baseline recorded at other cpus is refused; one without cpus " +
+      "is judged by sf alone") {
+    val at32 = sf01Line.stripSuffix("}") + ""","cpus":32}"""
+    val want = Map("q1_agg" -> 0.5, "q2_join" -> 0.25)
+    assert(Bench.parseCpus(at32) === Some(32))
+    assert(Bench.baselineFor(at32, "/data/sf0.1", Some(32)) === want)
+    assert(Bench.baselineFor(at32, "/data/sf0.1", Some(4)) ===
+      Map.empty)
+    assert(Bench.cpusDiffer(at32, Some(4)))
+    // the sf guard still applies at matching cpus
+    assert(Bench.baselineFor(at32, "/data/sf0.01", Some(32)) ===
+      Map.empty)
+    assert(Bench.baselineFor(sf01Line, "/data/sf0.1", Some(4)) ===
+      want)
+    assert(!Bench.cpusDiffer(sf01Line, Some(4)))
+    // the committed baseline is the 32-core run and says so
+    val committed = java.nio.file.Files.readString(
+      java.nio.file.Paths.get("bench/BENCH_FULL.json"))
+    assert(Bench.parseCpus(committed) === Some(32))
+    assert(Bench.parseSf(committed).map(Bench.sfName) === Some("sf0.1"))
+  }
 }

@@ -17,6 +17,19 @@ class GraftExtensionsSpec extends AnyFunSuite {
     new GraftExtensions().apply(ext)
   }
 
+  test("extensions inject the constant-select rule; the session-level " +
+      "registration adds it once") {
+    val spark = graft.etl.TestSpark.spark
+    val ext = new SparkSessionExtensions
+    new GraftExtensions().apply(ext)
+    assert(org.apache.spark.sql.SparkTestBridge.optimizerRules(ext, spark)
+      .contains(graft.backend.ConstantSelectToLocalRelation))
+    graft.backend.ConstantSelectToLocalRelation.register(spark)
+    graft.backend.ConstantSelectToLocalRelation.register(spark)
+    assert(spark.experimental.extraOptimizations
+      .count(_ == graft.backend.ConstantSelectToLocalRelation) === 1)
+  }
+
   test("all native expressions resolve as SQL functions when registered") {
     val spark = graft.etl.TestSpark.spark
     graft.functions.MinHashMd5.register(spark)

@@ -86,4 +86,47 @@ class VacuumScopeSpec extends AnyFunSuite {
     assert(T.read(spark, root, 1).collect().map(_.getLong(0)).toSet ===
       Set(2L))
   }
+
+  test("vacuum opens each top manifest and each partition manifest once") {
+    val root = Files.createTempDirectory("g_vscope_opens").toString
+    // year 2's partition manifest is shared by every version
+    T.commit(spark, root, 0, frame((1L, 1, 10.0), (2L, 2, 20.0)), Seq(1, 2))
+    (1 to 4).foreach(v =>
+      T.commit(spark, root, v, frame((1L, 1, 10.0 + v)), Seq(1)))
+    val kept = (2 to 4).flatMap(T.pointers(root, _).values).toSet
+    val dead = (0 to 1).flatMap(T.pointers(root, _).values).toSet -- kept
+    val tops = (0 to 4).map(v => s"$root/_manifests/v$v.txt")
+    def local(p: String) = new org.apache.hadoop.fs.Path(p).toUri.getPath
+    val want = (tops ++ kept ++ dead).map(local).sorted
+    assert(kept.size === 4 && dead.size === 2)
+    val conf = spark.sparkContext.hadoopConfiguration
+    OpenCountingFs.opened.clear()
+    conf.set("fs.file.impl", classOf[OpenCountingFs].getName)
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+    try T.vacuum(root, retain = 3)
+    finally {
+      conf.unset("fs.file.impl")
+      conf.unset("fs.file.impl.disable.cache")
+    }
+    val opened = OpenCountingFs.opened.toArray(Array.empty[String])
+      .toSeq.map(local).sorted
+    assert(opened === want)
+    assert(T.versions(root) === Seq(2, 3, 4))
+    assert(T.read(spark, root, 4).collect()
+      .map(r => r.getLong(0) -> r.getDouble(2)).toSet ===
+      Set(1L -> 14.0, 2L -> 20.0))
+  }
+}
+
+/** The local filesystem, recording every path it opens. */
+class OpenCountingFs extends org.apache.hadoop.fs.LocalFileSystem {
+  override def open(f: org.apache.hadoop.fs.Path,
+      bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    OpenCountingFs.opened.add(f.toString)
+    super.open(f, bufferSize)
+  }
+}
+
+object OpenCountingFs {
+  val opened = new java.util.concurrent.ConcurrentLinkedQueue[String]
 }
