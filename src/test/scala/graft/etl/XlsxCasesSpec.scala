@@ -1,16 +1,30 @@
 package graft.etl
 
+import java.nio.file.{Files, Paths}
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The reference's NATIVE xlsx fixture format, read directly from the
   * reference's own test workbooks — a reference user's spreadsheets
-  * run unmodified.
+  * run unmodified. These workbooks belong to the reference project and
+  * are not part of this repository: each case needs them under
+  * `/root/reference/test` and cancels, naming the missing file, where
+  * they are absent.
   */
 class XlsxCasesSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
 
+  /** Cancels the calling test unless each named reference file is present. */
+  private def assumeReference(names: String*): Unit = names.foreach { n =>
+    val p = Paths.get("/root/reference/test", n)
+    assume(Files.isRegularFile(p), s"$p is absent")
+  }
+
+  private val sampleWorkbook = Seq("sample_etl.spark.xlsx", "sample_etl.spark.sql")
+
   test("sample_etl.spark.xlsx parses to the documented case shape") {
+    assumeReference(sampleWorkbook: _*)
     val cases = XlsxCases.parseFile(
       "/root/reference/test/sample_etl.spark.xlsx")
     assert(cases.length == 1)
@@ -28,6 +42,7 @@ class XlsxCasesSpec extends AnyFunSuite {
   }
 
   test("sample_etl.spark.xlsx runs end-to-end and passes") {
+    assumeReference(sampleWorkbook: _*)
     spark.sql("create database if not exists sample")
     spark.sql("drop table if exists sample.test")
     val results = GoldenDataTester.runCasesFromFile(spark,
@@ -38,6 +53,7 @@ class XlsxCasesSpec extends AnyFunSuite {
   }
 
   test("etl_test.xlsx template: suits, serial dates, includes, typed cols") {
+    assumeReference("etl_test.xlsx")
     val cases = XlsxCases.parseFile("/root/reference/test/etl_test.xlsx",
       sqlOverride = Some("-- unused"))
     // two suit sheets x two cases each
