@@ -174,7 +174,7 @@ object GoldenDataTester {
         // a prior case in this session may have cached the old file
         // listing for the same table name
         spark.catalog.refreshTable(f.name)
-      } else df.createOrReplaceTempView(f.name)
+      } else backend.createTempTableWithData(f.name, df)
     }
 
     val viewsBefore = spark.catalog.listTables("default").collect()

@@ -239,12 +239,13 @@ object WriteOps {
     * parquet, completing the write family's missing pillar: TIME TRAVEL.
     *
     *  - Data files are IMMUTABLE, written once under `root/data/`; a
-    *    file's partition is encoded in its name (`v{v}_y{year}_p{i}`).
+    *    file's partition is encoded in its name
+    *    (`v{v}_y{year}_p{task}_{token}`).
     *  - Metadata is a TWO-LEVEL MANIFEST TREE (r12 — the structure
     *    Iceberg's manifest lists formalize): one immutable PARTITION
-    *    manifest (`m_v{v}_y{year}.txt`, one `path\tbytes` line per data
-    *    file) per touched partition per commit, and one atomically-
-    *    renamed TOP manifest per version (`v{N}.txt`, one
+    *    manifest (`m_v{v}_y{year}_{token}.txt`, one `path\tbytes`
+    *    line per data file) per touched partition per commit, and one
+    *    atomically-renamed TOP manifest per version (`v{N}.txt`, one
     *    `y{year}\tm-file` POINTER line per live partition). Carry-over
     *    copies the parent's pointers verbatim — an untouched
     *    partition's metadata is never re-read, let alone rewritten.
@@ -308,23 +309,21 @@ object WriteOps {
     // serializes every exists+rename pair within this JVM: the local
     // filesystem's rename silently replaces, so without this two racing
     // writers can BOTH pass the exists check and the loser's rename
-    // clobbers the winner's just-committed bytes (observed as a
-    // ChecksumException when the winner reads its file back for footer
-    // stats). The critical section is two metadata calls — microseconds
-    // — and HDFS (whose rename refuses inside the NameNode) doesn't
-    // need it but isn't hurt by it.
+    // clobbers the winner's just-committed manifest. The critical
+    // section is two metadata calls — microseconds — and HDFS (whose
+    // rename refuses inside the NameNode) doesn't need it but isn't
+    // hurt by it.
     private val renameLock = new Object
 
-    // Shared driver-side metadata-I/O pool (partition-manifest reads,
-    // footer-stats collection, staged-file renames): these are
-    // independent KB-scale FS round-trips, so they overlap here instead
-    // of serializing on the read/commit critical path (guide §2.2 —
-    // fatter use of latency-bound I/O). ONE lazy daemon pool per JVM:
-    // the former per-call Executors.newFixedThreadPool paid up-to-32
-    // thread creations on EVERY commit. Callers go through [[ioMap]],
-    // which Awaits with a BOUND — a hung filesystem fails the
-    // operation with a diagnostic instead of wedging the commit
-    // forever (the r17 pools awaited Duration.Inf).
+    // Shared driver-side metadata-I/O pool (partition-manifest reads):
+    // these are independent KB-scale FS round-trips, so they overlap
+    // here instead of serializing on the read/commit critical path
+    // (guide §2.2 — fatter use of latency-bound I/O). ONE lazy daemon
+    // pool per JVM: the former per-call Executors.newFixedThreadPool
+    // paid up-to-32 thread creations on EVERY commit. Callers go
+    // through [[ioMap]], which Awaits with a BOUND — a hung filesystem
+    // fails the operation with a diagnostic instead of wedging the
+    // commit forever (the r17 pools awaited Duration.Inf).
     private lazy val ioPool: scala.concurrent.ExecutionContextExecutorService = {
       val tf = new java.util.concurrent.ThreadFactory {
         private val n = new java.util.concurrent.atomic.AtomicInteger()
@@ -339,7 +338,7 @@ object WriteOps {
     }
 
     /** Bound on any pooled metadata-I/O batch. Generous — a batch is
-      * hundreds of KB-scale reads/renames — so hitting it means the
+      * hundreds of KB-scale reads — so hitting it means the
       * filesystem is hung, and failing the operation loudly beats an
       * unbounded wedge. */
     private val ioTimeout = scala.concurrent.duration.Duration(10,
@@ -358,9 +357,11 @@ object WriteOps {
 
     // ------------------------------------------------------------------
     // ATOMIC-PUBLISH SUBSTRATE (Delta's LogStore split, ENFORCED as a
-    // seam rather than documented as a caveat): every publish — manifest
-    // rename, data-file move, branch ref — routes through the substrate
-    // selected by the root filesystem's URI scheme.
+    // seam rather than documented as a caveat): every publish — top
+    // and partition manifests, branch refs — routes through the
+    // substrate selected by the root filesystem's URI scheme. Data
+    // files need no publish: each is written once at a commit-unique
+    // name and becomes visible only when a manifest references it.
     //  - RENAME substrate (hdfs/file/viewfs): rename-no-replace, atomic
     //    on HDFS (the NameNode refuses an existing destination inside
     //    the rename); on the local FS a JVM-wide lock makes the
@@ -385,37 +386,9 @@ object WriteOps {
         * (the commit-race loser's signal; `src` is left for the caller
         * to clean). */
       def publishNoReplace(fs: FileSystem, src: HPath, dst: HPath): Unit
-
-      /** [[publishNoReplace]] for destinations the CALLER guarantees
-        * are unique to one commit (token-named data files): identical
-        * arbitration against external writers, but safe to run from
-        * many threads at once — the JVM-wide lock only serializes
-        * same-JVM races to ONE destination, which unique names rule
-        * out by construction, so a 100k-file commit finalization can
-        * overlap its FS round-trips instead of serializing them. */
-      def publishNoReplaceUnique(fs: FileSystem, src: HPath,
-          dst: HPath): Unit = publishNoReplace(fs, src, dst)
     }
 
     private[graft] object RenameSubstrate extends CommitSubstrate {
-      override def publishNoReplaceUnique(fs: FileSystem, src: HPath,
-          dst: HPath): Unit = {
-        // lock-free twin of publishNoReplace: the exists()+rename()
-        // check-then-act needs the JVM lock only when two threads can
-        // target the SAME dst (local-FS renameTo overwrites silently);
-        // commit-unique names make that impossible, and the HDFS-side
-        // arbitration (NameNode fails the rename, re-check translates)
-        // is per-call and needs no lock
-        if (fs.exists(dst))
-          throw new java.nio.file.FileAlreadyExistsException(dst.toString)
-        if (!fs.rename(src, dst)) {
-          if (fs.exists(dst))
-            throw new java.nio.file.FileAlreadyExistsException(
-              dst.toString)
-          throw new java.io.IOException(s"rename $src -> $dst failed")
-        }
-      }
-
       def publishNoReplace(fs: FileSystem, src: HPath,
           dst: HPath): Unit = renameLock.synchronized {
         if (fs.exists(dst))
@@ -682,8 +655,8 @@ object WriteOps {
       * skipping metadata, carried with the file through every
       * carry-over, optimize, branch publish, and vacuum.
       *
-      * `rows`: the file's exact row count, recorded at commit from the
-      * same footer read that collects column stats (−1 on entries
+      * `rows`: the file's exact row count, counted by the task that
+      * wrote the file, like its column stats (−1 on entries
       * written before r15 — consumers must treat unknown as
       * unpushable). Carried verbatim through every carry-over, like
       * bytes and stats.
@@ -702,8 +675,8 @@ object WriteOps {
     private[graft] case class FileEntry(path: String, bytes: Long,
         stats: String = "", rows: Long = -1L, born: Long = -1L)
 
-    /** Row-group byte bound for EVERY snapshot data-file write (the
-      * staged commit path and the executor-side group writers alike).
+    /** Row-group byte bound for EVERY snapshot data-file write
+      * ([[graft.sources.SnapshotWriteJob]]).
       * Parquet's 128 MB default would leave a compacted file as ONE
       * row group — unsplittable, so a whole partition would scan on
       * one core no matter how the read plans; 16 MB groups make the
@@ -725,8 +698,7 @@ object WriteOps {
       * driver-SERIAL per-partition reads (the r17 shape) put
       * O(partitions) sequential small-file round-trips in front of
       * every scan plan; a 100k-partition table pays them on EVERY
-      * read. The pool collapses that to O(partitions / 32) latency,
-      * the same treatment collectStats got. */
+      * read. The pool collapses that to O(partitions / 32) latency. */
     private def readPartManifests(ms: Seq[String]): Seq[Seq[FileEntry]] =
       ioMap(ms)(readPartManifest)
 
@@ -740,7 +712,7 @@ object WriteOps {
     }
 
     /** A version's manifest entries: (data file path, byte size). Sizes
-      * are recorded AT COMMIT (free from the stage listing) and carried
+      * are recorded AT COMMIT (by the task that wrote the file) and carried
       * verbatim thereafter, so maintenance planning (optimize) reads no
       * filesystem metadata at all — the manifests are the only source. */
     def entries(root: String, v: Int): Seq[(String, Long)] =
@@ -801,9 +773,10 @@ object WriteOps {
 
     // ------------------------------------------------------------------
     // FILE-LEVEL COLUMN STATISTICS + DATA SKIPPING (the Delta/Iceberg
-    // skipping path): at commit, each fresh data file's per-column
-    // min/max is read from its PARQUET FOOTER (KB of metadata, no row
-    // reads) and recorded on its manifest line. A filtered read then
+    // skipping path): the task writing a data file takes its
+    // per-column min/max from the rows as they pass
+    // ([[graft.sources.SnapshotDataWriter]]), and the commit records
+    // them on the file's manifest line. A filtered read then
     // prunes the version's file list in MANIFEST metadata — before any
     // footer, let alone any row, is opened — keeping only files whose
     // [min,max] can intersect the predicate. Files without stats for
@@ -818,10 +791,9 @@ object WriteOps {
       * as Long), 'D' double/float (ordered as Double), 'S' string
       * (ordered as unsigned UTF-8 bytes — parquet's UTF8 order). Values
       * are Base64 so the blob stays tab/semicolon-free. `nulls`: the
-      * file's exact NULL count for the column (r16, from the same
-      * footer read; −1 on pre-r16 blobs or when any row group left
-      * null counts unset) — what `IS NULL` file pruning and
-      * `COUNT(col)` pushdown consume. */
+      * file's exact NULL count for the column (−1 on blobs written
+      * before null counts were recorded) — what `IS NULL` file pruning
+      * and `COUNT(col)` pushdown consume. */
     private[graft] case class ColStat(typ: Char, min: String,
         max: String, nulls: Long = -1L)
 
@@ -835,7 +807,7 @@ object WriteOps {
     // optional 5th field degrades to unknown on both sides (old
     // blobs parse without it, old parsers would have ignored it had
     // they existed; only this engine reads these blobs)
-    private def encodeStats(m: Map[String, ColStat]): String =
+    private[graft] def encodeStats(m: Map[String, ColStat]): String =
       m.toSeq.sortBy(_._1).map { case (c, st) =>
         val base = s"${b64e(c)}:${st.typ}:${b64e(st.min)}:${b64e(st.max)}"
         if (st.nulls >= 0) s"$base:${st.nulls}" else base
@@ -853,7 +825,7 @@ object WriteOps {
       * dataSkippingNumIndexedCols discipline). Unsupported types
       * (decimals, nested, binary) simply collect no stats — their
       * predicates scan everything, correctly. */
-    private def statColsOf(
+    private[graft] def statColsOf(
         schema: org.apache.spark.sql.types.StructType): Map[String, Char] = {
       import org.apache.spark.sql.types._
       schema.fields.iterator.flatMap { f =>
@@ -865,156 +837,6 @@ object WriteOps {
           case _ => None
         }
       }.take(32).toMap
-    }
-
-    /** Read ONE file's per-column min/max from its parquet footer —
-      * metadata only (the footer is KBs regardless of file size).
-      * Row-group stats merge per column; a column whose stats are
-      * missing/empty in ANY row group is dropped for the file
-      * (conservative — the file is then never skipped on it). NaN
-      * bounds on float/double are dropped too (parquet NaN-ordering
-      * hazard). */
-    private def footerStats(path: String,
-        conf: org.apache.hadoop.conf.Configuration,
-        cols: Map[String, Char]): (Map[String, ColStat], Long) = {
-      import org.apache.parquet.hadoop.ParquetFileReader
-      import org.apache.parquet.hadoop.util.HadoopInputFile
-      import scala.jdk.CollectionConverters._
-      val rd = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new HPath(path), conf))
-      try {
-        val blocks = rd.getFooter.getBlocks.asScala
-        val rowCount = blocks.map(_.getRowCount).sum
-        // col -> (typ, running min repr, running max repr, stillValid)
-        val acc = scala.collection.mutable.Map[String, ColStat]()
-        val dead = scala.collection.mutable.Set[String]()
-        // exact per-column null counts (r16): valid only when EVERY
-        // row group set them; unknown degrades to −1 (never wrong)
-        val nullsAcc = scala.collection.mutable.Map[String, Long]()
-        val nullsDead = scala.collection.mutable.Set[String]()
-        def utf8lt(a: String, b: String): Boolean = {
-          val x = a.getBytes(UTF_8); val y = b.getBytes(UTF_8)
-          val n = math.min(x.length, y.length)
-          var i = 0
-          while (i < n) {
-            val c = (x(i) & 0xff) - (y(i) & 0xff)
-            if (c != 0) return c < 0
-            i += 1
-          }
-          x.length < y.length
-        }
-        blocks.foreach { blk =>
-          blk.getColumns.asScala.foreach { cc =>
-            val name = cc.getPath.toDotString
-            cols.get(name).foreach { typ =>
-              val st = cc.getStatistics
-              if (st != null && st.isNumNullsSet)
-                nullsAcc(name) = nullsAcc.getOrElse(name, 0L) +
-                  st.getNumNulls
-              else nullsDead += name
-              val ok = st != null && !st.isEmpty && st.hasNonNullValue
-              if (!ok) dead += name
-              else {
-                val (mn, mx) = typ match {
-                  case 'S' =>
-                    val b = st.asInstanceOf[
-                      org.apache.parquet.column.statistics.BinaryStatistics]
-                    (new String(b.genericGetMin.getBytes, UTF_8),
-                      new String(b.genericGetMax.getBytes, UTF_8))
-                  case _ =>
-                    // FLOAT bounds must record the float's EXACT double:
-                    // Float.toString("3.4") re-parsed as Double (3.4d)
-                    // understates the true value (3.4f == 3.400000095d),
-                    // so a pushed `f >= 3.4f` predicate would wrongly
-                    // prune the file holding its own boundary value
-                    def repr(v: Any): String = v match {
-                      case f: java.lang.Float => f.doubleValue().toString
-                      case o => o.toString
-                    }
-                    (repr(st.genericGetMin), repr(st.genericGetMax))
-                }
-                if (typ == 'D' &&
-                    (mn.toDouble.isNaN || mx.toDouble.isNaN)) dead += name
-                else acc.get(name) match {
-                  case None => acc(name) = ColStat(typ, mn, mx)
-                  case Some(p) =>
-                    val lt: (String, String) => Boolean = typ match {
-                      case 'L' => (a, b) => a.toLong < b.toLong
-                      case 'D' => (a, b) => a.toDouble < b.toDouble
-                      case _ => utf8lt
-                    }
-                    acc(name) = ColStat(typ,
-                      if (lt(mn, p.min)) mn else p.min,
-                      if (lt(p.max, mx)) mx else p.max)
-                }
-              }
-            }
-          }
-        }
-        val withNulls = (acc -- dead).map { case (c, cs) =>
-          c -> (if (nullsDead.contains(c)) cs
-                else cs.copy(nulls = nullsAcc.getOrElse(c, -1L)))
-        }
-        // columns with NO usable bounds (typically all-NULL in this
-        // file) but an exact null count get a BOUNDS-LESS entry
-        // (min = max = ""): range pruning ignores it, while
-        // COUNT(col) and IS NULL pruning stay answerable
-        val boundless = (dead -- nullsDead).flatMap { c =>
-          for { typ <- cols.get(c); n <- nullsAcc.get(c) }
-            yield c -> ColStat(typ, "", "", n)
-        }.toMap
-        ((withNulls ++ boundless).toMap, rowCount)
-      } finally rd.close()
-    }
-
-    /** Stats for a batch of freshly committed files. Driver-serial
-      * under 64 files (a footer read is ~ms and a Spark job launch
-      * costs more); beyond that the footer reads FAN OUT as one Spark
-      * job over the file list — at a 100 TB commit touching thousands
-      * of files, stats collection distributes like everything else
-      * and only (path → tiny stats blob) pairs return to the driver.
-      *
-      * Per fresh file: (encoded stats blob, exact row count) — one
-      * footer read serves both. An empty `cols` map still reads the
-      * footer for the row count (cheap, and what makes COUNT(*)
-      * pushdown total over every committed entry). */
-    private def collectStats(s: SparkSession, paths: Seq[String],
-        cols: Map[String, Char]): Map[String, (String, Long)] = {
-      if (paths.isEmpty) Map.empty
-      else if (paths.size <= 4) {
-        val conf = hconf()
-        paths.map { p =>
-          val (st, rows) = footerStats(p, conf, cols)
-          p -> (encodeStats(st), rows)
-        }.toMap
-      } else if (paths.size <= 512) {
-        // footer reads are independent KB-scale metadata I/O — the
-        // shared driver pool overlaps their latency without paying a
-        // Spark job launch (the former driver-SERIAL ≤64 branch put
-        // O(files) round-trips on the commit's critical path; the
-        // former >64 branch launched a file-per-task job, 224 tasks
-        // for 224 footers — r17 profile: 0.3-0.6 s per commit).
-        // `conf` is shared across pool threads READ-ONLY: footerStats
-        // never mutates it, and concurrent Configuration reads are
-        // safe (mutation concurrent with reads is what is not).
-        val conf = hconf()
-        ioMap(paths) { p =>
-          val (st, rows) = footerStats(p, conf, cols)
-          p -> (encodeStats(st), rows)
-        }.toMap
-      } else {
-        val sconf = new org.apache.spark.util.SerializableConfiguration(
-          s.sparkContext.hadoopConfiguration)
-        val bc = s.sparkContext.broadcast(sconf)
-        // ~8 footers per task: the work is per-file metadata I/O, so
-        // fewer, fatter tasks beat a task per file (guide §2.2)
-        s.sparkContext.parallelize(paths,
-            math.min(256, math.max(32, paths.size / 8)))
-          .map { p =>
-            val (st, rows) = footerStats(p, bc.value.value, cols)
-            p -> (encodeStats(st), rows)
-          }.collect().toMap
-      }
     }
 
     /** DATA SKIPPING: the files of version v that can contain rows with
@@ -1345,28 +1167,6 @@ object WriteOps {
         .getOrElse(Seq.empty)
         .filter(schema.fieldNames.contains)
 
-    /** Bloom columns of the table's current recorded schema (empty
-      * for plain snapshot roots or pre-creation writes). */
-    private[graft] def bloomColsAt(root: String): Seq[String] =
-      versions(root).maxOption.flatMap(tableSchema(root, _))
-        .map(bloomColsOf).getOrElse(Seq.empty)
-
-    /** The write-side hadoop conf for `root`: carries the bloom
-      * column list to executor writers (the key is read by
-      * [[graft.sources.SnapshotGroupWriter]]); a COPY, so the
-      * session's shared conf is never mutated. */
-    private[graft] def bloomWriteConf(root: String,
-        base: org.apache.hadoop.conf.Configuration)
-        : org.apache.hadoop.conf.Configuration = {
-      val cols = bloomColsAt(root)
-      if (cols.isEmpty) base
-      else {
-        val c = new org.apache.hadoop.conf.Configuration(base)
-        c.set("graft.snapshot.bloomColumns", cols.mkString(","))
-        c
-      }
-    }
-
     /** current name → older physical names, newest first. */
     private[graft] def colAliases(
         schema: org.apache.spark.sql.types.StructType)
@@ -1416,114 +1216,40 @@ object WriteOps {
       read(s, root, v)
         .filter(col("pt_year").isin(years.map(Integer.valueOf): _*))
 
-    /** Stage `slice`'s touched partitions and move the part files into
-      * `data/` under `namer(year, index)` names; returns, PER TOUCHED
-      * YEAR, its fresh entries (their `born` is stamped at publish).
-      * Sizes come from the SAME directory listing that finds the files
-      * — zero extra FS metadata calls. Destination paths are built from
-      * the caller's `root` string (not the listing), so manifests store
-      * root-relative forms verbatim. The files carry the bloom filters
-      * `parent`'s schema declares ([[BloomColsKey]]). */
-    private def stageDataFiles(s: SparkSession, root: String,
-        stageName: String, slice: DataFrame, touched: Seq[Int],
-        namer: (Int, Int) => String,
+    /** Write `slice`'s rows of the `touched` partitions as fresh data
+      * files named `<prefix>_y<year>_…` straight under `data/`
+      * ([[graft.sources.SnapshotWriteJob.write]]: one Spark job, stats
+      * from the writing tasks, no stage directory, no rename); returns,
+      * PER TOUCHED YEAR, its fresh entries (their `born` is stamped at
+      * publish). Paths are built from the caller's `root` string, so
+      * manifests store root-relative forms verbatim. The files carry
+      * the bloom filters `parent`'s schema declares ([[BloomColsKey]]). */
+    private def writeDataFiles(s: SparkSession, root: String,
+        prefix: String, slice: DataFrame, touched: Seq[Int],
         parent: Top,
-        distribute: Boolean = true): Seq[(Int, Seq[FileEntry])] = {
-      val dataDir = new HPath(root, "data")
-      val fs = fsFor(dataDir)
-      fs.mkdirs(dataDir)
-      fs.mkdirs(mdir(root))
-      val stage = new HPath(root, stageName)
-      val src = slice
-        .filter(col("pt_year").isin(touched.map(Integer.valueOf): _*))
-        .withColumn("__pt", col("pt_year"))
-      // WRITE DISTRIBUTION (Iceberg's write.distribution-mode=hash +
-      // AQE rebalance, guide §2.4/§6): cluster the staged rows by the
-      // partition column so each partition's files come from as few
-      // tasks as the data needs — without it the write inherits the
-      // slice's upstream partitioning, which at bench scale is either
-      // 1 task (single-split scan: the whole stage serializes on one
-      // core) or N tasks × P years = N·P near-empty files that every
-      // later read, stat pass and rename loop pays for. REBALANCE is
-      // scale-adaptive: AQE coalesces small partitions AND splits
-      // skewed ones against advisoryPartitionSizeInBytes, so a 100 TB
-      // partition still fans out. Callers that pre-shape their slice
-      // (optimize's byte-targeted range exchange) or deliberately
-      // fragment (the optimize-gate fixtures) pass distribute=false.
-      val shaped = if (distribute) src.hint("rebalance", col("__pt"))
-                   else src
-      val w0 = shaped
-        .write.mode(SaveMode.Overwrite).partitionBy("__pt")
-        // bounded row groups keep committed files SPLITTABLE — see
-        // rowGroupBytes; without this a one-file partition reads on
-        // one core forever after
-        .option("parquet.block.size",
-          rowGroupBytes(s.sparkContext.hadoopConfiguration).toString)
-      // declared bloom columns ride as parquet write options (Spark's
-      // parquet sink passes them to ParquetOutputFormat verbatim);
-      // adaptive sizing keeps the bloom proportional to the row
-      // group's observed distinct count instead of the 1 MB default
-      val blooms = parent.schema.map(bloomColsOf).getOrElse(Nil)
-        .filter(slice.columns.contains)
-      val w = blooms.foldLeft(
-          if (blooms.isEmpty) w0
-          else w0.option("parquet.bloom.filter.adaptive.enabled", "true"))(
-        (acc, c) => acc.option(s"parquet.bloom.filter.enabled#$c", "true"))
-      w.parquet(stage.toString)
-      val plan: Seq[(Int, Seq[(HPath, HPath, Long)])] = touched.map { y =>
-        val pDir = new HPath(stage, s"__pt=$y")
-        val parts =
-          if (!fs.exists(pDir)) Seq.empty
-          else fs.listStatus(pDir).toSeq
-            .filter(_.getPath.getName.endsWith(".parquet"))
-            .sortBy(_.getPath.getName)
-        y -> parts.zipWithIndex.map { case (st, i) =>
-          (st.getPath, new HPath(dataDir, namer(y, i)), st.getLen)
-        }
+        distribute: Boolean = true): Seq[(Int, Seq[FileEntry])] =
+      if (touched.isEmpty) Seq.empty
+      else {
+        val src = slice
+          .filter(col("pt_year").isin(touched.map(Integer.valueOf): _*))
+        // WRITE DISTRIBUTION (Iceberg's write.distribution-mode=hash +
+        // AQE rebalance, guide §2.4/§6): cluster the rows by the
+        // partition column so each partition's files come from as few
+        // tasks as the data needs — without it the write inherits the
+        // slice's upstream partitioning, which at bench scale is either
+        // 1 task (single-split scan: the whole write serializes on one
+        // core) or N tasks × P years = N·P near-empty files that every
+        // later read pays for. REBALANCE is scale-adaptive: AQE
+        // coalesces small partitions AND splits skewed ones against
+        // advisoryPartitionSizeInBytes, so a 100 TB partition still
+        // fans out. Callers that pre-shape their slice (optimize's
+        // byte-targeted range exchange) or deliberately fragment (the
+        // optimize-gate fixtures) pass distribute=false.
+        val shaped = if (distribute) src.hint("rebalance", col("pt_year"))
+                     else src
+        graft.sources.SnapshotWriteJob.write(s, root, prefix, shaped,
+          parent.schema.map(bloomColsOf).getOrElse(Nil))
       }
-      // rename-no-replace: if a racing writer already published a
-      // name, the move throws HERE — before the loser can overwrite a
-      // committed version's bytes. Above a small count the renames run
-      // on a thread pool: each targets a commit-unique generated name
-      // (publishNoReplaceUnique), so concurrency only overlaps the
-      // driver↔FS round-trip latency a 100k-file commit would
-      // otherwise pay serially; a failure leaves earlier winners as
-      // orphans awaiting vacuumOrphans, exactly like the serial loop.
-      val renames = plan.flatMap(_._2)
-      val substrate = substrateFor(fs.getUri.getScheme)
-      if (renames.size <= 16)
-        renames.foreach { case (src, dst, _) =>
-          substrate.publishNoReplaceUnique(fs, src, dst)
-        }
-      else
-        ioMap(renames) { case (src, dst, _) =>
-          substrate.publishNoReplaceUnique(fs, src, dst)
-        }
-      deleteTree(stage.toString)
-      freshEntries(s,
-        plan.flatMap { case (y, es) =>
-          es.map { case (_, dst, len) => (y, dst.toString, len) }
-        }, slice.schema)
-    }
-
-    /** Manifest entries for freshly written (pt_year, path, bytes)
-      * files, grouped by year: data-skipping stats and the exact row
-      * count come from each file's parquet FOOTER (metadata only — see
-      * [[collectStats]] for the driver/distributed cutover), so every
-      * future filtered read prunes without touching storage. `born` is
-      * left unknown; [[addsOf]] stamps it with the commit's ts. */
-    private[graft] def freshEntries(s: SparkSession,
-        files: Seq[(Int, String, Long)],
-        schema: org.apache.spark.sql.types.StructType)
-        : Seq[(Int, Seq[FileEntry])] = {
-      val stats = collectStats(s, files.map(_._2), statColsOf(schema))
-      files.groupBy(_._1).toSeq.sortBy(_._1).map { case (y, fs) =>
-        y -> fs.map { case (_, p, b) =>
-          val (blob, rows) = stats.getOrElse(p, ("", -1L))
-          FileEntry(p, b, blob, rows)
-        }.sortBy(_.path)
-      }
-    }
 
     // ------------------------------------------------------------------
     // THE COMMIT PROTOCOL. Every commit kind (commit, commitDelete,
@@ -1633,12 +1359,12 @@ object WriteOps {
     }
 
     /** Commit `slice` — ALL rows of the touched partitions — as
-      * version v. ONE partitioned Spark write covers every touched
-      * partition (a per-partition write loop would pay one job-launch
-      * per partition — 7× the scheduler overhead on a full-history
-      * commit for identical bytes); `__pt` duplicates the partition
-      * column so the data files keep `pt_year` while the directory
-      * layout routes them. Then the atomic manifest rename publishes.
+      * version v. ONE Spark write covers every touched partition (a
+      * per-partition write loop would pay one job-launch per partition
+      * — 7× the scheduler overhead on a full-history commit for
+      * identical bytes); each task routes its rows to one file per
+      * pt_year ([[writeDataFiles]]). Then the atomic manifest rename
+      * publishes.
       * A touched partition left with zero rows simply contributes no
       * files (reading it through any later version yields no rows —
       * the same observable state the empty file gave). Untouched
@@ -1676,8 +1402,7 @@ object WriteOps {
             "— a partial (file-granular) rewrite there would purge " +
             "them unsoundly; rewrite the full partition instead")
         }
-      val staged = stageDataFiles(s, root, s"stage_v${v}_${token()}",
-        slice, touched, (y, i) => f"v${v}_y${y}_p$i%05d.parquet", parent,
+      val staged = writeDataFiles(s, root, s"v$v", slice, touched, parent,
         distribute)
       val schema = schemaOverride.getOrElse {
         if (v == 0) org.apache.spark.sql.types.StructType(
@@ -1685,10 +1410,14 @@ object WriteOps {
         else evolve(parent, slice.schema)
       }
       val ts = drawTs(parent)
+      // token-named m-files, like the data files: racing writers of v
+      // never share a file below the top-manifest publish
+      val mtok = token()
       publish(root, parent.next(v, ts).copy(schema = Some(schema),
         txn = txn, dv = dvAfterRewrite(s, root, v, parent, touched),
         pointers = mergePointers(root, parent.pointers, touched.toSet,
-          addsOf(staged, ts, carriedFiles), y => s"m_v${v}_y$y.txt")))
+          addsOf(staged, ts, carriedFiles),
+          y => s"m_v${v}_y${y}_$mtok.txt")))
     }
 
     /** Deletion-vector carry/purge for a commit REWRITING `touched`
@@ -1784,7 +1513,7 @@ object WriteOps {
         .collect().map { r =>
           // same loud guard as the overwrite paths: a NULL key would
           // unbox to year 0 here and then be SILENTLY dropped by
-          // stageDataFiles' isin filter — quiet row loss, never ok
+          // writeDataFiles' isin filter — quiet row loss, never ok
           require(!r.isNullAt(0),
             "insert batch contains a NULL pt_year — the partition key " +
             "must be non-null (no __HIVE_DEFAULT_PARTITION__ " +
@@ -1794,12 +1523,9 @@ object WriteOps {
       require(touched.nonEmpty, "an empty append commits nothing")
       val parent = appendPreflight(root, v, touched, overTombstones)
       // token-uniquified names: two appenders RACING to the same v
-      // stage without file-level collisions — the manifest rename alone
+      // write without file-level collisions — the manifest rename alone
       // arbitrates, the loser rebases, its orphans await vacuumOrphans
-      val tok = token()
-      val staged = stageDataFiles(s, root, s"stage_v${v}_$tok",
-        batch, touched, (y, i) => f"v${v}_y${y}_a$i%05d_$tok.parquet",
-        parent)
+      val staged = writeDataFiles(s, root, s"v$v", batch, touched, parent)
       commitAppendEntries(root, v, parent, staged, batch.schema, txn)
     }
 
@@ -1842,7 +1568,7 @@ object WriteOps {
       * debt physically). Data pointers carry VERBATIM — untouched
       * files keep their mtimes (spec-pinned). */
     private[graft] def commitDelta(s: SparkSession, root: String,
-        v: Int, keyCol: String, files: Seq[(Int, String, Long)],
+        v: Int, keyCol: String, staged: Seq[(Int, Seq[FileEntry])],
         dvStaged: Seq[String],
         writeSchema: org.apache.spark.sql.types.StructType): Unit = {
       require(v > 0, "a row-level delta needs a parent version")
@@ -1851,7 +1577,7 @@ object WriteOps {
 
       // tombstones: the staged (key, pt_year) task files join the
       // parent's pending set. A staged dv file is created LAZILY on its
-      // first tombstone (SnapshotDeltaWriter.dvW), so a non-empty
+      // first tombstone (SnapshotDeltaWriter.delete), so a non-empty
       // `dvStaged` implies a non-empty tombstone set — no
       // emptiness-probe job; none staged, the parent's set carries.
       val dv =
@@ -1860,7 +1586,7 @@ object WriteOps {
           s.read.parquet(dvStaged: _*), ts, "row-level delta"))
 
       // fresh data files append (parent entries ++ fresh, born = ts)
-      val adds = addsOf(freshEntries(s, files, writeSchema), ts)
+      val adds = addsOf(staged, ts)
       if (dv.isEmpty && adds.isEmpty) return // matched nothing
       val mtok = token()
       publish(root, parent.next(v, ts).copy(
@@ -2418,13 +2144,11 @@ object WriteOps {
       * `name`, built on the current head. Data lands now; visibility
       * waits for [[publishBranch]].
       *
-      * Branch data files embed a PER-STAGING token
-      * (`b<name>-<token>_y<year>_p<i>` — still the `_y<N>_p` partition
-      * encoding carry-over/optimize/changedYears parse): after a
-      * publish, the published files stay referenced by version manifests
-      * under that token's names, so re-staging the SAME branch name
-      * writes fresh token names and can never rename over committed
-      * bytes. The branch ref is the next version's top manifest (its
+      * Branch data files and m-files embed a PER-STAGING token
+      * (`b<name>-<token>_y<year>_…`): after a publish, the published
+      * files stay referenced by version manifests under that token's
+      * names, so re-staging the SAME branch name writes fresh names and
+      * can never collide with committed files. The branch ref is the next version's top manifest (its
       * `#ts` is the `born` of the staged files) plus `#parent=<head>`
       * and `#fresh=<years>`, the years whose m-files this staging
       * wrote: [[abandonBranch]] deletes exactly those — never a
@@ -2433,8 +2157,8 @@ object WriteOps {
     def stageCommit(s: SparkSession, root: String, name: String,
         slice: DataFrame, touched: Seq[Int]): Unit = {
       require(name.matches("[a-z0-9-]+"),
-        s"branch name '$name' must be [a-z0-9-]+ (the _y<N>_p file-name " +
-        "partition encoding must stay unambiguous)")
+        s"branch name '$name' must be [a-z0-9-]+ (it is part of the " +
+        "branch's data-file and manifest names)")
       val bm = branchManifest(root, name)
       val bfs = fsFor(bm)
       require(!bfs.exists(bm),
@@ -2456,8 +2180,7 @@ object WriteOps {
           "a branch there")
       }
       val tok = token()
-      val staged = stageDataFiles(s, root, s"stage_b${name}_$tok",
-        slice, touched, (y, i) => f"b$name-${tok}_y${y}_p$i%05d.parquet",
+      val staged = writeDataFiles(s, root, s"b$name-$tok", slice, touched,
         parent)
       val ts = drawTs(parent)
       // fresh m-files are TOKEN-namespaced like the data files, so a
@@ -2697,7 +2420,7 @@ object WriteOps {
     * fragmented lineitem commit (v0), then OPTIMIZE ... ZORDER BY
     * (l_partkey, l_suppkey) publishes v1 — the maintenance pass that
     * turns a write-ordered mess into a two-dimensionally clustered
-    * layout whose footer stats (recorded by the same commit) make
+    * layout whose file stats (recorded by the same commit) make
     * conjunctive skipping multiplicative. */
   private def zorderSnapTable(s: SparkSession, d: String): String =
     zscanSetup.getOrElseUpdate(d, {
@@ -4234,7 +3957,7 @@ object WriteOps {
     // OPTIMIZE ZORDER × DATA SKIPPING — the full lakehouse maintenance
     // loop in one gate: a fragmented commit is z-order-compacted
     // (Morton interleave of l_partkey × l_suppkey), the rewrite's own
-    // footer stats land in v1's manifest, and a CONJUNCTIVE two-column
+    // file stats land in v1's manifest, and a CONJUNCTIVE two-column
     // range read (readWhere) prunes files that can't hold EITHER
     // predicate — the multiplicative skip a 2-D clustered layout buys
     // that 1-D sorting can't (DataSkippingSpec asserts the prune; the

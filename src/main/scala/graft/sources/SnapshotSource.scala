@@ -15,7 +15,6 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.util.SerializableConfiguration
 
 import graft.operators.WriteOps.SnapshotTable
 
@@ -745,10 +744,9 @@ private[sources] class SnapshotSourceTable(tableSchema: StructType,
         if (dynamic) new Write {
           override def toBatch: org.apache.spark.sql.connector.write
               .BatchWrite =
-            new SnapshotDynamicOverwrite(root, info.schema().json,
-              new SerializableConfiguration(
-                SnapshotTable.bloomWriteConf(root, SparkSession.active
-                  .sparkContext.hadoopConfiguration)))
+            new SnapshotDynamicOverwrite(root,
+              SnapshotWriteJob(SparkSession.active, root, info.schema(),
+                SnapshotTable.bloomColsOf(tableSchema)))
         } else new V1Write {
         /** The NATIVE STREAMING SINK (see [[SnapshotStreamingWrite]]):
           * every epoch lands as one txn-recorded append version,
@@ -759,11 +757,10 @@ private[sources] class SnapshotSourceTable(tableSchema: StructType,
             "graft-snapshot streams are append-only (a snapshot " +
             "table's history is append-only by construction) — " +
             "complete/update output modes are unsupported")
-          new SnapshotStreamingWrite(root, info.schema().json,
-            info.queryId(), new org.apache.spark.util
-              .SerializableConfiguration(
-                SnapshotTable.bloomWriteConf(root, SparkSession.active
-                  .sparkContext.hadoopConfiguration)),
+          new SnapshotStreamingWrite(root,
+            SnapshotWriteJob(SparkSession.active, root, info.schema(),
+              SnapshotTable.bloomColsOf(tableSchema)),
+            info.queryId(),
             Option(info.options.get("compactEvery")).map(_.toInt))
         }
 
@@ -793,7 +790,7 @@ private[sources] class SnapshotSourceTable(tableSchema: StructType,
                   "place NULL-keyed rows")
                 r.getInt(0)
               }.toSet
-            // A loser's already-staged files are unreferenced orphans
+            // A loser's already-written files are unreferenced orphans
             // — vacuumOrphans reclaims them on the maintenance pass.
             SnapshotSourceTable.commitRetrying(root) { v =>
               if (overwriteYears.isDefined) {
@@ -919,9 +916,9 @@ private[sources] object SnapshotSourceTable {
   *    matching-rows subquery first and narrows the rewrite to the
   *    partitions that actually HOLD matches — at 100 TB the
   *    difference between rewriting one partition and the table;
-  *  - the replacement write lands executor-side (the same parquet-mr
-  *    group writers as the streaming sink; only (year, path, bytes)
-  *    triples reach the driver) and the commit swaps exactly the
+  *  - the replacement write lands executor-side (the same
+  *    [[SnapshotDataWriter]]s as every snapshot write; only finished
+  *    manifest entries reach the driver) and the commit swaps exactly the
   *    scanned partitions' pointers ([[graft.operators.WriteOps
   *    .SnapshotTable.commitReplaceEntries]]); rows the command moves
   *    or inserts into UNSCANNED partitions append there. */
@@ -999,10 +996,8 @@ private[sources] class SnapshotRowLevelOperation(root: String,
         override def toBatch: org.apache.spark.sql.connector.write
             .BatchWrite =
           new SnapshotReplaceDataWrite(SnapshotRowLevelOperation.this,
-            root, info.schema().json,
-            new SerializableConfiguration(
-              SnapshotTable.bloomWriteConf(root, SparkSession.active
-                .sparkContext.hadoopConfiguration)))
+            root, SnapshotWriteJob(SparkSession.active, root,
+              info.schema(), SnapshotTable.bloomColsOf(tableSchema)))
       }
     }
 }
@@ -1097,32 +1092,24 @@ private[sources] class SnapshotGroupScan(root: String,
       Array.empty)
 }
 
-/** The replacement write: executor-side parquet-mr writers (one per
-  * pt_year a task sees), then ONE commit swapping the scanned
-  * partitions' pointers for the staged entries — rows written into
-  * partitions the scan didn't read (MERGE inserts, cross-partition
-  * UPDATE moves) append to their partitions instead. An empty
-  * operation (runtime filter found no matching groups) commits
-  * nothing. */
+/** The replacement write: executor-side [[SnapshotDataWriter]]s (one
+  * parquet file per pt_year a task sees, stats taken as rows pass),
+  * then ONE commit swapping the scanned partitions' pointers for the
+  * fresh entries — rows written into partitions the scan didn't read
+  * (MERGE inserts, cross-partition UPDATE moves) append to their
+  * partitions instead. An empty operation (runtime filter found no
+  * matching groups) commits nothing. */
 private[sources] class SnapshotReplaceDataWrite(
-    op: SnapshotRowLevelOperation, root: String, schemaJson: String,
-    conf: SerializableConfiguration)
+    op: SnapshotRowLevelOperation, root: String, job: SnapshotWriteJob)
     extends org.apache.spark.sql.connector.write.BatchWrite {
   import org.apache.spark.sql.connector.write.{DataWriterFactory, PhysicalWriteInfo, WriterCommitMessage}
 
-  private def schema =
-    DataType.fromJson(schemaJson).asInstanceOf[StructType]
-
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory =
-    new SnapshotBatchWriterFactory(root, schemaJson, conf)
-
-  private def filesOf(messages: Array[WriterCommitMessage]) =
-    messages.collect { case m: SnapshotFilesMsg => m.files }
-      .flatten.toSeq
+    new SnapshotBatchWriterFactory(job, s"v${op.readVersion + 1}")
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val files = filesOf(messages)
+    val files = SnapshotFilesMsg.filesOf(messages)
     val scan = op.configuredScan
     require(scan != null,
       "row-level write committed without a configured scan")
@@ -1136,53 +1123,45 @@ private[sources] class SnapshotReplaceDataWrite(
     // excluded files of the replaced partitions carry verbatim — the
     // file-granular half of the group rewrite.
     SnapshotTable.commitReplaceEntries(s, root, op.readVersion + 1,
-      SnapshotTable.freshEntries(s, files, schema), replaced,
+      SnapshotFilesMsg.byYear(files), replaced,
       scan.carriedFor(replaced.toSet))
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    filesOf(messages).foreach { case (_, p, _) =>
-      SnapshotTable.deleteTree(p)
-    }
+    SnapshotFilesMsg.delete(SnapshotFilesMsg.filesOf(messages))
 }
 
 /** `INSERT OVERWRITE` under `spark.sql.sources.partitionOverwriteMode
   * = dynamic` (the mode `DataProcess` sessions run in): the batch lands
-  * through the executor-side writers, then ONE commit replaces exactly
-  * the pt_year partitions the batch holds — every other partition
-  * carries by pointer, as in the static `PARTITION (pt_year = k)`
-  * path. An empty batch replaces nothing and commits nothing (Spark's
-  * dynamic-overwrite contract). A commit race rebases on the new head
-  * and retries, reusing the staged files. */
+  * through the executor-side [[SnapshotDataWriter]]s, then ONE commit
+  * replaces exactly the pt_year partitions the batch holds — every
+  * other partition carries by pointer, as in the static `PARTITION
+  * (pt_year = k)` path. An empty batch replaces nothing and commits
+  * nothing (Spark's dynamic-overwrite contract). A commit race rebases
+  * on the new head and retries, reusing the written files. */
 private[sources] class SnapshotDynamicOverwrite(root: String,
-    schemaJson: String, conf: SerializableConfiguration)
+    job: SnapshotWriteJob)
     extends org.apache.spark.sql.connector.write.BatchWrite {
   import org.apache.spark.sql.connector.write.{DataWriterFactory, PhysicalWriteInfo, WriterCommitMessage}
 
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory =
-    new SnapshotBatchWriterFactory(root, schemaJson, conf)
-
-  private def filesOf(messages: Array[WriterCommitMessage]) =
-    messages.collect { case m: SnapshotFilesMsg => m.files }
-      .flatten.toSeq
+    new SnapshotBatchWriterFactory(job,
+      s"v${SnapshotTable.versions(root).max + 1}")
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val files = filesOf(messages)
+    val files = SnapshotFilesMsg.filesOf(messages)
     if (files.isEmpty) return
     val s = SparkSession.active
-    val staged = SnapshotTable.freshEntries(s, files,
-      DataType.fromJson(schemaJson).asInstanceOf[StructType])
-    val years = files.map(_._1).distinct.sorted
+    val staged = SnapshotFilesMsg.byYear(files)
     SnapshotSourceTable.commitRetrying(root) { v =>
-      SnapshotTable.commitReplaceEntries(s, root, v, staged, years)
+      SnapshotTable.commitReplaceEntries(s, root, v, staged,
+        staged.map(_._1))
     }
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    filesOf(messages).foreach { case (_, p, _) =>
-      SnapshotTable.deleteTree(p)
-    }
+    SnapshotFilesMsg.delete(SnapshotFilesMsg.filesOf(messages))
 }
 
 /** DELTA-BASED row-level operation (SupportsDelta — SQL UPDATE /
@@ -1227,34 +1206,36 @@ private[sources] class SnapshotDeltaOperation(root: String,
   override def newWriteBuilder(
       info: LogicalWriteInfo): DeltaWriteBuilder =
     new DeltaWriteBuilder {
-      override def build(): DeltaWrite = new SnapshotDeltaWrite(
-        SnapshotDeltaOperation.this, root, rowKey,
-        tableSchema.json,
-        new SerializableConfiguration(
-          SnapshotTable.bloomWriteConf(root, SparkSession.active
-            .sparkContext.hadoopConfiguration)))
+      override def build(): DeltaWrite = {
+        val s = SparkSession.active
+        // a tombstone is the row's id: (rowKey, pt_year)
+        val dvSchema = StructType(Seq(
+          tableSchema(rowKey),
+          org.apache.spark.sql.types.StructField("pt_year",
+            org.apache.spark.sql.types.IntegerType)))
+        new SnapshotDeltaWrite(SnapshotDeltaOperation.this, root, rowKey,
+          SnapshotWriteJob(s, root, tableSchema,
+            SnapshotTable.bloomColsOf(tableSchema)),
+          SnapshotWriteJob(s, root, dvSchema))
+      }
     }
 }
 
 /** One staged tombstone file per task (key, pt_year) + the fresh
-  * insert files' (year, path, bytes) triples — only these reach the
-  * driver. */
+  * insert files' finished entries — only these reach the driver. */
 private[sources] case class SnapshotDeltaMsg(
-    files: Seq[(Int, String, Long)], dvFile: Option[String])
+    files: Seq[(Int, SnapshotTable.FileEntry)], dvFile: Option[String])
     extends org.apache.spark.sql.connector.write.WriterCommitMessage
 
 private[sources] class SnapshotDeltaWrite(op: SnapshotDeltaOperation,
-    root: String, rowKey: String, schemaJson: String,
-    conf: SerializableConfiguration)
+    root: String, rowKey: String, data: SnapshotWriteJob,
+    dv: SnapshotWriteJob)
     extends org.apache.spark.sql.connector.write.DeltaWrite {
   import org.apache.spark.sql.connector.write.{DeltaBatchWrite, DeltaWriterFactory, PhysicalWriteInfo, WriterCommitMessage}
 
-  private def schema =
-    DataType.fromJson(schemaJson).asInstanceOf[StructType]
-
   // one stage dir per write: tasks land tombstone files inside,
   // commit consumes and removes it (a failed write leaves orphans a
-  // vacuum reclaims — same posture as data-file staging)
+  // vacuum reclaims)
   private val dvStage = new HPath(root,
     s"stage_dvdelta_${java.util.UUID.randomUUID().toString.take(8)}")
     .toString
@@ -1262,8 +1243,8 @@ private[sources] class SnapshotDeltaWrite(op: SnapshotDeltaOperation,
   override def toBatch: DeltaBatchWrite = new DeltaBatchWrite {
     override def createBatchWriterFactory(
         info: PhysicalWriteInfo): DeltaWriterFactory =
-      new SnapshotDeltaWriterFactory(root, dvStage, rowKey,
-        schemaJson, conf)
+      new SnapshotDeltaWriterFactory(data, dv, dvStage, rowKey,
+        s"v${op.readVersion + 1}")
 
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
       val ms = messages.collect { case m: SnapshotDeltaMsg => m }
@@ -1273,89 +1254,60 @@ private[sources] class SnapshotDeltaWrite(op: SnapshotDeltaOperation,
       try {
         if (files.nonEmpty || dvFiles.nonEmpty)
           SnapshotTable.commitDelta(s, root, op.readVersion + 1,
-            rowKey, files, dvFiles, schema)
+            rowKey, SnapshotFilesMsg.byYear(files), dvFiles, data.schema)
       } finally SnapshotTable.deleteTree(dvStage)
     }
 
     override def abort(messages: Array[WriterCommitMessage]): Unit = {
-      messages.collect { case m: SnapshotDeltaMsg => m }
-        .foreach(_.files.foreach { case (_, p, _) =>
-          SnapshotTable.deleteTree(p)
-        })
+      SnapshotFilesMsg.delete(messages.toSeq
+        .collect { case m: SnapshotDeltaMsg => m }.flatMap(_.files))
       SnapshotTable.deleteTree(dvStage)
     }
   }
 }
 
-private[sources] class SnapshotDeltaWriterFactory(root: String,
-    dvStage: String, rowKey: String, schemaJson: String,
-    conf: SerializableConfiguration)
+private[sources] class SnapshotDeltaWriterFactory(data: SnapshotWriteJob,
+    dv: SnapshotWriteJob, dvStage: String, rowKey: String, prefix: String)
     extends org.apache.spark.sql.connector.write.DeltaWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : org.apache.spark.sql.connector.write.DeltaWriter[InternalRow] =
-    new SnapshotDeltaWriter(root, dvStage, rowKey, schemaJson,
-      conf.value, partitionId)
+    new SnapshotDeltaWriter(data, dv, dvStage, rowKey, partitionId, prefix)
 }
 
-/** Executor-side delta writer: INSERTs route to the shared per-year
-  * parquet group writers (same machinery as the streaming sink and
-  * the group rewrite); DELETEs stream (key, pt_year) pairs into one
-  * staged tombstone file — nothing buffers beyond parquet's own row
-  * group, so a wide delete stays O(1) memory. */
-private[sources] class SnapshotDeltaWriter(root: String,
-    dvStage: String, rowKey: String, schemaJson: String,
-    conf: org.apache.hadoop.conf.Configuration, partitionId: Int)
+/** Executor-side delta writer: INSERTs route to a
+  * [[SnapshotDataWriter]] (one parquet file per year, stats taken as
+  * rows pass); DELETEs stream their (key, pt_year) ids through the
+  * same Spark parquet writer into one staged tombstone file — nothing
+  * buffers beyond parquet's own row group, so a wide delete stays O(1)
+  * memory. */
+private[sources] class SnapshotDeltaWriter(data: SnapshotWriteJob,
+    dv: SnapshotWriteJob, dvStage: String, rowKey: String,
+    partitionId: Int, prefix: String)
     extends org.apache.spark.sql.connector.write.DeltaWriter[InternalRow] {
-  import org.apache.parquet.example.data.simple.SimpleGroup
-  import org.apache.parquet.hadoop.ParquetWriter
-  import org.apache.parquet.hadoop.example.ExampleParquetWriter
-  import org.apache.parquet.hadoop.util.HadoopOutputFile
-  import org.apache.parquet.io.api.Binary
+  import org.apache.spark.sql.execution.datasources.OutputWriter
 
-  private val schema =
-    DataType.fromJson(schemaJson).asInstanceOf[StructType]
-  private val inserts =
-    new SnapshotGroupWriter(root, schemaJson, conf, partitionId, 0L)
-
-  // the rowId projection is (rowKey, pt_year) — fixed positions, see
-  // SnapshotDeltaOperation.rowId
-  private val keyType = schema.fields(schema.fieldIndex(rowKey)).dataType
-  private val dvSchema = StructType(Seq(
-    schema.fields(schema.fieldIndex(rowKey)).copy(name = rowKey,
-      nullable = false),
-    org.apache.spark.sql.types.StructField("pt_year",
-      org.apache.spark.sql.types.IntegerType, nullable = false)))
-  private val dvMsgType = SnapshotParquet.messageType(dvSchema)
+  private val inserts = data.writer(partitionId, prefix)
+  // the tombstone reader (DvCache) decodes these key types
+  private val keyType = dv.schema(rowKey).dataType
   private val token = java.util.UUID.randomUUID().toString.take(8)
-  private var dvWriter: ParquetWriter[org.apache.parquet.example.data.Group] = _
+  private var dvOut: OutputWriter = _
   private var dvPath: HPath = _
-
-  private def dvW(): ParquetWriter[org.apache.parquet.example.data.Group] = {
-    if (dvWriter == null) {
-      dvPath = new HPath(dvStage, f"t$partitionId%05d_$token.parquet")
-      dvWriter = ExampleParquetWriter
-        .builder(HadoopOutputFile.fromPath(dvPath, conf))
-        .withConf(conf).withType(dvMsgType).build()
-    }
-    dvWriter
-  }
 
   override def delete(meta: InternalRow, id: InternalRow): Unit = {
     require(!id.isNullAt(0) && !id.isNullAt(1),
       s"row-level delete saw a NULL $rowKey/pt_year id — the rowKey " +
       "column must be non-null on every row")
-    val g = new SimpleGroup(dvMsgType)
     keyType match {
-      case LongType => g.add(rowKey, id.getLong(0))
-      case IntegerType => g.add(rowKey, id.getInt(0))
-      case DoubleType => g.add(rowKey, id.getDouble(0))
-      case StringType =>
-        g.add(rowKey, Binary.fromString(id.getUTF8String(0).toString))
+      case LongType | IntegerType | DoubleType | StringType =>
       case dt => throw new UnsupportedOperationException(
         s"rowKey type ${dt.simpleString} is not tombstone-able")
     }
-    g.add("pt_year", id.getInt(1))
-    dvW().write(g)
+    if (dvOut == null) {
+      dvPath = new HPath(dvStage, f"t$partitionId%05d_$token.parquet")
+      dvOut = dv.open(dvPath)
+    }
+    // the rowId projection is (rowKey, pt_year) — the tombstone row
+    dvOut.write(id)
   }
 
   override def insert(row: InternalRow): Unit = inserts.write(row)
@@ -1371,21 +1323,19 @@ private[sources] class SnapshotDeltaWriter(root: String,
 
   override def commit(): org.apache.spark.sql.connector.write
       .WriterCommitMessage = {
-    val fileMsg = inserts.commit() match {
-      case SnapshotFilesMsg(fs) => fs
-    }
-    val dv = Option(dvWriter).map { w =>
+    val files = inserts.commit().files
+    val dvFile = Option(dvOut).map { w =>
       w.close()
       dvPath.toString
     }
-    SnapshotDeltaMsg(fileMsg, dv)
+    SnapshotDeltaMsg(files, dvFile)
   }
 
   override def abort(): Unit = {
     inserts.abort()
-    if (dvWriter != null) {
-      try dvWriter.close() catch { case _: Exception => () }
-      try dvPath.getFileSystem(conf).delete(dvPath, false)
+    if (dvOut != null) {
+      try dvOut.close() catch { case _: Exception => () }
+      try dv.fs(dvPath).delete(dvPath, false)
       catch { case _: Exception => () }
     }
   }
@@ -2144,7 +2094,7 @@ private[sources] class SnapshotMicroBatchStream(root: String,
         var admitted = 0
         var done = false
         while (!done && v <= vCap) {
-          val fresh = freshEntries(v)
+          val fresh = addedEntries(v)
           if (idx >= fresh.size) { v += 1; idx = 0 }
           else {
             spent += fresh(idx).bytes
@@ -2154,7 +2104,7 @@ private[sources] class SnapshotMicroBatchStream(root: String,
           }
         }
         if (v > vCap) headPosition(vCap)
-        else if (idx >= freshEntries(v).size) VersionOffset(v + 1, 0)
+        else if (idx >= addedEntries(v).size) VersionOffset(v + 1, 0)
         else VersionOffset(v, idx)
     }
   }
@@ -2171,7 +2121,7 @@ private[sources] class SnapshotMicroBatchStream(root: String,
     * keeps an ordered SUBSEQUENCE, and the scope is fixed by the
     * query's own filter, so offsets stay stable too). v = 0
     * contributes its full list. */
-  private def freshEntries(v: Int) = {
+  private def addedEntries(v: Int) = {
     val cur = years match {
       case None => SnapshotTable.statEntries(root, v)
       case Some(ys) =>
@@ -2207,7 +2157,7 @@ private[sources] class SnapshotMicroBatchStream(root: String,
     val entries = (s.v to e.v).flatMap { v =>
       if (v == e.v && e.idx == 0) Seq.empty // end is exclusive here
       else {
-        val fresh = freshEntries(v)
+        val fresh = addedEntries(v)
         // a PURE delete commit (deletion vector moved, zero fresh
         // files) removes rows an append stream has already emitted —
         // fail loudly unless the consumer opted in, Delta's

@@ -122,69 +122,14 @@ class CommitSubstrateSpec extends AnyFunSuite {
     }
     intercept[java.nio.file.FileAlreadyExistsException](
       T.RenameSubstrate.publishNoReplace(fs, staged, committed))
-    // the lock-free unique-destination path runs the SAME translation
-    val staged2 = new HPath(dir.resolve("staged2").toString)
-    val o2 = real.create(staged2, true); o2.write('y'); o2.close()
-    val fs2 = new org.apache.hadoop.fs.FilterFileSystem(real) {
-      private var first = true
-      override def exists(p: HPath): Boolean =
-        if (p == committed && first) { first = false; false }
-        else super.exists(p)
-      override def rename(src: HPath, dst: HPath): Boolean =
-        if (dst == committed) false
-        else super.rename(src, dst)
-    }
-    intercept[java.nio.file.FileAlreadyExistsException](
-      T.RenameSubstrate.publishNoReplaceUnique(fs2, staged2, committed))
-  }
-
-  test("unique-destination publishes keep no-replace arbitration under " +
-      "concurrency: racers to distinct names all land, a taken name " +
-      "refuses") {
-    val dir = Files.createTempDirectory("g_substrate_par")
-    val fs = FileSystem.getLocal(new Configuration())
-    def put(name: String): HPath = {
-      val p = new HPath(dir.resolve(name).toString)
-      val out = fs.create(p, true)
-      try out.write(name.getBytes("UTF-8")) finally out.close()
-      p
-    }
-    // a pre-committed destination refuses even on the lock-free path
-    val winner = put("winner")
-    val loser = put("loser_src")
-    intercept[java.nio.file.FileAlreadyExistsException](
-      T.RenameSubstrate.publishNoReplaceUnique(fs, loser, winner))
-    // 64 threads, 64 distinct destinations — the parallel commit-
-    // finalization shape: every rename must land exactly once
-    val srcs = (0 until 64).map(i => put(s"src_$i"))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(32)
-    try {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      implicit val ec: ExecutionContext =
-        ExecutionContext.fromExecutorService(pool)
-      Await.result(Future.traverse(srcs.zipWithIndex.toList) {
-        case (src, i) => Future(T.RenameSubstrate
-          .publishNoReplaceUnique(fs,
-            src, new HPath(dir.resolve(s"dst_$i").toString)))
-      }, scala.concurrent.duration.Duration.Inf)
-    } finally pool.shutdown()
-    (0 until 64).foreach { i =>
-      val p = new HPath(dir.resolve(s"dst_$i").toString)
-      assert(fs.exists(p), s"dst_$i missing")
-      val in = fs.open(p)
-      val got =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      assert(got === s"src_$i", s"dst_$i carries the wrong bytes")
-    }
   }
 
   test("a wide commit (pool-path finalization) reads back exactly") {
     val spark = graft.etl.TestSpark.spark
     import spark.implicits._
     val root = Files.createTempDirectory("g_substrate_wide").toString
-    // 24 part files per year × 2 years = 48 renames > the serial
-    // threshold — the thread-pool path finalizes this commit
+    // a commit over 24 input partitions and 2 years: every written
+    // file reaches the manifest with its rows
     val df = (1L to 480L).map(k =>
       (k, if (k % 2 == 0) 2023 else 2024, k * 1.5))
       .toDF("k", "pt_year", "v").repartition(24)
@@ -194,4 +139,86 @@ class CommitSubstrateSpec extends AnyFunSuite {
     assert(got.agg(org.apache.spark.sql.functions.sum("k"))
       .head.getLong(0) === (1L to 480L).sum)
   }
+
+  test("SQL INSERT INTO and UPDATE write each data file once: no " +
+      "rename under data/, no stage directory, no written file reopened") {
+    val spark = graft.etl.TestSpark.spark
+    val base = Files.createTempDirectory("g_substrate_io").toString
+    val cat = "gio_" + java.util.UUID.randomUUID().toString.take(8)
+    spark.conf.set(s"spark.sql.catalog.$cat",
+      classOf[graft.sources.SnapshotCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.base", base)
+    spark.sql(s"CREATE TABLE $cat.t (k BIGINT, pt_year INT, v DOUBLE)")
+    spark.sql(s"INSERT INTO $cat.t VALUES (1, 2023, 1.0), (2, 2024, 2.0)")
+    val root = s"$base/t"
+    def local(p: String) = new HPath(p).toUri.getPath
+    val data = local(s"$root/data") + "/"
+    def live() = T.files(root, T.versions(root).max).map(local).toSet
+    def check(statement: String, mayOpen: Set[String]): Unit = {
+      val before = live()
+      val conf = spark.sparkContext.hadoopConfiguration
+      IoCountingFs.clear()
+      conf.set("fs.file.impl", classOf[IoCountingFs].getName)
+      conf.setBoolean("fs.file.impl.disable.cache", true)
+      try spark.sql(statement)
+      finally {
+        conf.unset("fs.file.impl")
+        conf.unset("fs.file.impl.disable.cache")
+      }
+      val written = live() -- before
+      assert(written.nonEmpty, s"$statement wrote no data file")
+      val renamed = IoCountingFs.renamed.toArray(Array.empty[String])
+        .toSeq.map(local).filter(_.startsWith(data))
+      assert(renamed.isEmpty, s"$statement renamed under data/: $renamed")
+      val staged = IoCountingFs.made.toArray(Array.empty[String]).toSeq
+        .map(local).filter(p => p.startsWith(local(root) + "/") &&
+          p.split('/').exists(_.startsWith("stage_")))
+      assert(staged.isEmpty, s"$statement staged through $staged")
+      val opened = IoCountingFs.opened.toArray(Array.empty[String])
+        .toSeq.map(local).filter(_.startsWith(data)).toSet
+      assert(opened.intersect(written).isEmpty,
+        s"$statement reopened the files it wrote: $opened")
+      assert(opened.subsetOf(mayOpen), s"$statement opened $opened")
+    }
+    check(s"INSERT INTO $cat.t VALUES (3, 2023, 3.0)", Set.empty)
+    check(s"UPDATE $cat.t SET v = v + 1 WHERE k = 1", live())
+    assert(spark.sql(s"SELECT k, v FROM $cat.t").collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toMap ===
+      Map(1L -> 2.0, 2L -> 2.0, 3L -> 3.0))
+  }
+}
+
+/** The local filesystem, recording the paths it opens, creates or
+  * makes directories at, and the sources and destinations of its
+  * renames. */
+class IoCountingFs extends org.apache.hadoop.fs.LocalFileSystem {
+  import org.apache.hadoop.fs.permission.FsPermission
+  override def open(f: HPath,
+      bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    IoCountingFs.opened.add(f.toString)
+    super.open(f, bufferSize)
+  }
+  override def create(f: HPath, permission: FsPermission,
+      overwrite: Boolean, bufferSize: Int, replication: Short,
+      blockSize: Long, progress: org.apache.hadoop.util.Progressable)
+      : org.apache.hadoop.fs.FSDataOutputStream = {
+    IoCountingFs.made.add(f.toString)
+    super.create(f, permission, overwrite, bufferSize, replication,
+      blockSize, progress)
+  }
+  override def mkdirs(f: HPath, permission: FsPermission): Boolean = {
+    IoCountingFs.made.add(f.toString)
+    super.mkdirs(f, permission)
+  }
+  override def rename(src: HPath, dst: HPath): Boolean = {
+    IoCountingFs.renamed.add(src.toString)
+    IoCountingFs.renamed.add(dst.toString)
+    super.rename(src, dst)
+  }
+}
+
+object IoCountingFs {
+  val opened, made, renamed =
+    new java.util.concurrent.ConcurrentLinkedQueue[String]
+  def clear(): Unit = Seq(opened, made, renamed).foreach(_.clear())
 }

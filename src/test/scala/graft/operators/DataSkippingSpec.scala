@@ -191,4 +191,119 @@ class DataSkippingSpec extends AnyFunSuite {
     assert(mins === 0L && maxs === 999L)
     assert(st.typ === 'L')
   }
+
+  /** Every stat-bearing manifest entry agrees with its own file's
+    * parquet footer: the same row count and null counts, and recorded
+    * bounds inside the footer's (row-taken bounds may be tighter, never
+    * looser). A column holding NaN or no value records no bounds. */
+  private def assertWithinFooters(es: Seq[T.FileEntry]): Unit = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import scala.jdk.CollectionConverters._
+    assert(es.nonEmpty, "the write path produced no files")
+    val conf = spark.sparkContext.hadoopConfiguration
+    def unsignedLe(a: Array[Byte], b: Array[Byte]): Boolean = {
+      val i = a.indices.find(i => i >= b.length || a(i) != b(i))
+      i.forall(i => i < b.length && (a(i) & 0xff) < (b(i) & 0xff))
+    }
+    es.foreach { e =>
+      val rd = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(e.path), conf))
+      try {
+        val blocks = rd.getFooter.getBlocks.asScala.toSeq
+        assert(e.rows === blocks.map(_.getRowCount).sum, e.path)
+        val st = T.decodeStats(e.stats)
+        assert(st.nonEmpty, s"${e.path} has no stats")
+        st.foreach { case (c, cs) =>
+          val chunks = blocks.map(_.getColumns.asScala
+            .find(_.getPath.toDotString == c).get.getStatistics)
+          assert(cs.nulls === chunks.map(_.getNumNulls).sum, s"$c nulls")
+          if (cs.min.nonEmpty) {
+            val what = s"$c [${cs.min}, ${cs.max}] in ${e.path}"
+            assert(chunks.forall(_.hasNonNullValue), what)
+            cs.typ match {
+              case 'L' =>
+                def v(x: Any) = x.asInstanceOf[Number].longValue
+                assert(chunks.map(x => v(x.genericGetMin)).min <=
+                  cs.min.toLong, what)
+                assert(cs.max.toLong <=
+                  chunks.map(x => v(x.genericGetMax)).max, what)
+              case 'D' =>
+                def v(x: Any) = x.asInstanceOf[Number].doubleValue
+                assert(chunks.map(x => v(x.genericGetMin)).min <=
+                  cs.min.toDouble, what)
+                assert(cs.max.toDouble <=
+                  chunks.map(x => v(x.genericGetMax)).max, what)
+              case _ =>
+                val lo = cs.min.getBytes("UTF-8")
+                val hi = cs.max.getBytes("UTF-8")
+                assert(chunks.exists(x =>
+                  unsignedLe(x.getMinBytes, lo)), what)
+                assert(chunks.exists(x =>
+                  unsignedLe(hi, x.getMaxBytes)), what)
+            }
+          }
+        }
+      } finally rd.close()
+    }
+  }
+
+  test("every write path's stats lie within its files' footer bounds") {
+    import spark.implicits._
+    val df = Seq(
+      (1L, 2023, Some(1.5), Some(3.4f), Some("ab"), Option.empty[String]),
+      (2L, 2023, Some(Double.NaN), Some(0.25f), Some("ｚ"), None),
+      (3L, 2023, None, None, None, None),
+      (4L, 2024, Some(-2.0), Some(-1.5f), Some("é😀"), None),
+      (5L, 2024, Some(7.0), None, Some("Z"), None))
+      .toDF("k", "pt_year", "d", "f", "s", "n")
+    // batch commit
+    val root = Files.createTempDirectory("g_skip_parity").toString
+    T.commit(spark, root, 0, df, Seq(2023, 2024))
+    val batch = T.statEntries(root, 0)
+    assertWithinFooters(batch)
+    val y23 = T.decodeStats(batch.find(_.path.contains("_y2023_")).get.stats)
+    assert(y23("d").min.isEmpty && y23("d").nulls === 1L,
+      "a NaN column must record only its null count")
+    assert(y23("n").min.isEmpty && y23("n").nulls === 3L,
+      "an all-null column must record only its null count")
+    assert(y23("f").max === 3.4f.toDouble.toString)
+    assert(y23("s").max === "ｚ")
+
+    val base = Files.createTempDirectory("g_skip_parity_cat").toString
+    val cat = "gpar_" + java.util.UUID.randomUUID().toString.take(8)
+    spark.conf.set(s"spark.sql.catalog.$cat",
+      classOf[graft.sources.SnapshotCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.base", base)
+    def fresh(r: String)(statement: => Unit): Seq[T.FileEntry] = {
+      val before = T.files(r, T.versions(r).max).toSet
+      statement
+      T.statEntries(r, T.versions(r).max).filterNot(e =>
+        before.contains(e.path))
+    }
+    // SQL UPDATE (copy-on-write)
+    T.commit(spark, s"$base/cow", 0, df, Seq(2023, 2024))
+    assertWithinFooters(fresh(s"$base/cow")(spark.sql(
+      s"UPDATE $cat.cow SET s = concat(s, 'ß') WHERE k IN (1, 4)")))
+    // merge-on-read inserts
+    spark.sql(s"CREATE TABLE $cat.mor (k BIGINT, pt_year INT, d DOUBLE, " +
+      "f FLOAT, s STRING, n STRING) TBLPROPERTIES ('rowKey' = 'k')")
+    df.createOrReplaceTempView("g_parity_src")
+    spark.sql(s"INSERT INTO $cat.mor SELECT * FROM g_parity_src")
+    assertWithinFooters(fresh(s"$base/mor")(spark.sql(
+      s"UPDATE $cat.mor SET f = f * 2 WHERE k <= 4")))
+    // a streaming-sink epoch
+    val sink = Files.createTempDirectory("g_skip_parity_sink").toString
+    T.commit(spark, sink, 0, df.filter(lit(false)), Seq.empty)
+    val src = Files.createTempDirectory("g_skip_parity_src").toString
+    df.write.mode("overwrite").parquet(src)
+    spark.readStream.schema(df.schema).parquet(src).writeStream
+      .format("graft-snapshot").option("root", sink)
+      .option("checkpointLocation",
+        Files.createTempDirectory("g_skip_parity_ck").toString)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start().awaitTermination(300000)
+    assert(T.versions(sink) === Seq(0, 1))
+    assertWithinFooters(T.statEntries(sink, 1))
+  }
 }

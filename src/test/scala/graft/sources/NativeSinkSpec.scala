@@ -75,21 +75,17 @@ class NativeSinkSpec extends AnyFunSuite {
     val query = T.txnOf(root, head).get._1.stripPrefix("stream-")
     // simulate the at-least-once replay: drive the sink's commit
     // directly with the SAME epochId and freshly-staged orphan files
-    val w = new SnapshotStreamingWrite(root,
-      T.tableSchema(root, head).get.json, query,
-      new org.apache.spark.util.SerializableConfiguration(
-        spark.sparkContext.hadoopConfiguration))
-    val writer = new SnapshotGroupWriter(root,
-      T.tableSchema(root, head).get.json,
-      spark.sparkContext.hadoopConfiguration, 0, 0L)
+    val job = SnapshotWriteJob(spark, root, T.tableSchema(root, head).get)
+    val w = new SnapshotStreamingWrite(root, job, query)
+    val writer = job.writer(0, "se0")
     writer.write(org.apache.spark.sql.catalyst.InternalRow(
       7L, 2023, 7.0))
     val msg = writer.commit().asInstanceOf[SnapshotFilesMsg]
     assert(msg.files.nonEmpty)
     w.commit(0L, Array(msg)) // epoch 0 already committed by the drain
     assert(T.versions(root).max === head, "replayed epoch re-committed")
-    msg.files.foreach { case (_, p, _) =>
-      assert(!Files.exists(java.nio.file.Paths.get(p)),
+    msg.files.foreach { case (_, e) =>
+      assert(!Files.exists(java.nio.file.Paths.get(e.path)),
         "replay orphan files not reclaimed")
     }
     assert(T.read(spark, root, head).count() === 1)
@@ -116,13 +112,9 @@ class NativeSinkSpec extends AnyFunSuite {
     assert(T.lastTxn(root, app).contains(0L),
       "txn marker lost with the vacuumed manifest — exactly-once broken")
     val head = T.versions(root).max
-    val w = new SnapshotStreamingWrite(root,
-      T.tableSchema(root, head).get.json, app.stripPrefix("stream-"),
-      new org.apache.spark.util.SerializableConfiguration(
-        spark.sparkContext.hadoopConfiguration))
-    val writer = new SnapshotGroupWriter(root,
-      T.tableSchema(root, head).get.json,
-      spark.sparkContext.hadoopConfiguration, 0, 0L)
+    val job = SnapshotWriteJob(spark, root, T.tableSchema(root, head).get)
+    val w = new SnapshotStreamingWrite(root, job, app.stripPrefix("stream-"))
+    val writer = job.writer(0, "se0")
     writer.write(org.apache.spark.sql.catalyst.InternalRow(9L, 2023, 9.0))
     val msg = writer.commit().asInstanceOf[SnapshotFilesMsg]
     w.commit(0L, Array(msg))
@@ -132,23 +124,20 @@ class NativeSinkSpec extends AnyFunSuite {
 
   test("a sink epoch losing a commit race rebases instead of failing") {
     val root = initTable()
-    val schemaJson = T.tableSchema(root, 0).get.json
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
+    val job = SnapshotWriteJob(spark, root, T.tableSchema(root, 0).get)
     // two writers (distinct queries) race their epoch commits at the
     // same head: the loser must REBASE onto the winner's head and land
     // as the next version — never fail the stream, never clobber
     def stage(key: Long): SnapshotFilesMsg = {
-      val writer = new SnapshotGroupWriter(root, schemaJson,
-        spark.sparkContext.hadoopConfiguration, key.toInt, 0L)
+      val writer = job.writer(key.toInt, "se0")
       writer.write(org.apache.spark.sql.catalyst.InternalRow(
         key, 2023, key.toDouble))
       writer.commit().asInstanceOf[SnapshotFilesMsg]
     }
     val msgs = Seq(1L, 2L).map(k => k -> stage(k))
     val threads = msgs.map { case (k, m) =>
-      new Thread(() => new SnapshotStreamingWrite(root, schemaJson,
-        s"q$k", conf).commit(0L, Array(m)))
+      new Thread(() => new SnapshotStreamingWrite(root, job,
+        s"q$k").commit(0L, Array(m)))
     }
     threads.foreach(_.start()); threads.foreach(_.join())
     assert(T.versions(root) === Seq(0, 1, 2),
@@ -189,19 +178,15 @@ class NativeSinkSpec extends AnyFunSuite {
 
   test("abort reclaims staged files; aborted epochs never publish") {
     val root = initTable()
-    val writer = new SnapshotGroupWriter(root,
-      T.tableSchema(root, 0).get.json,
-      spark.sparkContext.hadoopConfiguration, 0, 5L)
+    val job = SnapshotWriteJob(spark, root, T.tableSchema(root, 0).get)
+    val writer = job.writer(0, "se5")
     writer.write(org.apache.spark.sql.catalyst.InternalRow(
       9L, 2023, 9.0))
     val msg = writer.commit().asInstanceOf[SnapshotFilesMsg]
-    val w = new SnapshotStreamingWrite(root,
-      T.tableSchema(root, 0).get.json, "qabort",
-      new org.apache.spark.util.SerializableConfiguration(
-        spark.sparkContext.hadoopConfiguration))
+    val w = new SnapshotStreamingWrite(root, job, "qabort")
     w.abort(5L, Array(msg))
-    msg.files.foreach { case (_, p, _) =>
-      assert(!Files.exists(java.nio.file.Paths.get(p)))
+    msg.files.foreach { case (_, e) =>
+      assert(!Files.exists(java.nio.file.Paths.get(e.path)))
     }
     assert(T.versions(root) === Seq(0))
   }
@@ -240,5 +225,23 @@ class NativeSinkSpec extends AnyFunSuite {
     assert(got.getDate(3) === java.sql.Date.valueOf("2023-05-01"))
     assert(got.getTimestamp(4) ===
       java.sql.Timestamp.valueOf("2023-05-01 10:30:00"))
+  }
+
+  test("a DECIMAL column round-trips through the sink") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("g_natsink_dec").toString
+    val typed = Seq((1L, 2023, "12.34"), (2L, 2024, "-0.05"))
+      .toDF("k", "pt_year", "p")
+      .withColumn("p", $"p".cast("decimal(12,2)"))
+    T.commit(spark, root, 0, typed.filter(_ => false), Seq.empty)
+    val srcDir = Files.createTempDirectory("g_natsink_decs").toString
+    typed.write.mode("overwrite").parquet(srcDir)
+    drainInto(root, srcDir,
+      Files.createTempDirectory("g_natsink_decc").toString)
+    assert(T.versions(root) === Seq(0, 1))
+    assert(T.read(spark, root, 1).collect()
+      .map(r => r.getLong(0) -> r.getDecimal(2)).toMap ===
+      Map(1L -> new java.math.BigDecimal("12.34"),
+        2L -> new java.math.BigDecimal("-0.05")))
   }
 }

@@ -113,7 +113,7 @@ class SqlDeleteSpec extends AnyFunSuite {
       (100L, 1, 1.0), (101L, 1, 2.0), (102L, 1, 3.0)).coalesce(1))
     val v1Files = T.files(root, 1)
     assert(v1Files.size === 2, "fixture needs two files in one partition")
-    val fileB = v1Files.filter(_.contains("_a")) // the appended file
+    val fileB = v1Files.filterNot(T.files(root, 0).contains) // appended
     assert(fileB.size === 1)
     val bTime = Files.getLastModifiedTime(Paths.get(fileB.head)).toMillis
     // the predicate's stats range [_, 10] excludes file B ([100, 102])

@@ -254,4 +254,19 @@ class SqlMergeUpdateSpec extends AnyFunSuite {
     assert(!spark.sql(s"SELECT * FROM $cat.t9 VERSION AS OF 0")
       .columns.contains("tag"))
   }
+
+  test("UPDATE rewrites a table with a DECIMAL column exactly") {
+    val (cat, base) = freshCatalog()
+    val root = s"$base/tdec"
+    T.commit(spark, root, 0, frame((1L, 1, 10.5), (2L, 1, 20.25))
+      .withColumn("price", org.apache.spark.sql.functions.col(
+        "o_totalprice").cast("decimal(10,2)")), Seq(1))
+    spark.sql(s"UPDATE $cat.tdec SET price = price + 1 " +
+      "WHERE o_orderkey = 1")
+    assert(T.versions(root) === Seq(0, 1))
+    assert(spark.sql(s"SELECT o_orderkey, price FROM $cat.tdec")
+      .collect().map(r => r.getLong(0) -> r.getDecimal(1)).toMap ===
+      Map(1L -> new java.math.BigDecimal("11.50"),
+        2L -> new java.math.BigDecimal("20.25")))
+  }
 }

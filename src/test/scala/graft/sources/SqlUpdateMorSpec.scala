@@ -180,4 +180,20 @@ class SqlUpdateMorSpec extends AnyFunSuite {
     assert(rows(cat, "t5").contains((3L, 2023, 6.0)))
     assert(rows(cat, "t5").size === 5)
   }
+
+  test("UPDATE on a rowKey table with a DECIMAL column") {
+    val (cat, base) = freshCatalog()
+    spark.sql(s"CREATE TABLE $cat.tdec " +
+      "(k BIGINT, pt_year INT, price DECIMAL(10,2)) " +
+      "TBLPROPERTIES ('rowKey' = 'k')")
+    spark.sql(s"INSERT INTO $cat.tdec VALUES " +
+      "(1, 2023, 10.50), (2, 2023, 20.25)")
+    spark.sql(s"UPDATE $cat.tdec SET price = price + 1 WHERE k = 2")
+    assert(T.dvOf(s"$base/tdec", T.versions(s"$base/tdec").max).isDefined,
+      "the update should be a delta commit")
+    assert(spark.sql(s"SELECT k, price FROM $cat.tdec").collect()
+      .map(r => r.getLong(0) -> r.getDecimal(1)).toMap ===
+      Map(1L -> new java.math.BigDecimal("10.50"),
+        2L -> new java.math.BigDecimal("21.25")))
+  }
 }
