@@ -358,10 +358,11 @@ object WriteOps {
     // ------------------------------------------------------------------
     // ATOMIC-PUBLISH SUBSTRATE (Delta's LogStore split, ENFORCED as a
     // seam rather than documented as a caveat): every publish — top
-    // and partition manifests, branch refs — routes through the
-    // substrate selected by the root filesystem's URI scheme. Data
-    // files need no publish: each is written once at a commit-unique
-    // name and becomes visible only when a manifest references it.
+    // manifests and branch refs — routes through the substrate
+    // selected by the root filesystem's URI scheme. Data files,
+    // partition manifests and tombstone files need no publish: each
+    // is written once at a commit-unique name and becomes visible only
+    // when a top manifest references it.
     //  - RENAME substrate (hdfs/file/viewfs): rename-no-replace, atomic
     //    on HDFS (the NameNode refuses an existing destination inside
     //    the rename); on the local FS a JVM-wide lock makes the
@@ -535,17 +536,22 @@ object WriteOps {
       *    monotonic ts chain, equal to the `born` of the files and the
       *    `__below` of the tombstones that commit wrote;
       *  - `#txn=<base64 app>\t<batchId>`: an idempotent writer's batch;
-      *  - `#dv=<sidecar dir>\t<key column>\t<year>,<year>,...`: the
-      *    pending deletion vector;
+      *  - `#dv=<key column>`: the pending deletion vector's key;
+      *  - `#dvdir=<dir>\t<below>\t<year>,<year>,...`: one line per
+      *    tombstone dir of that deletion vector ([[DvEntry]]), in
+      *    commit order;
       *  - `y<year>\t<m-file>`: one partition pointer per non-empty year.
       *
       * Every header is optional (manifests written before a field
       * existed lack it); headers are found by prefix, so their order is
-      * free and other `#` lines are ignored. A staged branch ref is the
-      * same format plus its own `#parent=`/`#fresh=` headers. */
+      * free and other `#` lines are ignored. A legacy single-sidecar
+      * line `#dv=<dir>\t<key column>\t<years>` parses as one entry
+      * whose `below` is `Long.MaxValue`; it is rendered back in the
+      * list form. A staged branch ref is the same format plus its own
+      * `#parent=`/`#fresh=` headers. */
     private[graft] case class Top(version: Int,
         schema: Option[org.apache.spark.sql.types.StructType],
-        dv: Option[(String, String, Seq[Int])],
+        dv: Option[Dv],
         pointers: Map[Int, String],
         ts: Option[Long] = None,
         txn: Option[(String, Long)] = None) {
@@ -568,9 +574,16 @@ object WriteOps {
           header(ls, "#schema=").map(j => org.apache.spark.sql.types.DataType
             .fromJson(j).asInstanceOf[org.apache.spark.sql.types.StructType]),
           header(ls, "#dv=").map { l =>
+            def years(t: String) =
+              t.split(',').filter(_.nonEmpty).map(_.toInt).toSeq
             val t = l.split('\t')
-            (t(0), t(1),
-              t(2).split(',').filter(_.nonEmpty).map(_.toInt).toSeq)
+            if (t.length > 1) // legacy: one sidecar, births unstamped
+              Dv(t(1), Seq(DvEntry(t(0), Long.MaxValue,
+                years(t.lift(2).getOrElse("")))))
+            else Dv(l, ls.filter(_.startsWith("#dvdir=")).map { e =>
+              val f = e.stripPrefix("#dvdir=").split('\t')
+              DvEntry(f(0), f(1).toLong, years(f(2)))
+            })
           },
           ls.filterNot(_.startsWith("#")).map { l =>
             val i = l.indexOf('\t')
@@ -586,10 +599,40 @@ object WriteOps {
         t.schema.map(sc => s"#schema=${sc.json}").toSeq ++
           t.ts.map(ts => s"#ts=$ts") ++
           t.txn.map { case (app, id) => s"#txn=${b64e(app)}\t$id" } ++
-          t.dv.map { case (p, k, ys) =>
-            s"#dv=$p\t$k\t${ys.sorted.mkString(",")}"
+          t.dv.toSeq.flatMap { d =>
+            s"#dv=${d.key}" +: d.entries.map(e => s"#dvdir=${e.dir}\t" +
+              s"${e.below}\t${e.years.sorted.mkString(",")}")
           } ++
           t.pointers.toSeq.sortBy(_._1).map { case (y, m) => s"y$y\t$m" }
+    }
+
+    /** One batch of tombstones: an immutable, token-named dir under
+      * `_dv/` of (key, pt_year) parquet files, written once by the
+      * tasks of the commit that added it and never rewritten. `below`
+      * is that commit's ts-chain value (the way a file entry carries
+      * `born`): a tombstone kills a row only of a file born strictly
+      * before it. Rows of a legacy sidecar that carry their own
+      * `__below` keep it; a legacy entry's `Long.MaxValue` kills rows
+      * of every file. `years` are the partitions the entry still
+      * applies to — a rewrite of a year drops it here, never in the
+      * dir. */
+    private[graft] case class DvEntry(dir: String, below: Long,
+        years: Seq[Int])
+
+    /** A version's pending deletion vector: its key column and its
+      * tombstone dirs in commit order. A commit adds an entry or drops
+      * years; no commit changes a dir. */
+    private[graft] case class Dv(key: String, entries: Seq[DvEntry]) {
+      /** Every partition with pending tombstones. */
+      def years: Seq[Int] = entries.flatMap(_.years).distinct.sorted
+
+      /** This vector minus the `gone` years (a rewrite purged them);
+        * None when nothing stays pending. */
+      def without(gone: Set[Int]): Option[Dv] = {
+        val left = entries.map(e => e.copy(years = e.years.filterNot(gone)))
+          .filter(_.years.nonEmpty)
+        if (left.isEmpty) None else Some(copy(entries = left))
+      }
     }
 
     /** Version v's top manifest, or None when v was never committed or
@@ -702,12 +745,19 @@ object WriteOps {
     private def readPartManifests(ms: Seq[String]): Seq[Seq[FileEntry]] =
       ioMap(ms)(readPartManifest)
 
-    /** Write one immutable partition manifest; returns its path. */
+    /** Write one immutable partition manifest; returns its path. Every
+      * m-file name carries its commit's token, so no other writer can
+      * take it: the file is created in place (`overwrite = false`), with
+      * no tmp and no rename — only the top-manifest publish arbitrates.
+      * A crashed commit's m-file is an unreferenced orphan that
+      * [[vacuumOrphans]] reclaims past its horizon. */
     private def writePartManifest(root: String, name: String,
         entries: Seq[FileEntry]): String = {
       val mf = new HPath(mdir(root), name)
-      writeAtomic(fsFor(mf), new HPath(mdir(root), s".$name.tmp"), mf,
-        entries.sortBy(_.path).map(fmtEntry))
+      val out = fsFor(mf).create(mf, false)
+      try out.write(entries.sortBy(_.path).map(fmtEntry)
+        .mkString("", "\n", "\n").getBytes(UTF_8))
+      finally out.close()
       mf.toString
     }
 
@@ -974,15 +1024,17 @@ object WriteOps {
     // delete path; Delta deletion vectors / Hudi's merge-on-read log,
     // key-granular variant): a delete is a METADATA commit — parent
     // pointers carried verbatim, zero data files touched — plus one
-    // small (key, pt_year) sidecar of still-pending tombstones. Reads
-    // of that version drop tombstoned rows as they decode (the
-    // connector's reader loads the sidecar once per executor JVM —
+    // small dir of (key, pt_year) tombstones, written once by the
+    // tasks and published by pointer: the version's deletion vector
+    // ([[Dv]]) is its parent's list of tombstone dirs plus the new
+    // one. Reads of that version drop tombstoned rows as they decode
+    // (the connector's reader loads each dir once per executor JVM —
     // pending deletes stay bounded by rewrite cadence), so a
     // GDPR-style delete of a million keys from a 100 TB table costs
-    // O(deleted keys), not a partition rewrite. Any later commit that REWRITES a partition
-    // physically purges it (its fresh files come from DV-applied
-    // reads) and drops that partition's tombstones from the carried
-    // sidecar — rewrites SUPERSEDE pending deletes, so a rewritten
+    // O(deleted keys), not a partition rewrite. Any later commit that
+    // REWRITES a partition physically purges it (its fresh files come
+    // from DV-applied reads) and drops that year from the carried
+    // entries — rewrites SUPERSEDE pending deletes, so a rewritten
     // partition's rows are exactly what its files say. Time travel,
     // CDF (delete rows appear in the feed via the dv-aware
     // changedYears + DV-applied reads), optimize, and vacuum all
@@ -993,48 +1045,42 @@ object WriteOps {
 
     private def dvRoot(root: String): HPath = new HPath(root, "_dv")
 
-    /** Age past which an UNREFERENCED sidecar dir is presumed a race
+    /** Age past which an UNREFERENCED tombstone dir is presumed a race
       * loser's leftover rather than an in-flight commit (vacuum's
       * orphan horizon). private[graft] var so the vacuum spec can
       * shrink it to exercise the orphan-reclaim path. */
     private[graft] var dvOrphanHorizonMs: Long = 60L * 60 * 1000
 
-    /** A FRESH, token-uniquified sidecar dir for version v. The token
-      * matters for the commit race: the sidecar is written BEFORE the
-      * manifest rename that arbitrates the version — with a
-      * deterministic `_dv/v$v` path, a racing writer that LOSES the
-      * manifest CAS could still have overwritten the winner's
-      * already-committed sidecar bytes (data files dodge this with
-      * UUID staging names; sidecars get the same treatment here). A
-      * loser's orphan dir is garbage-collected by vacuum. Token-unique
-      * paths also make the executor-side [[graft.sources.DvCache]]
-      * sound: a sidecar path, once committed, never holds different
-      * bytes. */
-    private def freshDvPath(root: String, v: Int): String =
-      new HPath(dvRoot(root),
-        s"v$v-${java.util.UUID.randomUUID().toString.take(8)}").toString
+    /** A FRESH, token-uniquified tombstone dir for version v. The
+      * token matters for the commit race: the tasks write the dir
+      * BEFORE the manifest rename that arbitrates the version, so a
+      * racing writer that LOSES never shares a dir with the winner; the
+      * loser's dir is an unreferenced orphan that vacuum reclaims past
+      * [[dvOrphanHorizonMs]]. Token-unique paths also make the
+      * executor-side [[graft.sources.DvCache]] sound: a dir, once
+      * committed, never holds different bytes. */
+    private[graft] def freshDvPath(root: String, v: Int): String =
+      new HPath(dvRoot(root), s"v$v-${token()}").toString
 
-    /** The version's pending-delete sidecar:
-      * (sidecar dir, key column, years with pending tombstones). */
-    def dvOf(root: String, v: Int): Option[(String, String, Seq[Int])] =
-      top(root, v).dv
+    /** The version's pending deletion vector, if any. */
+    def dvOf(root: String, v: Int): Option[Dv] = top(root, v).dv
 
-    /** The version's pending-tombstone sidecar size in bytes (0 when no
-      * deletes are pending) — the OPTIMIZE purge-debt telemetry, read
-      * from one FS content summary of the sidecar dir. */
+    /** The version's pending-tombstone bytes (0 when no deletes are
+      * pending) — the OPTIMIZE purge-debt telemetry, one FS content
+      * summary per tombstone dir. */
     def pendingDvBytes(root: String, v: Int): Long =
-      dvOf(root, v).map { case (p, _, _) =>
-        val hp = new HPath(p)
+      dvOf(root, v).toSeq.flatMap(_.entries).map { e =>
+        val hp = new HPath(e.dir)
         val fs = fsFor(hp)
         if (fs.exists(hp)) fs.getContentSummary(hp).getLength else 0L
-      }.getOrElse(0L)
+      }.sum
 
     /** Operator-facing table telemetry (the `DESCRIBE DETAIL` analog):
       * version, live file count/bytes (from manifest metadata alone),
-      * partition count, and the pending deletion-vector debt — sidecar
-      * bytes and tombstoned partitions — so deployments SEE when purge
-      * cadence (OPTIMIZE) is falling behind: every executor reading a
-      * tombstoned version holds the whole sidecar in memory. */
+      * partition count, and the pending deletion-vector debt —
+      * tombstone bytes and tombstoned partitions — so deployments SEE
+      * when purge cadence (OPTIMIZE) is falling behind: every executor
+      * reading a tombstoned version holds its tombstones in memory. */
     def describe(root: String, v: Int): Map[String, String] = {
       val es = entries(root, v)
       val dv = dvOf(root, v)
@@ -1045,66 +1091,62 @@ object WriteOps {
         "num_partitions" -> pointers(root, v).size.toString,
         "pending_dv_bytes" -> pendingDvBytes(root, v).toString,
         "pending_dv_years" ->
-          dv.map(_._3.mkString(",")).getOrElse(""),
+          dv.map(_.years.mkString(",")).getOrElse(""),
         "commit_ts" -> commitTs(root, v).map(_.toString).getOrElse(""))
     }
 
     /** MERGE-ON-READ DELETE: commit `doomed` (columns: keyCol, pt_year)
       * as version v's deletion vector — parent data pointers carried
       * VERBATIM (no file moves, no rewrites; spec pins mtimes and the
-      * identical file list), tombstones unioned with the parent's
-      * still-pending set. Cost: O(pending tombstones) sidecar write +
-      * one manifest. */
+      * identical file list), one fresh tombstone dir appended to the
+      * parent's still-pending entries. Cost: one job writing
+      * O(deleted keys) + one manifest; the pending set is never read. */
     def commitDelete(s: SparkSession, root: String, v: Int,
         keyCol: String, doomed: DataFrame): Unit = {
       require(v > 0, "a delete needs a parent version")
       val parent = preflight(root, v)
-      // `__below`: the ts-chain value of THIS delete commit — a
-      // tombstone kills only rows of files born strictly before it,
-      // so a later (or same-commit, merge-on-read) re-insert of the
-      // key lives. Legacy sidecars lacking the column upgrade to the
-      // current ts on first union: every file existing today was born
-      // before now (appends into DV-pending partitions are refused),
-      // so the semantics are unchanged and the MAX sentinel never
-      // leaks forward.
+      dvKeyCheck(parent, keyCol, "delete")
+      val files = graft.sources.SnapshotWriteJob.writeTombstones(s, root,
+        freshDvPath(root, v),
+        doomed.select(col(keyCol),
+          col("pt_year").cast("int").as("pt_year")))
+      require(files.nonEmpty, "an empty delete commits nothing")
       val ts = drawTs(parent)
-      val dv = writeDv(s, root, v, parent, keyCol, doomed, ts, "delete")
-      require(dv._3.nonEmpty, "an empty delete commits nothing")
-      publish(root, parent.next(v, ts).copy(dv = Some(dv)))
+      publish(root, parent.next(v, ts).copy(
+        dv = Some(addTombstones(parent, keyCol, files, ts))))
     }
 
-    /** Version v's pending-tombstone sidecar: `doomed`'s (key, pt_year)
-      * rows stamped `__below = ts`, unioned with the parent's pending
-      * set (legacy rows lacking `__below` upgrade to ts — sound: every
-      * existing file was born before this commit). The one sidecar
-      * writer of [[commitDelete]] and [[commitDelta]], ONE job (r18
-      * fusion; the r17 shape ran distinct→checkpoint, an emptiness
-      * probe, a second distinct→checkpoint, the write, and a
-      * years-collect): a single distinct over the union collapses
-      * duplicates and fresh-vs-prior overlaps alike, and the
-      * tombstoned years ride the same action as an observed
-      * collect_set. No localCheckpoint: nothing depends on
-      * unreplicated executor blocks. Returns (sidecar dir, key column,
-      * years). */
-    private def writeDv(s: SparkSession, root: String, v: Int,
-        parent: Top, keyCol: String, doomed: DataFrame, ts: Long,
-        what: String): (String, String, Seq[Int]) = {
-      val fresh = doomed.select(col(keyCol), col("pt_year"))
-        .withColumn("__below", lit(ts))
-      val all = parent.dv.fold(fresh) { case (p, k, _) =>
-        require(k == keyCol,
-          s"pending deletion vector keys on '$k'; a '$keyCol' $what " +
-          "must wait for a rewrite to purge it")
-        val prior = s.read.parquet(p)
-        fresh.unionByName(
-          if (prior.columns.contains("__below")) prior
-          else prior.withColumn("__below", lit(ts)))
-      }.distinct()
-      val obs = new org.apache.spark.sql.Observation()
-      val dvPath = freshDvPath(root, v)
-      all.observe(obs, collect_set(col("pt_year")).as("years"))
-        .coalesce(1).write.mode(SaveMode.Overwrite).parquet(dvPath)
-      (dvPath, keyCol, obs.get("years").asInstanceOf[Seq[Int]].sorted)
+    /** A new tombstone batch must key on the pending vector's column. */
+    private def dvKeyCheck(parent: Top, keyCol: String,
+        what: String): Unit =
+      parent.dv.foreach(d => require(d.key == keyCol,
+        s"pending deletion vector keys on '${d.key}'; a '$keyCol' " +
+        s"$what must wait for a rewrite to purge it"))
+
+    /** Version v's deletion vector: the parent's entries plus ONE new
+      * entry, stamped `below = ts`, for the dir holding `files` (each a
+      * task's (path, years tombstoned)). The files were written once by
+      * their tasks and are never opened here; one listing of the dir
+      * deletes what no committed task wrote (a crashed attempt's
+      * leftover), so readers load exactly the committed files. Legacy
+      * entries (`below = Long.MaxValue`) take `ts`: every file that
+      * exists now was born before this commit, so they kill what they
+      * killed, and the fresh files this commit appends stay alive —
+      * which keeps every entry birth-aware for [[appendPreflight]]. */
+    private def addTombstones(parent: Top, keyCol: String,
+        files: Seq[(String, Seq[Int])], ts: Long): Dv = {
+      dvKeyCheck(parent, keyCol, "row-level delta")
+      val dirs = files.map(f => new HPath(f._1).getParent).distinct
+      require(dirs.size == 1, s"tombstone files span dirs $dirs")
+      val fs = fsFor(dirs.head)
+      val kept = files.map(f => fs.makeQualified(new HPath(f._1))).toSet
+      fs.listStatus(dirs.head).map(_.getPath)
+        .filterNot(kept).foreach(fs.delete(_, false))
+      val fresh = DvEntry(dirs.head.toString, ts,
+        files.flatMap(_._2).distinct.sorted)
+      val prior = parent.dv.toSeq.flatMap(_.entries).map(e =>
+        if (e.below == Long.MaxValue) e.copy(below = ts) else e)
+      Dv(keyCol, prior :+ fresh)
     }
 
     /** Field-metadata key recording a column's PREVIOUS physical
@@ -1127,9 +1169,12 @@ object WriteOps {
     /** Field-metadata key (anchored on pt_year like [[ReservedKey]])
       * naming the table's unique row-identity column — declared via
       * `CREATE TABLE ... TBLPROPERTIES ('rowKey' = '<col>')`. A table
-      * WITH a rowKey runs SQL UPDATE / MERGE / non-metadata DELETE as
-      * MERGE-ON-READ row deltas (tombstone + append, see
-      * [[commitDelta]]); without one they stay group copy-on-write. */
+      * WITH a rowKey runs SQL UPDATE / MERGE and every DELETE whose
+      * filters do not all bound pt_year as MERGE-ON-READ row deltas
+      * (tombstone + append, see [[commitDelta]]); a DELETE bounded by
+      * pt_year alone drops partitions ([[graft.sources
+      * .SnapshotSourceTable.canDeleteWhere]]). Without a rowKey they
+      * stay group copy-on-write. */
     private[graft] val RowKeyKey = "graft.rowKey"
 
     /** The declared row-identity column, when the table has one. */
@@ -1395,8 +1440,8 @@ object WriteOps {
       require(carriedFiles.keySet.subsetOf(touched.toSet),
         "carried file entries must belong to touched partitions")
       if (carriedFiles.nonEmpty)
-        parent.dv.foreach { case (_, _, dvYears) =>
-          val hit = dvYears.toSet.intersect(carriedFiles.keySet)
+        parent.dv.foreach { dv =>
+          val hit = dv.years.toSet.intersect(carriedFiles.keySet)
           require(hit.isEmpty,
             s"partitions ${hit.mkString(",")} hold pending tombstones " +
             "— a partial (file-granular) rewrite there would purge " +
@@ -1414,7 +1459,7 @@ object WriteOps {
       // never share a file below the top-manifest publish
       val mtok = token()
       publish(root, parent.next(v, ts).copy(schema = Some(schema),
-        txn = txn, dv = dvAfterRewrite(s, root, v, parent, touched),
+        txn = txn, dv = dvAfterRewrite(parent, touched),
         pointers = mergePointers(root, parent.pointers, touched.toSet,
           addsOf(staged, ts, carriedFiles),
           y => s"m_v${v}_y${y}_$mtok.txt")))
@@ -1423,23 +1468,12 @@ object WriteOps {
     /** Deletion-vector carry/purge for a commit REWRITING `touched`
       * partitions: a rewritten partition's fresh files come from
       * DV-applied reads (or deliberately re-introduce rows), so its
-      * tombstones drop — rewrites supersede pending deletes; untouched
-      * partitions' tombstones carry (shared by [[commit]] and
-      * [[commitReplaceEntries]]). */
-    private def dvAfterRewrite(s: SparkSession, root: String, v: Int,
-        parent: Top, touched: Seq[Int]): Option[(String, String, Seq[Int])] =
-      parent.dv.flatMap { case (p, k, years) =>
-        val remaining = years.filterNot(touched.contains)
-        if (remaining.isEmpty) None
-        else if (remaining == years) parent.dv
-        else {
-          val np = freshDvPath(root, v)
-          s.read.parquet(p)
-            .filter(col("pt_year").isin(remaining.map(Integer.valueOf): _*))
-            .coalesce(1).write.mode(SaveMode.Overwrite).parquet(np)
-          Some((np, k, remaining))
-        }
-      }
+      * years drop from every entry — rewrites supersede pending
+      * deletes; untouched partitions' entries carry by pointer (shared
+      * by [[commit]] and [[commitReplaceEntries]]). Metadata only: no
+      * tombstone dir is read or written. */
+    private def dvAfterRewrite(parent: Top, touched: Seq[Int]): Option[Dv] =
+      parent.dv.flatMap(_.without(touched.toSet))
 
     /** GROUP-REPLACE commit — the write half of the SQL row-level
       * operations (UPDATE / MERGE / group-based DELETE over the DSv2
@@ -1461,8 +1495,8 @@ object WriteOps {
       * spec-pinned), alongside the freshly staged replacement files.
       * Keys must be replaced partitions: carrying into an
       * append-shaped partition would duplicate its parent entries. */
-    private[graft] def commitReplaceEntries(s: SparkSession,
-        root: String, v: Int, staged: Seq[(Int, Seq[FileEntry])],
+    private[graft] def commitReplaceEntries(root: String, v: Int,
+        staged: Seq[(Int, Seq[FileEntry])],
         replaced: Seq[Int],
         carried: Map[Int, Seq[FileEntry]] = Map.empty): Unit = {
       require(v > 0, "a group-replace needs a parent version")
@@ -1472,8 +1506,8 @@ object WriteOps {
       val appendYears =
         staged.collect { case (y, es) if es.nonEmpty => y }
           .filterNot(replaced.contains)
-      parent.dv.foreach { case (_, _, dvYears) =>
-        val hit = dvYears.intersect(appendYears)
+      parent.dv.foreach { dv =>
+        val hit = dv.years.intersect(appendYears)
         require(hit.isEmpty,
           s"partitions ${hit.mkString(",")} hold pending deletion-" +
           "vector tombstones; inserting there could silently lose " +
@@ -1486,7 +1520,7 @@ object WriteOps {
       val ts = drawTs(parent)
       val mtok = token()
       publish(root, parent.next(v, ts).copy(
-        dv = dvAfterRewrite(s, root, v, parent, replaced),
+        dv = dvAfterRewrite(parent, replaced),
         pointers = mergePointers(root, parent.pointers, replaced.toSet,
           addsOf(staged, ts, carried), y => s"m_v${v}_y${y}_$mtok.txt")))
     }
@@ -1504,7 +1538,7 @@ object WriteOps {
       * REFUSED loudly: the key-granular DV filter would silently
       * kill a re-inserted tombstoned key — purge first (OPTIMIZE), the
       * same refusal WAP staging makes. `overTombstones` lifts the
-      * refusal when the sidecar is birth-aware (see [[appendPreflight]])
+      * refusal when the tombstones are birth-aware (see [[appendPreflight]])
       * — the merge-on-read tables' SQL append path. */
     def commitAppend(s: SparkSession, root: String, v: Int,
         batch: DataFrame, txn: Option[(String, Long)] = None,
@@ -1554,36 +1588,35 @@ object WriteOps {
       * SupportsDelta operation — SQL UPDATE / MERGE / DELETE on a
       * table declaring a `rowKey`): version v = parent pointers with
       *
-      *  - removed rows as TOMBSTONES unioned into the deletion-vector
-      *    sidecar with `__below = ts` (this commit's ts-chain value);
+      *  - removed rows as TOMBSTONES: `tombstones` are the files the
+      *    tasks already wrote into one fresh dir (each with the years it
+      *    tombstoned), published as a new [[DvEntry]] with
+      *    `below = ts` (this commit's ts-chain value) — never read
+      *    back, never rewritten;
       *  - new/updated rows as TRUE-APPEND entries with `born = ts`.
       *
-      * Equality of `born` and `__below` is the whole trick: the
+      * Equality of `born` and `below` is the whole trick: the
       * tombstone half of an UPDATE kills the key's OLD rows (their
       * files were born strictly earlier) while the re-inserted row in
-      * this commit's own files is exempt (`__below > born` is false) —
+      * this commit's own files is exempt (`below > born` is false) —
       * so a 10-row UPDATE to a 10 GB partition costs a 10-row append
-      * plus a sidecar write, never a partition rewrite. The group-CoW
-      * twin remains the compaction-time path (OPTIMIZE purges the
-      * debt physically). Data pointers carry VERBATIM — untouched
-      * files keep their mtimes (spec-pinned). */
-    private[graft] def commitDelta(s: SparkSession, root: String,
-        v: Int, keyCol: String, staged: Seq[(Int, Seq[FileEntry])],
-        dvStaged: Seq[String],
+      * plus a 10-row tombstone file, never a partition rewrite. The
+      * group-CoW twin remains the compaction-time path (OPTIMIZE
+      * purges the debt physically). Data pointers carry VERBATIM —
+      * untouched files keep their mtimes (spec-pinned). */
+    private[graft] def commitDelta(root: String, v: Int, keyCol: String,
+        staged: Seq[(Int, Seq[FileEntry])],
+        tombstones: Seq[(String, Seq[Int])],
         writeSchema: org.apache.spark.sql.types.StructType): Unit = {
       require(v > 0, "a row-level delta needs a parent version")
       val parent = preflight(root, v)
       val ts = drawTs(parent)
-
-      // tombstones: the staged (key, pt_year) task files join the
-      // parent's pending set. A staged dv file is created LAZILY on its
-      // first tombstone (SnapshotDeltaWriter.delete), so a non-empty
-      // `dvStaged` implies a non-empty tombstone set — no
-      // emptiness-probe job; none staged, the parent's set carries.
+      // a task's tombstone file is created on its first tombstone
+      // (SnapshotDeltaWriter.delete), so none means none deleted and
+      // the parent's vector carries
       val dv =
-        if (dvStaged.isEmpty) parent.dv
-        else Some(writeDv(s, root, v, parent, keyCol,
-          s.read.parquet(dvStaged: _*), ts, "row-level delta"))
+        if (tombstones.isEmpty) parent.dv
+        else Some(addTombstones(parent, keyCol, tombstones, ts))
 
       // fresh data files append (parent entries ++ fresh, born = ts)
       val adds = addsOf(staged, ts)
@@ -1598,39 +1631,29 @@ object WriteOps {
     /** Pre-flight for an APPEND of `touched` partitions as version v
       * (shared by commitAppend and the native streaming sink): the
       * version race ([[preflight]]), and no touched partition holds
-      * pending tombstones — unless `overTombstones` and the sidecar is
-      * birth-aware. Returns the parent's top manifest. */
+      * pending tombstones — unless `overTombstones` and every entry
+      * covering a touched partition is birth-aware (stamped `below`;
+      * every entry written since the list format is). Returns the
+      * parent's top manifest. */
     private[graft] def appendPreflight(root: String, v: Int,
         touched: Seq[Int], overTombstones: Boolean = false): Top = {
       require(v > 0, "append needs an initialized table (v0)")
       val parent = preflight(root, v)
-      parent.dv.foreach { case (p, _, years) =>
-        // a birth-aware sidecar kills only rows of files born before
-        // its tombstones, and the appended files are born after every
-        // one of them — so the append is sound; a legacy sidecar
-        // (no `__below`) would kill the re-inserted keys
-        val hit = years.intersect(touched)
-        require(hit.isEmpty || (overTombstones && dvBirthAware(p)),
+      parent.dv.foreach { dv =>
+        // a birth-aware entry kills only rows of files born before its
+        // commit, and the appended files are born after every one of
+        // them — so the append is sound; an unstamped legacy entry
+        // would kill the re-inserted keys
+        val hit = dv.years.intersect(touched)
+        val aware = dv.entries.forall(e =>
+          e.below != Long.MaxValue || e.years.intersect(touched).isEmpty)
+        require(hit.isEmpty || (overTombstones && aware),
           s"partitions ${hit.mkString(",")} hold pending deletion-" +
           "vector tombstones; an append there could silently lose " +
           "re-inserted keys to the tombstone filter — run " +
           "optimize(purgeTombstoned) first")
       }
       parent
-    }
-
-    /** Whether the sidecar's tombstones carry `__below` (every sidecar
-      * written since births were recorded) — one footer read. */
-    private def dvBirthAware(dvPath: String): Boolean = {
-      val dir = new HPath(dvPath)
-      fsFor(dir).listStatus(dir).map(_.getPath)
-        .find(_.getName.endsWith(".parquet")).exists { f =>
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f,
-              hconf()))
-          try r.getFooter.getFileMetaData.getSchema.containsField("__below")
-          finally r.close()
-        }
     }
 
     /** The version's commit wall-clock (epoch millis, recorded in its
@@ -1808,13 +1831,13 @@ object WriteOps {
       // rewrite targets = fragmented partitions ∪ (by default) the
       // partitions holding pending deletion-vector tombstones: OPTIMIZE
       // is the natural purge vehicle — the rewrite reads DV-applied
-      // rows, so tombstones turn physical and drop from the carried
-      // sidecar at zero extra cost. The data-UNCHANGED contract holds
+      // rows, so tombstones turn physical and their years drop from the
+      // carried entries at zero extra cost. The data-UNCHANGED contract holds
       // unchanged: visible rows are identical before/after (the DV was
       // already applied at read), so the change feed across the
       // optimize commit stays empty.
       val tombstoned =
-        if (purgeTombstoned) parent.dv.map(_._3).getOrElse(Seq.empty)
+        if (purgeTombstoned) parent.dv.map(_.years).getOrElse(Seq.empty)
         else Seq.empty
       val fragmented0 = (byYear.collect {
         case (y, fs) if fs.size > maxFilesPerPartition => y
@@ -1898,7 +1921,7 @@ object WriteOps {
     }
 
     /** Reclaim versions older than the newest `retain`. ROOT-SCOPED by
-      * contract: only m-files, data files, and DV sidecars physically
+      * contract: only m-files, data files, and tombstone dirs physically
       * under `root` are ever deleted — cross-root pointers (a shallow
       * clone referencing its source's files) are skipped, never
       * reclaimed by the clone; the source's own vacuum owns them (and,
@@ -1906,7 +1929,7 @@ object WriteOps {
       * source's retention — the documented Delta-clone hazard).
       * `dryRun` (Delta's VACUUM ... DRY RUN): compute and COUNT every
       * path this retention would reclaim — data files, m-files, top
-      * manifests, DV sidecars — deleting nothing. Returns the count
+      * manifests, tombstone dirs — deleting nothing. Returns the count
       * either way (what was, or would be, reclaimed). */
     def vacuum(root: String, retain: Int,
         dryRun: Boolean = false): Int = {
@@ -1922,21 +1945,24 @@ object WriteOps {
       val keptPtrs = kept.flatMap(tops(_).pointers.values).toSet
       val keepFiles =
         readPartManifests(keptPtrs.toSeq).flatten.map(_.path).toSet
-      // deletion-vector sidecars reference-count exactly like m-files:
-      // carried dv lines share the path, so an expired version's
-      // sidecar dies only when no retained version still points at it.
-      // The reclaim set is LIST-based (everything under _dv minus the
-      // retained versions' sidecars), so a loser of the sidecar-token
-      // race (commitDelete writes token-uniquified dirs) is garbage-
-      // collected here even though no manifest ever referenced it.
+      // tombstone dirs reference-count exactly like m-files: carried
+      // deletion vectors list the same dirs, so a dir dies only when
+      // no retained version still lists it. The reclaim set is
+      // LIST-based (everything under _dv minus the retained versions'
+      // dirs), so a commit-race loser's dir (token-uniquified) is
+      // garbage-collected here even though no manifest ever
+      // referenced it.
       val dvDir = dvRoot(root)
       val dvFs = fsFor(dvDir)
       // listStatus returns FULLY-QUALIFIED paths (file:/...); manifest
       // lines record the caller's root form — qualify both sides
       def qual(p: String): String =
         dvFs.makeQualified(new HPath(p)).toString
-      val keptDvs = kept.flatMap(tops(_).dv.map(_._1)).map(qual).toSet
-      val refDvs = vs.flatMap(tops(_).dv.map(_._1)).map(qual).toSet
+      def dirs(vs: Seq[Int]): Set[String] =
+        vs.flatMap(tops(_).dv.toSeq.flatMap(_.entries))
+          .map(e => qual(e.dir)).toSet
+      val keptDvs = dirs(kept)
+      val refDvs = dirs(vs)
       if (dvFs.exists(dvDir))
         dvFs.listStatus(dvDir).toSeq.foreach { st =>
           val p = st.getPath.toString
@@ -2105,13 +2131,14 @@ object WriteOps {
     def changedYears(root: String, vFrom: Int, vTo: Int): Seq[Int] = {
       val a = pointers(root, vFrom)
       val b = pointers(root, vTo)
-      // deletion vectors change rows without changing pointers: when
-      // the dv lines differ, the union of both sides' pending-years is
-      // a conservative superset of where rows (dis)appeared
-      val dvYears =
-        if (dvOf(root, vFrom) == dvOf(root, vTo)) Set.empty[Int]
-        else (dvOf(root, vFrom).toSeq ++ dvOf(root, vTo).toSeq)
-          .flatMap(_._3).toSet
+      // deletion vectors change rows without changing pointers: a year
+      // whose covering tombstone entries differ between the two sides
+      // is where rows may have (dis)appeared
+      def cover(v: Int): Set[(Int, String, Long)] =
+        dvOf(root, v).toSeq.flatMap(_.entries)
+          .flatMap(e => e.years.map((_, e.dir, e.below))).toSet
+      val (ca, cb) = (cover(vFrom), cover(vTo))
+      val dvYears = ((ca diff cb) ++ (cb diff ca)).map(_._1)
       // carry-over copies pointers verbatim and fresh m-files are
       // version-namespaced, so a partition changed iff its pointer did
       ((a.keySet ++ b.keySet).filter(y => a.get(y) != b.get(y)) ++
@@ -2167,13 +2194,13 @@ object WriteOps {
       require(vs.nonEmpty, "stageCommit needs a committed base version")
       val parent = top(root, vs.max)
       // a staged rewrite of a tombstoned partition would either purge
-      // (needs the sidecar rewrite commit() runs) or resurrect deleted
+      // (needs the deletion-vector update commit() runs) or resurrect deleted
       // rows on publish — refuse loudly; rewrite through commit() or
       // stage elsewhere. The parent's pending deletion vector rides the
       // branch verbatim (disjoint from the staged partitions), so a
       // publish cannot resurrect deleted rows either.
-      parent.dv.foreach { case (_, _, years) =>
-        val hit = years.intersect(touched)
+      parent.dv.foreach { dv =>
+        val hit = dv.years.intersect(touched)
         require(hit.isEmpty,
           s"partitions ${hit.mkString(",")} hold pending deletion-vector " +
           "tombstones; purge them with a rewrite commit before staging " +
@@ -2852,7 +2879,7 @@ object WriteOps {
     * rows and the (untranslatable-predicate) DELETE as tombstones
     * alone — parent data files carry VERBATIM (SqlUpdateMorSpec pins
     * their mtimes), the commit costs O(delta), and reads apply the
-    * birth-aware sidecar. Oracled against the plain-SQL equivalent;
+    * birth-aware tombstones. Oracled against the plain-SQL equivalent;
     * the CoW twin gate (`sql_update_snapshot`) answers the same
     * queries through partition rewrites. Fresh lineage per
     * invocation. */
@@ -3921,10 +3948,10 @@ object WriteOps {
 
     // DELETION VECTORS — merge-on-read deletes (see SnapshotTable's DV
     // block): v1 deletes the 1996 ≡3-mod-10 keys as a METADATA commit
-    // (parent pointers verbatim + one small tombstone sidecar — zero
+    // (parent pointers verbatim + one small tombstone dir — zero
     // data files moved, DeleteVectorSpec pins the mtimes), v2 rewrites
     // the 1996 partition and thereby PURGES it physically (fresh files
-    // come from the DV-applied read; the carried sidecar drops 1996).
+    // come from the DV-applied read; the carried entry drops 1996).
     // The oracle proves logical == physical == the plain anti-filter,
     // and that v0 time-travels intact. At 100 TB this is the GDPR
     // path: deleting a million keys costs O(keys) metadata now and a

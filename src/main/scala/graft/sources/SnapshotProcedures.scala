@@ -158,7 +158,7 @@ object SnapshotProcedures {
       extends MaintenanceProcedure(base) {
     override def name(): String = "vacuum"
     override def description(): String =
-      "reclaim manifests, data files and DV sidecars of versions " +
+      "reclaim manifests, data files and tombstone dirs of versions " +
       "older than the newest `retain`"
     override def parameters(): Array[ProcedureParameter] = Array(
       param("table", StringType),

@@ -59,7 +59,7 @@ private[sources] class SnapshotReaderFactory(
     out: StructType,
     logical: StructType,
     chains: Array[Array[Int]],
-    dv: Option[(String, String)]) extends PartitionReaderFactory {
+    dv: Option[SnapshotTable.Dv]) extends PartitionReaderFactory {
 
   private val aliased = chains.exists(_.length > 1)
   private val passThrough = dv.isEmpty && !aliased
@@ -99,11 +99,11 @@ private[sources] class SnapshotReaderFactory(
       private val born = p.asInstanceOf[SnapshotFilePartition].born
       private val tombstoned: InternalRow => Boolean = dv match {
         case None => _ => false
-        case Some((path, keyCol)) =>
-          val ki = logical.fieldIndex(keyCol)
+        case Some(d) =>
+          val ki = logical.fieldIndex(d.key)
           val yi = logical.fieldIndex("pt_year")
           val keyType = logical(ki).dataType
-          val doomed = DvCache.tombstones(path, keyCol, keyType match {
+          val doomed = DvCache.tombstones(d, keyType match {
             case StringType => 'S'
             case DoubleType | FloatType => 'D'
             case _ => 'L'
@@ -141,14 +141,14 @@ private[sources] class SnapshotReaderFactory(
 private[sources] object SnapshotReaderFactory {
   /** The reader of `out` (the scan's output columns) under the read
     * version's recorded `table` schema: alias chains come from its
-    * field metadata, the DV key's type from its fields. `dv` = (sidecar
-    * dir, key column) when tombstones apply. `filters` reach
+    * field metadata, the DV key's type from its fields. `dv` is the
+    * version's deletion vector when tombstones apply. `filters` reach
     * `ParquetFilters` for row-group skipping only — every one stays
     * residual in Spark, so they never change results. */
   def apply(s: SparkSession, out: StructType, table: StructType,
-      dv: Option[(String, String)],
+      dv: Option[SnapshotTable.Dv],
       filters: Array[Filter]): SnapshotReaderFactory = {
-    val extras = dv.toSeq.flatMap { case (_, k) => Seq(k, "pt_year") }
+    val extras = dv.toSeq.flatMap(d => Seq(d.key, "pt_year"))
       .distinct.filterNot(out.fieldNames.contains)
       .map(n => table.find(_.name == n).getOrElse(StructField(n,
         if (n == "pt_year") IntegerType else LongType)))

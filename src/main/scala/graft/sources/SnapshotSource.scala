@@ -228,7 +228,7 @@ class SnapshotCatalog
       require(Seq(LongType, IntegerType, StringType, DoubleType)
           .contains(f.dataType),
         s"rowKey '$k' must be BIGINT, INT, STRING, or DOUBLE (got " +
-        s"${f.dataType.sql}) — the tombstone sidecar keys on it")
+        s"${f.dataType.sql}) — the tombstones key on it")
       StructType(schema.fields.map { sf =>
         if (sf.name != "pt_year") sf
         else sf.copy(metadata =
@@ -365,7 +365,7 @@ class SnapshotCatalog
     // would resurrect stale values, so it refuses).
     val reserved = SnapshotTable.reservedNames(parent)
     val dvKey: Option[String] =
-      SnapshotTable.dvOf(root, head).map(_._2)
+      SnapshotTable.dvOf(root, head).map(_.key)
     val renames = changes.collect {
       case rn: TableChange.RenameColumn =>
         require(rn.fieldNames.length == 1,
@@ -530,24 +530,25 @@ private[sources] class SnapshotSourceTable(tableSchema: StructType,
   def this(tableSchema: StructType, root: String, version: Option[Int]) =
     this(tableSchema, root, version.map(SnapshotTable.top(root, _)))
 
-  /** SQL `UPDATE` / `MERGE INTO` (and DELETE with predicates the
-    * metadata path can't translate) — the GROUP-BASED row-level
-    * operation: Spark rewrites the command into a ReplaceData plan
-    * over [[SnapshotRowLevelOperation]]'s scan (whole pt_year
-    * partitions, runtime-group-filtered down to those actually
-    * holding matches) and writes the replacement rows back through
-    * the executor-side parquet writers; the commit swaps exactly the
-    * scanned partitions' pointers. Translatable DELETEs keep routing
-    * through [[deleteWhere]] (Spark's OptimizeMetadataOnlyDeleteFromTable
-    * converts them back — one partition-scoped CoW commit, no
-    * replacement write job). */
+  /** SQL `UPDATE` / `MERGE INTO` / `DELETE` as a row-level operation.
+    * Without a rowKey it is GROUP-BASED: Spark rewrites the command
+    * into a ReplaceData plan over [[SnapshotRowLevelOperation]]'s scan
+    * (whole pt_year partitions, runtime-group-filtered down to those
+    * actually holding matches) and writes the replacement rows back
+    * through the executor-side parquet writers; the commit swaps
+    * exactly the scanned partitions' pointers. With a rowKey it is
+    * MERGE-ON-READ ([[SnapshotDeltaOperation]]). A DELETE that
+    * [[canDeleteWhere]] accepts routes through [[deleteWhere]]
+    * instead (Spark's OptimizeMetadataOnlyDeleteFromTable converts it
+    * back — one partition-scoped CoW commit, no replacement write
+    * job). */
   override def newRowLevelOperationBuilder(
       info: RowLevelOperationInfo): RowLevelOperationBuilder = {
     require(pinnedVersion.isEmpty,
       "a VERSION/TIMESTAMP AS OF table is a read-only snapshot")
     () => SnapshotTable.rowKeyOf(tableSchema) match {
       // a declared rowKey upgrades row-level commands to MERGE-ON-READ
-      // deltas: removed rows tombstone into the DV sidecar, new rows
+      // deltas: removed rows land as tombstone files, new rows
       // true-append — a 10-row UPDATE to a 10 GB partition stops
       // rewriting the partition (SupportsDelta; group CoW remains the
       // no-rowKey default and the OPTIMIZE-time physical path)
@@ -594,9 +595,18 @@ private[sources] class SnapshotSourceTable(tableSchema: StructType,
     SnapshotTable.describe(root,
       pinnedVersion.getOrElse(SnapshotTable.versions(root).max)).asJava
 
-  /** SQL `DELETE FROM <catalog>.<table> WHERE <pred>` — FILE-granular
-    * COPY-ON-WRITE delete: three pruning layers run before any row
-    * moves, each in metadata —
+  /** Whether a SQL DELETE runs as [[deleteWhere]]: its filters must
+    * translate to columns, and on a rowKey table every filter must
+    * bound pt_year (or the DELETE has no condition). A rowKey table's
+    * other DELETEs — a key range, say — take the merge-on-read
+    * [[SnapshotDeltaOperation]] plan: a scan of the candidate files
+    * plus tombstones for the matched keys, with no data file
+    * rewritten; a whole-partition DELETE stays a pointer drop with no
+    * tombstone.
+    *
+    * SQL `DELETE FROM <catalog>.<table> WHERE <pred>` on this path is a
+    * FILE-granular COPY-ON-WRITE delete: three pruning layers run
+    * before any row moves, each in metadata —
     *
     *  1. pt_year conjuncts bound the candidate PARTITIONS
     *     ([[SnapshotFilters.yearBound]]);
@@ -616,13 +626,15 @@ private[sources] class SnapshotSourceTable(tableSchema: StructType,
     * else, so time travel serves the pre-delete state and the change
     * feed emits the deletions. Predicates must translate to source
     * filters (canDeleteWhere) — untranslatable ones fall back to the
-    * group-based row-level rewrite ([[SnapshotRowLevelOperation]]).
-    * Key-granular MERGE-ON-READ deletes (O(keys) metadata, no rewrite)
-    * stay available programmatically via commitDelete. */
+    * row-level operation ([[newRowLevelOperationBuilder]]). */
   override def canDeleteWhere(filters: Array[
       org.apache.spark.sql.sources.Filter]): Boolean =
     pinnedVersion.isEmpty &&
-      filters.forall(SnapshotFilters.toColumn(_).isDefined)
+      filters.forall(SnapshotFilters.toColumn(_).isDefined) &&
+      (SnapshotTable.rowKeyOf(tableSchema).isEmpty || filters.forall {
+        case _: org.apache.spark.sql.sources.AlwaysTrue => true
+        case f => SnapshotFilters.yearBound(f).isDefined
+      })
 
   override def deleteWhere(filters: Array[
       org.apache.spark.sql.sources.Filter]): Unit = {
@@ -657,7 +669,7 @@ private[sources] class SnapshotSourceTable(tableSchema: StructType,
     // neither touch-scans nor rewrites. Tombstoned partitions opt out
     // — they must rewrite whole so the purge stays sound.
     val preds = SnapshotFilters.statRanges(filters)
-    val dvYears = at.dv.map(_._3.toSet).getOrElse(Set.empty[Int])
+    val dvYears = at.dv.map(_.years.toSet).getOrElse(Set.empty[Int])
     val parts: Seq[(Int, Seq[SnapshotTable.FileEntry],
         Seq[SnapshotTable.FileEntry])] =
       SnapshotTable.partitionStatEntries(at.pointers, candidates).map {
@@ -972,7 +984,7 @@ private[sources] class SnapshotRowLevelOperation(root: String,
         // scan whole (a partial rewrite could not soundly purge their
         // tombstones — same opt-out as deleteWhere).
         val preds = SnapshotFilters.statRanges(pushed)
-        val dvYears = top.dv.map(_._3.toSet).getOrElse(Set.empty[Int])
+        val dvYears = top.dv.map(_.years.toSet).getOrElse(Set.empty[Int])
         val fileSets = SnapshotTable
           .partitionStatEntries(top.pointers, years.toSeq.sorted)
           .map { case (y, es) =>
@@ -1088,7 +1100,7 @@ private[sources] class SnapshotGroupScan(root: String,
   // no pushed filters: the rewrite copies every row of a matched group
   override def createReaderFactory(): PartitionReaderFactory =
     SnapshotReaderFactory(SparkSession.active, schema,
-      top.schema.getOrElse(schema), top.dv.map(d => (d._1, d._2)),
+      top.schema.getOrElse(schema), top.dv,
       Array.empty)
 }
 
@@ -1115,14 +1127,13 @@ private[sources] class SnapshotReplaceDataWrite(
       "row-level write committed without a configured scan")
     val replaced = scan.years.toSeq.sorted
     if (files.isEmpty && replaced.isEmpty) return // matched nothing
-    val s = SparkSession.active
     // the pinned-snapshot commit: a concurrent writer landing after
     // readVersion surfaces as a loud conflict — a row-level rewrite
     // computed against a stale snapshot must never silently clobber
     // the interleaved commit (retry the statement instead). Stats-
     // excluded files of the replaced partitions carry verbatim — the
     // file-granular half of the group rewrite.
-    SnapshotTable.commitReplaceEntries(s, root, op.readVersion + 1,
+    SnapshotTable.commitReplaceEntries(root, op.readVersion + 1,
       SnapshotFilesMsg.byYear(files), replaced,
       scan.carriedFor(replaced.toSet))
   }
@@ -1152,10 +1163,9 @@ private[sources] class SnapshotDynamicOverwrite(root: String,
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val files = SnapshotFilesMsg.filesOf(messages)
     if (files.isEmpty) return
-    val s = SparkSession.active
     val staged = SnapshotFilesMsg.byYear(files)
     SnapshotSourceTable.commitRetrying(root) { v =>
-      SnapshotTable.commitReplaceEntries(s, root, v, staged,
+      SnapshotTable.commitReplaceEntries(root, v, staged,
         staged.map(_._1))
     }
   }
@@ -1165,18 +1175,20 @@ private[sources] class SnapshotDynamicOverwrite(root: String,
 }
 
 /** DELTA-BASED row-level operation (SupportsDelta — SQL UPDATE /
-  * MERGE / non-metadata DELETE on a table declaring a `rowKey`):
+  * MERGE / DELETE on a table declaring a `rowKey`, every DELETE but a
+  * whole-partition one, see [[SnapshotSourceTable.canDeleteWhere]]):
   * merge-on-read. Spark rewrites the command into a WriteDelta plan
   * whose writer receives per-row DELETE/INSERT ops (updates split by
   * [[representUpdateAsDeleteAndInsert]]); removed rows land as
-  * deletion-vector tombstones, new rows as true-append files, ONE
-  * commit ([[graft.operators.WriteOps.SnapshotTable.commitDelta]]).
+  * tombstone files the tasks write once into one fresh dir, new rows
+  * as true-append files, ONE commit publishing both by pointer
+  * ([[graft.operators.WriteOps.SnapshotTable.commitDelta]]).
   * The scan is the ordinary pinned batch scan — full pushdown +
   * runtime partition filtering apply, and NOTHING is rewritten, so a
   * few-row UPDATE against a 10 GB partition reads the candidate
   * files and writes O(delta). rowId = (rowKey, pt_year): the key
   * names the row, the partition scopes the tombstone (exactly the
-  * sidecar's grain). */
+  * tombstone files' grain). */
 private[sources] class SnapshotDeltaOperation(root: String,
     tableSchema: StructType, rowKey: String,
     cmd: org.apache.spark.sql.connector.write.RowLevelOperation.Command)
@@ -1221,10 +1233,12 @@ private[sources] class SnapshotDeltaOperation(root: String,
     }
 }
 
-/** One staged tombstone file per task (key, pt_year) + the fresh
-  * insert files' finished entries — only these reach the driver. */
+/** A task's tombstone file with the years it tombstones (None when
+  * the task deleted nothing) + its fresh insert files' finished
+  * entries — only these reach the driver. */
 private[sources] case class SnapshotDeltaMsg(
-    files: Seq[(Int, SnapshotTable.FileEntry)], dvFile: Option[String])
+    files: Seq[(Int, SnapshotTable.FileEntry)],
+    tombstones: Option[(String, Seq[Int])])
     extends org.apache.spark.sql.connector.write.WriterCommitMessage
 
 private[sources] class SnapshotDeltaWrite(op: SnapshotDeltaOperation,
@@ -1233,81 +1247,60 @@ private[sources] class SnapshotDeltaWrite(op: SnapshotDeltaOperation,
     extends org.apache.spark.sql.connector.write.DeltaWrite {
   import org.apache.spark.sql.connector.write.{DeltaBatchWrite, DeltaWriterFactory, PhysicalWriteInfo, WriterCommitMessage}
 
-  // one stage dir per write: tasks land tombstone files inside,
-  // commit consumes and removes it (a failed write leaves orphans a
-  // vacuum reclaims)
-  private val dvStage = new HPath(root,
-    s"stage_dvdelta_${java.util.UUID.randomUUID().toString.take(8)}")
-    .toString
+  // one fresh tombstone dir per write: the tasks write their files in
+  // place and the commit publishes the dir by pointer. A failed write
+  // or a lost version race aborts, which deletes it; a driver that
+  // dies first leaves it an unreferenced orphan that vacuum reclaims
+  // past its horizon.
+  private val dvDir = SnapshotTable.freshDvPath(root, op.readVersion + 1)
 
   override def toBatch: DeltaBatchWrite = new DeltaBatchWrite {
     override def createBatchWriterFactory(
         info: PhysicalWriteInfo): DeltaWriterFactory =
-      new SnapshotDeltaWriterFactory(data, dv, dvStage, rowKey,
+      new SnapshotDeltaWriterFactory(data, dv, dvDir,
         s"v${op.readVersion + 1}")
 
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
       val ms = messages.collect { case m: SnapshotDeltaMsg => m }
       val files = ms.flatMap(_.files).toSeq
-      val dvFiles = ms.flatMap(_.dvFile).toSeq
-      val s = SparkSession.active
-      try {
-        if (files.nonEmpty || dvFiles.nonEmpty)
-          SnapshotTable.commitDelta(s, root, op.readVersion + 1,
-            rowKey, SnapshotFilesMsg.byYear(files), dvFiles, data.schema)
-      } finally SnapshotTable.deleteTree(dvStage)
+      val tombstones = ms.flatMap(_.tombstones).toSeq
+      if (files.nonEmpty || tombstones.nonEmpty)
+        SnapshotTable.commitDelta(root, op.readVersion + 1, rowKey,
+          SnapshotFilesMsg.byYear(files), tombstones, data.schema)
     }
 
     override def abort(messages: Array[WriterCommitMessage]): Unit = {
       SnapshotFilesMsg.delete(messages.toSeq
         .collect { case m: SnapshotDeltaMsg => m }.flatMap(_.files))
-      SnapshotTable.deleteTree(dvStage)
+      SnapshotTable.deleteTree(dvDir)
     }
   }
 }
 
 private[sources] class SnapshotDeltaWriterFactory(data: SnapshotWriteJob,
-    dv: SnapshotWriteJob, dvStage: String, rowKey: String, prefix: String)
+    dv: SnapshotWriteJob, dvDir: String, prefix: String)
     extends org.apache.spark.sql.connector.write.DeltaWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : org.apache.spark.sql.connector.write.DeltaWriter[InternalRow] =
-    new SnapshotDeltaWriter(data, dv, dvStage, rowKey, partitionId, prefix)
+    new SnapshotDeltaWriter(data, dv, dvDir, partitionId, prefix)
 }
 
 /** Executor-side delta writer: INSERTs route to a
   * [[SnapshotDataWriter]] (one parquet file per year, stats taken as
-  * rows pass); DELETEs stream their (key, pt_year) ids through the
-  * same Spark parquet writer into one staged tombstone file — nothing
-  * buffers beyond parquet's own row group, so a wide delete stays O(1)
-  * memory. */
+  * rows pass); DELETEs stream their (key, pt_year) ids into one
+  * tombstone file of the write's dir ([[SnapshotDvWriter]], built on
+  * the first delete). */
 private[sources] class SnapshotDeltaWriter(data: SnapshotWriteJob,
-    dv: SnapshotWriteJob, dvStage: String, rowKey: String,
-    partitionId: Int, prefix: String)
+    dv: SnapshotWriteJob, dvDir: String, partitionId: Int, prefix: String)
     extends org.apache.spark.sql.connector.write.DeltaWriter[InternalRow] {
-  import org.apache.spark.sql.execution.datasources.OutputWriter
 
   private val inserts = data.writer(partitionId, prefix)
-  // the tombstone reader (DvCache) decodes these key types
-  private val keyType = dv.schema(rowKey).dataType
-  private val token = java.util.UUID.randomUUID().toString.take(8)
-  private var dvOut: OutputWriter = _
-  private var dvPath: HPath = _
+  private var deletes: SnapshotDvWriter = _
 
+  // the rowId projection is (rowKey, pt_year) — the tombstone row
   override def delete(meta: InternalRow, id: InternalRow): Unit = {
-    require(!id.isNullAt(0) && !id.isNullAt(1),
-      s"row-level delete saw a NULL $rowKey/pt_year id — the rowKey " +
-      "column must be non-null on every row")
-    keyType match {
-      case LongType | IntegerType | DoubleType | StringType =>
-      case dt => throw new UnsupportedOperationException(
-        s"rowKey type ${dt.simpleString} is not tombstone-able")
-    }
-    if (dvOut == null) {
-      dvPath = new HPath(dvStage, f"t$partitionId%05d_$token.parquet")
-      dvOut = dv.open(dvPath)
-    }
-    // the rowId projection is (rowKey, pt_year) — the tombstone row
-    dvOut.write(id)
+    if (deletes == null) deletes = new SnapshotDvWriter(dv, dvDir, partitionId)
+    deletes.write(id)
   }
 
   override def insert(row: InternalRow): Unit = inserts.write(row)
@@ -1322,22 +1315,13 @@ private[sources] class SnapshotDeltaWriter(data: SnapshotWriteJob,
   }
 
   override def commit(): org.apache.spark.sql.connector.write
-      .WriterCommitMessage = {
-    val files = inserts.commit().files
-    val dvFile = Option(dvOut).map { w =>
-      w.close()
-      dvPath.toString
-    }
-    SnapshotDeltaMsg(files, dvFile)
-  }
+      .WriterCommitMessage =
+    SnapshotDeltaMsg(inserts.commit().files,
+      Option(deletes).flatMap(_.commit()))
 
   override def abort(): Unit = {
     inserts.abort()
-    if (dvOut != null) {
-      try dvOut.close() catch { case _: Exception => () }
-      try dv.fs(dvPath).delete(dvPath, false)
-      catch { case _: Exception => () }
-    }
+    if (deletes != null) deletes.abort()
   }
 
   override def close(): Unit = inserts.close()
@@ -1933,7 +1917,7 @@ private[sources] class SnapshotScan(root: String, schema: StructType,
   private def readerFactory(withDv: Boolean): PartitionReaderFactory =
     SnapshotReaderFactory(SparkSession.active, schema,
       snap.schema.getOrElse(schema),
-      if (withDv) snap.dv.map(d => (d._1, d._2)) else None, filters)
+      if (withDv) snap.dv else None, filters)
 
   // Spark plans one scan more than once (a SQL read planned its
   // partitions twice, a write's input too); a pt_year scope's partition
@@ -1976,8 +1960,8 @@ private[sources] class SnapshotScan(root: String, schema: StructType,
 
   /** Batch read = the pinned version's (VERSION AS OF / versionAsOf)
     * or the HEAD's file list, manifest-stat-pruned by the pushed
-    * ranges. A version with pending deletion vectors ships the
-    * tombstone sidecar to every reader (executor-side hash filter,
+    * ranges. A version with pending deletion vectors ships its
+    * tombstone dirs to every reader (executor-side hash filter,
     * JVM-cached) so merge-on-read deletes hold through SQL too. */
   override def toBatch: Batch = new Batch {
     override def planInputPartitions(): Array[InputPartition] = {
@@ -2266,32 +2250,63 @@ private[sources] object SnapshotSplits {
   }
 }
 
-/** Per-JVM cache of deletion-vector tombstone sets, keyed by sidecar
-  * path — executors load each sidecar once however many file
-  * partitions they read. Entries are (normalized key, pt_year).
-  * Path-keyed memoization is SOUND because committed sidecar paths are
-  * token-uniquified (`_dv/v<N>-<token>`, see SnapshotTable's
-  * freshDvPath): a path, once referenced by a manifest, never holds
-  * different bytes — a re-created table at the same root or a retried
-  * delete-commit lands at a fresh token, never a reused path. Stale
-  * entries for vacuumed sidecars are dead weight, not wrong answers
-  * (their paths are never served again). */
+/** Per-JVM cache of deletion-vector tombstones. Each tombstone dir
+  * loads once per executor JVM, however many file partitions and
+  * versions read it; a version's deletion vector is the MERGE of its
+  * entries' dirs, kept for the few most recent vectors. Dir-keyed
+  * memoization is SOUND because committed dirs are token-uniquified
+  * (`_dv/v<N>-<token>`, see SnapshotTable's freshDvPath) and written
+  * once: a dir, once referenced by a manifest, never holds different
+  * bytes — a re-created table at the same root or a retried commit
+  * lands at a fresh token, never a reused path. Stale entries for
+  * vacuumed dirs are dead weight, not wrong answers (their paths are
+  * never served again). */
 private[sources] object DvCache {
   // computeIfAbsent: the tasks that open a tombstoned version's files
-  // start together; the first loads the sidecar and the rest wait for
-  // it, so each JVM reads a sidecar once
-  private val cache =
+  // start together; the first loads a dir and the rest wait for it,
+  // so each JVM reads a dir once
+  private val dirs =
     new java.util.concurrent.ConcurrentHashMap[String, Map[(Any, Int), Long]]()
+  // access-ordered and bounded: readers follow the head, so only the
+  // last few vectors are ever asked for again
+  private val merged = new java.util.LinkedHashMap[SnapshotTable.Dv,
+      Map[(Any, Int), Long]](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[
+        SnapshotTable.Dv, Map[(Any, Int), Long]]): Boolean = size() > 8
+  }
 
-  /** (normalized key, pt_year) → the MAX `__below` of its tombstone
-    * generations: a row dies iff that value exceeds its file's born.
-    * Sidecars written before the birth-aware format lack `__below`
-    * and load as Long.MaxValue (apply to every file — the historical
-    * semantics, sound because appends into DV-pending partitions
-    * were refused). */
-  def tombstones(dvPath: String, keyCol: String, tag: Char,
+  /** (normalized key, pt_year) → the largest `below` among the
+    * vector's tombstones of that key in that year (each entry applies
+    * only to its listed years): a row dies iff that value exceeds its
+    * file's born. A legacy row carrying its own `__below` keeps the
+    * smaller of it and its entry's. */
+  def tombstones(dv: SnapshotTable.Dv, tag: Char,
       conf: org.apache.hadoop.conf.Configuration): Map[(Any, Int), Long] =
-    cache.computeIfAbsent(dvPath, _ => {
+    merged.synchronized {
+      var m = merged.get(dv)
+      if (m == null) {
+        val out = scala.collection.mutable.HashMap[(Any, Int), Long]()
+        dv.entries.foreach { e =>
+          val ys = e.years.toSet
+          load(e.dir, dv.key, tag, conf).foreach { case (kk, b) =>
+            if (ys(kk._2)) {
+              val below = math.min(b, e.below)
+              if (below > out.getOrElse(kk, Long.MinValue)) out(kk) = below
+            }
+          }
+        }
+        m = out.toMap
+        merged.put(dv, m)
+      }
+      m
+    }
+
+  /** One dir's (normalized key, pt_year) → its `__below` column's
+    * largest value for that id, or Long.MaxValue when the files carry
+    * no such column (every dir written since the list format). */
+  private def load(dvPath: String, keyCol: String, tag: Char,
+      conf: org.apache.hadoop.conf.Configuration): Map[(Any, Int), Long] =
+    dirs.computeIfAbsent(dvPath, _ => {
       import org.apache.parquet.hadoop.ParquetReader
       import org.apache.parquet.hadoop.example.GroupReadSupport
       val dir = new HPath(dvPath)

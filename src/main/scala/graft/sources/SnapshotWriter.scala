@@ -80,15 +80,73 @@ private[graft] object SnapshotWriteJob {
   def write(s: SparkSession, root: String, prefix: String,
       frame: DataFrame, blooms: Seq[String]): Seq[(Int, Seq[FileEntry])] = {
     val job = SnapshotWriteJob(s, root, frame.schema, blooms)
-    val rows = frame.queryExecution.toRdd
-    val msgs = SQLExecution.withSQLConfPropagated(
-        s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]) {
-      rows.mapPartitionsWithIndex { (i, it) =>
-        Iterator.single(job.writer(i, prefix).writeAll(it))
-      }.collect()
-    }
-    SnapshotFilesMsg.byYear(msgs.toSeq.flatMap(_.files))
+    SnapshotFilesMsg.byYear(perTask(s, frame)((i, it) =>
+      job.writer(i, prefix).writeAll(it).files).flatten)
   }
+
+  /** Write `ids` (rowKey, pt_year) as merge-on-read tombstone files in
+    * `dir`, in ONE Spark job with no SQL execution of its own. Returns
+    * each file with the years it tombstones; a task that saw no row
+    * writes no file. */
+  def writeTombstones(s: SparkSession, root: String, dir: String,
+      ids: DataFrame): Seq[(String, Seq[Int])] = {
+    val job = SnapshotWriteJob(s, root, ids.schema)
+    perTask(s, ids)((i, it) =>
+      new SnapshotDvWriter(job, dir, i).writeAll(it)).flatten
+  }
+
+  /** `task` over each partition of `frame`'s rows, one job. */
+  private def perTask[T: scala.reflect.ClassTag](s: SparkSession,
+      frame: DataFrame)(task: (Int, Iterator[InternalRow]) => T): Seq[T] =
+    SQLExecution.withSQLConfPropagated(
+        s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]) {
+      frame.queryExecution.toRdd.mapPartitionsWithIndex((i, it) =>
+        Iterator.single(task(i, it))).collect().toSeq
+    }
+}
+
+/** Executor-side tombstone writer: streams (rowKey, pt_year) ids
+  * through Spark's parquet writer into ONE file of `dir`, created on
+  * the first id — nothing buffers beyond parquet's own row group, so a
+  * wide delete stays O(1) memory. The key type is checked once, when
+  * the writer is built. */
+private[graft] final class SnapshotDvWriter(job: SnapshotWriteJob,
+    dir: String, partitionId: Int) {
+  // the tombstone reader (DvCache) decodes these key types
+  job.schema(0).dataType match {
+    case LongType | IntegerType | DoubleType | StringType =>
+    case dt => throw new UnsupportedOperationException(
+      s"rowKey type ${dt.simpleString} is not tombstone-able")
+  }
+  private val path = new HPath(dir, f"t$partitionId%05d_" +
+    s"${java.util.UUID.randomUUID().toString.take(8)}.parquet")
+  private var out: OutputWriter = _
+  private val years = mutable.SortedSet[Int]()
+
+  def write(id: InternalRow): Unit = {
+    require(!id.isNullAt(0) && !id.isNullAt(1),
+      s"row-level delete saw a NULL ${job.schema(0).name}/pt_year id — " +
+      "the rowKey column must be non-null on every row")
+    if (out == null) out = job.open(path)
+    out.write(id)
+    years += id.getInt(1)
+  }
+
+  /** The finished file and the years it tombstones; None if empty. */
+  def commit(): Option[(String, Seq[Int])] = Option(out).map { w =>
+    w.close()
+    (path.toString, years.toSeq)
+  }
+
+  def abort(): Unit = if (out != null) {
+    try out.close() catch { case _: Exception => () }
+    try job.fs(path).delete(path, false) catch { case _: Exception => () }
+  }
+
+  /** Write all of one task's ids and commit; a failure aborts. */
+  def writeAll(ids: Iterator[InternalRow]): Option[(String, Seq[Int])] =
+    try { ids.foreach(write); commit() }
+    catch { case t: Throwable => abort(); throw t }
 }
 
 /** One task's fresh files: (pt_year, finished manifest entry). */

@@ -186,6 +186,116 @@ class CommitSubstrateSpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap ===
       Map(1L -> 2.0, 2L -> 2.0, 3L -> 3.0))
   }
+  test("merge-on-read UPDATE, MERGE and key-range DELETE write each " +
+      "tombstone file once, publish it by pointer and rename only the " +
+      "top manifest") {
+    val spark = graft.etl.TestSpark.spark
+    val base = Files.createTempDirectory("g_substrate_mor").toString
+    val cat = "gmio_" + java.util.UUID.randomUUID().toString.take(8)
+    spark.conf.set(s"spark.sql.catalog.$cat",
+      classOf[graft.sources.SnapshotCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.base", base)
+    spark.sql(s"CREATE TABLE $cat.t (k BIGINT, pt_year INT, v DOUBLE) " +
+      "TBLPROPERTIES ('rowKey' = 'k')")
+    spark.sql(s"INSERT INTO $cat.t VALUES (1, 2023, 1.0), (2, 2023, 2.0), " +
+      "(3, 2024, 3.0), (4, 2024, 4.0), (5, 2024, 5.0)")
+    val root = s"$base/t"
+    def head = T.versions(root).max
+    def live() = T.files(root, head).map(local).toSet
+    def record(statement: String): Unit = {
+      val conf = spark.sparkContext.hadoopConfiguration
+      IoCountingFs.clear()
+      conf.set("fs.file.impl", classOf[IoCountingFs].getName)
+      conf.setBoolean("fs.file.impl.disable.cache", true)
+      try spark.sql(statement)
+      finally {
+        conf.unset("fs.file.impl")
+        conf.unset("fs.file.impl.disable.cache")
+      }
+    }
+    def seen(q: java.util.concurrent.ConcurrentLinkedQueue[String]) =
+      q.toArray(Array.empty[String]).toSeq.map(local)
+    // the statement's tombstones: the one dir its commit added
+    def tombstoneFiles(v: Int): Seq[String] = {
+      val dir = local(T.dvOf(root, v).get.entries.last.dir)
+      seen(IoCountingFs.made).filter(_.startsWith(dir + "/"))
+    }
+    val firstDv = scala.collection.mutable.Map[String, Long]()
+    def check(statement: String): Unit = {
+      val before = head
+      record(statement)
+      assert(head === before + 1, s"$statement committed no version")
+      val made = seen(IoCountingFs.made)
+      assert(!made.exists(p => p.split('/').exists(n =>
+        n.startsWith("stage_") || n == "_temporary" || n == "_SUCCESS")),
+        s"$statement staged through $made")
+      val renamed = seen(IoCountingFs.renamed)
+      assert(renamed.forall(_.matches(".*/_manifests/\\.?v\\d+\\.(tmp|txt)")),
+        s"$statement renamed more than its top manifest: $renamed")
+      val files = tombstoneFiles(head)
+      assert(files.nonEmpty, s"$statement wrote no tombstone file")
+      assert(files.distinct === files,
+        s"$statement created a tombstone file twice: $files")
+      assert(seen(IoCountingFs.opened).toSet.intersect(files.toSet).isEmpty,
+        s"$statement opened its tombstones during the commit")
+      // a committed version's tombstone dirs never change
+      if (firstDv.isEmpty) files.foreach(f =>
+        firstDv(f) = java.nio.file.Paths.get(f).toFile.lastModified)
+      firstDv.foreach { case (f, t) =>
+        assert(java.nio.file.Paths.get(f).toFile.lastModified === t,
+          s"$statement touched the earlier tombstone file $f")
+      }
+    }
+    check(s"UPDATE $cat.t SET v = v + 10 WHERE k IN (1, 4)")
+    val afterUpdate = T.dvOf(root, head)
+    check(s"""MERGE INTO $cat.t t
+        USING (SELECT * FROM VALUES
+            (CAST(2 AS BIGINT), 2023, 20.0),
+            (CAST(9 AS BIGINT), 2024, 90.0) AS s(k, pt_year, v)) s
+        ON t.k = s.k
+        WHEN MATCHED THEN UPDATE SET *
+        WHEN NOT MATCHED THEN INSERT *""")
+    assert(T.dvOf(root, head - 1) === afterUpdate)
+    assert(T.dvOf(root, head).get.entries.take(1) ===
+      afterUpdate.get.entries, "the MERGE did not append one entry")
+    // a key range is no pt_year bound: tombstones, no data file written
+    val parentFiles = live()
+    val mtimes = parentFiles.map(f =>
+      f -> java.nio.file.Paths.get(f).toFile.lastModified).toMap
+    check(s"DELETE FROM $cat.t WHERE k BETWEEN 3 AND 5")
+    assert(live() === parentFiles, "the DELETE changed the file list")
+    assert(!seen(IoCountingFs.made).exists(_.contains("/data/")),
+      "the DELETE wrote a data file")
+    assert(parentFiles.forall(f =>
+      java.nio.file.Paths.get(f).toFile.lastModified == mtimes(f)))
+    assert(T.dvOf(root, head).get.entries.size === 3)
+    assert(spark.sql(s"SELECT k, v FROM $cat.t").collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toMap ===
+      Map(1L -> 11.0, 2L -> 20.0, 9L -> 90.0))
+  }
+
+  test("an m-file a crashed commit left behind is swept by " +
+      "vacuumOrphans; referenced ones stay") {
+    val spark = graft.etl.TestSpark.spark
+    import spark.implicits._
+    val root = Files.createTempDirectory("g_substrate_mfile").toString
+    T.commit(spark, root, 0,
+      Seq((1L, 2023, 1.0), (2L, 2024, 2.0)).toDF("k", "pt_year", "v"),
+      Seq(2023, 2024))
+    // what a commit that died between its m-file and its top manifest
+    // leaves: a token-named m-file no version references
+    val md = java.nio.file.Paths.get(root, "_manifests")
+    val crashed = md.resolve("m_v1_y2023_dead0000.txt")
+    Files.write(crashed, Seq("junk\t1").mkString("\n").getBytes("UTF-8"))
+    val referenced = T.pointers(root, 0).values.map(local).toSet
+    assert(T.vacuumOrphans(root).isEmpty, "a young orphan was swept")
+    val swept = T.vacuumOrphans(root, horizonMs = -1L).map(local)
+    assert(swept === Seq(crashed.toString))
+    assert(referenced.forall(m => Files.exists(java.nio.file.Paths.get(m))))
+    assert(T.read(spark, root, 0).count() === 2)
+  }
+
+  private def local(p: String) = new HPath(p).toUri.getPath
 }
 
 /** The local filesystem, recording the paths it opens, creates or

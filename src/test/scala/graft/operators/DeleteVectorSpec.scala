@@ -42,7 +42,7 @@ class DeleteVectorSpec extends AnyFunSuite {
     // zero data movement: identical file list, identical bytes
     assert(T.files(root, 1) === v0Files)
     assert(mtimes(v0Files) === v0Times)
-    assert(T.dvOf(root, 1).exists(_._3 === Seq(1)))
+    assert(T.dvOf(root, 1).exists(_.years === Seq(1)))
 
     // every read path applies the tombstones
     assert(T.read(spark, root, 1).count() === 3)
@@ -65,13 +65,13 @@ class DeleteVectorSpec extends AnyFunSuite {
     // cumulative: both tombstones pending, both years recorded
     assert(T.read(spark, root, 2).collect().map(_.getLong(0)).toSet ===
       Set(2L, 4L))
-    assert(T.dvOf(root, 2).exists(_._3 === Seq(1, 2)))
+    assert(T.dvOf(root, 2).exists(_.years === Seq(1, 2)))
 
     // rewrite partition 1 from the DV-applied read: physical purge
     T.commit(spark, root, 3,
       T.read(spark, root, 2).filter(col("pt_year") === 1), Seq(1))
     // partition 1's tombstone dropped; partition 2's still pending
-    assert(T.dvOf(root, 3).exists(_._3 === Seq(2)))
+    assert(T.dvOf(root, 3).exists(_.years === Seq(2)))
     assert(T.read(spark, root, 3).collect().map(_.getLong(0)).toSet ===
       Set(2L, 4L))
     // the rewritten files physically lack the deleted row
@@ -134,7 +134,7 @@ class DeleteVectorSpec extends AnyFunSuite {
     // replaced partition 2 ({3}) with {5}
     assert(T.read(spark, root, v).collect().map(_.getLong(0)).toSet ===
       Set(2L, 5L))
-    assert(T.dvOf(root, v).exists(_._3 === Seq(1)))
+    assert(T.dvOf(root, v).exists(_.years === Seq(1)))
   }
 
   test("vacuum reference-counts deletion-vector sidecars") {
@@ -142,10 +142,10 @@ class DeleteVectorSpec extends AnyFunSuite {
     T.commit(spark, root, 0, frame((1L, 1, 10.0), (2L, 2, 20.0)), Seq(1, 2))
     T.commitDelete(spark, root, 1, "o_orderkey",
       frame((1L, 1, 0.0)).select("o_orderkey", "pt_year"))
-    val dvPath = T.dvOf(root, 1).get._1
+    val dvPath = T.dvOf(root, 1).get.entries.head.dir
     // v2 carries the same sidecar (untouched partition commit)
     T.commit(spark, root, 2, frame((9L, 2, 90.0), (2L, 2, 20.0)), Seq(2))
-    assert(T.dvOf(root, 2).exists(_._1 === dvPath))
+    assert(T.dvOf(root, 2).exists(_.entries.map(_.dir) === Seq(dvPath)))
     // retain 2 (v1, v2): the sidecar is still referenced — survives
     T.vacuum(root, retain = 2)
     assert(Files.exists(Paths.get(dvPath)))
@@ -157,5 +157,90 @@ class DeleteVectorSpec extends AnyFunSuite {
       T.read(spark, root, 2).filter(col("pt_year") === 1), Seq(1))
     T.vacuum(root, retain = 1)
     assert(!Files.exists(Paths.get(dvPath)))
+  }
+
+  test("a legacy single-sidecar #dv line reads the same through a delta " +
+      "commit and a rewrite; keys re-inserted after it stay alive") {
+    import spark.implicits._
+    def keys(root: String, v: Int) =
+      T.read(spark, root, v).collect().map(_.getLong(0)).toSet
+    // replace version v's deletion vector with the pre-list format: one
+    // sidecar dir on one `#dv=<dir>\t<key>\t<years>` line
+    def legacy(root: String, v: Int, rows: org.apache.spark.sql.DataFrame) = {
+      val dir = Paths.get(root, "_dv", "legacy").toString
+      rows.coalesce(1).write.parquet(dir)
+      val m = Paths.get(root, "_manifests", s"v$v.txt")
+      val ls = new String(Files.readAllBytes(m), "UTF-8").split('\n')
+        .filterNot(_.startsWith("#dv")) :+ s"#dv=$dir\to_orderkey\t1,2"
+      Files.write(m, ls.mkString("", "\n", "\n").getBytes("UTF-8"))
+      Files.deleteIfExists(m.resolveSibling(s".v$v.txt.crc"))
+      assert(T.dvOf(root, v).map(_.entries.map(_.below)) ===
+        Some(Seq(Long.MaxValue)))
+    }
+    Seq(true, false).foreach { withBelow =>
+      val root = Files.createTempDirectory("g_dv_legacy").toString
+      T.commit(spark, root, 0, frame((1L, 1, 10.0), (2L, 1, 20.0),
+        (3L, 1, 30.0), (4L, 2, 40.0), (5L, 2, 50.0)), Seq(1, 2))
+      T.commitDelete(spark, root, 1, "o_orderkey",
+        frame((1L, 1, 0.0), (4L, 2, 0.0)).select("o_orderkey", "pt_year"))
+      val ts1 = T.commitTs(root, 1).get
+      // with births recorded the tombstoned key 1 may come back
+      if (withBelow)
+        T.commitAppend(spark, root, 2, frame((1L, 1, 11.0)),
+          overTombstones = true)
+      val v = T.versions(root).max
+      val expected = keys(root, v)
+      assert(expected === (if (withBelow) Set(1L, 2L, 3L, 5L)
+                           else Set(2L, 3L, 5L)))
+      legacy(root, v,
+        if (withBelow) Seq((1L, 1, ts1), (4L, 2, ts1))
+          .toDF("o_orderkey", "pt_year", "__below")
+        else Seq((1L, 1), (4L, 2)).toDF("o_orderkey", "pt_year"))
+      assert(keys(root, v) === expected)
+      // one more delta commit: the legacy entry carries, stamped
+      T.commitDelete(spark, root, v + 1, "o_orderkey",
+        frame((2L, 1, 0.0)).select("o_orderkey", "pt_year"))
+      assert(T.dvOf(root, v + 1).get.entries.size === 2)
+      assert(T.dvOf(root, v + 1).get.entries.forall(_.below < Long.MaxValue))
+      assert(keys(root, v + 1) === expected - 2L)
+      // a rewrite of tombstoned year 2 drops it from the legacy entry
+      T.commit(spark, root, v + 2,
+        T.read(spark, root, v + 1).filter(col("pt_year") === 2), Seq(2))
+      assert(T.dvOf(root, v + 2).map(_.years) === Some(Seq(1)))
+      assert(keys(root, v + 2) === expected - 2L)
+      T.deleteTree(root)
+    }
+  }
+
+  test("vacuum keeps tombstone dirs a retained version lists, reclaims " +
+      "expired-only ones, and unreferenced ones past the horizon") {
+    val root = Files.createTempDirectory("g_dv_vac_list").toString
+    T.commit(spark, root, 0, frame((1L, 1, 10.0), (2L, 1, 20.0),
+      (3L, 2, 30.0), (4L, 2, 40.0)), Seq(1, 2))
+    T.commitDelete(spark, root, 1, "o_orderkey",
+      frame((1L, 1, 0.0)).select("o_orderkey", "pt_year"))
+    T.commitDelete(spark, root, 2, "o_orderkey",
+      frame((3L, 2, 0.0)).select("o_orderkey", "pt_year"))
+    val Seq(d1, d2) = T.dvOf(root, 2).get.entries.map(_.dir)
+    // v3 rewrites year 1: d1 drops out of the list, d2 carries
+    T.commit(spark, root, 3,
+      T.read(spark, root, 2).filter(col("pt_year") === 1), Seq(1))
+    assert(T.dvOf(root, 3).get.entries.map(_.dir) === Seq(d2))
+    val orphan = Paths.get(root, "_dv", "v9-loser00")
+    Files.createDirectories(orphan)
+    Files.write(orphan.resolve("t00000_x.parquet"), "junk".getBytes("UTF-8"))
+    T.vacuum(root, retain = 1)
+    assert(!Files.exists(Paths.get(d1)), "expired-only dir kept")
+    assert(Files.exists(Paths.get(d2)), "retained version's dir reclaimed")
+    assert(Files.exists(orphan), "a young orphan was reclaimed")
+    val saved = T.dvOrphanHorizonMs
+    try {
+      T.dvOrphanHorizonMs = -1L
+      T.vacuum(root, retain = 1)
+      assert(!Files.exists(orphan), "aged orphan dir not reclaimed")
+      assert(Files.exists(Paths.get(d2)))
+    } finally T.dvOrphanHorizonMs = saved
+    assert(T.read(spark, root, 3).collect().map(_.getLong(0)).toSet ===
+      Set(2L, 4L))
   }
 }

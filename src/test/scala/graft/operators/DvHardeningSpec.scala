@@ -28,9 +28,9 @@ class DvHardeningSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("g_dv_token").toString
     T.commit(spark, root, 0, frame((1L, 1, 10.0), (2L, 1, 20.0)), Seq(1))
     T.commitDelete(spark, root, 1, "o_orderkey", doomed(1L))
-    val p1 = T.dvOf(root, 1).get._1
+    val Seq(p1) = T.dvOf(root, 1).get.entries.map(_.dir)
     assert(p1.matches(".*/_dv/v1-[0-9a-f]{8}"),
-      s"sidecar path not token-uniquified: $p1")
+      s"tombstone dir not token-uniquified: $p1")
     // the write_delete_vectors gate's exact shape: deleteTree + rebuild
     // at the SAME root — the new sidecar must land at a fresh path, so
     // the executor-side DvCache's path-keyed memo can never serve the
@@ -38,7 +38,7 @@ class DvHardeningSpec extends AnyFunSuite {
     T.deleteTree(root)
     T.commit(spark, root, 0, frame((1L, 1, 10.0), (2L, 1, 20.0)), Seq(1))
     T.commitDelete(spark, root, 1, "o_orderkey", doomed(2L))
-    val p2 = T.dvOf(root, 1).get._1
+    val Seq(p2) = T.dvOf(root, 1).get.entries.map(_.dir)
     assert(p2 != p1, "rebuilt table reused a sidecar path")
     assert(T.read(spark, root, 1).collect().map(_.getLong(0)).toSet ===
       Set(1L))

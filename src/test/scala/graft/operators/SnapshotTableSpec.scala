@@ -234,14 +234,14 @@ class SnapshotTableSpec extends AnyFunSuite {
       "commit" -> (v =>
         T.commit(spark, root, v, frame((3L, 1, 30.0)), Seq(1))),
       "commitReplaceEntries" -> (v =>
-        T.commitReplaceEntries(spark, root, v, Seq.empty, Seq(1))),
+        T.commitReplaceEntries(root, v, Seq.empty, Seq(1))),
       "commitAppend" -> (v =>
         T.commitAppend(spark, root, v, frame((3L, 1, 30.0)))),
       "commitDelete" -> (v =>
         T.commitDelete(spark, root, v, "o_orderkey",
           Seq((2L, 1)).toDF("o_orderkey", "pt_year"))),
       "commitDelta" -> (v =>
-        T.commitDelta(spark, root, v, "o_orderkey", Seq.empty, Seq.empty,
+        T.commitDelta(root, v, "o_orderkey", Seq.empty, Seq.empty,
           frame().schema)),
       "restore" -> (v => T.restore(root, v, 0)))
     kinds.foreach { case (kind, commitAt) =>

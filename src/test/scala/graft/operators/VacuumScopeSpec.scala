@@ -66,7 +66,7 @@ class VacuumScopeSpec extends AnyFunSuite {
     T.commit(spark, root, 0, frame((1L, 1, 10.0), (2L, 1, 20.0)), Seq(1))
     T.commitDelete(spark, root, 1, "o_orderkey",
       frame((1L, 1, 0.0)).select("o_orderkey", "pt_year"))
-    val live = Paths.get(T.dvOf(root, 1).get._1)
+    val live = Paths.get(T.dvOf(root, 1).get.entries.head.dir)
     // a race loser's leftover: a sidecar dir referenced by NO version
     val orphan = Paths.get(root, "_dv", "v9-loser00")
     Files.createDirectories(orphan)

@@ -220,7 +220,7 @@ class SqlMergeUpdateSpec extends AnyFunSuite {
     // a concurrent writer lands v1, then the replace targets v1 too
     T.commitAppend(spark, root, 1, frame((2L, 1, 20.0)))
     val e = intercept[IllegalArgumentException](
-      T.commitReplaceEntries(spark, root, 1, Seq.empty, Seq(1)))
+      T.commitReplaceEntries(root, 1, Seq.empty, Seq(1)))
     assert(e.getMessage.contains("conflict"))
   }
 

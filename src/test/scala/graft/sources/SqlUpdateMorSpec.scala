@@ -122,7 +122,7 @@ class SqlUpdateMorSpec extends AnyFunSuite {
     // k % 2 = 1 is not v1-translatable → merge-on-read tombstones in
     // both partitions
     spark.sql(s"DELETE FROM $cat.t6 WHERE k % 2 = 1")
-    assert(T.dvOf(root, T.versions(root).max).map(_._3.toSet) ===
+    assert(T.dvOf(root, T.versions(root).max).map(_.years.toSet) ===
       Some(Set(2023, 2024)))
     spark.sql(
       s"""MERGE INTO $cat.t6 t
@@ -140,8 +140,7 @@ class SqlUpdateMorSpec extends AnyFunSuite {
     assert(T.read(spark, root, T.versions(root).max).count() === 4)
   }
 
-  test("non-metadata DELETE tombstones instead of rewriting; " +
-      "metadata-translatable DELETE keeps the CoW path") {
+  test("non-metadata DELETE tombstones instead of rewriting") {
     val (cat, base) = freshCatalog()
     mkTable(cat, "t3")
     val root = s"$base/t3"
@@ -153,6 +152,18 @@ class SqlUpdateMorSpec extends AnyFunSuite {
       "a merge-on-read DELETE rewrote parent data files")
     assert(T.dvOf(root, T.versions(root).max).isDefined)
     assert(rows(cat, "t3") === Set((2L, 2023, 2.0), (4L, 2024, 4.0)))
+  }
+
+  test("a pt_year-only DELETE drops the partition with no tombstone") {
+    val (cat, base) = freshCatalog()
+    mkTable(cat, "t7")
+    val root = s"$base/t7"
+    spark.sql(s"DELETE FROM $cat.t7 WHERE pt_year = 2024")
+    val v = T.versions(root).max
+    assert(T.dvOf(root, v).isEmpty, "a partition drop wrote tombstones")
+    assert(T.pointers(root, v).keySet === Set(2023))
+    assert(rows(cat, "t7") === Set(
+      (1L, 2023, 1.0), (2L, 2023, 2.0), (3L, 2023, 3.0)))
   }
 
   test("OPTIMIZE after a MoR update compacts physically: tombstones " +
