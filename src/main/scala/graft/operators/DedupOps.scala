@@ -455,7 +455,7 @@ object DedupOps {
     * frequency is `count(*) over (partition by wh)` on the already
     * per-doc-distinct stream, not a groupBy + join-back (which would
     * re-shuffle and re-sort the same stream a second time; measured
-    * 7× slower at sf0.1 — 5.0 s vs 0.7 s, graft.tools.SubstrProbe).
+    * 7× slower at sf0.1 — 5.0 s vs 0.7 s).
     * The per-doc rollup then carries only
     * counts. Total shuffle bytes ~ 8·len/doc — linear in corpus size,
     * no pairwise term at all (this is the dedup signal with NO

@@ -304,7 +304,7 @@ object MultimodalOps {
       * includes SoftMidiAudioFileReader, whose reject path consults the
       * MidiSystem provider registry — the same globally synchronized
       * JDK13Services lock, re-entered through a side door (measured as
-      * NEGATIVE thread scaling, 0.4×, in graft.tools.AudioProbe).
+      * NEGATIVE thread scaling, 0.4×).
       * Remembering the accepting reader makes steady-state decode one
       * lock-free header parse per blob. */
     @volatile private var acceptingReader

@@ -11,9 +11,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Tables {
   // Per-(session, path) parquet schema memo (r18): a bare
   // spark.read.parquet infers the schema by reading a footer — a
-  // one-task Spark job (~30 ms; GateProfile shows "parquet at
-  // Tables.scala" at the head of nearly every gate invocation, and a
-  // gate touches 1–3 source tables). The fixture files are immutable,
+  // one-task Spark job (~30 ms; a per-gate job profile showed
+  // "parquet at Tables.scala" at the head of nearly every gate
+  // invocation, and a gate touches 1–3 source tables). The fixture files are immutable,
   // so infer once per (session, path) and plan every later read with
   // the recorded schema — schema-as-metadata, exactly what a catalog
   // table provides (the scaladoc above already declares these reads

@@ -603,7 +603,7 @@ object VectorOps {
     * The third stage is FAISS's too: the ADC scan selects a SHORTLIST
     * (`rerank` per query), then an exact integer-L2 re-rank touches raw
     * vectors for shortlist rows only. Measured on this corpus
-    * (graft.tools.RecallProbe, vs exact-L2 top-10): ADC-only ordering
+    * (vs exact-L2 top-10): ADC-only ordering
     * recalls 0.36; shortlist 40 → 0.78; shortlist 100 → 0.88 (sf0.001)
     * / 0.92 (sf0.01) and SATURATES — the residual misses are IVF cell
     * misses, so past that point nprobe is the binding knob, not the
@@ -906,8 +906,8 @@ object VectorOps {
     // encode + dequantize onto the 255× grid in one narrow pass, pure
     // zip_with over the literal arrays — an `array(...)[i]` subscript
     // inside a transform lambda is NOT constant-folded (the 64-element
-    // CreateArray re-evaluates per element per row; measured 7× slower
-    // by graft.tools.Sq8Probe), while zip_with iterates the folded
+    // CreateArray re-evaluates per element per row; measured 7×
+    // slower at sf0.1), while zip_with iterates the folded
     // literal once per row. A constant dimension (span 0) contributes
     // 0 from both sides by construction.
     val corpus = e

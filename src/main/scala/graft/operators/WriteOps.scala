@@ -1538,8 +1538,8 @@ object WriteOps {
       * REFUSED loudly: the key-granular DV filter would silently
       * kill a re-inserted tombstoned key — purge first (OPTIMIZE), the
       * same refusal WAP staging makes. `overTombstones` lifts the
-      * refusal when the tombstones are birth-aware (see [[appendPreflight]])
-      * — the merge-on-read tables' SQL append path. */
+      * refusal when the tombstones are birth-aware (see
+      * [[appendPreflight]]). */
     def commitAppend(s: SparkSession, root: String, v: Int,
         batch: DataFrame, txn: Option[(String, Long)] = None,
         overTombstones: Boolean = false): Unit = {
@@ -1563,8 +1563,8 @@ object WriteOps {
       commitAppendEntries(root, v, parent, staged, batch.schema, txn)
     }
 
-    /** The manifest-merge half of [[commitAppend]], shared with the
-      * native streaming sink (whose executor-side writers have already
+    /** The manifest-merge half of [[commitAppend]], shared with the SQL
+      * write and the sink (whose executor-side writers have already
       * produced the fresh files): publish `staged` fresh entries as
       * version v on `parent` (from [[appendPreflight]]) — each touched
       * partition's new m-file = the PARENT's entry lines ++ the fresh
@@ -1629,7 +1629,7 @@ object WriteOps {
     }
 
     /** Pre-flight for an APPEND of `touched` partitions as version v
-      * (shared by commitAppend and the native streaming sink): the
+      * (shared by commitAppend, the SQL write and the sink): the
       * version race ([[preflight]]), and no touched partition holds
       * pending tombstones — unless `overTombstones` and every entry
       * covering a touched partition is birth-aware (stamped `below`;
@@ -1654,6 +1654,23 @@ object WriteOps {
           "optimize(purgeTombstoned) first")
       }
       parent
+    }
+
+    /** Whether a write planned on version `from` may publish unchanged
+      * on `head`: every commit since only appended (`from`'s entries all
+      * listed, no tombstone dir added) and left `replaced` untouched. */
+    private[graft] def onlyAppendedSince(root: String, from: Int, head: Top,
+        replaced: Set[Int]): Boolean = {
+      val base = top(root, from)
+      def paths(m: Option[String]) =
+        m.toSeq.flatMap(readPartManifest).map(_.path).toSet
+      replaced.forall(y => base.pointers.get(y) == head.pointers.get(y)) &&
+        head.dv.forall(_.entries.forall(e => base.dv.exists(_.entries
+          .exists(_.dir == e.dir)))) &&
+        base.pointers.forall { case (y, m) =>
+          head.pointers.get(y).contains(m) ||
+            paths(Some(m)).subsetOf(paths(head.pointers.get(y)))
+        }
     }
 
     /** The version's commit wall-clock (epoch millis, recorded in its
@@ -2753,9 +2770,9 @@ object WriteOps {
 
   /** SQL WRITE through the DSv2 catalog — gate `sql_insert_snapshot`:
     * plain `INSERT INTO <catalog>.<table> SELECT ...` lands as a TRUE
-    * APPEND commit (SnapshotTable.commitAppend via the V1Write bridge)
-    * — fresh files + an O(metadata) manifest merge, parent files never
-    * rewritten (SqlInsertSpec pins their mtimes), full txn protocol.
+    * APPEND commit ([[graft.sources.SnapshotWrite]]) — fresh files +
+    * an O(metadata) manifest merge, parent files never rewritten
+    * (SqlInsertSpec pins their mtimes), full txn protocol.
     * The table starts as every year EXCEPT 1997; the SQL insert adds
     * the 1997 slice; the head then equals the plain orders table —
     * which is exactly what the oracle checks. Build+insert memoized
@@ -3826,7 +3843,7 @@ object WriteOps {
     "sql_version_asof" -> ((s, d) => sqlVersionAsOf(s, d)),
 
     // SQL writes: INSERT INTO through the DSv2 catalog lands as a TRUE
-    // APPEND commit (see sqlInsertSnapshot / SnapshotTable.commitAppend)
+    // APPEND commit (see sqlInsertSnapshot / graft.sources.SnapshotWrite)
     "sql_insert_snapshot" -> ((s, d) => sqlInsertSnapshot(s, d)),
 
     // SQL DELETE: partition-scoped copy-on-write via SupportsDelete

@@ -160,7 +160,8 @@ class SnapshotCatalog
         throw new org.apache.spark.sql.catalyst.analysis
           .NoSuchTableException(ident))
     else new SnapshotSourceTable(
-      SnapshotTable.tableSchema(root, vs.max).get, root)
+      SnapshotTable.tableSchema(root, vs.max).get, root,
+      loadedHead = Some(vs.max))
   }
 
   /** `VERSION AS OF <v>` — Spark routes the SQL time-travel clause
@@ -502,29 +503,30 @@ class SnapshotCatalog
         .NoSuchNamespaceException(namespace)
 }
 
-/** SQL WRITE surface: `INSERT INTO <catalog>.<table> ...` lands as a
-  * TRUE APPEND commit ([[SnapshotTable.commitAppend]]) — fresh files +
-  * an O(metadata) manifest merge, full txn protocol (atomic publish,
-  * race losers rebase), schema checked by Spark's insert resolution
-  * against the table's RECORDED schema. The V1Write bridge hands the
-  * driver the batch as a DataFrame; the data write itself distributes
-  * as a normal Spark job (only manifest lines touch the driver) — the
-  * same bridge Delta shipped on for years. Version-pinned tables
-  * (VERSION/TIMESTAMP AS OF) refuse writes; INSERT OVERWRITE refuses
-  * (overwrites are merges — use the commit/upsert protocol). */
+/** The snapshot table as a DSv2 table: batch and streaming reads,
+  * SQL DELETE / UPDATE / MERGE, and one write ([[SnapshotWrite]]) for
+  * every SQL insert and overwrite and the streaming sink, its schema
+  * checked by Spark's insert resolution against the RECORDED schema.
+  * Version-pinned tables (VERSION/TIMESTAMP AS OF) refuse writes.
+  * `loadedHead`, the head when the table was loaded, is read here when
+  * not given; a write checks the commits after it. */
 private[sources] class SnapshotSourceTable(tableSchema: StructType,
     root: String, pinned: Option[SnapshotTable.Top] = None,
-    files: Option[Seq[(Int, Seq[SnapshotTable.FileEntry])]] = None)
+    files: Option[Seq[(Int, Seq[SnapshotTable.FileEntry])]] = None,
+    loadedHead: Option[Int] = None)
     extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDelete
     with org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations {
-  import org.apache.spark.sql.connector.write.{LogicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, V1Write, Write, WriteBuilder}
+  import org.apache.spark.sql.connector.write.{LogicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, Write, WriteBuilder}
 
   /** Reads of a pinned table (VERSION/TIMESTAMP AS OF, `versionAsOf`,
     * or a DataFrame read of a version or staged branch) serve `pinned`;
     * `files` narrows them to those manifest entries. */
   private val pinnedVersion = pinned.map(_.version)
+
+  private val head = if (pinned.isDefined) -1 else loadedHead.getOrElse(
+    SnapshotTable.versions(root).maxOption.getOrElse(-1))
 
   /** A table pinned to committed version `version`. */
   def this(tableSchema: StructType, root: String, version: Option[Int]) =
@@ -574,9 +576,8 @@ private[sources] class SnapshotSourceTable(tableSchema: StructType,
     else Array.empty
   override def capabilities(): util.Set[TableCapability] =
     Set(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ,
-      TableCapability.V1_BATCH_WRITE,
-      // dynamic overwrite is a v2 batch write (SnapshotDynamicOverwrite);
-      // appends and filter overwrites keep the V1 bridge
+      // append, truncate, pt_year-scoped and dynamic overwrite are one
+      // v2 batch write (SnapshotWrite), which also carries the sink
       TableCapability.BATCH_WRITE,
       TableCapability.OVERWRITE_BY_FILTER,
       TableCapability.OVERWRITE_DYNAMIC,
@@ -698,24 +699,10 @@ private[sources] class SnapshotSourceTable(tableSchema: StructType,
     } // zero matches: delete is a no-op, no version burned
   }
 
-  /** `INSERT INTO` = true append; `INSERT OVERWRITE` (SupportsOverwrite)
-    * in two shapes:
-    *  - the trivial AlwaysTrue filter (no partition spec) = ONE commit
-    *    touching every live ∪ batch partition, so the head becomes
-    *    exactly the batch while history keeps serving the
-    *    pre-overwrite state;
-    *  - a pt_year-bounded filter (`INSERT OVERWRITE ... PARTITION
-    *    (pt_year = k)`, or a pt_year = / IN predicate) = ONE commit
-    *    touching exactly those partitions — other partitions carry by
-    *    pointer (mtimes spec-pinned), and a batch row landing OUTSIDE
-    *    the overwrite scope refuses loudly (a silent scope widening
-    *    would clobber partitions the statement never named);
-    *  - under dynamic partition-overwrite mode (SupportsDynamicOverwrite)
-    *    = ONE commit replacing the partitions the batch holds
-    *    ([[SnapshotDynamicOverwrite]]).
-    * Overwrite filters on anything other than pt_year refuse (row-
-    * granular overwrites are DELETE + INSERT, each its own auditable
-    * commit). */
+  /** Every SQL insert and overwrite is one [[SnapshotWrite]], its
+    * scope set here. Overwrite filters on anything other than pt_year
+    * refuse (row-granular overwrites are DELETE + INSERT, each its own
+    * auditable commit). */
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     require(pinnedVersion.isEmpty,
       "a VERSION/TIMESTAMP AS OF table is a read-only snapshot — " +
@@ -725,19 +712,18 @@ private[sources] class SnapshotSourceTable(tableSchema: StructType,
     new WriteBuilder
         with org.apache.spark.sql.connector.write.SupportsOverwrite
         with org.apache.spark.sql.connector.write.SupportsDynamicOverwrite {
-      private var overwriteAll = false
-      private var overwriteYears: Option[Set[Int]] = None
-      private var dynamic = false
-      override def truncate(): WriteBuilder = { overwriteAll = true; this }
+      private var scope: SnapshotWrite.Scope = SnapshotWrite.Append
+      override def truncate(): WriteBuilder = {
+        scope = SnapshotWrite.Truncate; this
+      }
       override def overwriteDynamicPartitions(): WriteBuilder = {
-        dynamic = true; this
+        scope = SnapshotWrite.Dynamic; this
       }
       override def overwrite(filters: Array[
           org.apache.spark.sql.sources.Filter]): WriteBuilder = {
-        if (filters.isEmpty || filters.forall(_.isInstanceOf[
-            org.apache.spark.sql.sources.AlwaysTrue])) {
-          overwriteAll = true
-        } else {
+        if (filters.forall(_.isInstanceOf[
+            org.apache.spark.sql.sources.AlwaysTrue])) truncate()
+        else {
           // partition-scoped overwrite: every conjunct must bound
           // pt_year; the scope is their intersection
           val bounds = filters.map(SnapshotFilters.yearBound)
@@ -748,94 +734,16 @@ private[sources] class SnapshotSourceTable(tableSchema: StructType,
             filters.mkString(", ") + ". For row-granular overwrites " +
             "run DELETE FROM ... WHERE, then INSERT INTO (each an " +
             "auditable commit)")
-          overwriteYears = Some(bounds.flatten.reduce(_ intersect _))
+          scope = SnapshotWrite.Years(bounds.flatten.reduce(_ intersect _))
+          this
         }
-        this
       }
       override def build(): Write =
-        if (dynamic) new Write {
-          override def toBatch: org.apache.spark.sql.connector.write
-              .BatchWrite =
-            new SnapshotDynamicOverwrite(root,
-              SnapshotWriteJob(SparkSession.active, root, info.schema(),
-                SnapshotTable.bloomColsOf(tableSchema)))
-        } else new V1Write {
-        /** The NATIVE STREAMING SINK (see [[SnapshotStreamingWrite]]):
-          * every epoch lands as one txn-recorded append version,
-          * exactly-once across restarts and replays. */
-        override def toStreaming: org.apache.spark.sql.connector.write
-            .streaming.StreamingWrite = {
-          require(!overwriteAll && overwriteYears.isEmpty,
-            "graft-snapshot streams are append-only (a snapshot " +
-            "table's history is append-only by construction) — " +
-            "complete/update output modes are unsupported")
-          new SnapshotStreamingWrite(root,
-            SnapshotWriteJob(SparkSession.active, root, info.schema(),
-              SnapshotTable.bloomColsOf(tableSchema)),
-            info.queryId(),
-            Option(info.options.get("compactEvery")).map(_.toInt))
-        }
-
-        override def toInsertableRelation
-            : org.apache.spark.sql.sources.InsertableRelation =
-          (data: org.apache.spark.sql.DataFrame, ovw: Boolean) => {
-            val s = data.sparkSession
-            // Overwrites validate partition scope from the batch and
-            // then stage it — two evaluations of the insert query. A
-            // non-deterministic query could pass validation with one
-            // row set and stage another (whose out-of-scope rows the
-            // partition-scoped stage would then silently drop), and
-            // every conflict retry would re-run the query again — so
-            // pin the batch ONCE with a lineage-truncating local
-            // checkpoint before the scope check. Appends skip the pin
-            // (no validation read, single evaluation): the 100 TB hot
-            // path pays nothing, and an overwrite's checkpoint is the
-            // same source-materialization trade Delta makes for
-            // non-deterministic MERGE sources.
-            val scoped = overwriteAll || ovw || overwriteYears.isDefined
-            val batch = if (scoped) data.localCheckpoint() else data
-            def batchYears(): Set[Int] =
-              batch.select("pt_year").distinct().collect().map { r =>
-                require(!r.isNullAt(0),
-                  "insert batch contains a NULL pt_year — the " +
-                  "snapshot table partitions by pt_year and cannot " +
-                  "place NULL-keyed rows")
-                r.getInt(0)
-              }.toSet
-            // A loser's already-written files are unreferenced orphans
-            // — vacuumOrphans reclaims them on the maintenance pass.
-            SnapshotSourceTable.commitRetrying(root) { v =>
-              if (overwriteYears.isDefined) {
-                // partition-scoped overwrite: exactly the named
-                // partitions are touched; a batch row outside the
-                // scope is a statement error, not a widened commit
-                val years = overwriteYears.get
-                val stray = batchYears() -- years
-                require(stray.isEmpty,
-                  s"INSERT OVERWRITE PARTITION (pt_year in " +
-                  s"${years.toSeq.sorted.mkString("{", ",", "}")}) " +
-                  s"received rows for partitions " +
-                  s"${stray.toSeq.sorted.mkString(",")} outside the " +
-                  "overwrite scope")
-                SnapshotTable.commit(s, root, v, batch, years.toSeq.sorted)
-              } else if (overwriteAll || ovw) {
-                // full overwrite: every live partition is touched
-                // (those absent from the batch become empty),
-                // pending deletion vectors purge (rewrite supersedes)
-                val live = SnapshotTable.pointers(root, v - 1).keySet
-                SnapshotTable.commit(s, root, v, batch,
-                  (live ++ batchYears()).toSeq.sorted)
-              } else {
-                // merge-on-read tables append over pending
-                // tombstones: their births keep re-inserted keys
-                // alive (an insert-only MERGE lands here)
-                SnapshotTable.commitAppend(s, root, v, batch,
-                  overTombstones =
-                    SnapshotTable.rowKeyOf(tableSchema).isDefined)
-              }
-            }
-          }
-      }
+        new SnapshotWrite(root, head, scope,
+          SnapshotWriteJob(SparkSession.active, root, info.schema(),
+            SnapshotTable.bloomColsOf(tableSchema)),
+          SnapshotTable.rowKeyOf(tableSchema).isDefined, info.queryId(),
+          Option(info.options.get("compactEvery")).map(_.toInt))
     }
   }
 
@@ -1142,36 +1050,110 @@ private[sources] class SnapshotReplaceDataWrite(
     SnapshotFilesMsg.delete(SnapshotFilesMsg.filesOf(messages))
 }
 
-/** `INSERT OVERWRITE` under `spark.sql.sources.partitionOverwriteMode
-  * = dynamic` (the mode `DataProcess` sessions run in): the batch lands
-  * through the executor-side [[SnapshotDataWriter]]s, then ONE commit
-  * replaces exactly the pt_year partitions the batch holds — every
-  * other partition carries by pointer, as in the static `PARTITION
-  * (pt_year = k)` path. An empty batch replaces nothing and commits
-  * nothing (Spark's dynamic-overwrite contract). A commit race rebases
-  * on the new head and retries, reusing the written files. */
-private[sources] class SnapshotDynamicOverwrite(root: String,
-    job: SnapshotWriteJob)
-    extends org.apache.spark.sql.connector.write.BatchWrite {
-  import org.apache.spark.sql.connector.write.{DataWriterFactory, PhysicalWriteInfo, WriterCommitMessage}
+/** THE SQL BATCH WRITE — every `INSERT INTO` and `INSERT OVERWRITE`
+  * ([[SnapshotWrite.Scope]]) — and the carrier of the streaming sink.
+  * Tasks write through [[SnapshotDataWriter]]s and the commit publishes
+  * their entries, so the query runs once. A batch write asks for a
+  * clustered, not strictly required, distribution on pt_year: Spark
+  * plans a rebalance on it, so a year's files come from as few tasks
+  * as its rows need.
+  *
+  * An empty append or dynamic overwrite commits nothing; an empty
+  * truncate or scoped overwrite still empties its years. A lost race
+  * re-publishes the same files on the new head when every commit since
+  * `loadedHead` only appended and none touched a replaced year
+  * ([[SnapshotTable.onlyAppendedSince]]); otherwise the write fails
+  * with a `conflict: version` error and [[abort]] deletes its files.
+  * `loadedHead` is at or before the statement's scan, so the check can
+  * report a conflict that did not matter but never misses one. */
+private[sources] class SnapshotWrite(root: String, loadedHead: Int,
+    scope: SnapshotWrite.Scope, job: SnapshotWriteJob, rowKeyed: Boolean,
+    queryId: String, compactEvery: Option[Int])
+    extends org.apache.spark.sql.connector.write.Write
+    with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering
+    with org.apache.spark.sql.connector.write.BatchWrite {
+  import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
+  import org.apache.spark.sql.connector.expressions.{Expressions, SortOrder}
+  import org.apache.spark.sql.connector.write.{BatchWrite, DataWriterFactory, PhysicalWriteInfo, WriterCommitMessage}
+  import SnapshotWrite._
+
+  // Spark takes a micro-batch write's StreamingWrite before it plans
+  // the distribution: the sink's epochs keep their tasks' layout, and
+  // `compactEvery` compacts them
+  @volatile private var streaming = false
+
+  override def requiredDistribution(): Distribution =
+    if (streaming) Distributions.unspecified()
+    else Distributions.clustered(Array(Expressions.column("pt_year")))
+  override def requiredOrdering(): Array[SortOrder] = Array.empty
+  override def distributionStrictlyRequired(): Boolean = false
+
+  override def toBatch: BatchWrite = this
+
+  override def toStreaming: org.apache.spark.sql.connector.write
+      .streaming.StreamingWrite = {
+    require(scope == Append,
+      "graft-snapshot streams are append-only (a snapshot " +
+      "table's history is append-only by construction) — " +
+      "complete/update output modes are unsupported")
+    streaming = true
+    new SnapshotStreamingWrite(root, job, queryId, compactEvery)
+  }
 
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory =
-    new SnapshotBatchWriterFactory(job,
-      s"v${SnapshotTable.versions(root).max + 1}")
+    new SnapshotBatchWriterFactory(job, s"v${loadedHead + 1}")
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val files = SnapshotFilesMsg.filesOf(messages)
-    if (files.isEmpty) return
-    val staged = SnapshotFilesMsg.byYear(files)
+    val staged = SnapshotFilesMsg.byYear(SnapshotFilesMsg.filesOf(messages))
+    val written = staged.map(_._1).toSet
+    scope match {
+      case Years(years) =>
+        val stray = (written -- years).toSeq.sorted
+        require(stray.isEmpty, "INSERT OVERWRITE PARTITION (pt_year in " +
+          s"${years.toSeq.sorted.mkString("{", ",", "}")}) received " +
+          s"rows for partitions ${stray.mkString(",")} outside the " +
+          "overwrite scope")
+      case Append | Dynamic if staged.isEmpty => return
+      case _ =>
+    }
     SnapshotSourceTable.commitRetrying(root) { v =>
-      SnapshotTable.commitReplaceEntries(root, v, staged,
-        staged.map(_._1))
+      lazy val parent = SnapshotTable.top(root, v - 1)
+      val replaced = scope match {
+        case Append => Set.empty[Int]
+        case Truncate => parent.pointers.keySet ++ written
+        case Years(years) => years
+        case Dynamic => written
+      }
+      if (v - 1 != loadedHead && !SnapshotTable.onlyAppendedSince(root,
+          loadedHead, parent, replaced))
+        throw new IllegalStateException(s"conflict: version ${v - 1} of " +
+          s"$root changed data this write planned on at version " +
+          s"$loadedHead; nothing was published — re-run the statement")
+      if (scope == Append)
+        SnapshotTable.commitAppendEntries(root, v, SnapshotTable
+          .appendPreflight(root, v, written.toSeq.sorted, rowKeyed),
+          staged, job.schema, None)
+      else SnapshotTable.commitReplaceEntries(root, v, staged,
+        replaced.toSeq.sorted)
     }
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     SnapshotFilesMsg.delete(SnapshotFilesMsg.filesOf(messages))
+}
+
+private[sources] object SnapshotWrite {
+  /** The years a write replaces: none (`INSERT INTO`); every live and
+    * written year (`INSERT OVERWRITE` with no partition spec); exactly
+    * `years` (`PARTITION (pt_year = k)` or a pt_year = / IN filter —
+    * a written row outside them fails the statement); the written
+    * years (dynamic partition-overwrite mode). */
+  sealed trait Scope
+  case object Append extends Scope
+  case object Truncate extends Scope
+  case class Years(years: Set[Int]) extends Scope
+  case object Dynamic extends Scope
 }
 
 /** DELTA-BASED row-level operation (SupportsDelta — SQL UPDATE /

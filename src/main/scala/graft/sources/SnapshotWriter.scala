@@ -20,10 +20,10 @@ import graft.operators.WriteOps.SnapshotTable.{ColStat, FileEntry}
 
 /** THE SNAPSHOT DATA WRITER. Every data file a snapshot table stores —
   * batch commits (commit, append, optimize, branch staging), SQL
-  * UPDATE / MERGE, dynamic overwrite, merge-on-read inserts and the
-  * streaming sink — is written by [[SnapshotDataWriter]] through Spark's
-  * own parquet writer, so every type Spark writes is a type the table
-  * stores.
+  * INSERT and INSERT OVERWRITE, UPDATE / MERGE, merge-on-read inserts
+  * and the streaming sink — is written by [[SnapshotDataWriter]]
+  * through Spark's own parquet writer, so every type Spark writes is a
+  * type the table stores.
   *
   * A `SnapshotWriteJob` is the driver-prepared half: the row schema and
   * the `OutputWriterFactory` of `ParquetUtils.prepareWrite` over a conf
@@ -168,8 +168,8 @@ private[graft] object SnapshotFilesMsg {
     files.foreach { case (_, e) => SnapshotTable.deleteTree(e.path) }
 }
 
-/** The DSv2 batch writes' factory (SQL UPDATE / MERGE replacement rows,
-  * dynamic overwrite). */
+/** The DSv2 batch writes' factory (SQL INSERT and INSERT OVERWRITE,
+  * UPDATE / MERGE replacement rows). */
 private[sources] class SnapshotBatchWriterFactory(job: SnapshotWriteJob,
     prefix: String) extends DataWriterFactory {
   override def createWriter(partitionId: Int,
@@ -211,7 +211,7 @@ private[graft] final class SnapshotDataWriter(job: SnapshotWriteJob,
     }
     val r = if (view == null) row else { view.project(row); view }
     require(!r.isNullAt(ptIdx),
-      "pt_year must not be null in a snapshot table row")
+      "a row has a NULL pt_year — the partition key must be non-null")
     val y = r.getInt(ptIdx)
     val (_, out, stats) = files.getOrElseUpdate(y, {
       val p = new HPath(new HPath(job.root, "data"),
